@@ -211,47 +211,6 @@ def run_headline(master_cpus: str, data_dir: Path, repeats: int = 1) -> dict:
         spark.stop()
 
 
-def run_layout_ab(master_cpus: str, data_dir: Path, pairs: int = 3) -> dict:
-    """Interleaved A/B of the round-2 'plain' checkpoint layout vs the round-3
-    'bucketed' layout, alternating within ONE session so both arms see the
-    same co-tenant load (the only meaningful wall-time comparison on this
-    ±30-100 % shared host — see BENCH.md). Reports per-pair walls + medians."""
-    import statistics
-
-    from reden_spark.datagen import BASE_PREFIX
-    from reden_spark.operators.disambiguate import NELConfig
-    from reden_spark.plans.pipeline import run_pipeline
-    from reden_spark.session import get_spark
-
-    spark = get_spark("reden-layout-ab", master=f"local[{master_cpus}]")
-    cfg = NELConfig(base_prefix=BASE_PREFIX, preferred_uri=BASE_PREFIX)
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    walls: dict[str, list[float]] = {"plain": [], "bucketed": []}
-    loads: list[float] = []
-    try:
-        for _ in range(pairs):
-            for layout in ("plain", "bucketed"):
-                out_dir = tempfile.mkdtemp(prefix=f"reden_ab_{layout}_", dir=ckpt_base)
-                t0 = time.time()
-                dfs = run_pipeline(spark, data_dir, out_dir, cfg, layout=layout)
-                dfs["triples"].count()
-                walls[layout].append(round(time.time() - t0, 2))
-                loads.append(round(os.getloadavg()[0], 1))
-                shutil.rmtree(out_dir, ignore_errors=True)
-    finally:
-        spark.stop()
-    return {
-        "cpus": int(master_cpus),
-        "pairs": pairs,
-        "plain_sec": walls["plain"],
-        "bucketed_sec": walls["bucketed"],
-        "plain_median": statistics.median(walls["plain"]),
-        "bucketed_median": statistics.median(walls["bucketed"]),
-        "speedup": round(statistics.median(walls["plain"]) / statistics.median(walls["bucketed"]), 3),
-        "loadavg_after_each": loads,
-    }
-
-
 PER_QUERY = [
     "kg_links",
     "kg_triples",
@@ -306,8 +265,10 @@ def run_per_query(
             timings[name] = round(time.time() - t0, 3)
             loads[name] = [round(load_before, 2), round(os.getloadavg()[0], 2)]
         for name in PER_QUERY:
-            df = ALL_QUERIES[name](spark, sf_dir)
+            # t0 before construction: shared() materializes eagerly while the
+            # query is built, so that work belongs inside the timed span
             t0 = time.time()
+            df = ALL_QUERIES[name](spark, sf_dir)
             try:
                 df.agg(
                     F.sum(F.xxhash64(*[F.col(c) for c in df.columns]))
@@ -546,12 +507,6 @@ def main() -> None:
         help="with --curation-profile: add a one-hot-band boilerplate block and a low band cap so the auto salt engages (salt>1 scale point)",
     )
     ap.add_argument("--headline-only", action="store_true", help=argparse.SUPPRESS)
-    ap.add_argument(
-        "--layout-ab",
-        action="store_true",
-        help="interleaved wall-time A/B: plain (round-2) vs bucketed (round-3) checkpoint layout",
-    )
-    ap.add_argument("--pairs", type=int, default=3, help=argparse.SUPPRESS)
     ap.add_argument("--kernel-only", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--cpus", default=None, help=argparse.SUPPRESS)
     ap.add_argument("--data", default=None, help=argparse.SUPPRESS)
@@ -575,17 +530,6 @@ def main() -> None:
         else:
             data = Path(a.data) if a.data else ensure_bench_data()
         print(json.dumps(run_stage_profile(a.cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"), data)))
-        return
-    if a.layout_ab:
-        if a.scale_corpus:
-            data = ensure_bench_data(n_convs=12000, name="kg_scale")
-        else:
-            data = Path(a.data) if a.data else ensure_bench_data()
-        print(
-            json.dumps(
-                run_layout_ab(a.cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"), data, a.pairs)
-            )
-        )
         return
     if a.headline_only:
         print(json.dumps(run_headline(a.cpus, Path(a.data))))

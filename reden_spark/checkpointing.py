@@ -1,23 +1,24 @@
-"""Checkpoint-mode switch for the pipeline's shared-subtree materializations.
+"""The one materialization point for frames consumed more than once.
 
-Eager checkpoints of multi-consumed frames are load-bearing on a single host
-(they stop AQE's concurrent stage submission from re-executing a lazily
-checkpointed subtree once per consumer), but `localCheckpoint` blocks live in
-executor storage only: on a multi-executor cluster an executor loss truncates
-lineage mid-job and the run cannot recover. This module threads ONE knob
-through every call site:
+A frame that feeds several branches of one downstream query (the links
+stage's members/colored/edges/survivors, the dedup signature and shingle
+frames) is cut from its lineage by an eager checkpoint. Without the cut,
+Spark re-executes the upstream subtree once per consumer: there is no
+cross-join CSE, and ReusedExchange misses differently-pruned subplans. A lazy
+``localCheckpoint`` is not an option either, because AQE submits the
+consuming stages concurrently and each re-executes the whole upstream.
+
+`localCheckpoint` blocks live in executor storage only, so on a
+multi-executor cluster an executor loss truncates lineage mid-job and the run
+cannot recover. One knob selects where the blocks go:
 
 * ``local``    (default) — `df.localCheckpoint`: fastest, executor-local
-  blocks, right for single-host / sandbox runs and for clusters where a lost
-  executor may simply rerun the whole job.
+  blocks, right for single-host runs and for clusters where a lost executor
+  may simply rerun the whole job.
 * ``reliable`` — `df.checkpoint`: blocks written to the fault-tolerant
   checkpoint dir (`spark.sparkContext.setCheckpointDir`, HDFS/object store on
   a real cluster). Survives executor loss; costs a write+read round trip.
-  This is the recommended mode for 100 TB multi-executor deployments.
-* ``persist``  — `persist(MEMORY_AND_DISK)` + eager count: keeps full lineage
-  (recomputable after executor loss) without a checkpoint dir; recomputation
-  of a lost block re-runs the upstream stages, so it trades recovery time for
-  zero storage setup.
+  The recommended mode for multi-executor deployments.
 
 Mode resolution: explicit `set_checkpoint_mode()` > `REDEN_CHECKPOINT_MODE`
 env var > "local".
@@ -28,9 +29,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
-MODES = ("local", "reliable", "persist")
+MODES = ("local", "reliable")
 
 _mode: str | None = None
 
@@ -52,70 +52,33 @@ def checkpoint_mode() -> str:
     return env
 
 
-def shared(df: DataFrame, arrays: bool = False) -> DataFrame:
-    """Materialization point for a subtree consumed by several branches of ONE
-    downstream query (the links stage's members/colored/edges/survivors, the
-    dedup signature/shingle frames). ``arrays``: the frame carries array-typed
-    columns (columnar cache encoding is expensive for those — see 'hybrid').
+def shared(df: DataFrame) -> DataFrame:
+    """Materialize a subtree consumed by several branches of ONE downstream
+    query: an eager :func:`checkpoint` under the configured mode, run on the
+    calling thread.
 
-    Default ('eager'): the eager checkpoint barrier of :func:`checkpoint` —
-    measured best on this host (interleaved A/B, BENCH.md round 4: cold
-    kg_links 17.5 s eager vs 20.6 s lazy median at equal load).
+    Why eager and serial, measured on a 4-core host over a 2,000-turn
+    ``kg_delta`` delta (BENCH.md round 4 found the same at 32 cores on a
+    607k-turn corpus: cold links 17.5 s eager vs 20.6 s lazy):
 
-    ``REDEN_SHARED_SUBTREE=lazy`` switches to a lazy
-    ``persist(MEMORY_AND_DISK)``: no barrier job is submitted; the subtree
-    materializes inside the one consuming query, and concurrent AQE stage
-    materializations dedupe at the block manager's per-partition locks (each
-    cached partition computed exactly once — unlike a lazy
-    ``localCheckpoint``, which re-executes the whole upstream once per
-    concurrent consumer, the round-2 trap). The A/B showed the columnar
-    cache build of the array-typed members frame costs more than the ~5
-    barrier jobs it saves at this scale; kept as the measurement knob because
-    the trade reverses when per-job latency dominates (very small inputs) or
-    on a cluster whose driver round-trips are slower than its executors.
-
-    ``REDEN_SHARED_SUBTREE=hybrid`` splits by the caller's ``arrays`` hint:
-    narrow string/numeric frames (colored/edges/survivors — cheap to encode
-    columnar) go lazy persist, while array-typed frames (members, dedup
-    signature/shingle frames — whose columnar cache build is what made full
-    lazy lose the A/B) keep the eager checkpoint.
-
-    Never a lazy localCheckpoint. Under a non-local ``checkpoint_mode``
-    (reliable/persist) `shared` always defers to :func:`checkpoint`."""
-    if not shared_is_lazy(arrays):
-        return checkpoint(df)
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def shared_is_lazy(arrays: bool = False) -> bool:
-    """True when :func:`shared` would materialize a frame with this ``arrays``
-    hint via lazy persist (no barrier job). Callers that overlap
-    eager-checkpoint jobs with driver threads use this to skip the (pointless
-    under lazy) thread pool."""
-    if checkpoint_mode() != "local":
-        return False
-    mode = os.environ.get("REDEN_SHARED_SUBTREE", "eager")
-    return mode == "lazy" or (mode == "hybrid" and not arrays)
+    * a lazy ``persist`` (no barrier job) cost more links-stage time (8.8 s
+      against 5.7 s eager; 9.4 s for a hybrid that persisted only the narrow
+      frames) and more per-delta latency (15.5–17.0 s against 13.0–13.2 s);
+    * materializing independent sites from a two-thread pool tied with doing
+      them one after another;
+    * an eager barrier for the survivors remainder was no slower than an
+      inline lazy persist, and its runs peaked at lower RSS."""
+    return checkpoint(df)
 
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize a multi-consumed frame under the configured mode.
-
-    `eager=False` is honored only by the local/reliable modes (persist has no
-    lazy variant worth having: an unpersisted-unconsumed frame is a no-op).
-    """
-    mode = checkpoint_mode()
-    if mode == "local":
+    """Materialize a multi-consumed frame under the configured mode."""
+    if checkpoint_mode() == "local":
         return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().checkpointDir().isEmpty():
-            raise RuntimeError(
-                "checkpoint mode 'reliable' needs spark.sparkContext.setCheckpointDir "
-                "(point it at fault-tolerant storage: HDFS/S3 on a cluster)"
-            )
-        return df.checkpoint(eager=eager)
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        out.count()
-    return out
+    sc = df.sparkSession.sparkContext
+    if sc._jsc.sc().checkpointDir().isEmpty():
+        raise RuntimeError(
+            "checkpoint mode 'reliable' needs spark.sparkContext.setCheckpointDir "
+            "(point it at fault-tolerant storage: HDFS/S3 on a cluster)"
+        )
+    return df.checkpoint(eager=eager)

@@ -312,8 +312,17 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # The SQL twin: one CTE chain restating the derivation + every pipeline stage
 # ---------------------------------------------------------------------------
 
+# Every CTE is MATERIALIZED: DuckDB (1.0) otherwise inlines a CTE at each
+# reference, and this chain references most of its CTEs 2-4 times, so the
+# inlined plan grows geometrically with depth. At sf0.001 (1,000 events) the
+# inlined `links` alone ran out of a 2 GiB memory limit, and kg_entity_pmi's
+# five references to one CTE over it outgrew 12.5 GiB and spilled; all CTEs
+# materialized, each oracle runs in well under a second and ~200 MB. The
+# rows are the same: every window ORDER BY in the chain is a total order, so
+# evaluating a CTE once or once per reference yields the same relation.
+
 SQL_PREFIX = f"""
-WITH RECURSIVE turns_raw AS (
+WITH RECURSIVE turns_raw AS MATERIALIZED (
   SELECT 'c' || CAST(user_id % 40 AS VARCHAR) AS conv_id,
          CAST(ROW_NUMBER() OVER (PARTITION BY user_id % 40 ORDER BY ts, event_id) - 1 AS INTEGER) AS turn_idx,
          CASE CAST(event_id % 3 AS INTEGER) WHEN 0 THEN 'user' WHEN 1 THEN 'assistant' ELSE 'tool' END AS role,
@@ -325,8 +334,8 @@ WITH RECURSIVE turns_raw AS (
   JOIN nation n1 ON n1.n_nationkey = CAST(e.event_id % 25 AS INTEGER)
   JOIN nation n2 ON n2.n_nationkey = CAST((e.event_id % 25 + 1 + e.event_id % 13) % 25 AS INTEGER)
 ),
-transcripts AS (SELECT conv_id, turn_idx, role, text FROM turns_raw),
-dico AS (
+transcripts AS MATERIALIZED (SELECT conv_id, turn_idx, role, text FROM turns_raw),
+dico AS MATERIALIZED (
   SELECT n_name || 'X' AS alias, lower(regexp_replace(n_name || 'X', '[\\s\\x0b\\xa0 ]|''|-', '', 'g')) AS alias_norm,
          n_name || 'X' AS name, 'LOC' AS ne_type,
          ['{BASE}/nat/' || CAST(n_nationkey AS VARCHAR),
@@ -338,7 +347,7 @@ dico AS (
           'http://kb.test/alt/shadow/' || CAST(n_nationkey AS VARCHAR)]
   FROM nation WHERE n_nationkey % 5 = 0
 ),
-kb_edges AS (
+kb_edges AS MATERIALIZED (
   SELECT 'http://kb.test/alt/nat/' || CAST(n_nationkey AS VARCHAR) AS subj,
          '{PRED_KNOWS}' AS pred,
          'http://kb.test/res/reg/' || CAST(n_regionkey AS VARCHAR) AS obj, 1.0 AS weight FROM nation
@@ -358,14 +367,14 @@ kb_edges AS (
   SELECT 'http://kb.test/alt/shadow/' || CAST(n_nationkey AS VARCHAR), '{PRED_KNOWS}',
          'http://kb.test/res/shadowland', 1.0 FROM nation WHERE n_nationkey % 5 = 0
 ),
-gold AS (
+gold AS MATERIALIZED (
   SELECT conv_id, turn_idx, CAST(0 AS INTEGER) AS occ_idx, n1 AS mention,
          '{BASE}/nat/' || CAST(k1 AS VARCHAR) AS gold_uri FROM turns_raw
   UNION ALL
   SELECT conv_id, turn_idx, CAST(1 AS INTEGER), n2,
          '{BASE}/nat/' || CAST(k2 AS VARCHAR) FROM turns_raw
 ),
-mentions AS (
+mentions AS MATERIALIZED (
   SELECT conv_id, turn_idx,
          CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx ORDER BY strpos(text, alias)) - 1 AS INTEGER) AS occ_idx,
          alias AS mention,
@@ -377,7 +386,7 @@ mentions AS (
    AND (strpos(t.text, d.alias) = 1
         OR NOT regexp_matches(substring(t.text, strpos(t.text, d.alias) - 1, 1), '\\w'))
 ),
-candidates AS (
+candidates AS MATERIALIZED (
   SELECT conv_id, mention,
          CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, mention ORDER BY uris) - 1 AS INTEGER) AS group_idx,
          uris
@@ -385,20 +394,20 @@ candidates AS (
         FROM (SELECT DISTINCT conv_id, mention FROM mentions) m
         JOIN dico d ON lower(regexp_replace(m.mention, '[\\s\\x0b\\xa0 ]|''|-', '', 'g')) = d.alias_norm)
 ),
-cases AS (
+cases AS MATERIALIZED (
   SELECT m.conv_id, CASE WHEN MAX(COALESCE(g.n_groups, 0)) > 1 THEN 'Ok' ELSE 'NoAmbiguity' END AS route
   FROM (SELECT DISTINCT conv_id, mention FROM mentions) m
   LEFT JOIN (SELECT conv_id, mention, COUNT(*) AS n_groups FROM candidates GROUP BY 1, 2) g
     USING (conv_id, mention)
   GROUP BY 1
 ),
-cand_ok AS (SELECT c.* FROM candidates c JOIN cases USING (conv_id) WHERE route = 'Ok'),
-members AS (SELECT conv_id, mention, group_idx, uris, unnest(uris) AS member FROM cand_ok),
-with_base AS (
+cand_ok AS MATERIALIZED (SELECT c.* FROM candidates c JOIN cases USING (conv_id) WHERE route = 'Ok'),
+members AS MATERIALIZED (SELECT conv_id, mention, group_idx, uris, unnest(uris) AS member FROM cand_ok),
+with_base AS MATERIALIZED (
   SELECT *, list_filter(uris, u -> contains(u, '{BASE}'))[-1] AS base_uri FROM members
 ),
-sameas AS (SELECT subj AS member, obj AS sameas_obj FROM kb_edges WHERE pred = '{SAME_AS}'),
-alias_pairs AS (
+sameas AS MATERIALIZED (SELECT subj AS member, obj AS sameas_obj FROM kb_edges WHERE pred = '{SAME_AS}'),
+alias_pairs AS MATERIALIZED (
   SELECT DISTINCT conv_id, base_uri, alias FROM (
     SELECT w.conv_id, w.base_uri, s.sameas_obj AS alias
     FROM with_base w JOIN sameas s ON w.member = s.member
@@ -407,21 +416,21 @@ alias_pairs AS (
     SELECT conv_id, base_uri, member FROM with_base WHERE NOT contains(member, '{BASE}')
   ) WHERE lower(alias) != lower(base_uri)
 ),
-fused_raw AS (
+fused_raw AS MATERIALIZED (
   SELECT a.conv_id, a.base_uri AS src, k.obj AS dst, k.pred
   FROM alias_pairs a JOIN kb_edges k ON a.alias = k.subj
   WHERE k.pred != '{SAME_AS}' AND lower(a.base_uri) != lower(k.obj)
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT conv_id, src, dst, MIN(pred) AS pred, 1.0 AS weight FROM fused_raw GROUP BY 1, 2, 3
 ),
-colored AS (SELECT DISTINCT conv_id, member AS v FROM members WHERE contains(member, '{BASE}')),
-inv AS (SELECT conv_id, member AS v, MAX(mention) AS inv_mention FROM members GROUP BY 1, 2),
-ends AS (
+colored AS MATERIALIZED (SELECT DISTINCT conv_id, member AS v FROM members WHERE contains(member, '{BASE}')),
+inv AS MATERIALIZED (SELECT conv_id, member AS v, MAX(mention) AS inv_mention FROM members GROUP BY 1, 2),
+ends AS MATERIALIZED (
   SELECT conv_id, src AS v, dst AS other FROM edges
   UNION ALL SELECT conv_id, dst, src FROM edges
 ),
-bridge AS (
+bridge AS MATERIALIZED (
   SELECT e.conv_id, e.v, COUNT(DISTINCT i.inv_mention) AS n_mentions
   FROM ends e
   LEFT JOIN colored cv ON cv.conv_id = e.conv_id AND cv.v = e.v
@@ -430,60 +439,60 @@ bridge AS (
   WHERE cv.v IS NULL AND e.v != e.other
   GROUP BY 1, 2
 ),
-survivors AS (
+survivors AS MATERIALIZED (
   SELECT conv_id, v FROM colored UNION SELECT conv_id, v FROM bridge WHERE n_mentions >= 2
 ),
-pruned AS (
+pruned AS MATERIALIZED (
   SELECT e.* FROM edges e
   JOIN survivors s1 ON s1.conv_id = e.conv_id AND s1.v = e.src
   JOIN survivors s2 ON s2.conv_id = e.conv_id AND s2.v = e.dst
 ),
-degrees AS (
+degrees AS MATERIALIZED (
   SELECT conv_id, v, CAST(COUNT(*) AS DOUBLE) AS degree FROM (
     SELECT conv_id, src AS v FROM pruned UNION ALL SELECT conv_id, dst FROM pruned
   ) GROUP BY 1, 2
 ),
-scored AS (
+scored AS MATERIALIZED (
   SELECT m.conv_id, m.mention, m.member AS dec, COALESCE(d.degree, 0.0) AS score
   FROM members m
   JOIN colored c ON c.conv_id = m.conv_id AND c.v = m.member
   LEFT JOIN degrees d ON d.conv_id = m.conv_id AND d.v = m.member
 ),
-winners AS (
+winners AS MATERIALIZED (
   SELECT conv_id, mention, dec AS winner, score FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, mention ORDER BY score DESC, dec DESC) AS rn
     FROM (SELECT DISTINCT conv_id, mention, dec, score FROM scored)
   ) WHERE rn = 1
 ),
-matching AS (
+matching AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.mention, m.group_idx, m.uris, w.winner, w.score
   FROM members m JOIN winners w ON w.conv_id = m.conv_id AND w.mention = m.mention AND m.member = w.winner
 ),
-graph_chosen AS (
+graph_chosen AS MATERIALIZED (
   SELECT conv_id, mention,
          COALESCE(list_filter(uris, u -> contains(u, '{BASE}'))[-1], winner) AS chosen_uris,
          score, 'graph' AS path
   FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, mention ORDER BY group_idx DESC) AS rn FROM matching)
   WHERE rn = 1
 ),
-simple_chosen AS (
+simple_chosen AS MATERIALIZED (
   SELECT c.conv_id, c.mention, array_to_string(uris, ' ') AS chosen_uris,
          CAST(NULL AS DOUBLE) AS score, 'simple' AS path
   FROM candidates c JOIN cases ca USING (conv_id)
   WHERE ca.route = 'NoAmbiguity' AND group_idx = 0
 ),
-links AS (
+links AS MATERIALIZED (
   SELECT m.conv_id, m.turn_idx, m.occ_idx, m.mention, ch.chosen_uris, ch.score, ch.path
   FROM mentions m
   JOIN (SELECT * FROM graph_chosen UNION ALL SELECT * FROM simple_chosen) ch
     USING (conv_id, mention)
 ),
-eq_edges AS (
+eq_edges AS MATERIALIZED (
   SELECT subj AS a, obj AS b FROM kb_edges WHERE pred = '{SAME_AS}'
   UNION
   SELECT uris[1] AS a, unnest(uris) AS b FROM dico
 ),
-sym AS (
+sym AS MATERIALIZED (
   SELECT a, b FROM eq_edges WHERE a != b
   UNION SELECT b, a FROM eq_edges WHERE a != b
 ),
@@ -492,36 +501,36 @@ reach(v, lab) AS (
   UNION
   SELECT s.a, r.lab FROM sym s JOIN reach r ON s.b = r.v
 ),
-canon AS (SELECT v AS uri, MIN(lab) AS canonical FROM reach GROUP BY 1),
-chosen_flat AS (
+canon AS MATERIALIZED (SELECT v AS uri, MIN(lab) AS canonical FROM reach GROUP BY 1),
+chosen_flat AS MATERIALIZED (
   SELECT conv_id, turn_idx, occ_idx, unnest(string_split(chosen_uris, ' ')) AS uri
   FROM links WHERE chosen_uris != ''
 ),
-canon_chosen AS (
+canon_chosen AS MATERIALIZED (
   SELECT conv_id, turn_idx, occ_idx, MIN(COALESCE(c.canonical, f.uri)) AS entity
   FROM chosen_flat f LEFT JOIN canon c ON c.uri = f.uri
   GROUP BY 1, 2, 3
 ),
-link_triples AS (
+link_triples AS MATERIALIZED (
   SELECT 'urn:mention:' || conv_id || ':' || CAST(turn_idx AS VARCHAR) || ':' || CAST(occ_idx AS VARCHAR) AS subj,
          'http://kg.test/linksTo' AS pred, entity AS obj
   FROM canon_chosen
 ),
-kbc AS (
+kbc AS MATERIALIZED (
   SELECT COALESCE(cs.canonical, k.subj) AS subj, k.pred, COALESCE(co.canonical, k.obj) AS obj
   FROM kb_edges k
   LEFT JOIN canon cs ON cs.uri = k.subj
   LEFT JOIN canon co ON co.uri = k.obj
   WHERE k.pred != '{SAME_AS}'
 ),
-triples AS (
+triples AS MATERIALIZED (
   SELECT DISTINCT subj, pred, obj FROM (
     SELECT * FROM link_triples
     UNION ALL
     SELECT kbc.* FROM kbc JOIN (SELECT DISTINCT entity FROM canon_chosen) e ON kbc.subj = e.entity
   )
 ),
-eval_flags AS (
+eval_flags AS MATERIALIZED (
   SELECT g.conv_id, g.mention, g.gold_uri,
          COUNT(c.group_idx) AS n_groups,
          MAX(CASE WHEN g.gold_uri IS NOT NULL AND c.uris IS NOT NULL
@@ -531,7 +540,7 @@ eval_flags AS (
   LEFT JOIN candidates c ON c.conv_id = g.conv_id AND c.mention = g.mention
   GROUP BY 1, 2, 3
 ),
-eval_recs AS (
+eval_recs AS MATERIALIZED (
   SELECT g.conv_id, g.turn_idx, g.occ_idx, g.mention, g.gold_uri,
          COALESCE(f.n_groups, 0) AS n_groups,
          COALESCE(f.correct_in_cand, FALSE) AS correct_in_cand,

@@ -199,8 +199,7 @@ def materialize_triples(
     same escape hatch `generate_candidates(broadcast_dico=...)` exposes.
 
     ``bucket_into=n`` attaches the output table's `bucket` partition column
-    WITHOUT the full-output shuffle the generic bucketed write would pay
-    (round-2 profile: 310 MB, the largest remaining turn-grain movement):
+    WITHOUT a full-output shuffle on a hashed key (round-2 profile: 310 MB, the largest remaining turn-grain movement):
     mention-link triples get bucket = pmod(murmur3(conv_id), n) — when `links`
     was checkpointed as an n-bucket table on conv_id, every row already SITS
     in that partition (only a map-side broadcast join separates them), so the

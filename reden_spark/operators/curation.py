@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..checkpointing import shared
+
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, keep) for EVERY document.
@@ -214,9 +216,10 @@ def domain_filter(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     spellings) and deduped so a repeated entry cannot duplicate output rows.
     Scale shape: blocklists are
     KB-to-MB even for millions of domains, so the join is broadcast-hinted;
-    the explode is map-only. A genuinely huge blocklist degrades to one
-    shuffle keyed on the domain — still linear, and AQE overrides the hint
-    when the build side exceeds the broadcast threshold.
+    the explode is map-only. Spark honours an explicit broadcast hint
+    whatever the build side's size, and AQE does not override it: a blocklist
+    too large to collect to the driver and ship to every executor needs the
+    hint removed.
     """
     from .textstats import _domains, _text
 
@@ -244,14 +247,12 @@ def shuffle_deterministic(docs: DataFrame, seed: int = 0) -> DataFrame:
     order IS global order); per-bucket counts (exactly <=256 rows, the one
     bounded collect) prefix-sum into offsets on the driver; each bucket then
     ranks independently in parallel and adds its offset. The hashed projection
-    is persisted so the counts probe and the final ranking share ONE corpus
-    scan + md5 pass; one shuffle, 256-way parallel sort, no single-task stage
-    at any corpus size.
+    is materialized once (checkpointing.shared) so the counts probe and the
+    final ranking share ONE corpus scan + md5 pass; one shuffle, 256-way
+    parallel sort, no single-task stage at any corpus size.
     """
     k = F.md5(F.concat(F.lit(f"{seed}:"), F.col("doc_id").cast("string")))
-    hashed = docs.select(
-        "doc_id", k.alias("_k"), F.substring(k, 1, 2).alias("_b")
-    ).persist()
+    hashed = shared(docs.select("doc_id", k.alias("_k"), F.substring(k, 1, 2).alias("_b")))
     counts = {
         r["_b"]: r["cnt"]
         for r in hashed.groupBy("_b").agg(F.count("*").alias("cnt")).collect()

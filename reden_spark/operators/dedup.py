@@ -168,11 +168,8 @@ def minhash_lsh_pairs(
     """
     r = n_hashes // bands
     # signatures are consumed 3x (banding + both sides of the verification
-    # join); shared() materializes the digest pass once — eager checkpoint by
-    # default, lazy persist under REDEN_SHARED_SUBTREE=lazy (never a lazy
-    # localCheckpoint, which re-executes the whole signature computation per
-    # concurrent AQE consumer)
-    sigs = shared(minhash_signatures(docs, n_hashes, shingle_n), arrays=True)
+    # join); shared() materializes the digest pass once
+    sigs = shared(minhash_signatures(docs, n_hashes, shingle_n))
     banded = sigs.select(
         "doc_id",
         "shingles",
@@ -260,7 +257,7 @@ def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3, threshold: float = 
         _fan_out(docs)
         .select("doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles"))
         .filter(F.size("shingles") > 0)
-        .transform(lambda d: shared(d, arrays=True))  # blocking + both join sides (see minhash note)
+        .transform(shared)  # blocking + both join sides (see minhash note)
     )
     keyed = sh.select("doc_id", F.explode(_min_shingle_band_keys()).alias("block"))
     pairs = (

@@ -19,14 +19,12 @@ All steps share deterministic tie-break rules with the oracle (oracle.py D1-D6).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..checkpointing import checkpoint, checkpoint_mode, shared, shared_is_lazy
+from ..checkpointing import checkpoint, shared
 from ..functions.text import SAME_AS, decompose, encode_last_segment, last_member_with_prefix
 
 
@@ -185,11 +183,7 @@ def pruned_edges(
     # so the explode subtree runs once per stage, not once per consumer.
     if colored is None:
         # colored feeds 3 subtrees of one query (anti-join, bridge join,
-        # survivors union): shared() = eager checkpoint barrier by default
-        # (A/B-measured, BENCH.md r4 §2), lazy persist under
-        # REDEN_SHARED_SUBTREE=lazy; NEVER a lazy localCheckpoint, which
-        # races under AQE's concurrent stage submission and re-executes the
-        # explode per consumer
+        # survivors union): materialize once (checkpointing.shared)
         colored = shared(colored_nodes(candidates, cfg, members=members))
     # inv is consumed once (bridge_counts) — no checkpoint, no barrier
     inv = inverted_index(candidates, members=members)
@@ -211,27 +205,10 @@ def pruned_edges(
     # .distinct() shuffle — and (b) only the bridge-derived remainder needs a
     # materialization point: colored is already materialized above, and the
     # union of two materialized frames is a zero-shuffle narrow op that can
-    # recompute per branch for free. This shrank the round-4 survivors
-    # barrier (distinct over the full union) to the bridge-only vertices.
-    #
-    # REDEN_SURVIVORS_MODE picks how that remainder materializes (A/B knob,
-    # VERDICT r4 task #3):
-    #   inline  (default) — lazy persist: NO barrier job; the bridge subtree
-    #     materializes inside the final links query, where AQE overlaps it
-    #     with the query's other stages (block-level locks dedupe the two
-    #     concurrent semi-join consumers — lazy persist, unlike lazy
-    #     localCheckpoint, is AQE-safe).
-    #   barrier — eager shared() checkpoint of the remainder (the round-4
-    #     shape, minus the distinct and minus re-checkpointing colored rows).
-    bridge_extra = bridge_counts.filter(F.col("n_mentions") >= 2).select("conv_id", "v")
-    if os.environ.get("REDEN_SURVIVORS_MODE", "inline") == "barrier" or checkpoint_mode() != "local":
-        # non-local modes keep the explicit materialization: on a real
-        # cluster a persisted block lost with its executor is recomputed from
-        # checkpointed inputs, but reliable-mode deployments asked for
-        # everything restartable from the checkpoint store
-        bridge_extra = shared(bridge_extra)
-    else:
-        bridge_extra = bridge_extra.persist(StorageLevel.MEMORY_AND_DISK)
+    # recompute per branch for free.
+    bridge_extra = shared(
+        bridge_counts.filter(F.col("n_mentions") >= 2).select("conv_id", "v")
+    )
     survivors = colored.unionByName(bridge_extra)
 
     return (
@@ -429,50 +406,12 @@ def disambiguate(
     # misses differently-pruned subplans) — the duplicated subtree was the
     # single largest task-time block of the links stage in the event-log
     # profile (2x ~19 task-seconds on the 607k-turn bench corpus).
-    # shared() = eager checkpoint barrier by default (A/B-measured best here);
-    # REDEN_SHARED_SUBTREE=lazy flips every such site to a lazy persist that
-    # materializes inside the single consuming query with block-level dedup
-    # (never a lazy localCheckpoint, which re-executes the upstream per
-    # concurrent AQE consumer — round-2 trap). These frames are
-    # conversation-grain (tiny vs the turn table).
-    members_ok = shared(_group_members(cand_ok), arrays=True)  # uris arrays
-
-    colored_plan = colored_nodes(cand_ok, cfg, members=members_ok)
-    edges_plan = fuse_edges(cand_ok, kb_edges, rel_weights, cfg, members=members_ok)
-    if shared_is_lazy():
-        colored_ok = shared(colored_plan)
-        edges = shared(edges_plan)
-    else:
-        # Eager-barrier mode (REDEN_SHARED_SUBTREE=eager, or a non-local
-        # checkpoint_mode): colored and edges are INDEPENDENT given members —
-        # materialize them from two driver threads so their jobs overlap
-        # (Spark job submission is thread-safe). Pinned-thread mode gives
-        # worker threads no job group, so re-pin the caller's group for
-        # event-log stage attribution (bench.py --stage-profile).
-        # REDEN_PARALLEL_MATERIALIZE=0 forces the serial order (measurement
-        # A/B; also the safe fallback if a deployment's driver forbids
-        # multi-threaded job submission).
-        import os as _os
-
-        if _os.environ.get("REDEN_PARALLEL_MATERIALIZE", "1") == "0":
-            colored_ok = checkpoint(colored_plan)
-            edges = checkpoint(edges_plan)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            sc = candidates.sparkSession.sparkContext
-            job_group = sc.getLocalProperty("spark.jobGroup.id")
-
-            def _materialize(df: DataFrame) -> DataFrame:
-                if job_group is not None:
-                    sc.setLocalProperty("spark.jobGroup.id", job_group)
-                return checkpoint(df)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                colored_future = pool.submit(_materialize, colored_plan)
-                edges_future = pool.submit(_materialize, edges_plan)
-                colored_ok = colored_future.result()
-                edges = edges_future.result()
+    # These frames are conversation-grain (tiny vs the turn table). colored
+    # and edges are independent given members; they materialize one after
+    # the other on this thread (a two-thread pool measured no faster).
+    members_ok = shared(_group_members(cand_ok))
+    colored_ok = shared(colored_nodes(cand_ok, cfg, members=members_ok))
+    edges = shared(fuse_edges(cand_ok, kb_edges, rel_weights, cfg, members=members_ok))
     scores = centrality(edges, cand_ok, cfg, members=members_ok, colored=colored_ok)
     graph_chosen = choose_links(
         cand_ok, scores, cfg, members=members_ok, colored=colored_ok

@@ -50,18 +50,13 @@ def run_pipeline(
     use_grouped: bool = False,
     n_buckets: int = 32,
     checkpoint_mode: str | None = None,
-    layout: str = "bucketed",
 ) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline; returns the stage DataFrames.
 
-    ``layout``: 'bucketed' (default) checkpoints turn-grain stages as
-    conv_id-bucketed Spark tables so stage boundaries reuse partitioning
-    (see the stage comments below); 'plain' is the round-2 layout (flat
-    parquet checkpoints, triples bucketed by a full xxhash(subj) shuffle) —
-    kept for A/B benchmarking on a noisy shared host, where only an
-    interleaved comparison under identical co-tenant load is meaningful.
+    Turn-grain stages checkpoint as conv_id-bucketed Spark tables so stage
+    boundaries reuse partitioning (see the stage comments below).
 
-    ``checkpoint_mode``: local|reliable|persist (checkpointing.py). 'reliable'
+    ``checkpoint_mode``: local|reliable (checkpointing.py). 'reliable'
     routes the intra-stage shared-subtree materializations through
     fault-tolerant `df.checkpoint` — the multi-executor-cluster setting, where
     a lost executor must not truncate lineage mid-stage. When no checkpoint
@@ -99,7 +94,7 @@ def run_pipeline(
 
     timings: dict[str, float] = {}
 
-    def stage(name: str, compute, bucket_col: str | None, **layout):
+    def stage(name: str, compute, **write_opts):
         if storage.stage_exists(out, name):
             return storage.read_stage(spark, out, name)
         # job-group tag: Spark stages/tasks of this pipeline stage are
@@ -109,7 +104,7 @@ def run_pipeline(
         t0 = time.time()
         try:
             df = compute()
-            storage.write_stage(df, out, name, bucket_col=bucket_col, n_buckets=n_buckets, **layout)
+            storage.write_stage(df, out, name, n_buckets=n_buckets, **write_opts)
         finally:
             spark.sparkContext.setJobGroup("", "")
         timings[name] = time.time() - t0
@@ -196,23 +191,20 @@ def run_pipeline(
         # Unbucketed inputs (the driver's raw testdata) pay one compact
         # repartition here instead — still strictly less movement than the
         # round-2 layout, which re-shuffled the same rows in the links stage.
-        if in_bucketing is not None and in_bucketing.get("col") == "conv_id":
-            mentions_layout = {"pre_shuffle": False}
+        input_bucketed = in_bucketing is not None and in_bucketing.get("col") == "conv_id"
+        if input_bucketed:
             n_buckets = int(in_bucketing["n"])
-        else:
-            mentions_layout = {"pre_shuffle": True}
-        ckpt_bucketing = {"spark_bucket_col": "conv_id"} if layout == "bucketed" else {}
         mentions = stage(
             "mentions",
             lambda: detect_mentions(transcripts, terms),
-            None,
-            **(ckpt_bucketing | mentions_layout if ckpt_bucketing else {}),
+            spark_bucket_col="conv_id",
+            pre_shuffle=not input_bucketed,
         )
         candidates = stage(
             "candidates",
             lambda: generate_candidates(mentions, dico),
-            None,
-            **(ckpt_bucketing | {"pre_shuffle": False} if ckpt_bucketing else {}),
+            spark_bucket_col="conv_id",
+            pre_shuffle=False,
         )
 
         def compute_links() -> DataFrame:
@@ -223,39 +215,24 @@ def run_pipeline(
                 return disambiguate_grouped(mentions, candidates, kb_edges, rel_weights, cases, cfg)
             return disambiguate(mentions, candidates, kb_edges, rel_weights, cases, cfg)
 
-        links = stage(
-            "links",
-            compute_links,
-            None,
-            **(ckpt_bucketing | {"pre_shuffle": False} if ckpt_bucketing else {}),
-        )
+        links = stage("links", compute_links, spark_bucket_col="conv_id", pre_shuffle=False)
         # The product table keeps the hive bucket=N layout (north rule:
         # partitioned output readers can prune), but the bucket ids come from
         # materialize_triples(bucket_into=...): mention triples land in their
         # conversation's links-checkpoint bucket (zero shuffle), entity
         # passthrough triples hash on subj (small repartition).
-        if layout == "bucketed":
-            triples = stage(
-                "triples",
-                lambda: materialize_triples(
-                    links,
-                    kb_edges,
-                    dico,
-                    cfg.sameas_pred,
-                    broadcast_uri_map=cfg.broadcast_uri_map,
-                    bucket_into=n_buckets,
-                ),
-                None,
-                prebucketed=True,
-            )
-        else:
-            triples = stage(
-                "triples",
-                lambda: materialize_triples(
-                    links, kb_edges, dico, cfg.sameas_pred, broadcast_uri_map=cfg.broadcast_uri_map
-                ),
-                "subj",
-            )
+        triples = stage(
+            "triples",
+            lambda: materialize_triples(
+                links,
+                kb_edges,
+                dico,
+                cfg.sameas_pred,
+                broadcast_uri_map=cfg.broadcast_uri_map,
+                bucket_into=n_buckets,
+            ),
+            prebucketed=True,
+        )
 
         result = {
             "mentions": mentions,
@@ -270,7 +247,7 @@ def run_pipeline(
                 records = eval_records(spark.read.parquet(str(gold_path)), links, candidates)
                 return hachey_metrics(records)
 
-            result["metrics"] = stage("metrics", compute_metrics, None)
+            result["metrics"] = stage("metrics", compute_metrics)
     finally:
         # restore even when the session had no explicit prior value (conf.get
         # with a fallback bypasses the registered SQL default) — unset then
@@ -325,10 +302,10 @@ def main() -> None:
     )
     ap.add_argument(
         "--checkpoint-mode",
-        choices=["local", "reliable", "persist"],
+        choices=["local", "reliable"],
         default=None,
-        help="intra-stage materialization mode (checkpointing.py): local blocks (default), "
-        "fault-tolerant df.checkpoint (multi-executor clusters), or lineage-keeping persist",
+        help="intra-stage materialization mode (checkpointing.py): local blocks (default) "
+        "or fault-tolerant df.checkpoint (multi-executor clusters)",
     )
     ap.add_argument(
         "--no-broadcast-uri-map",

@@ -75,7 +75,6 @@ def write_stage(
     df: DataFrame,
     out_dir: str | Path,
     name: str,
-    bucket_col: str | None = None,
     n_buckets: int = 32,
     spark_bucket_col: str | None = None,
     pre_shuffle: bool = True,
@@ -83,13 +82,13 @@ def write_stage(
 ) -> dict:
     """Write a stage table + manifest. Three layouts:
 
-    * ``bucket_col`` — hive-style ``bucket=N`` dirs keyed on
-      pmod(xxhash64(col), n_buckets): the queryable-product layout (readers
-      prune by directory). Costs one full shuffle of the stage output.
-    * ``prebucketed`` — the caller already attached a ``bucket`` column AND
-      arranged physical clustering (e.g. the frame inherits a bucketed scan's
-      partitioning); same hive layout, ZERO shuffle — each task holds few
-      distinct bucket values so the partitioned write stays at ~1 file/task.
+    * plain parquet (the default).
+    * ``prebucketed`` — hive-style ``bucket=N`` dirs, the queryable-product
+      layout (readers prune by directory). The caller already attached a
+      ``bucket`` column AND arranged physical clustering (e.g. the frame
+      inherits a bucketed scan's partitioning), so the write needs no
+      shuffle — each task holds few distinct bucket values and the
+      partitioned write stays at ~1 file/task.
     * ``spark_bucket_col`` — a Spark-native bucketed TABLE (`bucketBy` +
       `saveAsTable`, metadata re-registered from the manifest on read). The
       checkpoint layout for turn-grain stages: a later `read_stage` scan
@@ -103,11 +102,10 @@ def write_stage(
       partitioning an upstream bucketed join/scan produced).
     """
     out = Path(out_dir) / name
-    writer_df = df
-    partition_by = None
     if spark_bucket_col is not None:
         spark = df.sparkSession
         tname = _ckpt_table_name(out_dir, name)
+        writer_df = df
         if pre_shuffle:
             writer_df = df.repartition(n_buckets, F.col(spark_bucket_col))
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
@@ -119,27 +117,13 @@ def write_stage(
             .saveAsTable(tname)
         )
     else:
-        if bucket_col is not None:
-            if "bucket" in df.columns:
-                raise ValueError(
-                    f"stage '{name}': bucketed write would clobber an existing 'bucket' column"
-                )
-            writer_df = df.withColumn(
-                "bucket", F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
-            )
-            # co-locate each bucket into one task before the hive-partitioned
-            # write: one file per bucket dir instead of (tasks x buckets) files
-            writer_df = writer_df.repartition(n_buckets, F.col("bucket"))
-            partition_by = ["bucket"]
-        elif prebucketed:
-            if "bucket" not in df.columns:
-                raise ValueError(f"stage '{name}': prebucketed write needs a 'bucket' column")
-            partition_by = ["bucket"]
         # zstd: ~35% smaller stage files than snappy; compression CPU is parallel
         # across tasks while sink bandwidth is the scarce resource
-        w = writer_df.write.mode("overwrite").option("compression", "zstd")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
+        w = df.write.mode("overwrite").option("compression", "zstd")
+        if prebucketed:
+            if "bucket" not in df.columns:
+                raise ValueError(f"stage '{name}': prebucketed write needs a 'bucket' column")
+            w = w.partitionBy("bucket")
         w.parquet(str(out))
 
     lineage = _lineage_from_footers(out)
@@ -150,7 +134,7 @@ def write_stage(
         "lineage": lineage,
         "written_at": time.time(),
         "format": "parquet",
-        "bucketed": bucket_col is not None or prebucketed,
+        "bucketed": prebucketed,
     }
     if spark_bucket_col is not None:
         manifest["spark_bucketed"] = {"col": spark_bucket_col, "n": n_buckets}

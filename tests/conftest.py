@@ -17,6 +17,18 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def duck_config(tmp_path_factory):
+    """Settings for the DuckDB oracle connections. DuckDB's defaults spill to
+    `.tmp` in the working directory and size the memory limit from host RAM;
+    explicit bounds keep a runaway oracle plan a loud error on any host."""
+    return {
+        "temp_directory": str(tmp_path_factory.mktemp("duckdb_tmp")),
+        "max_temp_directory_size": "4GB",
+        "memory_limit": "2GB",
+    }
+
+
+@pytest.fixture(scope="session")
 def fixture_dir(tmp_path_factory):
     out = tmp_path_factory.mktemp("fixtures") / "small"
     datagen.generate(out, n_convs=24, mean_turns=10, skew_factor=5)

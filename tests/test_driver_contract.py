@@ -24,8 +24,8 @@ TABLES = [
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
+def duck(duck_config):
+    con = duckdb.connect(config=duck_config)
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     return con

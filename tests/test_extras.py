@@ -18,8 +18,8 @@ def emb(spark):
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
+def duck(duck_config):
+    con = duckdb.connect(config=duck_config)
     con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')")
     con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{SF_DIR}/embeddings.parquet')")
     return con
@@ -675,21 +675,6 @@ def test_ivf_pq_topk_shape_and_candidate_parity(emb):
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
     approx = {(r.query_id, r.neighbor_id) for r in rows}
     assert len(exact & approx) / len(exact) > 0.05  # sanity floor only
-
-
-def test_dedup_lazy_shared_mode_same_pairs(spark, monkeypatch):
-    """REDEN_SHARED_SUBTREE=lazy must leave the dedup pair sets byte-identical
-    (the dedup operators route their signature/shingle frames through
-    checkpointing.shared() too, not just the links stage)."""
-    from reden_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base_mh = sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()))
-    base_ng = sorted(map(tuple, ngram_jaccard_pairs(docs, 3, 0.8).collect()))
-    monkeypatch.setenv("REDEN_SHARED_SUBTREE", "lazy")
-    assert sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect())) == base_mh
-    assert sorted(map(tuple, ngram_jaccard_pairs(docs, 3, 0.8).collect())) == base_ng
-    assert base_mh and base_ng
 
 
 def test_null_text_behaves_as_empty(spark, duck):

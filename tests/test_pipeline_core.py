@@ -17,19 +17,6 @@ def run_stages(spark, tables):
     return mentions, candidates, cases, links
 
 
-def test_shared_subtree_lazy_and_hybrid_modes_same_links(spark, tables, monkeypatch):
-    """REDEN_SHARED_SUBTREE=lazy and =hybrid (the documented no-barrier /
-    narrow-frames-only persist variants of checkpointing.shared(), BENCH.md
-    round 4) must produce links identical to the default eager mode."""
-    _, _, _, links_eager = run_stages(spark, tables)
-    base = sorted(map(tuple, links_eager.collect()))
-    assert len(base) > 100
-    for mode in ("lazy", "hybrid"):
-        monkeypatch.setenv("REDEN_SHARED_SUBTREE", mode)
-        _, _, _, links_alt = run_stages(spark, tables)
-        assert sorted(map(tuple, links_alt.collect())) == base, mode
-
-
 def test_mentions_match_oracle(spark, tables, py_tables):
     from reden_spark.functions.gazetteer import GazetteerMatcher
 
