@@ -4,23 +4,13 @@ entry(spark)  — flagship: the full KG-construction pipeline (mention detection
 candidate join -> per-conversation graph disambiguation -> links) over a
 transcripts table derived deterministically from sf0.001 events+nation.
 
-queries()/oracle_sql() — one entry per implemented operator from SURVEY.md §2
-plus the training-data extras (dedup family incl. transitive clustering and
-the chained curation_pipeline recipe, ANN family, text stats incl. TF-IDF,
-media decoders, stratified sampling); ALL 50 queries carry an exact DuckDB
-oracle (see reden_spark/driver_contract.py) — no rows-only entries remain.
-The contract is capped at 50 rows (the driver's per-round oracle budget)
-and rows ROTATE between the driver window and the pytest window so every
-query earns a driver CORRECTNESS artifact: round 5 swaps IN the 14 rows
-that previously had only pytest evidence (PII redaction, quality gates,
-repetition signals, BPE-pretokenizer counting, greedy packing, semantic
-dedup clustering, IVF-PQ ANN, plus the 7 grouped/relational twins) AND the
-9 operators added during round 5 (URL inventory, domain filter/cap,
-deterministic shuffle, chunk windows, corpus n-gram top-k, bigram-LM
-perplexity, duplicated-span coverage, entity PMI), swapping OUT 23 stable
-rows driver-green in both r3 and r4, now pytest-pinned
-(driver_contract.PYTEST_QUERIES, tests/test_driver_contract.py). With this
-swap every one of the 73 rows has a driver CORRECTNESS entry in r1-r5.
+queries()/oracle_sql() — 46 rows, each with an exact DuckDB oracle
+(reden_spark/driver_contract.py): the KG pipeline's stages and its annotate,
+enrichment, evaluation and dictionary-build modes; the dedup, text-statistics
+and curation operators with the chained curation_pipeline recipe; and generic
+relational operators. 16 further rows (driver_contract.PYTEST_QUERIES) are
+checked against their oracles by tests/test_driver_contract.py, keeping the
+contract within the driver's 50-row per-round oracle budget.
 """
 
 from __future__ import annotations

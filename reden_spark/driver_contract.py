@@ -804,7 +804,7 @@ FROM eval_recs
 
 
 # ---------------------------------------------------------------------------
-# Training-data extras (documents/embeddings are pre-registered DuckDB views)
+# Training-data extras (documents is a pre-registered DuckDB view)
 # ---------------------------------------------------------------------------
 
 
@@ -1757,329 +1757,6 @@ FROM pairs WHERE bit_count(xor(h_a, h_b)) <= 12
 )
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import cosine_topk
-
-    return cosine_topk(_read(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5)
-
-
-O_ANN_COSINE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (0,1,2,3,4)),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round(
-           list_sum(list_transform(list_zip(qv, e.embedding), p -> p[1]::DOUBLE * p[2]::DOUBLE)) /
-           (sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN qv ])) *
-            sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN e.embedding ]))), 6) AS sim
-  FROM q, embeddings e WHERE e.vec_id != q.query_id
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed top-k with the codegen integer-plane bucketer — the
-    bucket ids (and therefore the candidate cut) are reproduced exactly by the
-    DuckDB oracle; recall vs the exact baseline is additionally pinned in
-    tests/test_extras.py."""
-    from .operators.similarity import lsh_topk
-
-    return lsh_topk(_read(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5, n_planes=4)
-
-
-def _o_ann_lsh_topk() -> str:
-    from .operators.similarity import EMB_DIM, signlsh_bucket_sql
-
-    bucket = signlsh_bucket_sql("embedding", EMB_DIM, n_planes=4)
-    cos = _sql_cosine("q.qv", "c.embedding")
-    return f"""
-WITH e AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id IN (0,1,2,3,4)),
-scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {cos} AS sim
-  FROM q JOIN e c USING (bucket) WHERE c.vec_id != q.query_id
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.similarity import ivf_topk
-
-    return ivf_topk(_read(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5, n_list=8, n_probe=2)
-
-
-def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with the Lloyd-trained quantizer (train_iters=2). The trainer
-    quantizes each iteration's per-cell means to 6 decimals
-    (similarity.train_centroids), which makes the trained centroids — and the
-    resulting cell assignment/probe — exactly reproducible in SQL: the oracle
-    unrolls both Lloyd iterations as CTEs. Determinism + full-probe-equals-exact
-    remain pinned in tests/test_extras.py."""
-    from .operators.similarity import ivf_topk
-
-    return ivf_topk(
-        _read(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5, n_list=8, n_probe=2, train_iters=2
-    )
-
-
-def _o_ann_ivf_trained(n_list: int = 8, n_probe: int = 2, iters: int = 2) -> str:
-    """DuckDB twin of ivf_topk(train_iters=2): unrolled quantized-Lloyd.
-
-    Each iteration CTE pair mirrors similarity.train_centroids exactly —
-    assign every vector to its nearest current centroid (cosine rounded to 6
-    decimals, ties to the lower cid), then recompute per-cell element-wise
-    means rounded to 6 decimals. list(... ORDER BY pos) rebuilds the centroid
-    vector in element order like Spark's array_sort(collect_list(struct))."""
-    from .operators.similarity import EMB_DIM
-
-    def assign(cent: str, name: str) -> str:
-        cos = _sql_cosine("e.embedding", "c.cvec")
-        return f"""{name} AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos} DESC, c.cid) AS crn
-    FROM embeddings e, {cent} c
-  ) WHERE crn = 1
-)"""
-
-    def recompute(assigned: str, name: str) -> str:
-        return f"""{name} AS (
-  SELECT cid, list(m ORDER BY pos) AS cvec FROM (
-    SELECT cid, pos, round(avg(embedding[pos]), 6) AS m
-    FROM {assigned}, unnest(range(1, {EMB_DIM} + 1)) AS g(pos)
-    GROUP BY cid, pos
-  ) GROUP BY cid
-)"""
-
-    ctes = [f"cent0 AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings ORDER BY vec_id LIMIT {n_list})"]
-    for i in range(iters):
-        ctes.append(assign(f"cent{i}", f"a{i + 1}"))
-        ctes.append(recompute(f"a{i + 1}", f"cent{i + 1}"))
-    final = f"cent{iters}"
-    cos = _sql_cosine("e.embedding", "c.cvec")
-    ctes.append(
-        f"""ranked AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id ORDER BY {cos} DESC, c.cid) AS crn
-  FROM embeddings e, {final} c
-)"""
-    )
-    ctes.append("assigned AS (SELECT vec_id AS neighbor_id, embedding AS cv, cid FROM ranked WHERE crn = 1)")
-    ctes.append(
-        f"""probes AS (
-  SELECT vec_id AS query_id, embedding AS qv, cid FROM ranked
-  WHERE crn <= {n_probe} AND vec_id IN (0, 1, 2, 3, 4)
-)"""
-    )
-    scored_cos = _sql_cosine("p.qv", "a.cv")
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f""",
-scored AS (
-  SELECT p.query_id, a.neighbor_id, {scored_cos} AS sim
-  FROM probes p JOIN assigned a USING (cid)
-  WHERE a.neighbor_id != p.query_id
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-    )
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"round(list_sum(list_transform(list_zip({a}, {b}), p -> p[1]::DOUBLE * p[2]::DOUBLE)) /"
-        f" (sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN {a} ])) *"
-        f"  sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN {b} ]))), 6)"
-    )
-
-
-O_ANN_IVF = f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings ORDER BY vec_id LIMIT 8
-), csim AS (
-  SELECT e.vec_id, e.embedding, c.cid, {_sql_cosine('e.embedding', 'c.cvec')} AS csim
-  FROM embeddings e, cent c
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn FROM csim
-), assigned AS (
-  SELECT vec_id AS neighbor_id, embedding AS cv, cid FROM ranked WHERE crn = 1
-), probes AS (
-  SELECT vec_id AS query_id, embedding AS qv, cid FROM ranked
-  WHERE crn <= 2 AND vec_id IN (0, 1, 2, 3, 4)
-), scored AS (
-  SELECT p.query_id, a.neighbor_id, {_sql_cosine('p.qv', 'a.cv')} AS sim
-  FROM probes p JOIN assigned a USING (cid)
-  WHERE a.neighbor_id != p.query_id
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-
-def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Sign-LSH with integer hyperplanes evaluated as Column expressions: fully
-    # oracle-checkable (round 1 ran threshold=0.9 which yields 0 rows on the
-    # synthetic random-vector corpus — an empty result validates nothing; 0.3
-    # yields ~150 verified pairs at sf0.01).
-    from .operators.similarity import EMB_DIM, pairwise_dup_candidates
-
-    return pairwise_dup_candidates(
-        _read(spark, sf_dir, "embeddings"), threshold=0.3, n_planes=4, expect_dim=EMB_DIM
-    )
-
-
-def _o_dedup_embedding() -> str:
-    from .operators.similarity import EMB_DIM, signlsh_bucket_sql
-
-    bucket = signlsh_bucket_sql("embedding", EMB_DIM, n_planes=4)
-    cos = _sql_cosine("a.embedding", "b.embedding")
-    return f"""
-WITH e AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings)
-SELECT id_a, id_b, sim FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS sim
-  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-) WHERE sim >= 0.3
-"""
-
-
-def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ: coarse cells + product-quantized ADC scan
-    (operators/similarity.ivf_pq_topk) — build and probe both restated exactly
-    by the oracle (deterministic first-n codebooks, 6-decimal-quantized
-    distances, fixed-order ADC sum)."""
-    from .operators.similarity import ivf_pq_topk
-
-    return ivf_pq_topk(
-        _read(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=5, n_list=8, n_probe=2, m=4, n_codes=8
-    )
-
-
-def _sql_l2sq(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        "p -> (p[1]::DOUBLE - p[2]::DOUBLE) * (p[1]::DOUBLE - p[2]::DOUBLE)))"
-    )
-
-
-def _o_ann_ivf_pq() -> str:
-    from .operators.similarity import EMB_DIM
-
-    m = 4
-    sw = EMB_DIM // m  # subvector width follows the fixture's embedding width
-    cos = _sql_cosine("e.embedding", "c.cvec")
-    return f"""
-WITH cent AS (
-  SELECT vec_id AS cid, embedding AS cvec FROM embeddings ORDER BY vec_id LIMIT 8
-), csim AS (
-  SELECT e.vec_id, e.embedding, c.cid, {cos} AS csim
-  FROM embeddings e, cent c
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cid) AS crn FROM csim
-), assigned AS (
-  SELECT vec_id, embedding, cid FROM ranked WHERE crn = 1
-), subsrc AS (SELECT unnest(range(0, {m})) AS sub),
-cwsrc AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding
-  FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-), cw AS (
-  SELECT s.sub, w.code, list_slice(w.embedding, s.sub*{sw}+1, s.sub*{sw}+{sw}) AS cwvec
-  FROM cwsrc w, subsrc s
-), enc AS (
-  SELECT vec_id, cid, sub, code FROM (
-    SELECT a.vec_id, a.cid, w.sub, w.code,
-           round({_sql_l2sq(f"list_slice(a.embedding, w.sub*{sw}+1, w.sub*{sw}+{sw})", "w.cwvec")}, 6) AS dist,
-           row_number() OVER (
-             PARTITION BY a.vec_id, w.sub
-             ORDER BY round({_sql_l2sq(f"list_slice(a.embedding, w.sub*{sw}+1, w.sub*{sw}+{sw})", "w.cwvec")}, 6), w.code
-           ) AS rn
-    FROM assigned a, cw w
-  ) WHERE rn = 1
-), codes AS (
-  SELECT vec_id, cid,
-         min(CASE WHEN sub = 0 THEN code END) AS c0,
-         min(CASE WHEN sub = 1 THEN code END) AS c1,
-         min(CASE WHEN sub = 2 THEN code END) AS c2,
-         min(CASE WHEN sub = 3 THEN code END) AS c3
-  FROM enc GROUP BY 1, 2
-), dt AS (
-  SELECT q.vec_id AS query_id, w.sub, w.code,
-         round({_sql_l2sq(f"list_slice(q.embedding, w.sub*{sw}+1, w.sub*{sw}+{sw})", "w.cwvec")}, 6) AS qd
-  FROM embeddings q, cw w WHERE q.vec_id IN (0, 1, 2, 3, 4)
-), probes AS (
-  SELECT vec_id AS query_id, cid FROM ranked WHERE crn <= 2 AND vec_id IN (0, 1, 2, 3, 4)
-), cand AS (
-  SELECT p.query_id, k.vec_id AS neighbor_id,
-         round(d0.qd + d1.qd + d2.qd + d3.qd, 6) AS adist
-  FROM probes p
-  JOIN codes k USING (cid)
-  JOIN dt d0 ON d0.query_id = p.query_id AND d0.sub = 0 AND d0.code = k.c0
-  JOIN dt d1 ON d1.query_id = p.query_id AND d1.sub = 1 AND d1.code = k.c1
-  JOIN dt d2 ON d2.query_id = p.query_id AND d2.sub = 2 AND d2.code = k.c2
-  JOIN dt d3 ON d3.query_id = p.query_id AND d3.sub = 3 AND d3.code = k.c3
-  WHERE k.vec_id != p.query_id
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM cand
-) WHERE rank <= 5
-"""
-
-
-def q_dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023 shape): the
-    near-dup pair graph comes from EMBEDDING similarity (sign-LSH blocked,
-    verified cosine — operators/similarity.pairwise_dup_candidates) instead of
-    lexical shingles, then the same transitive-clustering + keep-best-doc
-    policy as dedup_clusters. vec_id is the corpus doc_id (one embedding per
-    document). Catches paraphrase-level duplicates MinHash cannot see; at
-    100 TB the pair stage is the IVF/LSH-bucketed similarity join, never
-    all-pairs."""
-    from .operators.curation import dedup_clusters
-    from .operators.similarity import EMB_DIM, pairwise_dup_candidates
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = pairwise_dup_candidates(
-        _read(spark, sf_dir, "embeddings"), threshold=0.3, n_planes=4, expect_dim=EMB_DIM
-    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    return dedup_clusters(docs, pairs)
-
-
-def _o_dedup_semantic_clusters() -> str:
-    from .operators.similarity import EMB_DIM, signlsh_bucket_sql
-
-    bucket = signlsh_bucket_sql("embedding", EMB_DIM, n_planes=4)
-    cos = _sql_cosine("a.embedding", "b.embedding")
-    return (
-        f"""
-WITH RECURSIVE e AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-jp AS (
-  SELECT id_a AS doc_a, id_b AS doc_b FROM (
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS sim
-    FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  ) WHERE sim >= 0.3
-)"""
-        + _DUCK_CC_KEEP_TAIL
-    )
-
-
 def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textstats import token_count
 
@@ -2167,133 +1844,6 @@ SELECT s.doc_id,
 FROM sh s JOIN documents d USING (doc_id)
 """
 )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload plumbing through mapInPandas. The payload is
-    ``unhex(md5(text))`` (attach_fake_media), so every output column is
-    arithmetically reconstructible in DuckDB: n_bytes = 16, payload_md5 =
-    md5(hex(payload)) = md5(md5(text)), feature_0 = first digest byte decoded
-    from the leading hex pair — an exact oracle on the mapInPandas plumbing."""
-    from .operators.multimodal import attach_fake_media, extract_features
-
-    return extract_features(attach_fake_media(_read(spark, sf_dir, "documents")))
-
-
-O_MEDIA_FEATURES = """
-WITH d AS (
-  SELECT doc_id, md5(coalesce(text, '')) AS hx FROM documents
-)
-SELECT doc_id,
-       ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
-       CAST(16 AS INT) AS n_bytes,
-       md5(hx) AS payload_md5,
-       CAST(16 * (position(substr(hx, 1, 1) IN '0123456789abcdef') - 1)
-          + (position(substr(hx, 2, 1) IN '0123456789abcdef') - 1) AS INT) AS feature_0
-FROM d
-"""
-
-
-def q_media_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL end-to-end image decode (no codec libs): worker-side binary PPM
-    encode from each document, then mapInPandas header-parse + per-channel
-    pixel means. The oracle recreates the pixel bytes arithmetically from
-    DuckDB's md5 hex — an exact-value check on a genuine binary decoder."""
-    from .operators.multimodal import attach_ppm_media, image_stats
-
-    return image_stats(attach_ppm_media(_read(spark, sf_dir, "documents")))
-
-
-O_MEDIA_IMAGE_STATS = """
-WITH d AS (
-  SELECT doc_id, md5(coalesce(text,'')) AS hx,
-         CAST(doc_id % 7 + 2 AS INT) AS width, CAST(doc_id % 5 + 2 AS INT) AS height
-  FROM documents
-), b AS (
-  -- byte k of the payload = byte (k mod 16) of the md5 digest, decoded from
-  -- the hex pair by alphabet position; channel = k mod 3
-  SELECT doc_id, width, height,
-         (16 * (position(substr(hx, 2*(k%16)+1, 1) IN '0123456789abcdef') - 1)
-             + (position(substr(hx, 2*(k%16)+2, 1) IN '0123456789abcdef') - 1)) AS v,
-         k % 3 AS c
-  FROM d, unnest(range(width*height*3)) AS u(k)
-)
-SELECT doc_id, width, height,
-       CAST(SUM(CASE WHEN c=0 THEN v END) // (width*height) AS INT) AS mean_r,
-       CAST(SUM(CASE WHEN c=1 THEN v END) // (width*height) AS INT) AS mean_g,
-       CAST(SUM(CASE WHEN c=2 THEN v END) // (width*height) AS INT) AS mean_b
-FROM b GROUP BY doc_id, width, height
-"""
-
-
-def q_media_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL end-to-end audio decode (no codec libs): worker-side PCM WAV encode
-    from each document, then mapInPandas RIFF-header parse + RMS amplitude over
-    the samples. Oracle recreates the little-endian signed 16-bit samples from
-    DuckDB's md5 hex; sums of squares stay under 2^53 so the double arithmetic
-    is bit-identical across engines."""
-    from .operators.multimodal import attach_wav_media, audio_stats
-
-    return audio_stats(attach_wav_media(_read(spark, sf_dir, "documents")))
-
-
-O_MEDIA_AUDIO_STATS = """
-WITH d AS (
-  SELECT doc_id, md5(coalesce(text,'')) AS hx,
-         CAST(doc_id % 50 + 10 AS INT) AS n,
-         CAST(8000 + doc_id % 4 * 4000 AS INT) AS sample_rate
-  FROM documents
-), raw AS (
-  -- sample k = little-endian signed int16 of payload bytes (2k, 2k+1), each
-  -- byte = digest byte (j mod 16) decoded from the hex pair
-  SELECT doc_id, n, sample_rate,
-         ((16 * (position(substr(hx, 2*((2*k)%16)+1, 1) IN '0123456789abcdef') - 1)
-              + (position(substr(hx, 2*((2*k)%16)+2, 1) IN '0123456789abcdef') - 1))
-        + 256 * (16 * (position(substr(hx, 2*((2*k+1)%16)+1, 1) IN '0123456789abcdef') - 1)
-              + (position(substr(hx, 2*((2*k+1)%16)+2, 1) IN '0123456789abcdef') - 1))) AS u
-  FROM d, unnest(range(n)) AS t(k)
-), s AS (
-  SELECT doc_id, n, sample_rate,
-         CAST(CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS DOUBLE) AS v
-  FROM raw
-)
-SELECT doc_id, sample_rate, n AS n_samples,
-       CAST(floor(sqrt(SUM(v * v) / n)) AS INT) AS rms
-FROM s GROUP BY doc_id, sample_rate, n
-"""
-
-
-def q_media_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL end-to-end video frame sampling (no codec libs): worker-side raw
-    YUV4MPEG2 encode from each document, then mapInPandas FRAME-marker parse
-    fanning out one row per frame with its Y-plane luma mean. Oracle recreates
-    each frame's luma bytes arithmetically from DuckDB's md5 hex."""
-    from .operators.multimodal import attach_y4m_media, frame_luma_stats
-
-    return frame_luma_stats(attach_y4m_media(_read(spark, sf_dir, "documents")))
-
-
-O_MEDIA_FRAME_STATS = """
-WITH d AS (
-  SELECT doc_id, md5(coalesce(text,'')) AS hx,
-         CAST(doc_id % 3 * 2 + 4 AS INT) AS width,
-         CAST(doc_id % 2 * 2 + 2 AS INT) AS height,
-         CAST(doc_id % 4 + 1 AS INT) AS n_frames
-  FROM documents
-), fr AS (
-  SELECT *, width*height + 2*(width*height//4) AS plane FROM d
-), px AS (
-  -- Y-plane byte j of frame f = stream byte (f*plane + j) = digest byte
-  -- ((f*plane + j) mod 16), decoded from the hex pair
-  SELECT doc_id, width, height, CAST(f AS INT) AS frame_idx,
-         (16 * (position(substr(hx, 2*((f*plane + j) % 16)+1, 1) IN '0123456789abcdef') - 1)
-             + (position(substr(hx, 2*((f*plane + j) % 16)+2, 1) IN '0123456789abcdef') - 1)) AS v
-  FROM fr, unnest(range(n_frames)) AS a(f), unnest(range(width*height)) AS b(j)
-)
-SELECT doc_id, frame_idx, width, height,
-       CAST(SUM(v) // (width*height) AS INT) AS mean_y
-FROM px GROUP BY doc_id, frame_idx, width, height
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -3230,26 +2780,11 @@ WHERE alias != ''
 """
 
 
-# Driver-facing contract: EXACTLY 50 rows — the driver oracles at most 50
-# queries per round (round 3 ran a 56-row contract and the 6 dict-tail rows
-# went unevidenced), so the contract is kept at the check budget and rows
-# ROTATE between the driver window and the pytest window so every query
-# earns a driver CORRECTNESS artifact at least once (round-5 rotation,
-# VERDICT r4 task #1):
-#   round 5 IN  — the 14 rows that had only pytest evidence through r4
-#     (7 retired twins + the 7 round-4 operators);
-#   round 5 OUT — 14 stable rows green in BOTH r3 and r4 driver artifacts
-#     (kg_preannotate, kg_annotated_refs, kg_relation_frequency,
-#     kg_geo_enrich, kg_population_completeness, kg_eval_verdicts,
-#     dico_build_{places,bne,getty,dbpediafr}, dico_regex_lookup,
-#     dico_geonames, rel_lifespan, media_image_stats) — now pytest-pinned in
-#     PYTEST_QUERIES below against their unchanged oracles.
-# Ordered defensively: never-driver-evidenced rows first.
+# Driver-facing contract: 46 rows, each with an exact DuckDB oracle. The
+# driver checks at most 50 queries per round, so the remaining rows live in
+# PYTEST_QUERIES below, checked against their oracles by
+# tests/test_driver_contract.py through the identical comparison.
 QUERIES = {
-    # --- rotated IN this round: first-ever driver evidence for these 14
-    # round-4 rows and (second swap, same round) the 9 round-5 operators;
-    # with this swap every one of the 73 contract rows has appeared in a
-    # driver CORRECTNESS window at least once across rounds 1-5 ---
     "text_url_extract": q_text_url_extract,
     "doc_domain_filter": q_doc_domain_filter,
     "doc_shuffle_deterministic": q_doc_shuffle_deterministic,
@@ -3264,8 +2799,6 @@ QUERIES = {
     "text_pretoken_count": q_text_pretoken_count,
     "text_repetition": q_text_repetition,
     "doc_pack_greedy": q_doc_pack_greedy,
-    "dedup_semantic_clusters": q_dedup_semantic_clusters,
-    "ann_ivf_pq": q_ann_ivf_pq,
     "kg_links_grouped": q_kg_links_grouped,
     "kg_mentions_relational": q_kg_mentions_relational,
     "kg_annotated_turns": q_kg_annotated_turns,
@@ -3273,7 +2806,6 @@ QUERIES = {
     "kg_score_extract": q_kg_score_extract,
     "kg_occurrences": q_kg_occurrences,
     "kg_author_enrich": q_kg_author_enrich,
-    # --- stable body (driver-green r3+r4) ---
     "rel_pushdown_agg": q_rel_pushdown_agg,
     "rel_join_topk": q_rel_join_topk,
     "rel_sessionize": q_rel_sessionize,
@@ -3295,11 +2827,9 @@ QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dedup_ngram_jaccard": q_dedup_ngram,
     "dedup_simhash": q_dedup_simhash,
-    "dedup_embedding": q_dedup_embedding,
     "text_tfidf_topk": q_text_tfidf_topk,
     "doc_sample_stratified": q_doc_sample_stratified,
     "text_decontaminate": q_text_decontaminate,
-    "ann_cosine_topk": q_ann_cosine_topk,
     "text_quality": q_text_quality,
 }
 
@@ -3318,8 +2848,6 @@ ORACLES = {
     "text_pretoken_count": _o_text_pretoken_count(),
     "text_repetition": O_TEXT_REPETITION,
     "doc_pack_greedy": O_DOC_PACK_GREEDY,
-    "dedup_semantic_clusters": _o_dedup_semantic_clusters(),
-    "ann_ivf_pq": _o_ann_ivf_pq(),
     "kg_links_grouped": O_KG_LINKS,  # the grouped variant must match the same oracle
     "kg_mentions_relational": O_KG_MENTIONS,  # both detectors must match the same oracle
     "kg_annotated_turns": O_KG_ANNOTATED_TURNS,
@@ -3348,24 +2876,19 @@ ORACLES = {
     "dedup_exact": O_DEDUP_EXACT,
     "dedup_ngram_jaccard": O_DEDUP_NGRAM,
     "dedup_simhash": O_DEDUP_SIMHASH,
-    "dedup_embedding": _o_dedup_embedding(),
     "text_tfidf_topk": O_TEXT_TFIDF_TOPK,
     "doc_sample_stratified": O_DOC_SAMPLE_STRATIFIED,
     "text_decontaminate": O_TEXT_DECONTAMINATE,
-    "ann_cosine_topk": O_ANN_COSINE,
     "text_quality": O_TEXT_QUALITY,
 }
 
-assert len(QUERIES) == 50 and set(QUERIES) == set(ORACLES), (
+assert len(QUERIES) == 46 and set(QUERIES) == set(ORACLES), (
     len(QUERIES),
     set(QUERIES) ^ set(ORACLES),
 )
 
-# Oracle-checked by PYTEST this round (tests/test_driver_contract.py runs the
-# union of both registries through the identical comparison): 23 rows that
-# are all driver-green in at least one prior CORRECTNESS artifact (the 14
-# rotated out at round-5 start, plus 9 stable r3+r4-green rows demoted when
-# the round-5 operators were promoted into the driver window above).
+# Oracle-checked by pytest (tests/test_driver_contract.py runs the union of
+# both registries through the identical comparison).
 PYTEST_QUERIES = {
     "kg_eval_verdicts": q_kg_eval_verdicts,
     "kg_preannotate": q_kg_preannotate,
@@ -3380,15 +2903,6 @@ PYTEST_QUERIES = {
     "dico_regex_lookup": q_dico_regex_lookup,
     "dico_geonames": q_dico_geonames,
     "rel_lifespan": q_rel_lifespan,
-    "media_image_stats": q_media_image_stats,
-    # --- demoted when the 9 round-5 operators were promoted (driver-green
-    # in both the r3 and r4 CORRECTNESS artifacts, oracles unchanged) ---
-    "media_audio_stats": q_media_audio_stats,
-    "media_frame_stats": q_media_frame_stats,
-    "media_features": q_media_features,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_trained": q_ann_ivf_trained,
     "text_token_count": q_text_token_count,
     "text_language_id": q_text_language_id,
     "text_fingerprint": q_text_fingerprint,
@@ -3408,25 +2922,9 @@ PYTEST_ORACLES = {
     "dico_regex_lookup": O_DICO_REGEX_LOOKUP,
     "dico_geonames": O_DICO_GEONAMES,
     "rel_lifespan": O_REL_LIFESPAN,
-    "media_image_stats": O_MEDIA_IMAGE_STATS,
-    "media_audio_stats": O_MEDIA_AUDIO_STATS,
-    "media_frame_stats": O_MEDIA_FRAME_STATS,
-    "media_features": O_MEDIA_FEATURES,
-    "ann_lsh_topk": _o_ann_lsh_topk(),
-    "ann_ivf_topk": O_ANN_IVF,
-    "ann_ivf_trained": _o_ann_ivf_trained(),
     "text_token_count": O_TEXT_TOKEN_COUNT,
     "text_language_id": O_TEXT_LANGUAGE_ID,
     "text_fingerprint": O_TEXT_FINGERPRINT,
 }
 
-# Union view for consumers that time/run queries regardless of which evidence
-# window a row currently sits in (bench.py PER_QUERY survives rotations).
-ALL_QUERIES = {**QUERIES, **PYTEST_QUERIES}
-ALL_ORACLES = {**ORACLES, **PYTEST_ORACLES}
-
-assert len(PYTEST_QUERIES) == 23 and set(PYTEST_QUERIES) == set(PYTEST_ORACLES)
-
-# back-compat alias (round-4 docs referred to these as the retired rows)
-RETIRED_QUERIES = PYTEST_QUERIES
-RETIRED_ORACLES = PYTEST_ORACLES
+assert len(PYTEST_QUERIES) == 16 and set(PYTEST_QUERIES) == set(PYTEST_ORACLES)

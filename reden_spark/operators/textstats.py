@@ -455,7 +455,7 @@ def perplexity(docs: DataFrame) -> DataFrame:
     occurrence — would otherwise drag ~corpus-sized string pairs through
     two aggregations and two joins: measured 469.7 s -> 259.8 s at 2 M docs
     from the key change alone, and -> 65.4 s once shared() materializes
-    per_doc for its three consumers on the production /dev/shm-scratch
+    per_doc for its three consumers on a tmpfs-scratch 32-core
     session (bench_artifacts/new_ops_scale_r5.json `shared_checkpoint_round`;
     the first artifact entry for this operator recorded 1.7 s from a bare
     count(), which Catalyst collapses to a scan — value-forced timings only).

@@ -8,7 +8,7 @@ sources.storage (manifest + per-partition lineage counters, identical
 machinery to the KG pipeline in plans/pipeline.py); `--from-stage` (or a
 missing/invalidated manifest) recomputes from that point. Launchable via
 
-    spark-submit --py-files reden_spark.zip reden_spark/plans/curation.py \
+    spark-submit --py-files dist/reden_spark.zip reden_spark/plans/curation.py \
         --data-dir /root/testdata/sf0.01 --out-dir /tmp/curation_out
 
 Stage semantics (exact twins of the contract row `curation_pipeline` and its
@@ -160,15 +160,15 @@ def run_curation(
 
 
 def main() -> None:
-    import os
-
     from reden_spark.session import get_spark
 
     ap = argparse.ArgumentParser(description="training-data curation pipeline")
     ap.add_argument("--data-dir", required=True)
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--from-stage", choices=STAGES)
-    ap.add_argument("--master", default=None)
+    ap.add_argument(
+        "--master", default=None, help="Spark master (default: spark-submit's --master, else local[*])"
+    )
     ap.add_argument("--holdout-fraction", type=float, default=0.2)
     ap.add_argument("--budget", type=int, default=512)
     ap.add_argument("--n-shards", type=int, default=8)
@@ -186,7 +186,7 @@ def main() -> None:
     )
     a = ap.parse_args()
 
-    spark = get_spark("reden-curation", master=a.master or os.environ.get("SPARK_MASTER"))
+    spark = get_spark("reden-curation", master=a.master)
     t0 = time.time()
     dfs = run_curation(
         spark,

@@ -99,7 +99,7 @@ def run_pipeline(
             return storage.read_stage(spark, out, name)
         # job-group tag: Spark stages/tasks of this pipeline stage are
         # attributable in the event log / UI (per-stage shuffle-byte and CPU
-        # accounting — see bench.py --stage-profile)
+        # accounting — see `perfbench/run.py --trace 1`)
         spark.sparkContext.setJobGroup(f"reden-{name}", f"pipeline stage {name}")
         t0 = time.time()
         try:
@@ -263,7 +263,6 @@ def run_pipeline(
 
 
 def main() -> None:
-    import os
     import sys
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
@@ -275,7 +274,9 @@ def main() -> None:
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--from-stage", choices=STAGES)
     ap.add_argument("--grouped", action="store_true", help="use the applyInPandas stage-3 variant")
-    ap.add_argument("--master", default=None)
+    ap.add_argument(
+        "--master", default=None, help="Spark master (default: spark-submit's --master, else local[*])"
+    )
     ap.add_argument("--base-prefix", default=BASE_PREFIX)
     ap.add_argument("--preferred-uri", default=BASE_PREFIX, help="preferedURIOrder prefix or 'ALL'")
     ap.add_argument(
@@ -315,7 +316,7 @@ def main() -> None:
     )
     a = ap.parse_args()
 
-    spark = get_spark("reden-pipeline", master=a.master or os.environ.get("SPARK_MASTER"))
+    spark = get_spark("reden-pipeline", master=a.master)
     if a.properties:
         from dataclasses import replace
 

@@ -1,17 +1,21 @@
-"""SparkSession factory tuned for the KG-construction pipeline.
+"""SparkSession factory with the engine's standard config.
 
-Defaults chosen for scale (AQE on, Arrow on, skew-join handling on); shuffle
-partition count is sized for the sandbox but is the knob a real cluster would
-raise to O(cores * 2-3).
+AQE, Arrow and skew-join handling are on. The master is left to Spark unless a
+caller passes one: spark-submit's ``--master``, or else ``local[*]``. Shuffle
+and spill scratch is Spark's own choice too: ``SPARK_LOCAL_DIRS`` when set,
+else ``java.io.tmpdir``.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+
+# Fixed, not tied to the core count, so a plan is the same at every
+# parallelism; a cluster raises it to 2-3x its total cores.
+SHUFFLE_PARTITIONS = 64
 
 
 def _default_driver_mem() -> str:
@@ -32,99 +36,21 @@ def _default_driver_mem() -> str:
     return f"{max(4, min(48, avail_gb // 2))}g"
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-
-
-def _owns_scratch(pid: int) -> bool:
-    """True iff `pid` is alive AND plausibly a Spark-bearing process. Guards the
-    reaper against pid reuse: a recycled pid (or another user's process, where
-    the liveness probe returns True on PermissionError) must not pin a dead
-    session's scratch gigabytes under tmpfs forever."""
-    if not _pid_alive(pid):
-        return False
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as fh:
-            cmd = fh.read().lower()
-        return b"python" in cmd or b"java" in cmd or b"spark" in cmd
-    except OSError:
-        # cmdline unreadable (exited mid-check, or foreign uid on a multi-user
-        # host) — keep the directory; a stale dir costs space, a reaped live
-        # one costs a running job
-        return True
-
-
-def _scratch_dir() -> str:
-    """Per-process shuffle/spill scratch, preferring tmpfs when it has headroom.
-
-    tmpfs (/dev/shm) is the single-node stand-in for a cluster's per-executor
-    local NVMe — one shared spinning disk serializes every shuffle at any core
-    count. But tmpfs competes with the JVM heap for the same RAM, so it is only
-    used when >=16 GiB are free; each session gets a pid-scoped subdirectory
-    removed at interpreter exit, and stale siblings of dead processes are
-    reaped opportunistically (concurrent sessions no longer share one dir)."""
-    env = os.environ.get("SPARK_LOCAL_DIRS")
-    if env:
-        return env
-    if os.path.isdir("/dev/shm"):
-        # Reap dead-pid siblings BEFORE the headroom check: a kill -9'd session
-        # never runs its atexit cleanup, and its leftover gigabytes are exactly
-        # what would otherwise push free space under the threshold forever.
-        base = "/dev/shm/spark_scratch"
-        if os.path.isdir(base):
-            for name in os.listdir(base):
-                if name.startswith("pid-"):
-                    try:
-                        pid = int(name[4:])
-                    except ValueError:
-                        continue
-                    if pid != os.getpid() and not _owns_scratch(pid):
-                        shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        try:
-            st = os.statvfs("/dev/shm")
-            free_gb = st.f_bavail * st.f_frsize / 2**30
-        except OSError:
-            free_gb = 0.0
-        if free_gb >= 16:
-            os.makedirs(base, exist_ok=True)
-            d = os.path.join(base, f"pid-{os.getpid()}")
-            os.makedirs(d, exist_ok=True)
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-            return d
-    return "/tmp"
-
-
 def get_spark(
     app_name: str = "reden-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so bench
-    runs can flip parallelism with one env var / argument.
+    ``master=None`` sets no master, so a spark-submit ``--master`` wins.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # Fixed default (not tied to the master's core count): the physical plan
-        # must be identical across parallelism levels for the N->4N scaling
-        # experiment to measure scheduling, not plan drift. 64 = 2x the largest
-        # local[] size used here; a real cluster raises it to 2-3x total cores.
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
-
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -138,7 +64,6 @@ def get_spark(
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", _default_driver_mem())
-        .config("spark.local.dir", _scratch_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "32m")
     )

@@ -19,7 +19,6 @@ TABLES = [
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 ]
 
 
@@ -47,9 +46,9 @@ def normalize(rows, cols):
 
 from reden_spark.driver_contract import PYTEST_ORACLES, PYTEST_QUERIES
 
-ALL_QUERIES = {**entrymod.queries(), **PYTEST_QUERIES}
-ALL_ORACLES = {**entrymod.oracle_sql(), **PYTEST_ORACLES}
-ORACLE_NAMES = sorted(ALL_ORACLES)
+CONTRACT_QUERIES = {**entrymod.queries(), **PYTEST_QUERIES}
+CONTRACT_ORACLES = {**entrymod.oracle_sql(), **PYTEST_ORACLES}
+ORACLE_NAMES = sorted(CONTRACT_ORACLES)
 
 
 def test_driver_contract_within_oracle_budget():
@@ -61,11 +60,11 @@ def test_driver_contract_within_oracle_budget():
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_query_matches_oracle(spark, duck, name):
-    q = ALL_QUERIES[name]
+    q = CONTRACT_QUERIES[name]
     df = q(spark, SF)
     cols = df.columns
     got = normalize([tuple(r) for r in df.collect()], cols)
-    res = duck.sql(ALL_ORACLES[name])
+    res = duck.sql(CONTRACT_ORACLES[name])
     want = normalize(res.fetchall(), res.columns)
     assert [c.lower() for c in sorted(cols)] == sorted(c.lower() for c in res.columns), (
         f"{name}: column mismatch {sorted(cols)} vs {sorted(res.columns)}"
@@ -75,12 +74,6 @@ def test_query_matches_oracle(spark, duck, name):
         f"{name}: first diffs got-only={[r for r in got if r not in set(want)][:3]} "
         f"want-only={[r for r in want if r not in set(got)][:3]}"
     )
-
-
-def test_rows_only_queries_run(spark):
-    for name in sorted(set(entrymod.queries()) - set(entrymod.oracle_sql())):
-        df = entrymod.queries()[name](spark, SF)
-        assert df.count() >= 0, name
 
 
 def test_entry_smoke(spark):

@@ -13,15 +13,9 @@ def docs(spark):
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-@pytest.fixture(scope="module")
 def duck(duck_config):
     con = duckdb.connect(config=duck_config)
     con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')")
-    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{SF_DIR}/embeddings.parquet')")
     return con
 
 
@@ -179,56 +173,6 @@ def test_simhash_pairs_match_bruteforce(docs):
     assert got == want
 
 
-def test_pairwise_dup_candidates_vs_duckdb(emb, duck):
-    """Sign-LSH embedding dedup is fully oracle-checkable (integer hyperplanes,
-    Column-expression bucketing) and non-empty on the fixture."""
-    from reden_spark.driver_contract import _o_dedup_embedding
-    from reden_spark.operators.similarity import pairwise_dup_candidates
-
-    got = {(r.id_a, r.id_b, r.sim) for r in pairwise_dup_candidates(emb, 0.3, 4).collect()}
-    want = {tuple(r) for r in duck.sql(_o_dedup_embedding()).fetchall()}
-    assert got == want and len(got) > 0
-
-
-def test_pairwise_dup_seeded_near_duplicates(spark):
-    """Seeded near-duplicate embeddings (base + tiny noise) must all be found;
-    the full result must equal a brute-force numpy oracle applying the same
-    planes, bucketing and threshold."""
-    import numpy as np
-
-    from reden_spark.operators.similarity import int_hyperplanes, pairwise_dup_candidates
-
-    rng = np.random.RandomState(3)
-    dim, n_pairs = 16, 10
-    base = rng.standard_normal((n_pairs, dim)).astype(np.float32)
-    vecs = {}
-    for i, v in enumerate(base):
-        vecs[2 * i] = v
-        vecs[2 * i + 1] = (v + 0.001 * rng.standard_normal(dim)).astype(np.float32)
-    emb = spark.createDataFrame(
-        [(k, [float(x) for x in v]) for k, v in vecs.items()],
-        "vec_id int, embedding array<float>",
-    )
-    got = {(r.id_a, r.id_b) for r in pairwise_dup_candidates(emb, threshold=0.99, n_planes=4).collect()}
-
-    planes = int_hyperplanes(dim, 4)
-    def bucket(v):
-        return int(((v.astype(np.float64) @ planes.T) > 0).dot(1 << np.arange(4)))
-    want = set()
-    ids = sorted(vecs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if bucket(vecs[a]) != bucket(vecs[b]):
-                continue
-            va, vb = vecs[a].astype(np.float64), vecs[b].astype(np.float64)
-            sim = round(float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb))), 6)
-            if sim >= 0.99:
-                want.add((a, b))
-    seeded = {(2 * i, 2 * i + 1) for i in range(n_pairs)}
-    assert got == want
-    assert seeded <= got  # every seeded near-dup recovered
-
-
 def test_token_count_and_quality_vs_duckdb(docs, duck):
     from reden_spark.operators.textstats import quality_score, token_count
 
@@ -282,226 +226,6 @@ def test_language_id(docs, duck):
     rows = language_id(docs).collect()
     assert len(rows) == docs.count()
     assert {r.lang_pred for r in rows} <= {"en", "fr", "es", "de", "und"}
-
-
-def test_cosine_topk_vs_duckdb(emb, duck):
-    from reden_spark.operators.similarity import cosine_topk
-
-    qids = [0, 1, 2]
-    got = {(r.query_id, r.rank, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
-    want = {
-        tuple(r)
-        for r in duck.sql(
-            """
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (0,1,2)),
-            scored AS (
-              SELECT q.query_id, e.vec_id AS neighbor_id,
-                     round(
-                       list_sum(list_transform(list_zip(qv, e.embedding), p -> p[1]::DOUBLE * p[2]::DOUBLE)) /
-                       (sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN qv ])) *
-                        sqrt(list_sum([ (x::DOUBLE)*(x::DOUBLE) FOR x IN e.embedding ]))), 6) AS sim
-              FROM q, embeddings e WHERE e.vec_id != q.query_id
-            )
-            SELECT query_id, rank, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-              FROM scored
-            ) WHERE rank <= 5
-            """
-        ).fetchall()
-    }
-    assert got == want
-
-
-def test_lsh_topk_recall(emb):
-    from reden_spark.operators.similarity import cosine_topk, lsh_topk
-
-    qids = [0, 1, 2, 3, 4]
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
-    # Both bucketers (codegen integer planes = the oracle-checkable default;
-    # numpy float planes = the high-dim UDF alternative) must beat the sanity
-    # floor. Random-vector fixtures make recall seed-noisy (measured 0.16-0.28
-    # at 2-4 planes for either bucketer), so the floor asserts "the candidate
-    # cut retains signal", not approximation quality.
-    for bucketer in ("codegen", "udf"):
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in lsh_topk(emb, qids, k=5, n_planes=3, bucketer=bucketer).collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall > 0.1, bucketer
-
-
-def test_ivf_topk_recall_and_shape(emb):
-    from reden_spark.operators.similarity import cosine_topk, ivf_topk
-
-    qids = [0, 1, 2, 3, 4]
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
-    rows = ivf_topk(emb, qids, k=5, n_list=8, n_probe=2).collect()
-    approx = {(r.query_id, r.neighbor_id) for r in rows}
-    # each query returns <= k ranked rows, ranks dense from 1
-    by_q: dict[int, list[int]] = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
-    recall = len(exact & approx) / len(exact)
-    assert recall > 0.2  # 2-of-8 cells probed: recall floor, not exactness
-    # probing all cells must recover the exact result
-    full = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, qids, k=5, n_list=8, n_probe=8).collect()}
-    assert full == exact
-
-
-def test_ivf_trained_centroids(emb):
-    """Lloyd-trained quantizer: training actually moves the centroids, results
-    stay deterministic across runs, the top-k shape holds, and probing all
-    cells still recovers the exact result (training changes the cells, never
-    the scoring)."""
-    from reden_spark.operators.similarity import cosine_topk, ivf_topk, train_centroids
-
-    qids = [0, 1, 2, 3, 4]
-    init = {r.cid: list(r.cvec) for r in train_centroids(emb, 8, 0).collect()}
-    trained = {r.cid: list(r.cvec) for r in train_centroids(emb, 8, 2).collect()}
-    assert set(init) == set(trained) and any(init[c] != trained[c] for c in init)
-
-    a = {(r.query_id, r.rank, r.neighbor_id) for r in ivf_topk(emb, qids, k=5, n_list=8, n_probe=2, train_iters=2).collect()}
-    b = {(r.query_id, r.rank, r.neighbor_id) for r in ivf_topk(emb, qids, k=5, n_list=8, n_probe=2, train_iters=2).collect()}
-    assert a == b and len({q for q, _, _ in a}) == len(qids)
-
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
-    full = {(r.query_id, r.neighbor_id) for r in ivf_topk(emb, qids, k=5, n_list=8, n_probe=8, train_iters=2).collect()}
-    assert full == exact
-
-
-def test_multimodal_plumbing(spark, docs):
-    from reden_spark.operators.multimodal import (
-        attach_fake_media,
-        decode_media,
-        extract_features,
-        frame_sample_plan,
-    )
-
-    media = attach_fake_media(docs)
-    feats = extract_features(media).collect()
-    assert len(feats) == docs.count()
-    by_id = {f.doc_id: f for f in feats}
-    assert all(f.n_bytes == 16 for f in feats)  # md5 payload
-    first = media.filter(F.col("doc_id") == feats[0].doc_id).first()
-    assert by_id[first.doc_id].payload_md5 is not None
-    frames = frame_sample_plan(media, every_ms=5000)
-    assert frames.count() > 0
-    with pytest.raises(NotImplementedError):
-        decode_media(b"x", "image")
-
-
-def test_ppm_image_stats_real_decode(spark, docs):
-    """End-to-end REAL image pipeline (no codec libs): worker-side PPM encode ->
-    mapInPandas header-parse + pixel statistics, verified against an
-    independent pure-Python decode of the same payloads."""
-    import hashlib
-
-    from reden_spark.operators.multimodal import (
-        attach_ppm_media,
-        decode_ppm,
-        encode_ppm,
-        image_stats,
-    )
-
-    media = attach_ppm_media(docs)
-    got = {r.doc_id: (r.width, r.height, r.mean_r, r.mean_g, r.mean_b)
-           for r in image_stats(media).collect()}
-
-    want = {}
-    for row in docs.select("doc_id", "text").collect():
-        w, h = row.doc_id % 7 + 2, row.doc_id % 5 + 2
-        seed = hashlib.md5((row.text or "").encode()).digest()
-        rgb = (seed * (w * h * 3 // len(seed) + 1))[: w * h * 3]
-        # independent reference decode: plain ints, no numpy
-        px = list(rgb)
-        n = w * h
-        means = tuple(sum(px[c::3]) // n for c in range(3))
-        want[row.doc_id] = (w, h, *means)
-        # round-trip through the real decoder too
-        assert decode_ppm(encode_ppm(w, h, rgb)) == (w, h, *means)
-
-    assert got == want and len(got) > 100
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        decode_ppm(b"JFIF not a ppm")
-
-
-def test_wav_audio_stats_real_decode(spark, docs):
-    """End-to-end REAL audio pipeline (no codec libs): worker-side PCM WAV
-    encode -> mapInPandas RIFF parse + RMS, verified against an independent
-    pure-Python struct decode of the same payloads."""
-    import hashlib
-    import struct
-
-    from reden_spark.operators.multimodal import (
-        attach_wav_media,
-        audio_stats,
-        decode_wav,
-        encode_wav,
-    )
-
-    got = {r.doc_id: (r.sample_rate, r.n_samples, r.rms)
-           for r in audio_stats(attach_wav_media(docs)).collect()}
-
-    want = {}
-    for row in docs.select("doc_id", "text").collect():
-        n = row.doc_id % 50 + 10
-        rate = 8000 + row.doc_id % 4 * 4000
-        seed = hashlib.md5((row.text or "").encode()).digest()
-        pcm = (seed * (2 * n // 16 + 1))[: 2 * n]
-        samples = struct.unpack(f"<{n}h", pcm)
-        rms = int((sum(s * s for s in samples) / n) ** 0.5)
-        want[row.doc_id] = (rate, n, rms)
-        assert decode_wav(encode_wav(rate, pcm)) == (rate, n, rms)
-
-    assert got == want and len(got) > 100
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        decode_wav(b"OggS not a wav")
-
-
-def test_y4m_frame_stats_real_decode(spark, docs):
-    """End-to-end REAL video pipeline (no codec libs): worker-side y4m encode
-    -> mapInPandas per-FRAME parse + luma means, verified against an
-    independent pure-Python decode; one output row per frame."""
-    import hashlib
-
-    from reden_spark.operators.multimodal import (
-        attach_y4m_media,
-        decode_y4m_frames,
-        encode_y4m,
-        frame_luma_stats,
-    )
-
-    got = {(r.doc_id, r.frame_idx): (r.width, r.height, r.mean_y)
-           for r in frame_luma_stats(attach_y4m_media(docs)).collect()}
-
-    want = {}
-    for row in docs.select("doc_id", "text").collect():
-        w, h = row.doc_id % 3 * 2 + 4, row.doc_id % 2 * 2 + 2
-        n_frames = row.doc_id % 4 + 1
-        plane = w * h + 2 * (w * h // 4)
-        seed = hashlib.md5((row.text or "").encode()).digest()
-        stream = (seed * (plane * n_frames // 16 + 1))[: plane * n_frames]
-        frames = [stream[f * plane:(f + 1) * plane] for f in range(n_frames)]
-        for f in range(n_frames):
-            y = list(frames[f][: w * h])
-            want[(row.doc_id, f)] = (w, h, sum(y) // (w * h))
-        # round-trip through the real decoder too
-        assert decode_y4m_frames(encode_y4m(w, h, frames)) == [
-            (f, w, h, want[(row.doc_id, f)][2]) for f in range(n_frames)
-        ]
-
-    assert got == want and len(got) > 500  # multi-frame fan-out
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        decode_y4m_frames(b"RIFF not y4m")
 
 
 def test_dedup_clusters_transitive_and_keep_policy(docs, spark):
@@ -641,40 +365,6 @@ def test_curation_edge_cases(docs, spark):
     full = stratified_sample(docs, fraction=1.0, stratum_col="lang").collect()
     assert len(full) == n
     assert all(r["n_take"] == r["n_stratum"] for r in full)
-
-
-def test_ivf_pq_topk_shape_and_candidate_parity(emb):
-    """IVF-PQ: dense ranks per query; the candidate SET (pre-quantization)
-    equals ivf_topk's at the same (n_list, n_probe) when both rank the full
-    candidate pool — quantization reorders within the pool but cannot invent
-    or drop candidates. Recall vs exact asserted only as a sanity floor (PQ
-    on random vectors is noisy by construction)."""
-    from reden_spark.operators.similarity import cosine_topk, ivf_pq_topk, ivf_topk
-
-    qids = [0, 1, 2, 3, 4]
-    rows = ivf_pq_topk(emb, qids, k=5, n_list=8, n_probe=2).collect()
-    by_q: dict[int, list[int]] = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.rank)
-    assert set(by_q) == set(qids)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
-
-    # with k = corpus size, both IVF variants return the identical candidate
-    # pool (same cells probed) — only the order differs
-    big = 10_000
-    pq_pool = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_pq_topk(emb, qids, k=big, n_list=8, n_probe=2).collect()
-    }
-    ivf_pool = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(emb, qids, k=big, n_list=8, n_probe=2).collect()
-    }
-    assert pq_pool == ivf_pool
-
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, qids, k=5).collect()}
-    approx = {(r.query_id, r.neighbor_id) for r in rows}
-    assert len(exact & approx) / len(exact) > 0.05  # sanity floor only
 
 
 def test_null_text_behaves_as_empty(spark, duck):

@@ -303,29 +303,6 @@ def test_place_and_geonames_dico_single_exchange(spark):
     assert "hashpartitioning(" in gp
 
 
-def test_media_decode_pipelines_are_map_only(spark):
-    """The three real media pipelines (encode -> decode -> stats via
-    mapInPandas) must contain ZERO Exchange: binary payloads are produced and
-    consumed worker-side, never shuffled or collected."""
-    from reden_spark.operators.multimodal import (
-        attach_ppm_media,
-        attach_wav_media,
-        attach_y4m_media,
-        audio_stats,
-        frame_luma_stats,
-        image_stats,
-    )
-
-    docs = spark.createDataFrame([(1, "alpha"), (2, "beta")], "doc_id long, text string")
-    for df in (
-        image_stats(attach_ppm_media(docs)),
-        audio_stats(attach_wav_media(docs)),
-        frame_luma_stats(attach_y4m_media(docs)),
-    ):
-        p = plan(df)
-        assert "Exchange" not in p, p[:1200]
-
-
 def test_curation_plan_shapes(spark):
     """Curation operators keep their designed physical shapes: stratified
     sampling = count-agg + window partitioning (2 Exchanges) with the quota
