@@ -1,9 +1,9 @@
 """The one materialization point for frames consumed more than once.
 
-A frame that feeds several branches of one downstream query (the links
-stage's members/colored/edges/survivors, the dedup signature and shingle
-frames) is cut from its lineage by an eager checkpoint. Without the cut,
-Spark re-executes the upstream subtree once per consumer: there is no
+A frame that feeds several branches of one downstream query (the pruning
+step's colored/survivors frames, the dedup signature and shingle frames) is
+cut from its lineage by an eager checkpoint. Without the cut, Spark
+re-executes the upstream subtree once per consumer: there is no
 cross-join CSE, and ReusedExchange misses differently-pruned subplans. A lazy
 ``localCheckpoint`` is not an option either, because AQE submits the
 consuming stages concurrently and each re-executes the whole upstream.
@@ -71,14 +71,14 @@ def shared(df: DataFrame) -> DataFrame:
     return checkpoint(df)
 
 
-def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize a multi-consumed frame under the configured mode."""
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize a multi-consumed frame, eagerly, under the configured mode."""
     if checkpoint_mode() == "local":
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint()
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().checkpointDir().isEmpty():
         raise RuntimeError(
             "checkpoint mode 'reliable' needs spark.sparkContext.setCheckpointDir "
             "(point it at fault-tolerant storage: HDFS/S3 on a cluster)"
         )
-    return df.checkpoint(eager=eager)
+    return df.checkpoint()

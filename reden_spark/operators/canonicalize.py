@@ -33,7 +33,12 @@ def _driver_union_find(rows, spark) -> DataFrame:
     fixed cost left in the triples stage after the layout work; equivalence
     graphs are KB-sized (sameAs + dico co-membership), not corpus-sized, so
     they are almost always under the threshold. Semantics identical: canonical
-    = min URI of the component."""
+    = min URI of the component.
+
+    The map is returned under a broadcast hint: a driver-built frame reaches
+    the planner as a statistics-less RDD scan, so without the hint every join
+    against it plans a sort-merge join with two exchanges. Its size is bounded
+    by the ``driver_max_edges`` collect that produced it."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -56,7 +61,7 @@ def _driver_union_find(rows, spark) -> DataFrame:
     for group in members.values():
         canonical = min(group)
         out.extend((v, canonical) for v in group)
-    return spark.createDataFrame(out, "uri string, canonical string")
+    return F.broadcast(spark.createDataFrame(out, "uri string, canonical string"))
 
 
 def connected_components(

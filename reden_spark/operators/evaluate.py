@@ -33,6 +33,9 @@ def eval_records(gold: DataFrame, links: DataFrame, candidates: DataFrame) -> Da
             ).alias("correct_in_cand"),
         )
     )
+    # flags is (conversation, mention, gold URI)-grain; the null-safe gold key
+    # is still an equi-join key, so the hint turns the gold join into a
+    # broadcast hash join instead of a sort-merge join on both sides
     flags = cand_flags.select(
         F.col("conv_id").alias("f_conv"),
         F.col("mention").alias("f_mention"),
@@ -42,7 +45,7 @@ def eval_records(gold: DataFrame, links: DataFrame, candidates: DataFrame) -> Da
     )
     return (
         gold.join(
-            flags,
+            F.broadcast(flags),
             (F.col("conv_id") == F.col("f_conv"))
             & (F.col("mention") == F.col("f_mention"))
             & F.col("gold_uri").eqNullSafe(F.col("f_gold")),  # NIL rows must keep their flags

@@ -1,14 +1,16 @@
-"""Stage 3 (variant) — per-conversation disambiguation via groupBy(conv_id).applyInPandas.
+"""Stage 3 — per-conversation disambiguation via groupBy(conv_id).applyInPandas.
 
-The grouped-map formulation the north star sketches: one task materializes one
-conversation's candidates + the KB slice relevant to them, and runs the exact
-single-node kernel from oracle.py (fuse -> prune -> degree -> argmax) in pandas.
+The pipeline's links path. REDEN disambiguates one paragraph's graph in memory
+(CentralityHandler.java:100-215); here one task materializes one conversation's
+candidates + the KB slice relevant to them, and runs the exact single-node
+kernel from oracle.py (fuse -> prune -> centrality -> argmax) in pandas. The
+kernel serves all four centralityMeasure values.
 
-Production default remains the relational implementation (disambiguate.py) —
-it distributes *within* conversations, while this variant concentrates each
-conversation in one task (the skew hazard). The KB slice is pre-filtered with an
-equi-join on the conversation's probe keys (SURVEY.md §7 hazard 6) so a group
-never drags the whole KB into memory; tests assert both implementations agree.
+A conversation's work is conversation x distinct-mention grain, bounded by its
+entity set rather than its turn count (tests/test_skew.py), so a
+mega-conversation concentrates in one task without blowing it up. The KB slice
+is pre-filtered with an equi-join on the conversation's probe keys (SURVEY.md
+§7 hazard 6) so a group never drags the whole KB into memory.
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .. import oracle
 from ..functions.text import decompose, encode_last_segment
-from .candidates import conversation_cases  # noqa: F401  (re-export convenience)
 from .disambiguate import NELConfig, simple_links
 
 _OUT_SCHEMA = "conv_id string, mention string, chosen_uris string, score double"
@@ -63,7 +64,8 @@ def disambiguate_grouped(
     cases: DataFrame,
     cfg: NELConfig,
 ) -> DataFrame:
-    """Same contract as disambiguate.disambiguate, graph path via applyInPandas."""
+    """Full stage 3: occurrences + candidates -> LINKS (one row per occurrence
+    of a mention that received a URI), graph path via applyInPandas."""
     rels = {r["pred"].lower(): float(r["weight"]) for r in rel_weights.collect()}
     base_prefix, preferred = cfg.base_prefix, cfg.preferred_uri
     measure, crawl_sameas = cfg.centrality, cfg.crawl_sameas
@@ -124,7 +126,13 @@ def disambiguate_grouped(
     simple_chosen = simple_links(candidates.join(simple_convs, "conv_id", "left_semi")).withColumn(
         "path", F.lit("simple")
     )
-    chosen = graph_chosen.unionByName(simple_chosen)
+    # chosen is (conv, distinct-mention)-grain, much smaller than the
+    # occurrence table. Without a hint a small delta's mentions scan is under
+    # the broadcast threshold and the planner broadcasts the OCCURRENCE side,
+    # so the output loses the mentions checkpoint's conv_id bucketing that the
+    # links write relies on (pre_shuffle=False). Hashing chosen onto the
+    # mentions side keeps the occurrence rows where they sit, at any scale.
+    chosen = graph_chosen.unionByName(simple_chosen).hint("shuffle_hash")
     return (
         mentions.select("conv_id", "turn_idx", "occ_idx", "mention")
         .join(chosen, ["conv_id", "mention"], "inner")

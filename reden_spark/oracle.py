@@ -274,8 +274,9 @@ def eigenvector_centrality(
 ) -> dict[str, float]:
     """Unweighted symmetric power iteration, max-normalized and rounded HALF_UP
     to 12 decimals per round (the rounding pins cross-engine float determinism:
-    the Spark twin sums neighbor scores in arbitrary order and quantizes with
-    F.round, whose HALF_UP mode this oracle matches exactly). Deterministic
+    an engine that sums neighbor scores in arbitrary order and quantizes with
+    Spark's F.round gets the same values, whose HALF_UP mode this matches
+    exactly). Deterministic
     spec for the reference's EigenvectorCentrality
     (CentralityHandler.java:147-148) — argmax semantics, not bit-level
     jgrapht-sna parity."""

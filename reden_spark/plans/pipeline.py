@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import sys
 import time
 from pathlib import Path
@@ -33,12 +34,24 @@ if __package__ in (None, ""):
 
 from reden_spark.operators.candidates import conversation_cases, generate_candidates  # noqa: E402
 from reden_spark.operators.canonicalize import materialize_triples  # noqa: E402
-from reden_spark.operators.disambiguate import NELConfig, disambiguate  # noqa: E402
+from reden_spark.operators.disambiguate import NELConfig  # noqa: E402
 from reden_spark.operators.evaluate import eval_records, hachey_metrics  # noqa: E402
+from reden_spark.operators.grouped import disambiguate_grouped  # noqa: E402
 from reden_spark.operators.mentions import detect_mentions  # noqa: E402
 from reden_spark.sources import storage  # noqa: E402
 
 STAGES = ["mentions", "candidates", "links", "triples", "metrics"]
+
+# Input transcript bytes per turn-grain bucket. A bucketed scan runs one task
+# per bucket and AQE cannot coalesce it, so the count is sized from the input
+# when the stage is written: n = min(MAX_BUCKETS, ceil(bytes / BUCKET_BYTES)).
+BUCKET_BYTES = 4 << 20
+MAX_BUCKETS = 32
+
+
+def bucket_count(input_bytes: int) -> int:
+    """Turn-grain bucket count for an unbucketed input of this many bytes."""
+    return min(MAX_BUCKETS, max(1, math.ceil(input_bytes / BUCKET_BYTES)))
 
 
 def run_pipeline(
@@ -47,22 +60,24 @@ def run_pipeline(
     out_dir: str | Path,
     cfg: NELConfig,
     from_stage: str | None = None,
-    use_grouped: bool = False,
-    n_buckets: int = 32,
     checkpoint_mode: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline; returns the stage DataFrames.
 
     Turn-grain stages checkpoint as conv_id-bucketed Spark tables so stage
-    boundaries reuse partitioning (see the stage comments below).
+    boundaries reuse partitioning (see the stage comments below). The bucket
+    count is derived, never passed: a conv_id-bucketed input dictates it, a
+    resumed run reuses the count its mentions checkpoint recorded, and
+    otherwise :func:`bucket_count` sizes it from the transcripts' bytes.
 
     ``checkpoint_mode``: local|reliable (checkpointing.py). 'reliable'
-    routes the intra-stage shared-subtree materializations through
-    fault-tolerant `df.checkpoint` — the multi-executor-cluster setting, where
-    a lost executor must not truncate lineage mid-stage. When no checkpoint
-    dir is configured yet, one is created under <out_dir>/.spark_checkpoints
-    (point spark.sparkContext.setCheckpointDir at DFS storage on a real
-    cluster before calling for a different location)."""
+    routes intra-stage materializations (the distributed connected-components
+    rounds of the triples stage) through fault-tolerant `df.checkpoint` — the
+    multi-executor-cluster setting, where a lost executor must not truncate
+    lineage mid-stage. When no checkpoint dir is configured yet, one is
+    created under <out_dir>/.spark_checkpoints (point
+    spark.sparkContext.setCheckpointDir at DFS storage on a real cluster
+    before calling for a different location)."""
     data = Path(data_dir)
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
@@ -130,12 +145,12 @@ def run_pipeline(
     tfiles = sorted(Path(data).glob("transcripts.parquet/*.parquet")) or [
         data / "transcripts.parquet"
     ]
+    total_bytes = sum(f.stat().st_size for f in tfiles if f.is_file())
     prev_split = None
     split_overridden = False
     try:
         import pyarrow.parquet as pq
 
-        total_bytes = sum(f.stat().st_size for f in tfiles if f.is_file())
         n_row_groups = sum(
             pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles if f.is_file()
         )
@@ -179,10 +194,11 @@ def run_pipeline(
         # shuffle-free (pre_shuffle=False). This is the parquet+session-catalog
         # restatement of what an Iceberg bucket(conv_id) partition transform
         # provides natively. Trade-offs at 100 TB: scan parallelism of a
-        # bucketed read is one task per bucket (raise n_buckets with the
-        # cluster), and a skewed conversation stays in one bucket task (the
-        # join is linear per conversation; AQE skew-split does not apply to the
-        # unshuffled side — documented in BENCH.md).
+        # bucketed read is one task per bucket and AQE cannot coalesce a
+        # scan, so n_buckets is sized from the input's bytes when the stage is
+        # written (bucket_count: a 2,000-turn delta gets one bucket, not 32
+        # mostly empty ones), and a skewed conversation stays in one bucket
+        # task (AQE skew-split does not apply to the unshuffled side).
         # When the INPUT transcripts table is itself bucketed on conv_id (the
         # production Iceberg layout: bucket(conv_id) applied at ingest, paid
         # once per corpus rather than once per run), detection — a pure map —
@@ -191,9 +207,15 @@ def run_pipeline(
         # Unbucketed inputs (the driver's raw testdata) pay one compact
         # repartition here instead — still strictly less movement than the
         # round-2 layout, which re-shuffled the same rows in the links stage.
+        # A resumed run keeps the count its mentions checkpoint recorded, so
+        # every turn-grain stage and the triples buckets agree.
         input_bucketed = in_bucketing is not None and in_bucketing.get("col") == "conv_id"
-        if input_bucketed:
+        if storage.stage_exists(out, "mentions"):
+            n_buckets = int(storage.read_manifest(out, "mentions")["spark_bucketed"]["n"])
+        elif input_bucketed:
             n_buckets = int(in_bucketing["n"])
+        else:
+            n_buckets = bucket_count(total_bytes)
         mentions = stage(
             "mentions",
             lambda: detect_mentions(transcripts, terms),
@@ -209,11 +231,7 @@ def run_pipeline(
 
         def compute_links() -> DataFrame:
             cases = conversation_cases(mentions, candidates)
-            if use_grouped:
-                from reden_spark.operators.grouped import disambiguate_grouped
-
-                return disambiguate_grouped(mentions, candidates, kb_edges, rel_weights, cases, cfg)
-            return disambiguate(mentions, candidates, kb_edges, rel_weights, cases, cfg)
+            return disambiguate_grouped(mentions, candidates, kb_edges, rel_weights, cases, cfg)
 
         links = stage("links", compute_links, spark_bucket_col="conv_id", pre_shuffle=False)
         # The product table keeps the hive bucket=N layout (north rule:
@@ -273,7 +291,6 @@ def main() -> None:
     ap.add_argument("--data-dir", required=True)
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--from-stage", choices=STAGES)
-    ap.add_argument("--grouped", action="store_true", help="use the applyInPandas stage-3 variant")
     ap.add_argument(
         "--master", default=None, help="Spark master (default: spark-submit's --master, else local[*])"
     )
@@ -288,7 +305,7 @@ def main() -> None:
             "BrandesBetweennessCentrality",
             "FreemanClosenessCentrality",
         ],
-        help="centralityMeasure (CentralityHandler.java:137-152); Brandes/Freeman require --grouped",
+        help="centralityMeasure (CentralityHandler.java:137-152)",
     )
     ap.add_argument(
         "--crawl-sameas",
@@ -345,9 +362,7 @@ def main() -> None:
             broadcast_uri_map=not a.no_broadcast_uri_map,
         )
     t0 = time.time()
-    dfs = run_pipeline(
-        spark, a.data_dir, a.out_dir, cfg, a.from_stage, a.grouped, checkpoint_mode=a.checkpoint_mode
-    )
+    dfs = run_pipeline(spark, a.data_dir, a.out_dir, cfg, a.from_stage, checkpoint_mode=a.checkpoint_mode)
     n_links = dfs["links"].count()
     n_triples = dfs["triples"].count()
     print(json.dumps({"elapsed_sec": time.time() - t0, "links": n_links, "triples": n_triples}))

@@ -36,6 +36,25 @@ def fixture_dir(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def bucketed_fixture_dir(spark, fixture_dir, tmp_path_factory):
+    """A copy of the fixture whose transcripts are a conv_id-bucketed table
+    with 8 buckets (the production ingest layout, which dictates the
+    pipeline's bucket count)."""
+    import shutil
+
+    from reden_spark.sources import storage
+
+    out = tmp_path_factory.mktemp("fixtures") / "bucketed"
+    shutil.copytree(fixture_dir, out)
+    df = spark.read.parquet(str(out / "transcripts.parquet"))
+    storage.write_stage(df, out, "transcripts.tmp", spark_bucket_col="conv_id", n_buckets=8)
+    src = out / "transcripts.parquet"
+    shutil.rmtree(src) if src.is_dir() else src.unlink()
+    (out / "transcripts.tmp").rename(src)
+    return out
+
+
+@pytest.fixture(scope="session")
 def tables(spark, fixture_dir):
     def load(name):
         return spark.read.parquet(str(fixture_dir / f"{name}.parquet"))

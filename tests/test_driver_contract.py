@@ -82,6 +82,34 @@ def test_entry_smoke(spark):
     assert df.columns == ["conv_id", "turn_idx", "occ_idx", "mention", "chosen_uris", "score", "path"]
 
 
+def test_pipeline_links_match_duckdb_twin(spark, duck, tmp_path):
+    """Independent referee for the links stage: `run_pipeline` over the
+    contract's KG input tables must emit DuckDB's O_KG_LINKS rows exactly.
+    The SQL twin restates the algorithm relationally, so it shares no code
+    with the grouped kernel or with oracle.py."""
+    from reden_spark import driver_contract as dc
+    from reden_spark.plans.pipeline import run_pipeline
+
+    data = tmp_path / "kg_in"
+    inputs = {
+        "transcripts": dc.derive_transcripts(spark, SF),
+        "mention_terms": dc.derive_mention_terms(spark, SF),
+        "dico": dc.derive_dico(spark, SF),
+        "kb_edges": dc.derive_kb_edges(spark, SF),
+        "rel_weights": dc.empty_rel_weights(spark),
+    }
+    for name, df in inputs.items():
+        df.write.parquet(str(data / f"{name}.parquet"))
+    links = run_pipeline(spark, data, tmp_path / "kg_out", dc.CFG)["links"]
+    cols = ["conv_id", "turn_idx", "occ_idx", "mention", "chosen_uris", "score", "path"]
+    got = normalize([tuple(r) for r in links.select(*cols).collect()], cols)
+    res = duck.sql(dc.O_KG_LINKS)
+    want = normalize(res.fetchall(), res.columns)
+    assert sorted(res.columns) == sorted(cols)
+    assert len(got) > 50
+    assert got == want
+
+
 def test_sfdir_lru_refreshes_on_cache_hits():
     """A dir served purely from cache hits must stay most-recently-used: one
     query on a new dir would otherwise sweep the HOT dir's checkpointed frames

@@ -1,12 +1,12 @@
-"""The applyInPandas grouped-map variant must agree with the relational stage 3,
-and both must agree with the single-node oracle across every centralityMeasure,
-the preferred_uri='ALL' projection, and the crawlSameAs prefix knob."""
+"""The applyInPandas links stage must agree with the single-node oracle across
+every centralityMeasure, the preferred_uri='ALL' projection, and the
+crawlSameAs prefix knob."""
 
 import pytest
 
 from reden_spark import datagen, oracle
 from reden_spark.operators.candidates import conversation_cases, generate_candidates
-from reden_spark.operators.disambiguate import NELConfig, disambiguate
+from reden_spark.operators.disambiguate import NELConfig
 from reden_spark.operators.grouped import disambiguate_grouped
 from reden_spark.operators.mentions import detect_mentions
 
@@ -53,14 +53,6 @@ def _run_oracle(py_tables, **kw):
     )
 
 
-def test_grouped_matches_relational(spark, tables):
-    args = _stage_args(tables, CFG)
-    rel = _key(disambiguate(*args))
-    grp = _key(disambiguate_grouped(*args))
-    assert rel == grp
-    assert len(rel) > 50
-
-
 @pytest.mark.parametrize("measure", list(oracle.CENTRALITY_MEASURES))
 def test_grouped_centrality_measures_match_oracle(spark, tables, py_tables, measure):
     """All four reference centralityMeasure values (CentralityHandler.java:137-152)
@@ -74,60 +66,30 @@ def test_grouped_centrality_measures_match_oracle(spark, tables, py_tables, meas
     assert len(grp) > 50
 
 
-def test_relational_eigenvector_matches_oracle(spark, tables, py_tables):
-    """EigenvectorCentrality also has a relational (power-iteration) formulation;
-    it must match the oracle bit-for-bit (same iteration count + quantization)."""
-    cfg = NELConfig(
-        base_prefix=datagen.BASE_PREFIX,
-        preferred_uri=datagen.BASE_PREFIX,
-        centrality="EigenvectorCentrality",
-    )
-    rel = _key(disambiguate(*_stage_args(tables, cfg)))
-    want = _run_oracle(py_tables, measure="EigenvectorCentrality")
-    assert rel == want
-    assert len(rel) > 50
-    # the measure must actually matter on the fixture (not a degree alias)
-    assert rel != _key(disambiguate(*_stage_args(tables, CFG))) or any(
-        s not in (None, 0.0) and s != int(s) for (_, s, _) in rel.values() if s is not None
-    )
-
-
-def test_relational_rejects_nonrelational_measures(spark, tables):
-    cfg = NELConfig(
-        base_prefix=datagen.BASE_PREFIX,
-        preferred_uri=datagen.BASE_PREFIX,
-        centrality="BrandesBetweennessCentrality",
-    )
-    with pytest.raises(ValueError, match="disambiguate_grouped"):
-        disambiguate(*_stage_args(tables, cfg)).collect()
-
-
 def test_preferred_uri_all_matches_oracle(spark, tables, py_tables):
     """preferedURIOrder=ALL (CentralityHandler.java:196-213): winning groups'
-    URIs space-joined — both Spark paths vs the oracle."""
+    URIs space-joined — the grouped kernel vs the oracle."""
     cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri="ALL")
-    rel = _key(disambiguate(*_stage_args(tables, cfg)))
     grp = _key(disambiguate_grouped(*_stage_args(tables, cfg)))
     want = _run_oracle(py_tables, preferred_uri="ALL")
-    assert rel == want and grp == want
-    assert len(rel) > 50
+    assert grp == want
+    assert len(grp) > 50
     # ALL emits multi-URI projections somewhere on the fixture
-    assert any(" " in uris for (uris, _, _) in rel.values())
+    assert any(" " in uris for (uris, _, _) in grp.values())
 
 
 def test_crawl_sameas_prefix_knob(spark, tables, py_tables):
     """crawlSameAs prefix (GraphHandlerNEL.java:143-167): restricting the
-    case-1 sameAs expansion changes the fused graph; all three implementations
-    agree under the restriction."""
+    case-1 sameAs expansion changes the fused graph; the grouped kernel and
+    the oracle agree under the restriction."""
     cfg = NELConfig(
         base_prefix=datagen.BASE_PREFIX,
         preferred_uri=datagen.BASE_PREFIX,
         crawl_sameas="http://no-such-prefix/",
     )
-    rel = _key(disambiguate(*_stage_args(tables, cfg)))
     grp = _key(disambiguate_grouped(*_stage_args(tables, cfg)))
     want = _run_oracle(py_tables, crawl_sameas="http://no-such-prefix/")
-    assert rel == want and grp == want
+    assert grp == want
     # the knob must bite: excluding every sameAs target changes the links
     baseline = _run_oracle(py_tables)
     assert want != baseline

@@ -3,7 +3,8 @@
 from reden_spark import datagen, oracle
 from reden_spark.operators.candidates import conversation_cases, generate_candidates
 from reden_spark.operators.canonicalize import materialize_triples
-from reden_spark.operators.disambiguate import NELConfig, disambiguate
+from reden_spark.operators.disambiguate import NELConfig
+from reden_spark.operators.grouped import disambiguate_grouped
 from reden_spark.operators.mentions import detect_mentions
 
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
@@ -13,7 +14,9 @@ def run_stages(spark, tables):
     mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
     candidates = generate_candidates(mentions, tables["dico"])
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate(mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, CFG)
+    links = disambiguate_grouped(
+        mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, CFG
+    )
     return mentions, candidates, cases, links
 
 
@@ -161,7 +164,7 @@ def test_normalization_collision_parity(spark):
     candidates = generate_candidates(mentions, d)
     assert candidates.filter("mention = 'Jean-Paul X'").count() == 2  # both groups
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate(mentions, candidates, kb, rels, cases, CFG)
+    links = disambiguate_grouped(mentions, candidates, kb, rels, cases, CFG)
     got = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention): (r.chosen_uris, r.path)
         for r in links.collect()
@@ -310,6 +313,7 @@ def test_disambiguate_survives_groups_without_base_or_preferred_member(spark):
     Spark 4 ANSI), and a preferred_uri prefix matching nothing must fall back
     to the winner (oracle choose_uris :399-400) instead of throwing."""
     from reden_spark.functions.text import normalize_mention_py
+    from reden_spark.operators.disambiguate import fuse_edges
 
     t = spark.createDataFrame(
         [("c0", 0, "Foo Bar met Baz Qux today.")], "conv_id string, turn_idx int, text string"
@@ -335,7 +339,8 @@ def test_disambiguate_survives_groups_without_base_or_preferred_member(spark):
     # 'Foo Bar' resolves to two groups; one has NO base member
     assert candidates.filter("mention = 'Foo Bar'").count() == 2
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate(mentions, candidates, kb, rels, cases, cfg).collect()
-    assert links  # no ANSI crash
+    fuse_edges(candidates, kb, rels, cfg).collect()  # no ANSI crash
+    links = disambiguate_grouped(mentions, candidates, kb, rels, cases, cfg).collect()
+    assert links
     # preferred prefix matched nothing -> every chosen_uris is the raw winner fallback
     assert all(r.chosen_uris for r in links)

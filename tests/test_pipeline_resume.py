@@ -35,50 +35,92 @@ def test_resume_from_each_stage(spark, fixture_dir, tmp_path):
     assert storage.read_manifest(out, "mentions")["written_at"] == manifests["mentions"]
 
 
-def test_reliable_checkpoint_mode_same_output(spark, fixture_dir, tmp_path):
+def test_reliable_checkpoint_mode_same_output(spark, fixture_dir, tmp_path, monkeypatch):
     """The fault-tolerant checkpoint mode (df.checkpoint to a checkpoint dir —
     the multi-executor-cluster setting where localCheckpoint blocks would die
     with a lost executor) must produce byte-identical triples. Also pins that
-    the mode actually engaged: the checkpoint dir is populated."""
+    the mode actually engaged: the checkpoint dir holds RDD blocks. The
+    pipeline's one intra-stage materialization is the distributed
+    connected-components loop of the triples stage, which a KB-sized
+    equivalence graph skips, so the reliable run forces that path."""
+    import functools
+
     from reden_spark import checkpointing
+    from reden_spark.operators import canonicalize
 
     base = run_pipeline(spark, fixture_dir, tmp_path / "kg_local", CFG)
     baseline = _triples(base)
+    monkeypatch.setattr(
+        canonicalize,
+        "connected_components",
+        functools.partial(canonicalize.connected_components, driver_max_edges=None),
+    )
     try:
         rel = run_pipeline(
             spark, fixture_dir, tmp_path / "kg_rel", CFG, checkpoint_mode="reliable"
         )
         assert _triples(rel) == baseline
         ckdir = tmp_path / "kg_rel" / ".spark_checkpoints"
-        assert any(ckdir.rglob("*")), "reliable mode never wrote a checkpoint block"
+        assert any(ckdir.rglob("rdd-*")), "reliable mode never wrote a checkpoint block"
     finally:
         checkpointing.set_checkpoint_mode(None)
         # leave the session's checkpoint dir harmlessly set (session-scoped)
 
 
-def test_bucketed_input_same_output(spark, fixture_dir, tmp_path):
+def test_bucketed_input_same_output(spark, fixture_dir, bucketed_fixture_dir, tmp_path):
     """Byte-identical triples from a plain input and from a conv_id-bucketed
     INPUT table (the production ingest layout, where the mentions write
     becomes fully shuffle-free). Also pins that the bucketed-input mentions
     checkpoint did not fan out into tasks x buckets files."""
-    import shutil
-
     base = run_pipeline(spark, fixture_dir, tmp_path / "kg_buck", CFG)
     baseline = _triples(base)
 
-    # bucketed-input corpus: copy the fixture, rewrite transcripts bucketed
-    data2 = tmp_path / "fixture_bucketed"
-    shutil.copytree(fixture_dir, data2)
-    df = spark.read.parquet(str(data2 / "transcripts.parquet"))
-    storage.write_stage(df, data2, "transcripts.tmp", spark_bucket_col="conv_id", n_buckets=8)
-    src = data2 / "transcripts.parquet"
-    shutil.rmtree(src) if src.is_dir() else src.unlink()
-    (data2 / "transcripts.tmp").rename(src)
-
-    bi = run_pipeline(spark, data2, tmp_path / "kg_bin", CFG)
+    bi = run_pipeline(spark, bucketed_fixture_dir, tmp_path / "kg_bin", CFG)
     assert _triples(bi) == baseline
     m_files = list((tmp_path / "kg_bin" / "mentions").glob("*.parquet"))
     assert 0 < len(m_files) <= 8, len(m_files)  # shuffle-free write kept 1 file/bucket
+
+
+def test_bucket_count_follows_input_bytes(spark, fixture_dir, tmp_path, monkeypatch):
+    """The turn-grain bucket count is sized from the transcripts' bytes:
+    the small fixture gets one bucket, an input over BUCKET_BYTES gets more
+    (with identical triples), the count is capped at MAX_BUCKETS, and a
+    resumed run reuses the count its mentions checkpoint recorded."""
+    import math
+
+    from reden_spark.plans import pipeline
+
+    def n_of(out, stage):
+        return storage.read_manifest(out, stage)["spark_bucketed"]["n"]
+
+    def triple_buckets(out):
+        return {p.name for p in (out / "triples").glob("bucket=*")}
+
+    input_bytes = (fixture_dir / "transcripts.parquet").stat().st_size  # one file
+    assert 0 < input_bytes < pipeline.BUCKET_BYTES
+    small = tmp_path / "kg_small"
+    baseline = _triples(run_pipeline(spark, fixture_dir, small, CFG))
+    assert n_of(small, "mentions") == n_of(small, "links") == 1
+    assert triple_buckets(small) == {"bucket=0"}
+
+    # the same rows, measured against a target a third of their size
+    monkeypatch.setattr(pipeline, "BUCKET_BYTES", input_bytes // 3)
+    want_n = math.ceil(input_bytes / (input_bytes // 3))
+    big = tmp_path / "kg_big"
+    assert _triples(run_pipeline(spark, fixture_dir, big, CFG)) == baseline
+    assert want_n > 1 and n_of(big, "mentions") == n_of(big, "links") == want_n
+    assert len(triple_buckets(big)) > 1
+
+    assert pipeline.bucket_count(0) == 1
+    assert pipeline.bucket_count(10**15) == pipeline.MAX_BUCKETS == 32
+
+    # resume with the default target (which would size this input at 1)
+    monkeypatch.undo()
+    assert pipeline.bucket_count(input_bytes) == 1
+    redo = run_pipeline(spark, fixture_dir, big, CFG, from_stage="links")
+    assert _triples(redo) == baseline
+    assert n_of(big, "links") == want_n
+    assert {int(b.split("=")[1]) for b in triple_buckets(big)} <= set(range(want_n))
 
 
 def test_lineage_counters(spark, fixture_dir, tmp_path):

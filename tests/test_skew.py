@@ -1,21 +1,22 @@
 """Adversarial conversation skew: one 500x mega-conversation.
 
-SURVEY.md §7 hazard 6 / the north rule's explicit skew requirement. The
-relational links path is skew-immune BY CONSTRUCTION at the expensive grain —
-graph fusion/pruning/centrality run at (conv_id, vertex) grain, whose size is
-bounded by the conversation's ENTITY set, not its turn count — and detection
+SURVEY.md §7 hazard 6 / the north rule's explicit skew requirement. The links
+stage runs one grouped-map task per conversation, and that task's work is
+conversation x distinct-mention grain: graph fusion/pruning/centrality are
+bounded by the conversation's ENTITY set, not its turn count. Detection
 spreads a mega-conversation's turns across input splits with no up-front
 shuffle (the "salt for free" of SURVEY §4). These tests pin both properties on
-a corpus whose conversation 0 is 500x the median, plus relational==grouped
+a corpus whose conversation 0 is 500x the median, plus grouped == oracle
 output parity under that skew."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from reden_spark import datagen
+from reden_spark import datagen, oracle
 from reden_spark.operators.candidates import conversation_cases, generate_candidates
-from reden_spark.operators.disambiguate import NELConfig, disambiguate, fuse_edges
+from reden_spark.operators.disambiguate import NELConfig, fuse_edges
+from reden_spark.operators.grouped import disambiguate_grouped
 from reden_spark.operators.mentions import detect_mentions
 
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
@@ -80,20 +81,31 @@ def test_conv_grain_work_is_bounded_by_entities_not_turns(spark, skew_tables):
     assert mega <= 10 * max(others), (mega, max(others))
 
 
-def test_relational_equals_grouped_under_skew(spark, skew_tables):
-    """Output parity between the distributed relational path and the
-    reference-faithful grouped-map path on the 500x corpus — skew must change
-    nothing about the emitted links."""
-    from reden_spark.operators.grouped import disambiguate_grouped
+def test_grouped_equals_oracle_under_skew(spark, skew_dir, skew_tables):
+    """Output parity between the grouped-map links path and the single-node
+    oracle on the 500x corpus — skew must change nothing about the emitted
+    links."""
+    import pyarrow.parquet as pq
+
+    def rows(name):
+        return pq.read_table(str(skew_dir / f"{name}.parquet")).to_pylist()
 
     mentions = detect_mentions(skew_tables["transcripts"], skew_tables["mention_terms"])
     candidates = generate_candidates(mentions, skew_tables["dico"])
     cases = conversation_cases(mentions, candidates)
-    rel = disambiguate(
-        mentions, candidates, skew_tables["kb_edges"], skew_tables["rel_weights"], cases, CFG
-    )
     grp = disambiguate_grouped(
         mentions, candidates, skew_tables["kb_edges"], skew_tables["rel_weights"], cases, CFG
     )
-    key = lambda r: (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.chosen_uris)  # noqa: E731
-    assert sorted(map(key, rel.collect())) == sorted(map(key, grp.collect()))
+    want = oracle.run_oracle(
+        rows("transcripts"),
+        rows("dico"),
+        [r["term"] for r in rows("mention_terms")],
+        [(r["subj"], r["pred"], r["obj"]) for r in rows("kb_edges")],
+        [(r["pred"], r["weight"]) for r in rows("rel_weights")],
+        datagen.BASE_PREFIX,
+        datagen.BASE_PREFIX,
+    )
+    cols = ("conv_id", "turn_idx", "occ_idx", "mention", "chosen_uris", "score", "path")
+    got = sorted(tuple(r[c] for c in cols) for r in grp.collect())
+    assert got == sorted(tuple(r[c] for c in cols) for r in want)
+    assert any(k[0] == "conv000000" for k in got)

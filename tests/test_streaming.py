@@ -198,7 +198,8 @@ def test_sessionized_streaming_links_equal_batch(spark, tables, fixture_dir, tmp
 
     from reden_spark import datagen
     from reden_spark.operators.candidates import conversation_cases, generate_candidates
-    from reden_spark.operators.disambiguate import NELConfig, disambiguate
+    from reden_spark.operators.disambiguate import NELConfig
+    from reden_spark.operators.grouped import disambiguate_grouped
     from reden_spark.streaming.ingest import closed_conversation_mentions, run_sessionized_links
 
     cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
@@ -221,7 +222,7 @@ def test_sessionized_streaming_links_equal_batch(spark, tables, fixture_dir, tmp
     mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
     candidates = generate_candidates(mentions, tables["dico"])
     cases = conversation_cases(mentions, candidates)
-    batch_links = disambiguate(
+    batch_links = disambiguate_grouped(
         mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, cfg
     )
     key = lambda r: (r.conv_id, r.turn_idx, r.occ_idx, r.mention)  # noqa: E731
