@@ -4,13 +4,13 @@ entry(spark)  — flagship: the full KG-construction pipeline (mention detection
 candidate join -> per-conversation graph disambiguation -> links) over a
 transcripts table derived deterministically from sf0.001 events+nation.
 
-queries()/oracle_sql() — 46 rows, each with an exact DuckDB oracle
-(reden_spark/driver_contract.py): the KG pipeline's stages and its annotate,
-enrichment, evaluation and dictionary-build modes; the dedup, text-statistics
-and curation operators with the chained curation_pipeline recipe; and generic
-relational operators. 16 further rows (driver_contract.PYTEST_QUERIES) are
-checked against their oracles by tests/test_driver_contract.py, keeping the
-contract within the driver's 50-row per-round oracle budget.
+queries()/oracle_sql() — 50 rows in one registry, each with an exact DuckDB
+oracle (reden_spark/driver_contract.py), exactly the contract's 50-row oracle
+budget: the KG pipeline's stages and its annotate, enrichment,
+evaluation and dictionary-build modes; REDEN's run comparison (significance
+tests) and date-specific lifespan rule; the curation pipeline's operators
+with the chained curation_pipeline recipe; and the remaining text-statistics,
+near-duplicate and document-curation operators.
 """
 
 from __future__ import annotations

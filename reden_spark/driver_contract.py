@@ -1269,134 +1269,6 @@ FROM documents
 """
 
 
-def q_doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import chunk_windows
-
-    return chunk_windows(_read(spark, sf_dir, "documents"), window=24, stride=16)
-
-
-# DuckDB twin of the overlapping-window rule: k_last = 0 if n <= window else
-# ceil((n - window) / stride); list_slice is 1-based INCLUSIVE so chunk k is
-# toks[k*stride + 1 .. k*stride + window].
-O_DOC_CHUNK_WINDOWS = """
-WITH t AS (
-  SELECT doc_id,
-         string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), b AS (
-  SELECT doc_id, toks, len(toks) AS n,
-         CASE WHEN len(toks) <= 24 THEN 0
-              ELSE ceil((len(toks) - 24) / 16.0)::INT END AS k_last
-  FROM t
-), c AS (
-  SELECT doc_id, toks, n, unnest(generate_series(0, k_last)) AS chunk_idx FROM b
-)
-SELECT doc_id, chunk_idx::INT AS chunk_idx,
-       least(24, n - chunk_idx * 16)::INT AS n_chunk_words,
-       md5(array_to_string(list_slice(toks, chunk_idx * 16 + 1, chunk_idx * 16 + 24), ' ')) AS chunk_hash
-FROM c
-"""
-
-
-def q_text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import ngram_topk
-
-    return ngram_topk(_read(spark, sf_dir, "documents"), n=2, k=20)
-
-
-O_TEXT_NGRAM_TOPK = """
-WITH t AS (
-  SELECT doc_id,
-         string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         unnest([array_to_string(list_slice(toks, i, i + 1), ' ')
-                 FOR i IN generate_series(1, greatest(len(toks) - 1, 0))]) AS ngram
-  FROM t
-), pd AS (
-  SELECT ngram, doc_id, count(*) AS c FROM g GROUP BY 1, 2
-)
-SELECT ngram, sum(c)::BIGINT AS total_count, count(*)::BIGINT AS doc_freq
-FROM pd GROUP BY 1
-ORDER BY total_count DESC, ngram
-LIMIT 20
-"""
-
-
-def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import perplexity
-
-    return perplexity(_read(spark, sf_dir, "documents"))
-
-
-# DuckDB twin of the add-one bigram LM: the zipped unnest of toks[1:n-1] and
-# toks[2:n] is the (prev, cur) occurrence table; both engines compute the same
-# (c_ab + 1) / (c_prev + V) doubles so ln/round agree bit-for-bit.
-O_TEXT_PERPLEXITY = r"""
-WITH t AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\W+', ' ', 'g')), ' '),
-                     x -> x <> '') AS toks
-  FROM documents
-), b AS (
-  SELECT doc_id, unnest(toks[1:len(toks)-1]) AS prev, unnest(toks[2:len(toks)]) AS cur
-  FROM t WHERE len(toks) >= 2
-), pd AS (
-  SELECT doc_id, prev, cur, count(*) AS k FROM b GROUP BY 1, 2, 3
-), cab AS (
-  SELECT prev, cur, sum(k) AS c_ab FROM pd GROUP BY 1, 2
-), cp AS (
-  SELECT prev, sum(c_ab) AS c_prev FROM cab GROUP BY 1
-), v AS (
-  SELECT count(DISTINCT x) AS v FROM (SELECT unnest(toks) AS x FROM t)
-), term AS (
-  SELECT doc_id, k, c_ab, c_prev, v
-  FROM pd JOIN cab USING (prev, cur) JOIN cp USING (prev) CROSS JOIN v
-), agg AS (
-  SELECT doc_id, sum(k)::BIGINT AS n_bigrams,
-         -sum(k * ln((c_ab + 1)::DOUBLE / (c_prev + v))) / sum(k) AS nll
-  FROM term GROUP BY 1
-)
-SELECT d.doc_id, COALESCE(a.n_bigrams, 0)::BIGINT AS n_bigrams,
-       round(COALESCE(a.nll, -1.0), 6) AS nll
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import duplicated_spans
-
-    return duplicated_spans(_read(spark, sf_dir, "documents"), n=8)
-
-
-O_DEDUP_SPANS = r"""
-WITH t AS (
-  SELECT doc_id,
-         string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         unnest([md5(array_to_string(list_slice(toks, i, i + 7), ' '))
-                 FOR i IN generate_series(1, greatest(len(toks) - 7, 0))]) AS gram
-  FROM t
-), pd AS (
-  SELECT doc_id, gram, count(*) AS k FROM g GROUP BY 1, 2
-), dupg AS (
-  SELECT gram FROM pd GROUP BY gram HAVING count(*) > 1
-), dup AS (
-  SELECT doc_id, sum(k) AS n_dup FROM pd JOIN dupg USING (gram) GROUP BY 1
-), base AS (
-  SELECT doc_id, greatest(len(toks) - 7, 0) AS n_grams FROM t
-)
-SELECT b.doc_id, b.n_grams::BIGINT AS n_grams,
-       COALESCE(d.n_dup, 0)::BIGINT AS n_dup_grams,
-       CASE WHEN b.n_grams > 0 THEN round(COALESCE(d.n_dup, 0)::DOUBLE / b.n_grams, 6)
-            ELSE -1.0 END AS dup_fraction
-FROM base b LEFT JOIN dup d USING (doc_id)
-"""
-
-
 def q_doc_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import domain_cap
 
@@ -1536,178 +1408,6 @@ FROM packed p JOIN clusters c USING (doc_id)
 )
 
 
-def q_text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over documents with deterministically injected PII (every 3rd
-    doc gains an email + phone + IPv4 in both engines — the synthetic corpus
-    contains none, so the injection is what makes the oracle exercise the
-    redaction rather than pass vacuously)."""
-    from .operators.textstats import redact_pii
-
-    docs = _read(spark, sf_dir, "documents")
-    k = F.col("doc_id").cast("string")
-    base = F.coalesce(F.col("text"), F.lit(""))
-    injected = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(
-            base,
-            F.lit(" contact user"),
-            k,
-            F.lit("@mail.example.com or +1 555 010 "),
-            (F.col("doc_id") % 100).cast("string"),
-            F.lit(" at 10."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".0.1 now"),
-        ),
-    ).otherwise(base)
-    return redact_pii(docs.withColumn("text", injected))
-
-
-def _o_text_redact_pii() -> str:
-    from .operators.textstats import PII_EMAIL, PII_IPV4, PII_PHONE
-
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0 THEN
-           COALESCE(text, '') || ' contact user' || CAST(doc_id AS VARCHAR)
-           || '@mail.example.com or +1 555 010 ' || CAST(doc_id % 100 AS VARCHAR)
-           || ' at 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1 now'
-         ELSE COALESCE(text, '') END AS t0
-  FROM documents
-), r1 AS (
-  SELECT doc_id, t0, regexp_replace(t0, '{PII_EMAIL}', '<EMAIL>', 'g') AS t1 FROM d
-), r2 AS (
-  SELECT *, regexp_replace(t1, '{PII_IPV4}', '<IP>', 'g') AS t2 FROM r1
-), r3 AS (
-  SELECT *, regexp_replace(t2, '{PII_PHONE}', '<PHONE>', 'g') AS t3 FROM r2
-)
-SELECT doc_id,
-       len(regexp_extract_all(t0, '{PII_EMAIL}'))::INT AS n_emails,
-       len(regexp_extract_all(t1, '{PII_IPV4}'))::INT AS n_ips,
-       len(regexp_extract_all(t2, '{PII_PHONE}'))::INT AS n_phones,
-       md5(t3) AS redacted_md5
-FROM r3
-"""
-
-
-# The synthetic documents text is pure lowercase [a-z ]: no newlines, digits,
-# apostrophes or punctuation, so oracles over the raw table would exercise
-# only the letter-run branch of the pretokenizer and leave dup_line_frac
-# identically zero (vacuous parity). Every 4th doc therefore gains a
-# deterministic adversarial suffix — contractions, digits, symbol runs,
-# newlines, and a repeated line — in BOTH engines.
-_ADV_SUFFIX = "\nIt's 2024: price 1,234 -- 50% off!\nsame line\nsame line"
-_ADV_SUFFIX_SQL = (
-    "chr(10) || 'It''s 2024: price 1,234 -- 50% off!' || chr(10) || "
-    "'same line' || chr(10) || 'same line'"
-)
-_DUCK_ADV_DOCS = f"""
-adv_docs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0 THEN COALESCE(text, '') || {_ADV_SUFFIX_SQL}
-              ELSE COALESCE(text, '') END AS text
-  FROM documents
-)
-"""
-
-
-def _adv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = F.coalesce(F.col("text"), F.lit(""))
-    return _read(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(F.col("doc_id") % 4 == 0, F.concat(base, F.lit(_ADV_SUFFIX))).otherwise(base),
-    )
-
-
-def q_text_pretoken_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import pretoken_count
-
-    return pretoken_count(_adv_docs(spark, sf_dir))
-
-
-def _o_text_pretoken_count() -> str:
-    from .operators.textstats import BPE_PRETOKEN_RE
-
-    pat = BPE_PRETOKEN_RE.replace("'", "''")
-    return f"""
-WITH {_DUCK_ADV_DOCS}
-SELECT doc_id,
-       len(regexp_extract_all(text, '{pat}'))::INT AS n_pretokens,
-       len(string_split(trim(regexp_replace(lower(text), '\\W+', ' ', 'g')), ' '))::INT AS n_words,
-       ceil(length(text) / 4)::INT AS n_subwords_est
-FROM adv_docs
-"""
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import repetition_signals
-
-    return repetition_signals(_adv_docs(spark, sf_dir))
-
-
-O_TEXT_REPETITION = f"""
-WITH {_DUCK_ADV_DOCS},
-t AS (
-  SELECT doc_id, text,
-         string_split(trim(regexp_replace(lower(text), '\\W+', ' ', 'g')), ' ') AS toks,
-         string_split(text, chr(10)) AS lns
-  FROM adv_docs
-), base AS (
-  SELECT doc_id, toks,
-         len(toks)::INT AS n_words,
-         CASE WHEN len(toks) > 0 THEN
-           round((len(toks) - len(list_distinct(toks)))::DOUBLE / len(toks), 6)
-         ELSE 0.0 END AS dup_word_frac,
-         CASE WHEN len(lns) > 0 THEN
-           round((len(lns) - len(list_distinct(lns)))::DOUBLE / len(lns), 6)
-         ELSE 0.0 END AS dup_line_frac
-  FROM t
-), bge AS (
-  SELECT doc_id,
-         unnest([toks[i] || ' ' || toks[i+1]
-                 FOR i IN generate_series(1, greatest(len(toks) - 1, 0))]) AS bg
-  FROM base
-), bgc AS (
-  SELECT doc_id, bg, count(*) AS c FROM bge GROUP BY 1, 2
-), tp AS (
-  SELECT doc_id, round(max(c)::DOUBLE / sum(c), 6) AS top_bigram_frac FROM bgc GROUP BY 1
-)
-SELECT b.doc_id, b.n_words, b.dup_word_frac, b.dup_line_frac,
-       COALESCE(tp.top_bigram_frac, 0.0) AS top_bigram_frac
-FROM base b LEFT JOIN tp USING (doc_id)
-"""
-
-
-def q_text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import quality_filter
-
-    return quality_filter(_read(spark, sf_dir, "documents"))
-
-
-def _o_text_quality_filter() -> str:
-    from .operators.textstats import STOPWORDS
-
-    stoplist = ", ".join(f"'{w}'" for w in sorted({w for ws in STOPWORDS.values() for w in ws}))
-    return f"""
-WITH t AS (
-  SELECT doc_id, COALESCE(text, '') AS text,
-         string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         len(toks)::INT AS n_words,
-         round(list_sum([len(x) FOR x IN toks])::DOUBLE / greatest(len(toks), 1), 6) AS mean_word_len,
-         round(len(regexp_replace(text, '[\\w\\s]', '', 'g'))::DOUBLE / greatest(len(text), 1), 6) AS punct_ratio,
-         round(len(list_filter(toks, x -> x IN ({stoplist})))::DOUBLE / greatest(len(toks), 1), 6) AS stopword_ratio
-  FROM t
-)
-SELECT *,
-       (n_words BETWEEN 5 AND 100000 AND mean_word_len BETWEEN 2.0 AND 12.0
-        AND punct_ratio <= 0.3 AND stopword_ratio >= 0.01) AS passes
-FROM m
-"""
-
-
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash_near_pairs
 
@@ -1814,23 +1514,6 @@ WITH t AS (
 )
 SELECT doc_id, CASE WHEN n > 0 THEN lang ELSE 'und' END AS lang_pred, n AS lang_hits FROM best
 """
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import fingerprint
-
-    return fingerprint(_read(spark, sf_dir, "documents"), 5)
-
-
-O_TEXT_FINGERPRINT = (
-    _DUCK_SHINGLES.format(nm1=4)
-    + """
-SELECT s.doc_id,
-       md5(trim(regexp_replace(lower(COALESCE(d.text, '')), '\\W+', ' ', 'g'))) AS content_md5,
-       CASE WHEN len(s.shingles) > 0 THEN list_min([md5(x) FOR x IN s.shingles]) END AS min_shingle_md5
-FROM sh s JOIN documents d USING (doc_id)
-"""
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1952,54 +1635,8 @@ FROM ent
 
 
 # ---------------------------------------------------------------------------
-# Generic relational operators (scan/filter pushdown, join, agg, window)
+# Run comparison (SignificanceTesting: paired tests over two runs' scores)
 # ---------------------------------------------------------------------------
-
-
-def q_rel_pushdown_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").cast("bigint").alias("sum_qty"),
-            F.count("*").alias("n_rows"),
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-        )
-    )
-
-
-O_REL_PUSHDOWN_AGG = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-       count(*) AS n_rows,
-       count(DISTINCT l_partkey) AS n_parts,
-       round(avg(l_discount), 4) AS avg_disc
-FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
-GROUP BY 1, 2
-"""
-
-
-def q_rel_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    counts = o.groupBy("o_custkey").agg(F.count("*").alias("n_orders"))
-    w = Window.orderBy(F.desc("n_orders"), F.asc("o_custkey"))
-    top = counts.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 10)
-    return top.join(F.broadcast(c), top.o_custkey == c.c_custkey).select(
-        "rnk", "c_custkey", "c_mktsegment", "n_orders"
-    )
-
-
-O_REL_JOIN_TOPK = """
-WITH counts AS (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1),
-top AS (
-  SELECT *, row_number() OVER (ORDER BY n_orders DESC, o_custkey ASC) AS rnk FROM counts
-)
-SELECT rnk, c_custkey, c_mktsegment, n_orders
-FROM top JOIN customer ON o_custkey = c_custkey WHERE rnk <= 10
-"""
 
 
 def q_rel_significance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2038,36 +1675,6 @@ SELECT n, mean_diff, sd_diff,
        round(mean_diff / (sd_diff / sqrt(n)), 6) AS t_stat,
        n_nonzero, w_plus
 FROM t, w
-"""
-
-
-def q_rel_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    return (
-        ev.withColumn("prev_ts", prev)
-        # Gap on truncated epoch seconds: Spark's timestampdiff(SECOND,...)
-        # counts *complete elapsed* seconds while DuckDB's date_diff('second')
-        # counts second-boundary crossings; with fractional-µs timestamps a
-        # borderline 1800s gap classifies differently (round-1 hash fail).
-        # unix_timestamp() truncates to the epoch second in both engines.
-        .withColumn("gap_s", F.unix_timestamp("ts") - F.unix_timestamp("prev_ts"))
-        .withColumn("new_sess", F.when(F.col("prev_ts").isNull() | (F.col("gap_s") > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("new_sess").alias("n_sessions"), F.count("*").alias("n_events"))
-    )
-
-
-O_REL_SESSIONIZE = """
-WITH g AS (
-  SELECT user_id,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                OR date_diff('second', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-)
-SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events FROM g GROUP BY 1
 """
 
 
@@ -2767,24 +2374,15 @@ WHERE alias != ''
 """
 
 
-# Driver-facing contract: 46 rows, each with an exact DuckDB oracle. The
-# driver checks at most 50 queries per round, so the remaining rows live in
-# PYTEST_QUERIES below, checked against their oracles by
-# tests/test_driver_contract.py through the identical comparison.
+# The contract: 50 rows, each with an exact DuckDB oracle, exactly the
+# 50-row oracle budget. tests/test_driver_contract.py checks every row
+# against its oracle.
 QUERIES = {
     "text_url_extract": q_text_url_extract,
     "doc_domain_filter": q_doc_domain_filter,
     "doc_shuffle_deterministic": q_doc_shuffle_deterministic,
-    "doc_chunk_windows": q_doc_chunk_windows,
-    "text_ngram_topk": q_text_ngram_topk,
-    "text_perplexity": q_text_perplexity,
-    "dedup_spans": q_dedup_spans,
     "doc_domain_cap": q_doc_domain_cap,
     "kg_entity_pmi": q_kg_entity_pmi,
-    "text_redact_pii": q_text_redact_pii,
-    "text_quality_filter": q_text_quality_filter,
-    "text_pretoken_count": q_text_pretoken_count,
-    "text_repetition": q_text_repetition,
     "doc_pack_greedy": q_doc_pack_greedy,
     "kg_links_grouped": q_kg_links_grouped,
     "kg_mentions_relational": q_kg_mentions_relational,
@@ -2793,9 +2391,6 @@ QUERIES = {
     "kg_score_extract": q_kg_score_extract,
     "kg_occurrences": q_kg_occurrences,
     "kg_author_enrich": q_kg_author_enrich,
-    "rel_pushdown_agg": q_rel_pushdown_agg,
-    "rel_join_topk": q_rel_join_topk,
-    "rel_sessionize": q_rel_sessionize,
     "rel_significance": q_rel_significance,
     "curation_pipeline": q_curation_pipeline,
     "doc_pack_sequences": q_doc_pack_sequences,
@@ -2818,22 +2413,29 @@ QUERIES = {
     "doc_sample_stratified": q_doc_sample_stratified,
     "text_decontaminate": q_text_decontaminate,
     "text_quality": q_text_quality,
+    "kg_eval_verdicts": q_kg_eval_verdicts,
+    "kg_preannotate": q_kg_preannotate,
+    "kg_annotated_refs": q_kg_annotated_refs,
+    "kg_relation_frequency": q_kg_relation_frequency,
+    "kg_geo_enrich": q_kg_geo_enrich,
+    "kg_population_completeness": q_kg_population_completeness,
+    "dico_build_places": q_dico_build_places,
+    "dico_build_bne": q_dico_build_bne,
+    "dico_build_getty": q_dico_build_getty,
+    "dico_build_dbpediafr": q_dico_build_dbpediafr,
+    "dico_regex_lookup": q_dico_regex_lookup,
+    "dico_geonames": q_dico_geonames,
+    "rel_lifespan": q_rel_lifespan,
+    "text_token_count": q_text_token_count,
+    "text_language_id": q_text_language_id,
 }
 
 ORACLES = {
     "text_url_extract": _o_text_url_extract(),
     "doc_domain_filter": _o_doc_domain_filter(),
     "doc_shuffle_deterministic": O_DOC_SHUFFLE,
-    "doc_chunk_windows": O_DOC_CHUNK_WINDOWS,
-    "text_ngram_topk": O_TEXT_NGRAM_TOPK,
-    "text_perplexity": O_TEXT_PERPLEXITY,
-    "dedup_spans": O_DEDUP_SPANS,
     "doc_domain_cap": _o_doc_domain_cap(),
     "kg_entity_pmi": O_KG_ENTITY_PMI,
-    "text_redact_pii": _o_text_redact_pii(),
-    "text_quality_filter": _o_text_quality_filter(),
-    "text_pretoken_count": _o_text_pretoken_count(),
-    "text_repetition": O_TEXT_REPETITION,
     "doc_pack_greedy": O_DOC_PACK_GREEDY,
     "kg_links_grouped": O_KG_LINKS,
     "kg_mentions_relational": O_KG_MENTIONS,  # both detectors must match the same oracle
@@ -2842,9 +2444,6 @@ ORACLES = {
     "kg_score_extract": O_KG_SCORE_EXTRACT,
     "kg_occurrences": O_KG_OCCURRENCES,
     "kg_author_enrich": O_KG_AUTHOR_ENRICH,
-    "rel_pushdown_agg": O_REL_PUSHDOWN_AGG,
-    "rel_join_topk": O_REL_JOIN_TOPK,
-    "rel_sessionize": O_REL_SESSIONIZE,
     "rel_significance": O_REL_SIGNIFICANCE,
     "curation_pipeline": O_CURATION_PIPELINE,
     "doc_pack_sequences": O_DOC_PACK_SEQUENCES,
@@ -2867,35 +2466,6 @@ ORACLES = {
     "doc_sample_stratified": O_DOC_SAMPLE_STRATIFIED,
     "text_decontaminate": O_TEXT_DECONTAMINATE,
     "text_quality": O_TEXT_QUALITY,
-}
-
-assert len(QUERIES) == 46 and set(QUERIES) == set(ORACLES), (
-    len(QUERIES),
-    set(QUERIES) ^ set(ORACLES),
-)
-
-# Oracle-checked by pytest (tests/test_driver_contract.py runs the union of
-# both registries through the identical comparison).
-PYTEST_QUERIES = {
-    "kg_eval_verdicts": q_kg_eval_verdicts,
-    "kg_preannotate": q_kg_preannotate,
-    "kg_annotated_refs": q_kg_annotated_refs,
-    "kg_relation_frequency": q_kg_relation_frequency,
-    "kg_geo_enrich": q_kg_geo_enrich,
-    "kg_population_completeness": q_kg_population_completeness,
-    "dico_build_places": q_dico_build_places,
-    "dico_build_bne": q_dico_build_bne,
-    "dico_build_getty": q_dico_build_getty,
-    "dico_build_dbpediafr": q_dico_build_dbpediafr,
-    "dico_regex_lookup": q_dico_regex_lookup,
-    "dico_geonames": q_dico_geonames,
-    "rel_lifespan": q_rel_lifespan,
-    "text_token_count": q_text_token_count,
-    "text_language_id": q_text_language_id,
-    "text_fingerprint": q_text_fingerprint,
-}
-
-PYTEST_ORACLES = {
     "kg_eval_verdicts": O_KG_EVAL_VERDICTS,
     "kg_preannotate": O_KG_PREANNOTATE,
     "kg_annotated_refs": O_KG_ANNOTATED_REFS,
@@ -2911,7 +2481,9 @@ PYTEST_ORACLES = {
     "rel_lifespan": O_REL_LIFESPAN,
     "text_token_count": O_TEXT_TOKEN_COUNT,
     "text_language_id": O_TEXT_LANGUAGE_ID,
-    "text_fingerprint": O_TEXT_FINGERPRINT,
 }
 
-assert len(PYTEST_QUERIES) == 16 and set(PYTEST_QUERIES) == set(PYTEST_ORACLES)
+assert len(QUERIES) == 50 and set(QUERIES) == set(ORACLES), (
+    len(QUERIES),
+    set(QUERIES) ^ set(ORACLES),
+)

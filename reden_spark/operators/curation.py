@@ -105,7 +105,7 @@ def pack_sequences(docs: DataFrame, budget: int = 512, n_shards: int = 8) -> Dat
     each shard packs via one ordered-window running sum. The md5-derived
     shard hash makes the assignment engine-portable and RNG-free.
     """
-    from .textstats import tokens
+    from .dedup import tokens
 
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
     toks = docs.select(
@@ -141,7 +141,7 @@ def pack_sequences_greedy(docs: DataFrame, budget: int = 512, n_shards: int = 8)
     """
     import pandas as pd
 
-    from .textstats import tokens
+    from .dedup import tokens
 
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
     toks = docs.select(
@@ -268,49 +268,6 @@ def shuffle_deterministic(docs: DataFrame, seed: int = 0) -> DataFrame:
     return hashed.select(
         "doc_id",
         (F.row_number().over(w) + off_map[F.col("_b")]).cast("long").alias("position"),
-    )
-
-
-def chunk_windows(docs: DataFrame, window: int = 64, stride: int = 32) -> DataFrame:
-    """Sliding-window document chunking — the step that turns variable-length
-    documents into fixed-budget training examples with overlap (the
-    complement of pack_sequences, which concatenates SHORT docs; this splits
-    LONG ones). One output row per chunk: (doc_id, chunk_idx, n_chunk_words,
-    chunk_hash) where chunk k covers words [k*stride, k*stride + window) of
-    the lowercased word tokenization and chunk_hash = md5 of the chunk's
-    words space-joined (narrow provenance row, not the text itself).
-
-    Chunk count: 1 if n_words <= window, else ceil((n_words - window) /
-    stride) + 1 — the last chunk is the first whose window reaches the end
-    (standard overlapping-window rule; a doc is never truncated).
-
-    Scale shape: pure codegen split/sequence/explode/slice — map-only, no
-    shuffle, no UDF; a doc's chunks are produced inside its own partition and
-    the output carries hashes, so the row stays ~60 bytes whatever `window`
-    is. At 100 TB this is a single pass fused into whatever scan precedes it.
-    """
-    from .textstats import tokens
-
-    toks = tokens(F.col("text"))
-    n = F.size(toks)
-    k_last = F.when(n <= window, F.lit(0)).otherwise(
-        F.ceil((n - F.lit(window)).cast("double") / F.lit(stride)).cast("int")
-    )
-    start = F.col("chunk_idx") * stride
-    chunk = F.slice(F.col("toks"), start + 1, window)
-    return (
-        docs.select(
-            "doc_id",
-            toks.alias("toks"),
-            n.alias("n"),
-            F.explode(F.sequence(F.lit(0), k_last)).alias("chunk_idx"),
-        )
-        .select(
-            "doc_id",
-            F.col("chunk_idx").cast("int").alias("chunk_idx"),
-            F.least(F.lit(window), F.col("n") - start).cast("int").alias("n_chunk_words"),
-            F.md5(F.array_join(chunk, " ")).alias("chunk_hash"),
-        )
     )
 
 

@@ -1,5 +1,6 @@
 """Deduplication operators over the `documents` table — the training-data-pipeline
-extensions (task brief): exact, MinHash+LSH, n-gram Jaccard, SimHash.
+extensions (task brief): exact, MinHash+LSH, n-gram Jaccard, SimHash — plus the
+text normalization and word tokenizer every documents operator shares.
 
 Engine-portability note: hash primitives are md5 hex strings (identical in Spark
 and DuckDB), so every operator — SimHash included (60-bit md5-derived token
@@ -18,7 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpointing import shared
@@ -28,6 +29,13 @@ def norm_text(col):
     """lowercase, collapse non-word runs to single spaces, trim; NULL as empty
     (the DuckDB oracles COALESCE the same way)."""
     return F.trim(F.regexp_replace(F.lower(F.coalesce(col, F.lit(""))), r"\W+", " "))
+
+
+def tokens(col):
+    """Words of :func:`norm_text`. NULL text tokenizes as empty text: size()
+    would otherwise return NULL on the Spark side against DuckDB's NULL-row
+    semantics (a latent parity split)."""
+    return F.split(norm_text(col), " ")
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -346,82 +354,4 @@ def simhash_near_pairs(docs: DataFrame, shingle_n: int = 2, max_hamming: int = 8
         pairs.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
-    """Exact duplicated-span detection at word grain (the ExactSubstr signal
-    of Lee et al. 2022, "Deduplicating Training Data Makes Language Models
-    Better", re-expressed relationally): flag every word n-gram OCCURRENCE
-    whose gram also appears in at least one other document, and report
-    per-document duplicated-span coverage: (doc_id, n_grams, n_dup_grams,
-    dup_fraction). n_grams counts occurrences (not distinct grams) =
-    max(n_words - n + 1, 0); dup_fraction = n_dup_grams / n_grams rounded to
-    6 decimals, -1.0 sentinel for docs too short for a single n-gram.
-
-    Scale shape: grams travel as xxhash64 longs only (never the text; the
-    oracle groups by md5 of the same gram string — the result depends only on
-    gram EQUALITY, so any practically-injective key matches it, and 8-byte
-    JVM-native longs shuffle/sort ~5x lighter than 32-char md5 hex strings).
-    One explode to (doc, gram_hash) occurrences, then a single gram-keyed
-    window — min(doc_id) != max(doc_id) over the gram partition flags every
-    occurrence whose gram appears in >1 document, exactly the oracle's
-    doc-frequency > 1 — and one doc-grain re-aggregation where n_grams falls
-    out as count(*) of the same stream (= max(n_words - n + 1, 0)). Two keyed
-    shuffles on 8-byte keys, no self-join, no recomputed subtree; nothing is
-    quadratic and no gram list is ever collected. (A prior draft aggregated
-    (doc, gram, k) → gram-grain doc_freq → left-semi join back: that plan
-    computes the 90 M-row explode+agg subtree TWICE and sort-merges it on
-    string keys — measured 670 s on the 2 M-doc corpus vs 71 s for this
-    shape, bench_artifacts/new_ops_scale_r5.json.)
-
-    Known residual hazard at extreme scale: windows have no map-side combine,
-    so a single gram duplicated across ~all documents (a license header, a
-    boilerplate footer) clusters its occurrences into ONE window task. If a
-    corpus profile shows such grams, pre-filter them with a cheap
-    sample-based df cap (they are dup-by-definition; their occurrences can be
-    counted map-only and added back) before the window — the same
-    probe-then-mitigate pattern minhash_lsh_pairs' auto-salt uses.
-    """
-    # toks is projected ONCE per row before the gram lambda touches it
-    # (CollapseProject keeps the boundary: toks is non-cheap and referenced
-    # more than once); textually inlining the split in the gram lambda would
-    # re-run the regexp+split per gram ELEMENT.
-    words = "split(trim(regexp_replace(lower(coalesce(text, '')), '\\\\W+', ' ')), ' ')"
-    grams = docs.select("doc_id", F.expr(words).alias("toks")).select(
-        "doc_id",
-        F.expr(
-            f"case when size(toks) >= {n} then "
-            f"transform(sequence(1, size(toks) - {n - 1}), "
-            f"i -> xxhash64(array_join(slice(toks, i, {n}), ' '))) "
-            "else array() end"
-        ).alias("grams"),
-    )
-    # explode_OUTER + a post-generate null filter, not plain explode: Spark's
-    # InferFiltersFromGenerate would otherwise plant a pre-Generate Filter
-    # whose condition textually inlines the ENTIRE gram expression against raw
-    # text — one redundant full evaluation per row (A/B: 84.7 s -> 70.9 s on
-    # the 2 M-doc corpus). The null filter on the 8-byte gram is ~free.
-    occ = grams.select("doc_id", F.explode_outer("grams").alias("gram")).filter(
-        F.col("gram").isNotNull()
-    )
-    w = Window.partitionBy("gram")
-    flagged = occ.select(
-        "doc_id",
-        (F.min("doc_id").over(w) != F.max("doc_id").over(w)).alias("is_dup"),
-    )
-    per_doc = flagged.groupBy("doc_id").agg(
-        F.count("*").alias("n_occ"),
-        F.sum(F.col("is_dup").cast("long")).alias("n_dup"),
-    )
-    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_occ", F.lit(0)).cast("long").alias("n_grams"),
-        F.coalesce("n_dup", F.lit(0)).cast("long").alias("n_dup_grams"),
-        F.when(
-            F.coalesce("n_occ", F.lit(0)) > 0,
-            F.round(F.coalesce("n_dup", F.lit(0)) / F.col("n_occ"), 6),
-        )
-        .otherwise(F.lit(-1.0))
-        .alias("dup_fraction"),
     )

@@ -28,18 +28,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
 from ..functions.gazetteer import GazetteerMatcher
-
-_MATCH_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("mention", StringType()),
-            StructField("start_pos", IntegerType()),
-        ]
-    )
-)
 
 # per-worker matcher cache: broadcast identity -> compiled matcher
 _MATCHER_CACHE: dict[object, GazetteerMatcher] = {}
@@ -53,9 +43,9 @@ def broadcast_terms(terms: DataFrame):
     Geonames aliases): ``toArrow()`` pulls the columnar batch straight from the
     JVM, it is serialized once as IPC bytes, and Spark's torrent broadcast
     distributes it. Workers decode the buffer and compile the matcher once per
-    process (see :func:`_matcher_for`). Beyond what a single broadcast
-    comfortably holds (~GB), swap this for a shared-storage path handed to the
-    workers — the decode path below already isolates that choice."""
+    process (see :func:`_matcher_for`, the one place that decodes them).
+    A gazetteer beyond what a single broadcast comfortably holds (~GB) would
+    need a shared-storage hand-off instead."""
     import pyarrow as pa
 
     tbl = terms.select("term").distinct().toArrow()
@@ -65,92 +55,24 @@ def broadcast_terms(terms: DataFrame):
     return terms.sparkSession.sparkContext.broadcast(sink.getvalue().to_pybytes())
 
 
-def file_terms_handle(terms: DataFrame, path: str) -> dict:
-    """The >GB escape hatch of :func:`broadcast_terms`: write the distinct term
-    list as parquet at a worker-reachable `path` (a DISTRIBUTED write — the
-    terms never pass through the driver at all, unlike the broadcast, whose
-    payload the driver must at least relay once) and return the tiny handle
-    that is broadcast in its place. Each worker process opens the file and
-    compiles the matcher once (cached in _MATCHER_CACHE keyed by path PLUS a
-    content fingerprint of the written files: rewriting the same path with a
-    different term list — mode('overwrite') permits it — must not serve a
-    stale compiled matcher from a long-lived worker process). On a cluster
-    `path` lives on the DFS every executor mounts; torrent-broadcast bandwidth
-    stops being the bottleneck at 10^7-alias gazetteers."""
-    terms.select("term").distinct().write.mode("overwrite").parquet(path)
-    return {"terms_path": path, "fingerprint": _terms_fingerprint(path)}
-
-
-def _terms_fingerprint(path: str) -> str | None:
-    """Digest of (name, size, mtime) of the parquet files under `path`; None
-    when the path is not locally statable (e.g. a DFS URI, where rglob simply
-    yields nothing rather than raising — a digest-of-nothing would be the
-    SAME constant for every remote path and defeat the cache key; on a DFS
-    the writer should hand out a fresh path per gazetteer version instead)."""
-    import hashlib
-    from pathlib import Path as _P
-
-    try:
-        h = hashlib.md5()
-        n = 0
-        for f in sorted(_P(path).rglob("*.parquet")):
-            st = f.stat()
-            h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns};".encode())
-            n += 1
-        return h.hexdigest() if n else None
-    except OSError:
-        return None
-
-
 def _matcher_for(bc) -> GazetteerMatcher:
     # worker-side Broadcast exposes _path (spill file); driver-side has _jbroadcast.
-    value_is_handle = isinstance(getattr(bc, "value", None), dict)
-    key = (
-        (bc.value["terms_path"], bc.value.get("fingerprint"))
-        if value_is_handle
-        else (getattr(bc, "_path", None) or id(bc))
-    )
+    key = getattr(bc, "_path", None) or id(bc)
     matcher = _MATCHER_CACHE.get(key)
     if matcher is None:
-        value = bc.value
-        if isinstance(value, dict):  # file handle (file_terms_handle)
-            import pyarrow.parquet as pq
+        import pyarrow as pa
 
-            terms = pq.read_table(value["terms_path"], columns=["term"]).column("term").to_pylist()
-        elif isinstance(value, (bytes, bytearray)):
-            import pyarrow as pa
-
-            terms = pa.ipc.open_stream(pa.BufferReader(value)).read_all().column("term").to_pylist()
-        else:  # legacy plain-list broadcasts (streaming tests, ad-hoc callers)
-            terms = value
+        terms = pa.ipc.open_stream(pa.BufferReader(bc.value)).read_all().column("term").to_pylist()
         matcher = GazetteerMatcher(terms)
         _MATCHER_CACHE.clear()  # keep at most one compiled gazetteer per worker
         _MATCHER_CACHE[key] = matcher
     return matcher
 
 
-def mention_finder_udf(terms: DataFrame, terms_path: str | None = None):
-    """Build the Arrow-batched gazetteer UDF (shared by batch and streaming paths).
-    The term list ships once per executor via an Arrow broadcast — or, when
-    ``terms_path`` is given, via shared storage (:func:`file_terms_handle`, the
-    >GB gazetteer path); the compiled regex is cached per worker process."""
-    if terms_path is not None:
-        bc = terms.sparkSession.sparkContext.broadcast(file_terms_handle(terms, terms_path))
-    else:
-        bc = broadcast_terms(terms)
-
-    @F.pandas_udf(_MATCH_TYPE)
-    def find_all(texts: pd.Series) -> pd.Series:
-        matcher = _matcher_for(bc)
-        return texts.map(lambda t: [{"mention": m, "start_pos": s} for m, s in matcher.find(t or "")])
-
-    return find_all
-
-
 _MENTIONS_SCHEMA = "conv_id string, turn_idx int, occ_idx int, mention string, start_pos int"
 
 
-def detect_mentions(turns: DataFrame, terms: DataFrame, terms_path: str | None = None) -> DataFrame:
+def detect_mentions(turns: DataFrame, terms: DataFrame) -> DataFrame:
     """transcripts x mention_terms -> MENTIONS schema (production mapInPandas path).
 
     Map-only: the matcher emits matches in left-to-right order, so occ_idx is
@@ -158,16 +80,10 @@ def detect_mentions(turns: DataFrame, terms: DataFrame, terms_path: str | None =
     exploded flat rows directly from the Arrow batch (columnar list building),
     skipping the nested array<struct> construction + JVM posexplode a scalar
     UDF would need — ~2x less Python/Arrow overhead per turn.
-
-    ``terms_path``: shared-storage gazetteer handoff for dictionaries too big
-    to broadcast comfortably (:func:`file_terms_handle`).
     """
     import numpy as np
 
-    if terms_path is not None:
-        bc = turns.sparkSession.sparkContext.broadcast(file_terms_handle(terms, terms_path))
-    else:
-        bc = broadcast_terms(terms)
+    bc = broadcast_terms(terms)
 
     def gen(batches):
         matcher = _matcher_for(bc)

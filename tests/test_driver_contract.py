@@ -16,7 +16,6 @@ TABLES = [
     "supplier",
     "part",
     "orders",
-    "lineitem",
     "events",
     "documents",
 ]
@@ -44,11 +43,8 @@ def normalize(rows, cols):
     return sorted(out)
 
 
-from reden_spark.driver_contract import PYTEST_ORACLES, PYTEST_QUERIES
-
-CONTRACT_QUERIES = {**entrymod.queries(), **PYTEST_QUERIES}
-CONTRACT_ORACLES = {**entrymod.oracle_sql(), **PYTEST_ORACLES}
-ORACLE_NAMES = sorted(CONTRACT_ORACLES)
+QUERIES = entrymod.queries()
+ORACLES = entrymod.oracle_sql()
 
 
 def test_driver_contract_within_oracle_budget():
@@ -58,13 +54,13 @@ def test_driver_contract_within_oracle_budget():
     assert set(entrymod.oracle_sql()) == set(entrymod.queries())
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    q = CONTRACT_QUERIES[name]
+    q = QUERIES[name]
     df = q(spark, SF)
     cols = df.columns
     got = normalize([tuple(r) for r in df.collect()], cols)
-    res = duck.sql(CONTRACT_ORACLES[name])
+    res = duck.sql(ORACLES[name])
     want = normalize(res.fetchall(), res.columns)
     assert [c.lower() for c in sorted(cols)] == sorted(c.lower() for c in res.columns), (
         f"{name}: column mismatch {sorted(cols)} vs {sorted(res.columns)}"

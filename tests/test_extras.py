@@ -368,47 +368,25 @@ def test_curation_edge_cases(docs, spark):
 
 
 def test_null_text_behaves_as_empty(spark, duck):
-    """NULL text must flow through every text operator as '' on BOTH engines
+    """NULL text must flow through every text reader as '' on BOTH engines
     (round-4 ADVICE: un-coalesced size() yields NULL on the Spark side vs a
     NULL row in DuckDB — the fixtures have no NULL text, so this pins the
     hazard with an explicit one)."""
-    from reden_spark.operators.dedup import exact_dedup
-    from reden_spark.operators.textstats import (
-        fingerprint,
-        language_id,
-        pretoken_count,
-        quality_filter,
-        quality_score,
-        repetition_signals,
-        token_count,
-    )
+    from reden_spark.operators.curation import decontaminate, pack_sequences
+    from reden_spark.operators.dedup import exact_dedup, minhash_signatures
+    from reden_spark.operators.textstats import language_id, quality_score, token_count
 
     docs = spark.createDataFrame(
-        [(1, None), (2, ""), (3, "the quick brown fox")], "doc_id long, text string"
+        [(1, None), (2, ""), (3, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
     )
 
     def by_id(df):
         return {r["doc_id"]: tuple(r)[1:] for r in df.collect()}
 
-    for op in (
-        token_count,
-        pretoken_count,
-        quality_score,
-        quality_filter,
-        language_id,
-        fingerprint,
-        repetition_signals,
-        exact_dedup,
-    ):
+    for op in (token_count, quality_score, language_id, exact_dedup):
         rows = op(docs).collect()
-        # fingerprint's min_shingle_md5 is contractually NULL for sub-n docs
-        # (the DuckDB oracle's CASE WHEN len(shingles) > 0 does the same)
-        assert all(
-            v is not None
-            for r in rows
-            for k, v in r.asDict().items()
-            if k != "min_shingle_md5"
-        ), (op.__name__, rows)
+        assert all(v is not None for r in rows for v in r), (op.__name__, rows)
         if op is exact_dedup:
             # NULL and '' normalize identically -> one survivor for docs 1+2
             keys = {r.content_key: r.n_copies for r in rows}
@@ -416,6 +394,17 @@ def test_null_text_behaves_as_empty(spark, duck):
         else:
             got = by_id(op(docs))
             assert got[1] == got[2], (op.__name__, got[1], got[2])
+
+    # one shard, so doc 2's start_offset follows doc 1's token count
+    packed = by_id(pack_sequences(docs, budget=512, n_shards=1))
+    decon = by_id(decontaminate(docs, docs, 8))
+    for got in (packed, decon):
+        assert all(v is not None for row in got.values() for v in row), got
+        assert got[1] == got[2], (got[1], got[2])
+    assert packed[1] == (0, 0, 0, 0) and packed[3] == (0, 9, 0, 0)
+    assert decon[1] == (0, False) and decon[3] == (2, True)
+    # docs without a shingle get no signature row, NULL and '' alike
+    assert set(by_id(minhash_signatures(docs))) == {3}
 
 
 def test_minhash_auto_salt_engages_on_boilerplate(spark):

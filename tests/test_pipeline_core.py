@@ -36,18 +36,6 @@ def test_mentions_match_oracle(spark, tables, py_tables):
     assert len(got) > 50
 
 
-def test_file_terms_handoff_identical_mentions(spark, tables, tmp_path):
-    """The shared-storage gazetteer path (file_terms_handle — the >GB escape
-    hatch of the Arrow broadcast) must produce byte-identical mentions."""
-    via_bc = detect_mentions(tables["transcripts"], tables["mention_terms"]).collect()
-    via_file = detect_mentions(
-        tables["transcripts"], tables["mention_terms"], terms_path=str(tmp_path / "terms")
-    ).collect()
-    key = lambda r: (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)  # noqa: E731
-    assert sorted(map(key, via_bc)) == sorted(map(key, via_file))
-    assert len(via_bc) > 50
-
-
 def test_links_match_oracle_exactly(spark, tables, oracle_links):
     _, _, _, links = run_stages(spark, tables)
     got = {

@@ -340,79 +340,6 @@ def test_curation_plan_shapes(spark):
     assert n == 3 and "BroadcastHashJoin" in p, p[:1500]
 
 
-def test_chunk_windows_is_map_only(spark):
-    """Sliding-window chunking must stay a single map-only pass: tokenize,
-    generate chunk indices, slice, hash — no Exchange at any corpus size."""
-    from reden_spark.operators.curation import chunk_windows
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = plan(chunk_windows(docs, window=24, stride=16))
-    assert "Exchange" not in p, p[:1500]
-    assert "Generate" in p  # the explode over chunk indices
-
-
-def test_ngram_topk_hash_grain_and_takeordered(spark):
-    """ngram_topk's designed shape: the heavy counting aggregates xxhash64
-    longs (never corpus-sized string keys), the k-th-count threshold and the
-    candidate-hash set reach the plan as broadcasts (no driver round-trip),
-    strings materialize only on the thin candidate recount, and the global
-    top-k is TakeOrderedAndProject — never a total sort."""
-    import re
-
-    from reden_spark.operators.textstats import ngram_topk
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = plan(ngram_topk(docs, n=2, k=20))
-    assert "TakeOrderedAndProject" in p, p[:1500]
-    assert "xxhash64" in p, p[:1500]
-    # the shared() checkpoint of the hash-grain count table cuts the heavy
-    # exchange out of this plan (it ran once, in the checkpoint's own job);
-    # both the threshold subquery and the candidate filter read the
-    # checkpoint blocks back (>=2 ExistingRDD scans), and the corpus parquet
-    # is scanned exactly twice — the heavy hash pass and the thin string
-    # recount — never per consumer
-    assert len(re.findall(r"Scan ExistingRDD", p)) >= 2, p[:2000]
-    assert len(re.findall(r"Scan parquet", p)) == 2, p[:2000]
-    # nothing partitions by (h, doc_id): doc_freq comes from the thin slice
-    assert not re.search(r"hashpartitioning\(h#\d+L, doc_id", p), p[:2000]
-    assert len(re.findall(r"\(\d+\) BroadcastExchange", p)) >= 2, p[:2000]
-    assert "Sort" not in p, p[:1500]  # top-k must never be a total sort
-    assert "CartesianProduct" not in p, p[:1500]
-
-
-def test_perplexity_plan_shape(spark):
-    """Bigram-LM scoring must stay pure codegen: no Python eval anywhere, the
-    vocab-size scalar reaches the plan as a broadcast 1-row frame (never a
-    shuffled join or a driver constant) and nothing is a CartesianProduct."""
-    from reden_spark.operators.textstats import perplexity
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = plan(perplexity(docs))
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:1500]
-    assert "CartesianProduct" not in p, p[:1500]
-    assert "BroadcastNestedLoopJoin" in p, p[:1500]  # the 1-row V crossJoin
-
-
-def test_duplicated_spans_plan_shape(spark):
-    """Duplicated-span detection: gram hashes travel as xxhash64 longs, the
-    cross-doc flag is ONE gram-keyed window (min!=max over the gram
-    partition) — no dup-gram semi join, no recomputed explode subtree — and
-    no Cartesian/python anywhere."""
-    import re
-
-    from reden_spark.operators.dedup import duplicated_spans
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = plan(duplicated_spans(docs, n=8))
-    assert len(re.findall(r"\(\d+\) Window\b", p)) == 1, p[:1500]
-    assert "xxhash64" in p, p[:1500]
-    assert "LeftSemi" not in p, p[:1500]
-    # exactly one Generate: the explode subtree is not computed twice
-    assert len(re.findall(r"\(\d+\) Generate\b", p)) == 1, p[:1500]
-    assert "CartesianProduct" not in p, p[:1500]
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:1500]
-
-
 def test_domain_cap_two_phase_rank(spark):
     """domain_cap must rank twice — the salted pre-cap then the exact re-rank
     — and every Exchange must be keyed (a SinglePartition exchange would mean
