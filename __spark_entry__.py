@@ -4,13 +4,12 @@ entry(spark)  — flagship: the full KG-construction pipeline (mention detection
 candidate join -> per-conversation graph disambiguation -> links) over a
 transcripts table derived deterministically from sf0.001 events+nation.
 
-queries()/oracle_sql() — 50 rows in one registry, each with an exact DuckDB
-oracle (reden_spark/driver_contract.py), exactly the contract's 50-row oracle
+queries()/oracle_sql() — 38 rows in one registry, each with an exact DuckDB
+oracle (reden_spark/driver_contract.py), within the contract's 50-row oracle
 budget: the KG pipeline's stages and its annotate, enrichment,
 evaluation and dictionary-build modes; REDEN's run comparison (significance
-tests) and date-specific lifespan rule; the curation pipeline's operators
-with the chained curation_pipeline recipe; and the remaining text-statistics,
-near-duplicate and document-curation operators.
+tests) and date-specific lifespan rule; and the curation pipeline's operators
+with the chained curation_pipeline recipe.
 """
 
 from __future__ import annotations

@@ -795,19 +795,6 @@ FROM eval_recs
 # ---------------------------------------------------------------------------
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import exact_dedup
-
-    return exact_dedup(_read(spark, sf_dir, "documents"))
-
-
-O_DEDUP_EXACT = """
-SELECT min(doc_id) AS doc_id,
-       md5(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g'))) AS content_key,
-       count(*) AS n_copies
-FROM documents GROUP BY 2
-"""
-
 _DUCK_SHINGLES = """
 WITH toks AS (
   SELECT doc_id, string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS words
@@ -876,52 +863,6 @@ SELECT * FROM (
                (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))), 6) AS jaccard
   FROM pairs
 ) WHERE jaccard >= 0.5
-"""
-)
-
-
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_read(spark, sf_dir, "documents"), 3, 0.8)
-
-
-# 2-of-4 min-shingle band keys — mirrors dedup._min_shingle_band_keys exactly
-_DUCK_NGRAM_BANDS = """
-, keyed0 AS (
-  SELECT doc_id, shingles, list_slice(list_sort([md5(s) FOR s IN shingles]), 1, 4) AS m
-  FROM sh WHERE len(shingles) > 0
-), keyed AS (
-  SELECT doc_id, unnest(list_filter([
-      CASE WHEN len(m) = 1 THEN m[1] || '|' || m[1] END,
-      CASE WHEN len(m) >= 2 THEN m[1] || '|' || m[2] END,
-      CASE WHEN len(m) >= 3 THEN m[1] || '|' || m[3] END,
-      CASE WHEN len(m) >= 3 THEN m[2] || '|' || m[3] END,
-      CASE WHEN len(m) >= 4 THEN m[1] || '|' || m[4] END,
-      CASE WHEN len(m) >= 4 THEN m[2] || '|' || m[4] END,
-      CASE WHEN len(m) >= 4 THEN m[3] || '|' || m[4] END
-    ], x -> x IS NOT NULL)) AS block
-  FROM keyed0
-)
-"""
-
-O_DEDUP_NGRAM = (
-    _DUCK_SHINGLES.format(nm1=2)
-    + _DUCK_NGRAM_BANDS
-    + """
-, pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM keyed a JOIN keyed b USING (block) WHERE a.doc_id < b.doc_id
-), paired AS (
-  SELECT p.doc_a, p.doc_b, sa.shingles AS sh_a, sb.shingles AS sh_b
-  FROM pairs p JOIN sh sa ON sa.doc_id = p.doc_a JOIN sh sb ON sb.doc_id = p.doc_b
-)
-SELECT * FROM (
-  SELECT doc_a, doc_b,
-         round(len(list_intersect(sh_a, sh_b))::DOUBLE /
-               (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b))), 6) AS jaccard
-  FROM paired
-) WHERE jaccard >= 0.8
 """
 )
 
@@ -1008,32 +949,6 @@ O_DEDUP_CLUSTERS = (
 )
 
 
-def q_text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import tfidf_topk
-
-    return tfidf_topk(_read(spark, sf_dir, "documents"), k=3)
-
-
-O_TEXT_TFIDF_TOPK = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2
-), dfd AS (
-  SELECT term, count(*) AS df_docs FROM tf GROUP BY 1
-), scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dfd.df_docs,
-         round(tf.tf * ln((SELECT count(*) FROM documents)::DOUBLE / dfd.df_docs), 6) AS tfidf
-  FROM tf JOIN dfd USING (term)
-)
-SELECT doc_id, term, tf, df_docs, tfidf, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rnk
-  FROM scored
-) WHERE rnk <= 3
-"""
-
-
 def q_doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import stratified_sample
 
@@ -1084,38 +999,6 @@ SELECT doc_id, shard, n_tokens::INT AS n_tokens, start_offset,
 """
 
 
-def q_doc_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boundary-respecting greedy packing (applyInPandas kernel — the per-shard
-    fill state is a prefix-dependent recursion no window frame expresses; the
-    oracle states the identical recursion as a recursive CTE)."""
-    from .operators.curation import pack_sequences_greedy
-
-    return pack_sequences_greedy(_read(spark, sf_dir, "documents"), budget=512, n_shards=8)
-
-
-O_DOC_PACK_GREEDY = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 8 AS shard,
-         len(list_filter(string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' '),
-                         t -> t <> '')) AS n_tokens
-  FROM documents
-), ordered AS (
-  SELECT *, row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM toks
-), packed(shard, rn, doc_id, n_tokens, seq_idx, off, fill) AS (
-  SELECT shard, rn, doc_id, n_tokens, 0::BIGINT, 0::BIGINT, n_tokens::BIGINT
-  FROM ordered WHERE rn = 1
-  UNION ALL
-  SELECT o.shard, o.rn, o.doc_id, o.n_tokens,
-         CASE WHEN p.fill + o.n_tokens <= 512 THEN p.seq_idx ELSE p.seq_idx + 1 END,
-         CASE WHEN p.fill + o.n_tokens <= 512 THEN p.fill ELSE 0 END,
-         CASE WHEN p.fill + o.n_tokens <= 512 THEN p.fill + o.n_tokens ELSE o.n_tokens::BIGINT END
-  FROM packed p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1
-)
-SELECT doc_id, shard, n_tokens::INT AS n_tokens, seq_idx, off AS offset_in_seq FROM packed
-"""
-
-
 def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composition of the curation operators: the 20% stratified sample is the
     eval holdout; the remaining 80% is the training corpus, decontaminated
@@ -1160,139 +1043,6 @@ FROM documents d LEFT JOIN hits h USING (doc_id)
 WHERE d.doc_id NOT IN (SELECT doc_id FROM samp)
 """
 )
-
-
-# The synthetic documents text contains no URLs, so URL-curation oracles over
-# the raw table would pass vacuously; every 5th doc gains two deterministic
-# URLs in BOTH engines (mixed-case host + www. prefix exercise normalization;
-# blocked{0,1,2}.net rotates one-third of the injected hosts onto/off the
-# 2-entry blocklist so `blocked` is non-vacuously true AND false).
-_URL_SUFFIX_SQL = (
-    "' see https://www.Example' || CAST(doc_id % 7 AS VARCHAR) || '.com/p/' "
-    "|| CAST(doc_id AS VARCHAR) || ' and http://blocked' "
-    "|| CAST(doc_id % 3 AS VARCHAR) || '.net/x?q=1'"
-)
-_DUCK_URL_DOCS = f"""
-url_docs AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN COALESCE(text, '') || {_URL_SUFFIX_SQL}
-              ELSE COALESCE(text, '') END AS text
-  FROM documents
-)
-"""
-
-
-def _url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = F.coalesce(F.col("text"), F.lit(""))
-    injected = F.when(
-        F.col("doc_id") % 5 == 0,
-        F.concat(
-            base,
-            F.lit(" see https://www.Example"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".com/p/"),
-            F.col("doc_id").cast("string"),
-            F.lit(" and http://blocked"),
-            (F.col("doc_id") % 3).cast("string"),
-            F.lit(".net/x?q=1"),
-        ),
-    ).otherwise(base)
-    return _read(spark, sf_dir, "documents").withColumn("text", injected)
-
-
-# DuckDB twin of textstats._domains (lowercased, www.-stripped host list)
-_DUCK_DOMAINS = (
-    "list_transform(regexp_extract_all(text, '{dom_re}', 1), "
-    "x -> regexp_replace(lower(x), '^www\\.', ''))"
-)
-
-
-def q_text_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import url_extract
-
-    return url_extract(_url_docs(spark, sf_dir))
-
-
-def _o_text_url_extract() -> str:
-    from .operators.textstats import URL_DOMAIN_RE, URL_RE
-
-    doms = _DUCK_DOMAINS.format(dom_re=URL_DOMAIN_RE)
-    return f"""
-WITH {_DUCK_URL_DOCS},
-u AS (
-  SELECT doc_id, text, list_sort(list_distinct({doms})) AS doms FROM url_docs
-)
-SELECT doc_id,
-       len(regexp_extract_all(text, '{URL_RE}'))::INT AS n_urls,
-       len(doms)::INT AS n_domains,
-       COALESCE(array_to_string(doms, ','), '') AS domains
-FROM u
-"""
-
-
-def q_doc_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import domain_filter
-
-    blocklist = spark.createDataFrame(
-        [("blocked0.net",), ("blocked1.net",)], "domain string"
-    )
-    return domain_filter(_url_docs(spark, sf_dir), blocklist)
-
-
-def _o_doc_domain_filter() -> str:
-    from .operators.textstats import URL_DOMAIN_RE
-
-    doms = _DUCK_DOMAINS.format(dom_re=URL_DOMAIN_RE)
-    return f"""
-WITH {_DUCK_URL_DOCS},
-u AS (
-  SELECT doc_id, unnest(list_distinct({doms})) AS domain FROM url_docs
-)
-SELECT doc_id, domain, domain IN ('blocked0.net', 'blocked1.net') AS blocked
-FROM u
-"""
-
-
-def q_doc_shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import shuffle_deterministic
-
-    return shuffle_deterministic(_read(spark, sf_dir, "documents"), seed=42)
-
-
-# The oracle states the SEMANTICS (one global ORDER BY); the operator computes
-# the identical ranks via the 256-bucket distributed-rank plan — the bucket is
-# a prefix of the sort key, so (bucket, key) order IS key order.
-O_DOC_SHUFFLE = """
-SELECT doc_id,
-       row_number() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) AS position
-FROM documents
-"""
-
-
-def q_doc_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import domain_cap
-
-    return domain_cap(_url_docs(spark, sf_dir), cap=3, n_salt=8)
-
-
-def _o_doc_domain_cap() -> str:
-    from .operators.textstats import URL_DOMAIN_RE
-
-    doms = _DUCK_DOMAINS.format(dom_re=URL_DOMAIN_RE)
-    # The oracle states the SEMANTICS (global first-3-per-domain by doc_id);
-    # the operator's two-phase salted rank is provably equivalent (stage 1
-    # keeps each salt shard's first 3, a superset of the domain's first 3).
-    return f"""
-WITH {_DUCK_URL_DOCS},
-u AS (
-  SELECT doc_id, unnest(list_distinct({doms})) AS domain FROM url_docs
-), r AS (
-  SELECT doc_id, domain,
-         row_number() OVER (PARTITION BY domain ORDER BY doc_id) AS domain_rank
-  FROM u
-)
-SELECT doc_id, domain, domain_rank::INT AS domain_rank FROM r WHERE domain_rank <= 3
-"""
 
 
 def q_kg_entity_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1406,114 +1156,6 @@ SELECT p.doc_id, c.cluster_id, c.cluster_size, p.shard, p.n_tokens::INT AS n_tok
 FROM packed p JOIN clusters c USING (doc_id)
 """
 )
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(_read(spark, sf_dir, "documents"), 2, 12)
-
-
-# Mirrors operators.dedup.simhash64/simhash_near_pairs exactly: 60-bit
-# md5-derived token hash, bit votes, max_hamming=12 -> 15 chunks of 4 bits.
-O_DEDUP_SIMHASH = (
-    _DUCK_SHINGLES.format(nm1=1)
-    + """
-, th AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, unnest(shingles) AS tok FROM sh WHERE len(shingles) > 0)
-), votes AS (
-  SELECT doc_id, bit, sum(CASE WHEN (h >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM th CROSS JOIN generate_series(0, 59) AS gs(bit)
-  GROUP BY doc_id, bit
-), hashes AS (
-  SELECT doc_id,
-         CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-  FROM votes GROUP BY doc_id
-), chunks AS (
-  SELECT doc_id, simhash, c, (simhash >> (c * 4)) & 15 AS chunk_val
-  FROM hashes CROSS JOIN generate_series(0, 14) AS gc(c)
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                  a.simhash AS h_a, b.simhash AS h_b
-  FROM chunks a JOIN chunks b USING (c, chunk_val) WHERE a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, bit_count(xor(h_a, h_b))::INT AS hamming
-FROM pairs WHERE bit_count(xor(h_a, h_b)) <= 12
-"""
-)
-
-
-def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import token_count
-
-    return token_count(_read(spark, sf_dir, "documents"))
-
-
-O_TEXT_TOKEN_COUNT = """
-SELECT doc_id,
-       len(string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' '))::INT AS n_words,
-       ceil(length(COALESCE(text, '')) / 4)::INT AS n_subwords_est
-FROM documents
-"""
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import quality_score
-
-    return quality_score(_read(spark, sf_dir, "documents"))
-
-
-_ALL_STOPWORDS_SQL = "('a','and','das','de','der','die','el','est','et','ein','in','is','ist','la','le','of','the','to','un','una','une','und','y','zu','es')"
-
-O_TEXT_QUALITY = f"""
-WITH t AS (
-  SELECT doc_id, COALESCE(text, '') AS text,
-         string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         len(toks)::INT AS n_words,
-         len(list_filter(toks, t -> t IN {_ALL_STOPWORDS_SQL})) AS stop_hits,
-         length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS punct,
-         length(text) AS n_chars
-  FROM t
-)
-SELECT doc_id, n_words,
-       round(stop_hits::DOUBLE / greatest(n_words, 1), 6) AS stopword_ratio,
-       round(punct::DOUBLE / greatest(n_chars, 1), 6) AS punct_ratio,
-       round(0.4 * (stop_hits::DOUBLE / greatest(n_words, 1))
-           + 0.3 * least(n_words::DOUBLE / 100.0, 1.0)
-           + 0.3 * (1.0 - punct::DOUBLE / greatest(n_chars, 1)), 6) AS quality
-FROM m
-"""
-
-
-def q_text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.textstats import language_id
-
-    return language_id(_read(spark, sf_dir, "documents"))
-
-
-O_TEXT_LANGUAGE_ID = """
-WITH t AS (
-  SELECT doc_id, string_split(trim(regexp_replace(lower(COALESCE(text, '')), '\\W+', ' ', 'g')), ' ') AS toks
-  FROM documents
-), hits AS (
-  SELECT doc_id, lang, CAST(CASE lang
-           WHEN 'de' THEN len(list_filter(toks, x -> x IN ('der','die','das','und','ein','ist','zu')))
-           WHEN 'en' THEN len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is')))
-           WHEN 'es' THEN len(list_filter(toks, x -> x IN ('el','la','y','de','un','una','es')))
-           WHEN 'fr' THEN len(list_filter(toks, x -> x IN ('le','la','et','de','un','une','est')))
-         END AS INTEGER) AS n
-  FROM t, (SELECT unnest(['de','en','es','fr']) AS lang)
-), best AS (
-  SELECT doc_id, lang, n FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY n DESC, lang ASC) AS rn FROM hits
-  ) WHERE rn = 1
-)
-SELECT doc_id, CASE WHEN n > 0 THEN lang ELSE 'und' END AS lang_pred, n AS lang_hits FROM best
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -2374,16 +2016,11 @@ WHERE alias != ''
 """
 
 
-# The contract: 50 rows, each with an exact DuckDB oracle, exactly the
+# The contract: 38 rows, each with an exact DuckDB oracle, within the
 # 50-row oracle budget. tests/test_driver_contract.py checks every row
 # against its oracle.
 QUERIES = {
-    "text_url_extract": q_text_url_extract,
-    "doc_domain_filter": q_doc_domain_filter,
-    "doc_shuffle_deterministic": q_doc_shuffle_deterministic,
-    "doc_domain_cap": q_doc_domain_cap,
     "kg_entity_pmi": q_kg_entity_pmi,
-    "doc_pack_greedy": q_doc_pack_greedy,
     "kg_links_grouped": q_kg_links_grouped,
     "kg_mentions_relational": q_kg_mentions_relational,
     "kg_annotated_turns": q_kg_annotated_turns,
@@ -2406,13 +2043,8 @@ QUERIES = {
     "kg_triples": q_kg_triples,
     "kg_eval_metrics": q_kg_eval_metrics,
     "dico_build": q_dico_build,
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram,
-    "dedup_simhash": q_dedup_simhash,
-    "text_tfidf_topk": q_text_tfidf_topk,
     "doc_sample_stratified": q_doc_sample_stratified,
     "text_decontaminate": q_text_decontaminate,
-    "text_quality": q_text_quality,
     "kg_eval_verdicts": q_kg_eval_verdicts,
     "kg_preannotate": q_kg_preannotate,
     "kg_annotated_refs": q_kg_annotated_refs,
@@ -2426,17 +2058,10 @@ QUERIES = {
     "dico_regex_lookup": q_dico_regex_lookup,
     "dico_geonames": q_dico_geonames,
     "rel_lifespan": q_rel_lifespan,
-    "text_token_count": q_text_token_count,
-    "text_language_id": q_text_language_id,
 }
 
 ORACLES = {
-    "text_url_extract": _o_text_url_extract(),
-    "doc_domain_filter": _o_doc_domain_filter(),
-    "doc_shuffle_deterministic": O_DOC_SHUFFLE,
-    "doc_domain_cap": _o_doc_domain_cap(),
     "kg_entity_pmi": O_KG_ENTITY_PMI,
-    "doc_pack_greedy": O_DOC_PACK_GREEDY,
     "kg_links_grouped": O_KG_LINKS,
     "kg_mentions_relational": O_KG_MENTIONS,  # both detectors must match the same oracle
     "kg_annotated_turns": O_KG_ANNOTATED_TURNS,
@@ -2459,13 +2084,8 @@ ORACLES = {
     "kg_triples": O_KG_TRIPLES,
     "kg_eval_metrics": O_KG_EVAL_METRICS,
     "dico_build": O_DICO_BUILD,
-    "dedup_exact": O_DEDUP_EXACT,
-    "dedup_ngram_jaccard": O_DEDUP_NGRAM,
-    "dedup_simhash": O_DEDUP_SIMHASH,
-    "text_tfidf_topk": O_TEXT_TFIDF_TOPK,
     "doc_sample_stratified": O_DOC_SAMPLE_STRATIFIED,
     "text_decontaminate": O_TEXT_DECONTAMINATE,
-    "text_quality": O_TEXT_QUALITY,
     "kg_eval_verdicts": O_KG_EVAL_VERDICTS,
     "kg_preannotate": O_KG_PREANNOTATE,
     "kg_annotated_refs": O_KG_ANNOTATED_REFS,
@@ -2479,11 +2099,9 @@ ORACLES = {
     "dico_regex_lookup": O_DICO_REGEX_LOOKUP,
     "dico_geonames": O_DICO_GEONAMES,
     "rel_lifespan": O_REL_LIFESPAN,
-    "text_token_count": O_TEXT_TOKEN_COUNT,
-    "text_language_id": O_TEXT_LANGUAGE_ID,
 }
 
-assert len(QUERIES) == 50 and set(QUERIES) == set(ORACLES), (
+assert len(QUERIES) == 38 and set(QUERIES) == set(ORACLES), (
     len(QUERIES),
     set(QUERIES) ^ set(ORACLES),
 )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..functions.text import normalize_mention
 
 
-def generate_candidates(mentions: DataFrame, dico: DataFrame, broadcast_dico: bool = True) -> DataFrame:
+def generate_candidates(mentions: DataFrame, dico: DataFrame) -> DataFrame:
     """distinct (conv_id, mention) x dico -> CANDIDATES (conv_id, mention, group_idx, uris).
 
     One shuffle total — and it is the *only* non-map operation: group dedup by
@@ -47,18 +47,14 @@ def generate_candidates(mentions: DataFrame, dico: DataFrame, broadcast_dico: bo
         .distinct()
         .withColumn("group_idx", (F.row_number().over(wd) - 1).cast("int"))
     )
-    if broadcast_dico:
-        d = F.broadcast(d)
-    return probe.join(d, "alias_norm", "inner").select("conv_id", "mention", "group_idx", "uris")
+    return probe.join(F.broadcast(d), "alias_norm", "inner").select("conv_id", "mention", "group_idx", "uris")
 
 
-def dico_regex_lookup(dico: DataFrame, pattern: str, limit: int | None = None) -> DataFrame:
+def dico_regex_lookup(dico: DataFrame, pattern: str) -> DataFrame:
     """Regexp dictionary probe — the Lucene RegexpQuery path
     (DicoProcessingNEL.searchIndexWithRegexp, DicoProcessingNEL.java:349-378):
-    a predicate-pushdown filter instead of an index scan; the reference's
-    2x10^7-hit cap becomes an optional limit."""
-    out = dico.filter(F.col("alias_norm").rlike(pattern)).select("alias", "alias_norm", "uris")
-    return out.limit(limit) if limit is not None else out
+    a predicate-pushdown filter instead of an index scan."""
+    return dico.filter(F.col("alias_norm").rlike(pattern)).select("alias", "alias_norm", "uris")
 
 
 def conversation_cases(mentions: DataFrame, candidates: DataFrame) -> DataFrame:

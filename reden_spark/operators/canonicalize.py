@@ -185,7 +185,6 @@ def materialize_triples(
     kb_edges: DataFrame,
     dico: DataFrame,
     sameas_pred: str = SAME_AS,
-    broadcast_uri_map: bool = True,
     bucket_into: int | None = None,
 ) -> DataFrame:
     """LINKS -> output KG (subj, pred, obj):
@@ -196,12 +195,8 @@ def materialize_triples(
         to their canonical URI; sameAs rows themselves are dropped (they are now
         encoded by the canonical labels).
 
-    `broadcast_uri_map` forces the entity-combination mapping to broadcast
-    (right for dictionaries whose distinct winning URI-combinations fit in an
-    executor — every corpus this repo benchmarks). A deployment whose distinct
-    `chosen_uris` values are themselves huge (10^8-entity KBs) should pass
-    False and let AQE pick broadcast-vs-shuffle from the measured size, the
-    same escape hatch `generate_candidates(broadcast_dico=...)` exposes.
+    The entity-combination mapping is always broadcast: its distinct winning
+    URI-combinations fit in an executor for every corpus this repo runs.
 
     ``bucket_into=n`` attaches the output table's `bucket` partition column
     WITHOUT a full-output shuffle on a hashed key (round-2 profile: 310 MB, the largest remaining turn-grain movement):
@@ -234,7 +229,7 @@ def materialize_triples(
     canon_chosen = (
         links.filter(F.col("chosen_uris") != "")
         .select("conv_id", "turn_idx", "occ_idx", "chosen_uris")
-        .join(F.broadcast(uri_map) if broadcast_uri_map else uri_map, "chosen_uris")
+        .join(F.broadcast(uri_map), "chosen_uris")
         .select("conv_id", "turn_idx", "occ_idx", "entity")
     )
     lt_cols = [

@@ -1,20 +1,16 @@
-"""Deduplication operators over the `documents` table — the training-data-pipeline
-extensions (task brief): exact, MinHash+LSH, n-gram Jaccard, SimHash — plus the
-text normalization and word tokenizer every documents operator shares.
+"""Near-duplicate detection over the `documents` table: banded MinHash-LSH
+with exact Jaccard verification (the pair source of `run_curation`), plus the
+text normalization, word tokenizer and word shingles every documents operator
+shares.
 
 Engine-portability note: hash primitives are md5 hex strings (identical in Spark
-and DuckDB), so every operator — SimHash included (60-bit md5-derived token
-hash) — has an exact DuckDB oracle; min/max over hex strings is lexicographic
-and deterministic. All operators are pure
-DataFrame expressions (whole-stage codegen; no Python in the hot path).
+and DuckDB), so every operator has an exact DuckDB oracle. All operators are
+pure DataFrame expressions (whole-stage codegen; no Python in the hot path).
 
-Scale notes:
-  * exact dedup = one hash-shuffle on the content key;
-  * MinHash/LSH: signatures are embarrassingly parallel; the only shuffle is the
-    band-bucket join (self-join on band_key, quadratic ONLY within a bucket —
-    that is the point of banding); at 100 TB add a bucket-size cap / salting on
-    hot bands before the pair join;
-  * n-gram Jaccard is blocked (same band) before any pairwise work.
+Scale notes: MinHash signatures are embarrassingly parallel; the only shuffle
+is the band-bucket join (self-join on band_key, quadratic ONLY within a bucket
+— that is the point of banding), and the auto salt spreads a hot band over
+several tasks (see :func:`minhash_lsh_pairs`).
 """
 
 from __future__ import annotations
@@ -36,16 +32,6 @@ def tokens(col):
     would otherwise return NULL on the Spark side against DuckDB's NULL-row
     semantics (a latent parity split)."""
     return F.split(norm_text(col), " ")
-
-
-def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Keep the min doc_id per normalized-content md5 (hash-groupBy dedup)."""
-    return (
-        docs.withColumn("content_key", F.md5(norm_text(F.col("text"))))
-        .groupBy("content_key")
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
-        .select("doc_id", "content_key", "n_copies")
-    )
 
 
 def word_shingles(col, n: int):
@@ -219,139 +205,4 @@ def minhash_lsh_pairs(
         pairs.withColumn("jaccard", F.round(inter.cast("double") / union, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def _min_shingle_band_keys():
-    """2-of-4 min-shingle band keys over the `shingles` column: block key =
-    concatenated pair of two of the document's 4 smallest shingle md5s (6 keys
-    per doc; single-shingle docs fall back to a self-pair key).
-
-    Why pairs, not the single min shingle: one globally common shingle that
-    happens to be the corpus-wide md5 minimum would put EVERY document in one
-    block -> quadratic pair join. A pair key requires two shared min-shingles,
-    so a single ubiquitous shingle creates no giant block (adversarial test in
-    tests/test_extras.py). Near-dup docs at Jaccard >= 0.8 share nearly all
-    shingles, so their 4-smallest sets overlap in >= 2 elements essentially
-    always; the DuckDB oracle mirrors this formula exactly."""
-    mins = F.slice(F.array_sort(F.expr("transform(shingles, s -> md5(s))")), 1, 4)
-    n = F.size(mins)
-
-    def m(i):
-        return F.element_at(mins, i)
-
-    def pair(i, j, need):
-        return F.when(n >= need, F.concat_ws("|", m(i), m(j)))
-
-    keys = F.array(
-        F.when(n == 1, F.concat_ws("|", m(1), m(1))),
-        pair(1, 2, 2),
-        pair(1, 3, 3),
-        pair(2, 3, 3),
-        pair(1, 4, 4),
-        pair(2, 4, 4),
-        pair(3, 4, 4),
-    )
-    return F.filter(keys, lambda x: x.isNotNull())
-
-
-def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3, threshold: float = 0.8) -> DataFrame:
-    """n-gram-Jaccard near-dup pairs with exact verification, blocked on
-    2-of-4 min-shingle band keys (see :func:`_min_shingle_band_keys` for the
-    hot-block rationale). Candidates sharing a band key are verified with the
-    exact Jaccard; recall is banding-limited like any LSH scheme, but the
-    DuckDB oracle computes the identical banded formula, so parity is exact."""
-    sh = (
-        _fan_out(docs)
-        .select("doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .transform(shared)  # blocking + both join sides (see minhash note)
-    )
-    keyed = sh.select("doc_id", F.explode(_min_shingle_band_keys()).alias("block"))
-    pairs = (
-        keyed.select(F.col("doc_id").alias("doc_a"), "block")
-        .join(keyed.select(F.col("doc_id").alias("doc_b"), "block"), "block")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    shs = sh.select("doc_id", "shingles")
-    pairs = (
-        pairs.join(shs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")), "doc_a")
-        .join(shs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", F.round(inter.cast("double") / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-SIMHASH_BITS = 60  # 15 md5 hex chars -> engine-portable (same digest in DuckDB)
-
-
-def simhash64(docs: DataFrame, shingle_n: int = 2) -> DataFrame:
-    """60-bit SimHash per document. The per-token hash is the first 15 hex chars
-    of md5 (the same portable primitive as the MinHash base hash), so the whole
-    computation — bit votes, shifts, bit_count — is expressible identically in
-    DuckDB and the contract query has an exact SQL oracle (O_DEDUP_SIMHASH).
-    Pure Column expressions; whole-stage codegen end to end."""
-    sh = _fan_out(docs).select(
-        "doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    tokens = sh.select("doc_id", F.explode("shingles").alias("tok")).withColumn(
-        "h", F.expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)")
-    )
-    bits = tokens.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("bit"),
-        F.col("h"),
-    ).withColumn("vote", F.expr("CASE WHEN (shiftright(h, bit) & 1) = 1 THEN 1 ELSE -1 END"))
-    agg = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return agg.groupBy("doc_id").agg(
-        F.sum(F.expr("CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), bit) ELSE CAST(0 AS BIGINT) END")).alias(
-            "simhash"
-        )
-    )
-
-
-def simhash_near_pairs(docs: DataFrame, shingle_n: int = 2, max_hamming: int = 8) -> DataFrame:
-    """SimHash near-dup pairs: block on equal bit-chunks, verify with
-    bit_count(xor). The chunk count is DERIVED from max_hamming so the
-    pigeonhole guarantee always holds: hashes within hamming distance h differ
-    in at most h chunks, so with n_chunks >= h+1 the pair shares at least one
-    exact chunk — recall is 1.0 within max_hamming (parity test vs a
-    brute-force numpy oracle in tests/test_extras.py).
-
-    Scale note: more chunks = narrower chunk values = coarser blocks (15
-    chunks of 4 bits have only 15*16 distinct block keys). At 100 TB keep
-    max_hamming <= 5 (6 chunks of 10 bits) or <= 3 (4 chunks of 15 bits);
-    larger radii need combination blocking (Manku et al., WWW'07)."""
-    for n_chunks in (4, 5, 6, 10, 12, 15, 20, 30):  # divisors of SIMHASH_BITS
-        if n_chunks >= max_hamming + 1:
-            break
-    else:
-        raise ValueError(f"max_hamming={max_hamming} > 29 unsupported (needs >29 chunks)")
-    bits = SIMHASH_BITS // n_chunks
-    mask = (1 << bits) - 1
-    h = simhash64(docs, shingle_n)
-    chunks = h.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("c"),
-    ).withColumn("chunk_val", F.expr(f"shiftright(simhash, c * {bits}) & {mask}"))
-    left = chunks.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("h_a"), "c", "chunk_val")
-    right = chunks.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("h_b"), "c", "chunk_val")
-    pairs = (
-        left.join(right, ["c", "chunk_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "h_a", "h_b")
-        .distinct()
-    )
-    return (
-        pairs.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )

@@ -41,11 +41,6 @@ class NELConfig:
     # `crawlSameAs` (GraphHandlerNEL.java:143-167): restrict sameAs expansion
     # to objects with this prefix; "ALL" = no restriction.
     crawl_sameas: str = "ALL"
-    # Force-broadcast the distinct-chosen-URI-combination mapping in triple
-    # materialization (canonicalize.materialize_triples). True for every corpus
-    # this repo benchmarks; pass False when the distinct combinations outgrow
-    # an executor so AQE sizes the join at runtime.
-    broadcast_uri_map: bool = True
 
 
 def _group_members(candidates: DataFrame) -> DataFrame:

@@ -146,24 +146,19 @@ def run_pipeline(
         data / "transcripts.parquet"
     ]
     total_bytes = sum(f.stat().st_size for f in tfiles if f.is_file())
-    prev_split = None
-    split_overridden = False
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        n_row_groups = sum(
-            pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles if f.is_file()
-        )
-        # 3 waves, not 1: detection cost varies per turn (text length), so a
-        # one-wave layout rides its slowest task — 3x finer splits cut the
-        # XL-corpus mentions wall 32.8 -> 22.3 s at local[8] (straggler tail
-        # absorbed; per-task overhead is amortized by reused python workers)
-        split = max(1 << 20, min(128 << 20, total_bytes // (min_parallelism * 3) or 1))
-        prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        split_overridden = True
-    except Exception:
-        n_row_groups = 0
+    # an unreadable footer fails here, as Spark's scan of the same file would
+    n_row_groups = sum(
+        pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles if f.is_file()
+    )
+    # 3 waves, not 1: detection cost varies per turn (text length), so a
+    # one-wave layout rides its slowest task — 3x finer splits cut the
+    # XL-corpus mentions wall 32.8 -> 22.3 s at local[8] (straggler tail
+    # absorbed; per-task overhead is amortized by reused python workers)
+    split = max(1 << 20, min(128 << 20, total_bytes // (min_parallelism * 3) or 1))
+    prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     # The override stays in force for the whole pipeline run — the stage
     # checkpoints it sizes are written at the same data scale as transcripts —
     # and is restored on exit so reads on the shared session afterward
@@ -246,7 +241,6 @@ def run_pipeline(
                 kb_edges,
                 dico,
                 cfg.sameas_pred,
-                broadcast_uri_map=cfg.broadcast_uri_map,
                 bucket_into=n_buckets,
             ),
             prebucketed=True,
@@ -269,11 +263,10 @@ def run_pipeline(
     finally:
         # restore even when the session had no explicit prior value (conf.get
         # with a fallback bypasses the registered SQL default) — unset then
-        if split_overridden:
-            if prev_split is not None:
-                spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-            else:
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        if prev_split is not None:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+        else:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
     if timings:
         (out / "_timings.json").write_text(json.dumps(timings))
@@ -325,12 +318,6 @@ def main() -> None:
         help="intra-stage materialization mode (checkpointing.py): local blocks (default) "
         "or fault-tolerant df.checkpoint (multi-executor clusters)",
     )
-    ap.add_argument(
-        "--no-broadcast-uri-map",
-        action="store_true",
-        help="let AQE size the triple-canonicalization join instead of forcing a broadcast "
-        "(for KBs whose distinct chosen-URI combinations outgrow an executor)",
-    )
     a = ap.parse_args()
 
     spark = get_spark("reden-pipeline", master=a.master)
@@ -342,7 +329,6 @@ def main() -> None:
         cfg, extras, dropped = nel_config_from_properties(a.properties)
         for key, reason in sorted(dropped.items()):
             print(f"properties: dropping '{key}' — {reason}")
-        cfg = replace(cfg, broadcast_uri_map=not a.no_broadcast_uri_map)
         # explicit (non-default) CLI flags win over file values
         cli = {
             "base_prefix": (a.base_prefix, BASE_PREFIX),
@@ -359,7 +345,6 @@ def main() -> None:
             preferred_uri=a.preferred_uri,
             centrality=a.centrality,
             crawl_sameas=a.crawl_sameas,
-            broadcast_uri_map=not a.no_broadcast_uri_map,
         )
     t0 = time.time()
     dfs = run_pipeline(spark, a.data_dir, a.out_dir, cfg, a.from_stage, checkpoint_mode=a.checkpoint_mode)

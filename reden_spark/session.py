@@ -3,7 +3,8 @@
 AQE, Arrow and skew-join handling are on. The master is left to Spark unless a
 caller passes one: spark-submit's ``--master``, or else ``local[*]``. Shuffle
 and spill scratch is Spark's own choice too: ``SPARK_LOCAL_DIRS`` when set,
-else ``java.io.tmpdir``.
+else ``java.io.tmpdir``. The driver heap is ``SPARK_DRIVER_MEM`` when set, else
+a fixed 4g.
 """
 
 from __future__ import annotations
@@ -18,22 +19,9 @@ from pyspark.sql import SparkSession
 SHUFFLE_PARTITIONS = 64
 
 
-def _default_driver_mem() -> str:
-    """Conservative heap default: half of MemAvailable, clamped to [4g, 48g].
-
-    A fixed large default (48g) starves shuffle scratch when the host is small
-    or shared; SPARK_DRIVER_MEM still overrides unconditionally."""
-    env = os.environ.get("SPARK_DRIVER_MEM")
-    if env:
-        return env
-    avail_gb = 16
-    try:
-        with open("/proc/meminfo") as fh:
-            info = {line.split(":")[0]: line.split()[1] for line in fh if ":" in line}
-        avail_gb = int(info.get("MemAvailable", info.get("MemTotal", 0))) // (1024 * 1024) or 16
-    except (OSError, ValueError, IndexError):
-        pass
-    return f"{max(4, min(48, avail_gb // 2))}g"
+# Fixed, not sized from the host's free RAM, so a run's heap does not depend
+# on what else the machine is doing; SPARK_DRIVER_MEM overrides it.
+DRIVER_MEM = "4g"
 
 
 def get_spark(
@@ -63,7 +51,7 @@ def get_spark(
         # moves). Default true would shuffle both sides on the full key.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", _default_driver_mem())
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or DRIVER_MEM)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "32m")
     )

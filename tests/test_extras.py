@@ -1,4 +1,6 @@
-"""Training-data-pipeline extras vs local DuckDB oracles on the driver testdata."""
+"""Curation operators (near-dup pairs, clustering, sampling, packing,
+decontamination) vs local DuckDB oracles and Python recomputations on the
+driver testdata."""
 
 import duckdb
 import pytest
@@ -17,30 +19,6 @@ def duck(duck_config):
     con = duckdb.connect(config=duck_config)
     con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')")
     return con
-
-
-def test_exact_dedup_vs_duckdb(docs, duck):
-    from reden_spark.operators.dedup import exact_dedup
-
-    got = {(r.doc_id, r.content_key, r.n_copies) for r in exact_dedup(docs).collect()}
-    want = {
-        tuple(r)
-        for r in duck.sql(
-            """
-            SELECT min(doc_id) AS doc_id,
-                   md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS content_key,
-                   count(*) AS n_copies
-            FROM documents GROUP BY 2
-            """
-        ).fetchall()
-    }
-    assert got == want and len(got) > 0
-
-
-DUCK_SHINGLES = (
-    "list_sort(list_distinct([array_to_string(words[i:i+{nm1}], ' ') "
-    "for i in range(1, greatest(len(words) - {nm1}, 0) + 1)]))"
-)
 
 
 def _duck_shingle_cte(n):
@@ -96,51 +74,6 @@ def test_minhash_lsh_pairs_vs_duckdb(docs, duck):
     assert got == want
 
 
-def test_ngram_jaccard_vs_duckdb(docs, duck):
-    """2-of-4 min-shingle banding + exact Jaccard verification, mirrored 1:1
-    by the DuckDB oracle."""
-    from reden_spark.driver_contract import O_DEDUP_NGRAM
-    from reden_spark.operators.dedup import ngram_jaccard_pairs
-
-    got = {(r.doc_a, r.doc_b, r.jaccard) for r in ngram_jaccard_pairs(docs, 3, 0.8).collect()}
-    want = {tuple(r) for r in duck.sql(O_DEDUP_NGRAM).fetchall()}
-    assert got == want
-
-
-def test_ngram_banding_bounds_hot_block(spark):
-    """Adversarial corpus: one shingle shared by EVERY document (and present in
-    every doc's 4-smallest set, since each doc has exactly 4 shingles). A
-    single-min-shingle block key could put all N docs in one block -> N^2/2
-    candidate pairs; the 2-of-4 pair keys need TWO shared min-shingles, so the
-    ubiquitous shingle creates zero cross-document candidates."""
-    from pyspark.sql import functions as F
-
-    from reden_spark.operators.dedup import (
-        _min_shingle_band_keys,
-        ngram_jaccard_pairs,
-        word_shingles,
-    )
-
-    n = 200
-    # 6 words -> exactly 4 word-3-gram shingles; the first ("common anchor
-    # phrase") is identical across all docs, the rest are doc-unique
-    docs = spark.createDataFrame(
-        [(i, f"common anchor phrase u{i}a u{i}b u{i}c") for i in range(n)],
-        "doc_id int, text string",
-    )
-    sh = docs.select(
-        "doc_id", "text", word_shingles(F.col("text"), 3).alias("shingles")
-    )
-    keyed = sh.select("doc_id", F.explode(_min_shingle_band_keys()).alias("block"))
-    a = keyed.select(F.col("doc_id").alias("doc_a"), "block")
-    b = keyed.select(F.col("doc_id").alias("doc_b"), "block")
-    n_candidates = (
-        a.join(b, "block").filter(F.col("doc_a") < F.col("doc_b")).select("doc_a", "doc_b").distinct().count()
-    )
-    assert n_candidates == 0
-    assert ngram_jaccard_pairs(docs, 3, 0.8).count() == 0
-
-
 def test_minhash_salt_preserves_pairs(docs):
     """salt>1 redistributes hot bands across tasks but must not change the
     candidate pair set."""
@@ -154,80 +87,6 @@ def test_minhash_salt_preserves_pairs(docs):
     assert base == salted and len(base) > 0
 
 
-def test_simhash_pairs_match_bruteforce(docs):
-    """Pigeonhole guarantee: with n_chunks >= max_hamming+1 derived chunks, the
-    chunk-blocked pair set equals the brute-force all-pairs set within
-    max_hamming (recall = 1.0, not LSH-approximate)."""
-    from reden_spark.operators.dedup import simhash64, simhash_near_pairs
-
-    max_h = 12
-    hashes = {r.doc_id: r.simhash & ((1 << 64) - 1) for r in simhash64(docs, 2).collect()}
-    ids = sorted(hashes)
-    want = set()
-    for i, da in enumerate(ids):
-        for db in ids[i + 1 :]:
-            d = bin(hashes[da] ^ hashes[db]).count("1")
-            if d <= max_h:
-                want.add((da, db, d))
-    got = {(r.doc_a, r.doc_b, r.hamming) for r in simhash_near_pairs(docs, 2, max_h).collect()}
-    assert got == want
-
-
-def test_token_count_and_quality_vs_duckdb(docs, duck):
-    from reden_spark.operators.textstats import quality_score, token_count
-
-    got = {tuple(r) for r in token_count(docs).collect()}
-    want = {
-        tuple(r)
-        for r in duck.sql(
-            """
-            SELECT doc_id,
-                   len(string_split(trim(regexp_replace(lower(text), '\\W+', ' ', 'g')), ' '))::INT AS n_words,
-                   ceil(length(text) / 4)::INT AS n_subwords_est
-            FROM documents
-            """
-        ).fetchall()
-    }
-    assert got == want
-
-    got_q = {(r.doc_id, r.n_words, r.stopword_ratio, r.punct_ratio, r.quality) for r in quality_score(docs).collect()}
-    want_q = {
-        tuple(r)
-        for r in duck.sql(
-            """
-            WITH t AS (
-              SELECT doc_id, text,
-                     string_split(trim(regexp_replace(lower(text), '\\W+', ' ', 'g')), ' ') AS toks
-              FROM documents
-            ), m AS (
-              SELECT doc_id,
-                     len(toks)::INT AS n_words,
-                     len(list_filter(toks, t -> t IN ('a','and','das','de','der','die','el','est','et','ein','in','is','ist','la','le','of','the','to','un','una','une','und','y','zu','es'))) AS stop_hits,
-                     length(regexp_replace(text, '[\\w\\s]', '', 'g')) AS punct,
-                     length(text) AS n_chars
-              FROM t
-            )
-            SELECT doc_id, n_words,
-                   round(stop_hits::DOUBLE / greatest(n_words, 1), 6) AS stopword_ratio,
-                   round(punct::DOUBLE / greatest(n_chars, 1), 6) AS punct_ratio,
-                   round(0.4 * (stop_hits::DOUBLE / greatest(n_words, 1))
-                       + 0.3 * least(n_words::DOUBLE / 100.0, 1.0)
-                       + 0.3 * (1.0 - punct::DOUBLE / greatest(n_chars, 1)), 6) AS quality
-            FROM m
-            """
-        ).fetchall()
-    }
-    assert got_q == want_q
-
-
-def test_language_id(docs, duck):
-    from reden_spark.operators.textstats import language_id
-
-    rows = language_id(docs).collect()
-    assert len(rows) == docs.count()
-    assert {r.lang_pred for r in rows} <= {"en", "fr", "es", "de", "und"}
-
-
 def test_dedup_clusters_transitive_and_keep_policy(docs, spark):
     """dedup_clusters: every doc labeled exactly once; clusters are closed
     under the pair relation (both ends of every pair share a cluster);
@@ -235,9 +94,9 @@ def test_dedup_clusters_transitive_and_keep_policy(docs, spark):
     keep=true. Non-vacuous: the fixture must produce at least one multi-doc
     cluster (it seeds near-duplicate templates)."""
     from reden_spark.operators.curation import dedup_clusters
-    from reden_spark.operators.dedup import ngram_jaccard_pairs
+    from reden_spark.operators.dedup import minhash_lsh_pairs
 
-    pairs = ngram_jaccard_pairs(docs, 3, 0.8)
+    pairs = minhash_lsh_pairs(docs, 12, 3, 4, 0.5)
     out = dedup_clusters(docs, pairs)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert len(rows) == docs.count()  # total assignment, each doc once
@@ -281,27 +140,6 @@ def test_stratified_sample_exact_counts(docs):
         assert all(m["n_take"] == want and m["n_stratum"] == totals[s] for m in members)
     again = stratified_sample(docs, fraction=0.2, stratum_col="lang").collect()
     assert sorted(r["doc_id"] for r in again) == sorted(r["doc_id"] for r in out)
-
-
-def test_tfidf_topk_ranks_and_scores(docs):
-    """Top-3 per doc, rank-ordered by (tfidf desc, term asc); scores match a
-    recomputation from raw tf/df; df consistent with term document frequency."""
-    from reden_spark.operators.textstats import tfidf_topk
-
-    import math
-
-    n_docs = docs.count()
-    out = tfidf_topk(docs, k=3).collect()
-    per_doc = {}
-    for r in out:
-        per_doc.setdefault(r["doc_id"], []).append(r)
-    for rs in per_doc.values():
-        rs.sort(key=lambda r: r["rnk"])
-        assert [r["rnk"] for r in rs] == list(range(1, len(rs) + 1))
-        keys = [(-r["tfidf"], r["term"]) for r in rs]
-        assert keys == sorted(keys)
-        for r in rs:
-            assert r["tfidf"] == round(r["tf"] * math.log(n_docs / r["df_docs"]), 6)
 
 
 def test_pack_sequences_contiguous_offsets(docs):
@@ -367,14 +205,13 @@ def test_curation_edge_cases(docs, spark):
     assert all(r["n_take"] == r["n_stratum"] for r in full)
 
 
-def test_null_text_behaves_as_empty(spark, duck):
+def test_null_text_behaves_as_empty(spark):
     """NULL text must flow through every text reader as '' on BOTH engines
     (round-4 ADVICE: un-coalesced size() yields NULL on the Spark side vs a
     NULL row in DuckDB — the fixtures have no NULL text, so this pins the
     hazard with an explicit one)."""
     from reden_spark.operators.curation import decontaminate, pack_sequences
-    from reden_spark.operators.dedup import exact_dedup, minhash_signatures
-    from reden_spark.operators.textstats import language_id, quality_score, token_count
+    from reden_spark.operators.dedup import minhash_signatures
 
     docs = spark.createDataFrame(
         [(1, None), (2, ""), (3, "the quick brown fox jumps over the lazy dog")],
@@ -383,17 +220,6 @@ def test_null_text_behaves_as_empty(spark, duck):
 
     def by_id(df):
         return {r["doc_id"]: tuple(r)[1:] for r in df.collect()}
-
-    for op in (token_count, quality_score, language_id, exact_dedup):
-        rows = op(docs).collect()
-        assert all(v is not None for r in rows for v in r), (op.__name__, rows)
-        if op is exact_dedup:
-            # NULL and '' normalize identically -> one survivor for docs 1+2
-            keys = {r.content_key: r.n_copies for r in rows}
-            assert 2 in keys.values()
-        else:
-            got = by_id(op(docs))
-            assert got[1] == got[2], (op.__name__, got[1], got[2])
 
     # one shard, so doc 2's start_offset follows doc 1's token count
     packed = by_id(pack_sequences(docs, budget=512, n_shards=1))
@@ -441,58 +267,3 @@ def test_minhash_auto_salt_engages_on_boilerplate(spark):
     # quiet corpus: the probe must leave the plan unsalted
     minhash_lsh_pairs(docs.filter("doc_id >= 1000"), 12, 3, 4, 0.5, hot_band_cap=50).collect()
     assert dedup._LAST_AUTO_SALT == 1
-
-
-def test_url_extract_normalizes_hosts(spark):
-    from reden_spark.operators.textstats import url_extract
-
-    docs = spark.createDataFrame(
-        [
-            (0, "see https://WWW.Example.COM/a and http://example.com/b plus https://sub.www.org/c"),
-            (1, "no urls here"),
-            (2, None),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in url_extract(docs).collect()}
-    # both example.com spellings normalize to ONE domain; sub.www.org keeps its
-    # prefix (only a LEADING www. is stripped)
-    assert got[0].n_urls == 3
-    assert got[0].n_domains == 2
-    assert got[0].domains == "example.com,sub.www.org"
-    assert (got[1].n_urls, got[1].domains) == (0, "")
-    assert (got[2].n_urls, got[2].domains) == (0, "")  # NULL text == empty
-
-
-def test_domain_filter_blocklist_dedup_and_no_url_docs(spark):
-    from reden_spark.operators.curation import domain_filter
-
-    docs = spark.createDataFrame(
-        [
-            (0, "visit https://bad.example.net/x and https://good.org/y"),
-            (1, "nothing to decide"),
-        ],
-        "doc_id long, text string",
-    )
-    # duplicated entries must not duplicate output rows, and blocklist
-    # spellings normalize like the document side (case, leading www.)
-    blocklist = spark.createDataFrame(
-        [("WWW.Bad.Example.NET",), ("bad.example.net",)], "domain string"
-    )
-    rows = sorted(map(tuple, domain_filter(docs, blocklist).collect()))
-    assert rows == [(0, "bad.example.net", True), (0, "good.org", False)]
-
-
-def test_shuffle_deterministic_is_a_seeded_permutation(spark):
-    from reden_spark.operators.curation import shuffle_deterministic
-
-    docs = spark.createDataFrame([(i,) for i in range(257)], "doc_id long")
-    a = {r.doc_id: r.position for r in shuffle_deterministic(docs, seed=1).collect()}
-    # positions are exactly 1..n — the distributed-rank offsets are contiguous
-    # across all 256 hash buckets (257 docs guarantee at least one collision)
-    assert sorted(a.values()) == list(range(1, 258))
-    # rerun is identical; a different seed is a different permutation
-    a2 = {r.doc_id: r.position for r in shuffle_deterministic(docs, seed=1).collect()}
-    b = {r.doc_id: r.position for r in shuffle_deterministic(docs, seed=2).collect()}
-    assert a == a2
-    assert sorted(b.values()) == list(range(1, 258)) and b != a

@@ -340,26 +340,6 @@ def test_curation_plan_shapes(spark):
     assert n == 3 and "BroadcastHashJoin" in p, p[:1500]
 
 
-def test_domain_cap_two_phase_rank(spark):
-    """domain_cap must rank twice — the salted pre-cap then the exact re-rank
-    — and every Exchange must be keyed (a SinglePartition exchange would mean
-    a global sort snuck in)."""
-    import re
-
-    from reden_spark.operators.curation import domain_cap
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").withColumn(
-        "text", F.concat(F.col("text"), F.lit(" http://host"), (F.col("doc_id") % 5).cast("string"), F.lit(".com/x"))
-    )
-    p = plan(domain_cap(docs, cap=3, n_salt=8))
-    assert len(re.findall(r"\(\d+\) Window\b", p)) == 2, p[:2000]
-    assert "Exchange SinglePartition" not in p, p[:2000]
-    # Spark 4 additionally rewrites each rank<=cap filter into map-side
-    # partial WindowGroupLimits — keep that optimization pinned: no more than
-    # cap rows per (domain, salt) per input split ever reach either Exchange.
-    assert "WindowGroupLimit" in p and ", Partial" in p, p[:2000]
-
-
 def test_entity_pmi_plan_shape(spark, tables):
     """entity_pmi: the N scalar is a broadcast 1-row frame and the
     within-conversation self-join is keyed (no CartesianProduct)."""

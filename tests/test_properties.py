@@ -3,15 +3,13 @@
 
 * JVM/Python twin agreement of the normalization/decompose scalar functions on
   arbitrary unicode (the (?U)-flag class of bug that bit round 2 via NBSP);
-* greedy sequence packing invariants (budget respected, offsets are exact
-  running sums, every doc packed exactly once, seq ids contiguous) against
-  randomized token-length distributions.
+* the gazetteer's one-pass batch scanner against its per-row find() on
+  arbitrary terms and texts.
 
 Each example batches many generated values through ONE Spark action so the
 suite stays fast (Spark round-trips dominate, not example count).
 """
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -60,64 +58,6 @@ def test_decompose_idempotent_on_decoded(strings):
         once = decompose_py("http:" + s)
         if "%" not in once:
             assert decompose_py(once) == once
-
-
-def _pack_reference(rows, budget):
-    """Independent restatement of greedy first-fit packing per shard."""
-    out = {}
-    by_shard = {}
-    for doc_id, shard, n in sorted(rows):
-        by_shard.setdefault(shard, []).append((doc_id, n))
-    for shard, docs in by_shard.items():
-        seq, fill = -1, budget + 1
-        for doc_id, n in docs:
-            if fill + n <= budget:
-                off = fill
-                fill += n
-            else:
-                seq += 1
-                off = 0
-                fill = n
-            out[doc_id] = (shard, n, seq, off)
-    return out
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=700), min_size=1, max_size=120),
-    st.integers(min_value=32, max_value=512),
-)
-def test_pack_sequences_greedy_invariants(spark, token_counts, budget):
-    """Operator output equals an independent reference implementation, and the
-    packing invariants hold: every doc exactly once; per (shard, seq) either
-    total <= budget or the sequence is a single over-budget doc; offsets are
-    the exact running sums; seq ids contiguous from 0."""
-    from reden_spark.operators.curation import pack_sequences_greedy
-
-    docs = spark.createDataFrame(
-        [(i, "w " * n) for i, n in enumerate(token_counts)], "doc_id long, text string"
-    )
-    got = {
-        r.doc_id: (r.shard, r.n_tokens, r.seq_idx, r.offset_in_seq)
-        for r in pack_sequences_greedy(docs, budget=budget, n_shards=4).collect()
-    }
-    assert len(got) == len(token_counts)  # every doc exactly once
-
-    rows = [(doc_id, v[0], v[1]) for doc_id, v in got.items()]
-    assert got == _pack_reference(rows, budget)
-
-    df = pd.DataFrame(
-        [(d, s, n, q, o) for d, (s, n, q, o) in got.items()],
-        columns=["doc_id", "shard", "n", "seq", "off"],
-    )
-    for (_, seq), grp in df.groupby(["shard", "seq"]):
-        total = grp["n"].sum()
-        assert total <= budget or len(grp) == 1
-        grp = grp.sort_values("doc_id")
-        assert list(grp["off"]) == list(grp["n"].cumsum().shift(fill_value=0))
-    for _, grp in df.groupby("shard"):
-        seqs = sorted(grp["seq"].unique())
-        assert seqs == list(range(len(seqs)))
 
 
 @settings(max_examples=120, deadline=None)
