@@ -28,10 +28,11 @@ from pyspark.sql import functions as F
 from .checkpointing import checkpoint
 from .functions.text import SAME_AS
 from .operators.candidates import conversation_cases, generate_candidates
-from .operators.canonicalize import connected_components, materialize_triples, sameas_edge_frame
+from .operators.canonicalize import materialize_triples
 from .operators.disambiguate import NELConfig, fuse_edges, prune_and_degree
 from .operators.evaluate import eval_records, hachey_metrics
 from .operators.grouped import disambiguate_grouped
+from .operators.kb import build_kb
 from .operators.mentions import detect_mentions
 
 BASE = "http://kb.test/base"
@@ -287,14 +288,17 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     dico = derive_dico(spark, sf_dir)
     kb = derive_kb_edges(spark, sf_dir)
     rels = empty_rel_weights(spark)
-    mentions = checkpoint(detect_mentions(transcripts, terms))
-    candidates = checkpoint(generate_candidates(mentions, dico))
+    # the KB artifacts come from the pipeline's own build_kb
+    artifacts = build_kb(terms, dico, kb, rels, CFG.sameas_pred)
+    mentions = checkpoint(detect_mentions(transcripts, artifacts.terms))
+    candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
     cases = checkpoint(conversation_cases(mentions, candidates))
     stack = {
         "transcripts": transcripts,
         "dico": dico,
         "kb_edges": kb,
         "rel_weights": rels,
+        "kb": artifacts,
         "mentions": mentions,
         "candidates": candidates,
         "cases": cases,
@@ -619,9 +623,8 @@ def _links(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hit
     _evict_stale(_LINKS_CACHE, key[0], key)
     s = _kg_stack(spark, sf_dir)
-    links = disambiguate_grouped(
-        s["mentions"], s["candidates"], s["kb_edges"], s["rel_weights"], s["cases"], CFG
-    )
+    kb = s["kb"]
+    links = disambiguate_grouped(s["mentions"], s["candidates"], kb.edges, kb.rels, s["cases"], CFG)
     links = checkpoint(links)
     _LINKS_CACHE[key] = links
     return links
@@ -645,18 +648,17 @@ q_kg_links_grouped = q_kg_links
 
 
 def q_kg_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _kg_stack(spark, sf_dir)
-    return connected_components(sameas_edge_frame(s["kb_edges"], s["dico"]))
+    return _kg_stack(spark, sf_dir)["kb"].canon
 
 
 O_KG_CANONICAL = SQL_PREFIX + "SELECT uri, canonical FROM canon"
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _kg_stack(spark, sf_dir)
+    kb = _kg_stack(spark, sf_dir)["kb"]
     # _links() already returns an eagerly-checkpointed, memoized frame — the
     # multi-branch consumption inside materialize_triples reads those blocks
-    return materialize_triples(_links(spark, sf_dir), s["kb_edges"], s["dico"])
+    return materialize_triples(_links(spark, sf_dir), kb.canon, kb.triples)
 
 
 O_KG_TRIPLES = SQL_PREFIX + "SELECT subj, pred, obj FROM triples"

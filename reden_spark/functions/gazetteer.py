@@ -136,7 +136,3 @@ def _occ_idx(row_ids):
     idx = np.arange(len(row_ids), dtype=np.int64)
     run_start = np.r_[True, row_ids[1:] != row_ids[:-1]]
     return (idx - np.maximum.accumulate(np.where(run_start, idx, 0))).astype(np.int32)
-
-
-def find_mentions(text: str, matcher: GazetteerMatcher) -> list[tuple[str, int]]:
-    return matcher.find(text)

@@ -18,15 +18,14 @@ LINKS_TO = "http://kg.test/linksTo"
 
 
 #: The EXPLICIT whitespace class the dictionary join key strips, stated once
-#: per engine so Java regex, Python re and DuckDB RE2 agree by construction
-#: (each engine's bare \s means something different: Java ASCII, Python full
-#: Unicode, RE2 ASCII). Semantic: ASCII whitespace + NBSP (U+00A0) + NNBSP (U+202F), both ubiquitous
+#: per engine so Java regex and Python re agree by construction (each
+#: engine's bare \s means something different: Java ASCII, Python full
+#: Unicode). Semantic: ASCII whitespace + NBSP (U+00A0) + NNBSP (U+202F), both ubiquitous
 #: in French typography — the reference's Java \s misses both). More exotic
 #: Unicode spaces (thin space U+2009 etc.) are deliberately out of scope and
-#: survive normalization identically in all three engines.
+#: survive normalization identically in both engines.
 NORM_STRIP_JAVA = r"[\s\u00a0\u202f]|'|-"  # Java \s = [ \t\n\x0B\f\r]
 NORM_STRIP_PY = "[ \\t\\n\\x0b\\f\\r\\xa0\\u202f]|'|-"
-NORM_STRIP_SQL = "[\\s\\x0b\\xa0 ]|''|-"  # RE2 \s = [\t\n\f\r ]; '' = escaped quote
 
 
 def normalize_mention(col: Column | str) -> Column:
@@ -48,11 +47,6 @@ def normalize_mention_py(s: str) -> str:
     import re
 
     return re.sub(NORM_STRIP_PY, "", s).lower()
-
-
-def normalize_sql(expr: str) -> str:
-    """DuckDB twin of :func:`normalize_mention` for oracle SQL strings."""
-    return f"lower(regexp_replace({expr}, '{NORM_STRIP_SQL}', '', 'g'))"
 
 
 def decompose(col: Column | str) -> Column:

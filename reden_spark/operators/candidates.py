@@ -19,35 +19,44 @@ from pyspark.sql import functions as F
 from ..functions.text import normalize_mention
 
 
-def generate_candidates(mentions: DataFrame, dico: DataFrame) -> DataFrame:
-    """distinct (conv_id, mention) x dico -> CANDIDATES (conv_id, mention, group_idx, uris).
+def dico_groups(dico: DataFrame) -> DataFrame:
+    """dico -> (alias_norm, uris, group_idx): each alias's distinct candidate
+    groups in their deterministic order.
 
-    One shuffle total — and it is the *only* non-map operation: group dedup by
-    full-array equality (DicoProcessingNEL.java:163-175) and the deterministic
+    Group dedup by full-array equality (DicoProcessingNEL.java:163-175) and the
     group order (ORDER BY uris — oracle D1) depend only on `alias_norm`, so
-    both are precomputed on the dictionary side (dico-grain window, tiny)
-    before the broadcast; the mention side is then distinct + broadcast-join,
-    nothing else. The earlier per-(conv_id, mention) `collect_set(uris)`
-    computed the same thing at occurrence grain through an
-    ObjectHashAggregate (array-typed aggregation buffers leave whole-stage
-    codegen); its allocation traffic was the worst-scaling block of the
-    pipeline on the event-log profile (task CPU x6.3 from 8 to 32 cores on
-    one socket).
-    """
+    they are a dictionary-grain window, built once per knowledge base
+    (``operators/kb.py``) rather than per delta."""
     from pyspark.sql import Window
 
+    wd = Window.partitionBy("alias_norm").orderBy("uris")
+    return (
+        dico.select("alias_norm", "uris")
+        .distinct()
+        .withColumn("group_idx", (F.row_number().over(wd) - 1).cast("int"))
+    )
+
+
+def generate_candidates(mentions: DataFrame, groups: DataFrame) -> DataFrame:
+    """distinct (conv_id, mention) x :func:`dico_groups` -> CANDIDATES
+    (conv_id, mention, group_idx, uris).
+
+    The mention side is distinct + broadcast-join, nothing else: the group
+    dedup and order come precomputed with ``groups``. The earlier
+    per-(conv_id, mention) `collect_set(uris)` computed the same thing at
+    occurrence grain through an ObjectHashAggregate (array-typed aggregation
+    buffers leave whole-stage codegen); its allocation traffic was the
+    worst-scaling block of the pipeline on the event-log profile (task CPU
+    x6.3 from 8 to 32 cores on one socket).
+    """
     probe = (
         mentions.select("conv_id", "mention")
         .distinct()
         .withColumn("alias_norm", normalize_mention("mention"))
     )
-    wd = Window.partitionBy("alias_norm").orderBy("uris")
-    d = (
-        dico.select("alias_norm", "uris")
-        .distinct()
-        .withColumn("group_idx", (F.row_number().over(wd) - 1).cast("int"))
+    return probe.join(F.broadcast(groups), "alias_norm", "inner").select(
+        "conv_id", "mention", "group_idx", "uris"
     )
-    return probe.join(F.broadcast(d), "alias_norm", "inner").select("conv_id", "mention", "group_idx", "uris")
 
 
 def dico_regex_lookup(dico: DataFrame, pattern: str) -> DataFrame:

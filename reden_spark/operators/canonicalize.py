@@ -180,11 +180,27 @@ def sameas_edge_frame(kb_edges: DataFrame, dico: DataFrame, sameas_pred: str = S
     return kb.unionByName(grp).distinct()
 
 
+def canonical_kb(kb_edges: DataFrame, canon: DataFrame, sameas_pred: str = SAME_AS) -> DataFrame:
+    """The KB as the output graph carries it: non-sameAs rows, subject and object
+    rewritten to their canonical URI (``canon`` from :func:`connected_components`),
+    de-duplicated (the rewrite can merge rows). KB-grain, so built once per
+    knowledge base (``operators/kb.py``)."""
+    return (
+        kb_edges.filter(F.col("pred") != sameas_pred)
+        .join(canon.withColumnRenamed("uri", "subj"), "subj", "left")
+        .withColumn("csubj", F.coalesce("canonical", "subj"))
+        .drop("canonical")
+        .join(canon.withColumnRenamed("uri", "obj"), "obj", "left")
+        .withColumn("cobj", F.coalesce("canonical", "obj"))
+        .select(F.col("csubj").alias("subj"), "pred", F.col("cobj").alias("obj"))
+        .distinct()
+    )
+
+
 def materialize_triples(
     links: DataFrame,
-    kb_edges: DataFrame,
-    dico: DataFrame,
-    sameas_pred: str = SAME_AS,
+    canon: DataFrame,
+    kb_canon: DataFrame,
     bucket_into: int | None = None,
 ) -> DataFrame:
     """LINKS -> output KG (subj, pred, obj):
@@ -195,8 +211,16 @@ def materialize_triples(
         to their canonical URI; sameAs rows themselves are dropped (they are now
         encoded by the canonical labels).
 
-    The entity-combination mapping is always broadcast: its distinct winning
-    URI-combinations fit in an executor for every corpus this repo runs.
+    The sameAs canonical map ``canon`` (uri, canonical) and the rewritten KB
+    ``kb_canon`` (:func:`canonical_kb`) arrive prebuilt as KB artifacts
+    (``operators/kb.py``): this stage runs no connected components and
+    rewrites no KB row, it only resolves the delta's chosen URIs.
+
+    Both lookups are broadcast: the entity-combination mapping, whose
+    distinct winning URI-combinations fit in an executor for every corpus
+    this repo runs, and the canonical map, whose checkpoint carries no usable
+    size estimate (a KB past ``connected_components``' driver threshold would
+    want a shuffle join here instead).
 
     ``bucket_into=n`` attaches the output table's `bucket` partition column
     WITHOUT a full-output shuffle on a hashed key (round-2 profile: 310 MB, the largest remaining turn-grain movement):
@@ -208,8 +232,6 @@ def materialize_triples(
     passthrough triples (entity-grain, orders smaller) bucket on
     pmod(murmur3(subj), n) and pay their own small repartition.
     """
-    canon = connected_components(sameas_edge_frame(kb_edges, dico, sameas_pred))
-
     # Resolve chosen_uris -> canonical entity on DISTINCT chosen_uris VALUES
     # (entity-combination grain, thousands of rows), then broadcast the tiny
     # mapping back onto the occurrence table. The naive form — explode every
@@ -221,7 +243,7 @@ def materialize_triples(
         .select("chosen_uris")
         .distinct()
         .select("chosen_uris", F.explode(F.split("chosen_uris", " ")).alias("uri"))
-        .join(canon, "uri", "left")
+        .join(F.broadcast(canon), "uri", "left")
         .withColumn("c", F.coalesce("canonical", "uri"))
         .groupBy("chosen_uris")
         .agg(F.min("c").alias("entity"))
@@ -243,22 +265,12 @@ def materialize_triples(
         lt_cols.append(F.pmod(F.hash("conv_id"), F.lit(bucket_into)).cast("int").alias("bucket"))
     link_triples = canon_chosen.select(*lt_cols)
 
-    entities = canon_chosen.select(F.col("entity")).distinct()
-    kb = kb_edges.filter(F.col("pred") != sameas_pred)
-    kb_c = (
-        kb.join(canon.withColumnRenamed("uri", "subj"), "subj", "left")
-        .withColumn("csubj", F.coalesce("canonical", "subj"))
-        .drop("canonical")
-        .join(canon.withColumnRenamed("uri", "obj"), "obj", "left")
-        .withColumn("cobj", F.coalesce("canonical", "obj"))
-        .select(F.col("csubj").alias("subj"), "pred", F.col("cobj").alias("obj"))
-    )
-    passthrough = kb_c.join(entities.withColumnRenamed("entity", "subj"), "subj", "left_semi")
     # link_triples are unique by construction (one row per groupBy key, subject
     # encodes the key) and their urn:mention: subjects are disjoint from KB
-    # subjects — dedupe only the passthrough side (canonical rewrite can merge
-    # rows), sparing the full-output shuffle.
-    passthrough = passthrough.distinct()
+    # subjects; kb_canon is already distinct, and a semi-join keeps it so —
+    # no dedupe, no full-output shuffle.
+    entities = canon_chosen.select(F.col("entity").alias("subj")).distinct()
+    passthrough = kb_canon.join(entities, "subj", "left_semi")
     if bucket_into is not None:
         passthrough = passthrough.withColumn(
             "bucket", F.pmod(F.hash("subj"), F.lit(bucket_into)).cast("int")

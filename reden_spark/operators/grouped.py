@@ -56,17 +56,23 @@ def _kb_slice(candidates: DataFrame, kb_edges: DataFrame, cfg: NELConfig) -> Dat
     )
 
 
+def rel_weight_map(rel_weights: DataFrame) -> dict[str, float]:
+    """rel_weights (pred, weight) -> {lower-cased pred: weight}, the kernel's
+    edge-weight lookup; collected once per knowledge base (``operators/kb.py``)."""
+    return {r["pred"].lower(): float(r["weight"]) for r in rel_weights.collect()}
+
+
 def disambiguate_grouped(
     mentions: DataFrame,
     candidates: DataFrame,
     kb_edges: DataFrame,
-    rel_weights: DataFrame,
+    rels: dict[str, float],
     cases: DataFrame,
     cfg: NELConfig,
 ) -> DataFrame:
     """Full stage 3: occurrences + candidates -> LINKS (one row per occurrence
-    of a mention that received a URI), graph path via applyInPandas."""
-    rels = {r["pred"].lower(): float(r["weight"]) for r in rel_weights.collect()}
+    of a mention that received a URI), graph path via applyInPandas.
+    ``rels`` is the :func:`rel_weight_map` of the relation weights."""
     base_prefix, preferred = cfg.base_prefix, cfg.preferred_uri
     measure, crawl_sameas = cfg.centrality, cfg.crawl_sameas
 

@@ -8,9 +8,10 @@ Two implementations with identical output on non-repeating text:
 
 * :func:`detect_mentions` — the production path: an Arrow-batched pandas UDF
   running a compiled leftmost-longest gazetteer regex per text batch. The term
-  list is shipped once per executor via a Spark broadcast; the compiled matcher
-  is cached per worker process. Scales: embarrassingly parallel per turn, no
-  shuffle until the occurrence-index window.
+  list is shipped once per executor via a Spark broadcast built once per
+  knowledge base (:func:`broadcast_terms`, called by ``operators/kb.py``); the
+  compiled matcher is cached per worker process. Scales: embarrassingly
+  parallel per turn, no shuffle.
 
 * :func:`detect_mentions_relational` — pure DataFrame ops (broadcast join +
   boundary predicates + maximality anti-join). Used for DuckDB oracle parity;
@@ -56,7 +57,9 @@ def broadcast_terms(terms: DataFrame):
 
 
 def _matcher_for(bc) -> GazetteerMatcher:
-    # worker-side Broadcast exposes _path (spill file); driver-side has _jbroadcast.
+    # Keyed on the broadcast's identity (worker-side _path, driver-side id):
+    # the KB artifacts hold one broadcast per knowledge base, so a reused
+    # Python worker compiles the gazetteer once, not once per delta.
     key = getattr(bc, "_path", None) or id(bc)
     matcher = _MATCHER_CACHE.get(key)
     if matcher is None:
@@ -72,8 +75,10 @@ def _matcher_for(bc) -> GazetteerMatcher:
 _MENTIONS_SCHEMA = "conv_id string, turn_idx int, occ_idx int, mention string, start_pos int"
 
 
-def detect_mentions(turns: DataFrame, terms: DataFrame) -> DataFrame:
-    """transcripts x mention_terms -> MENTIONS schema (production mapInPandas path).
+def detect_mentions(turns: DataFrame, terms) -> DataFrame:
+    """transcripts x term broadcast -> MENTIONS schema (production mapInPandas path).
+
+    ``terms`` is the :func:`broadcast_terms` handle of the mention terms.
 
     Map-only: the matcher emits matches in left-to-right order, so occ_idx is
     just the per-turn match index — no window shuffle. mapInPandas emits the
@@ -83,10 +88,8 @@ def detect_mentions(turns: DataFrame, terms: DataFrame) -> DataFrame:
     """
     import numpy as np
 
-    bc = broadcast_terms(terms)
-
     def gen(batches):
-        matcher = _matcher_for(bc)
+        matcher = _matcher_for(terms)
         for pdf in batches:
             # one finditer pass over the NUL-joined batch buffer + vectorized
             # numpy row/offset/occ_idx assembly, instead of a Python find()

@@ -425,9 +425,3 @@ def geonames_to_dico(raw: DataFrame) -> DataFrame:
         F.lit("LOC").alias("ne_type"),
         F.array("uri").alias("uris"),
     ).distinct()
-
-
-def write_dico(dico: DataFrame, path: str) -> None:
-    """Letter-sharded dictionary table (partition pruning = the reference's
-    alphabet shards)."""
-    dico.write.mode("overwrite").partitionBy("letter").parquet(path)

@@ -1,6 +1,16 @@
 """The five-stage checkpointed KG-construction pipeline (SURVEY.md §7).
 
+    mention_terms, dico, kb_edges, rel_weights -> KB artifacts (once per KB)
     transcripts -> mentions -> candidates -> links -> triples -> metrics
+
+Stages 1-4 read the KB artifacts (operators/kb.py) in place of the KB tables:
+the term broadcast, the dictionary groups, the KB edges and relation weights,
+the sameAs canonical map and the rewritten KB. A session keeps the artifacts
+of its last `KB_REGISTRY_SIZE` knowledge bases keyed by the tables' bytes
+(`kb_digest`), so a later delta over the same KB reads none of them. A build
+runs under job group `reden-kb`; `_timings.json` records its seconds as `kb`
+(about 0 on a hit). Inputs are read with their parquet footer's schema and
+checkpoints with their manifest's, so no read runs a schema-inference job.
 
 Each stage reads the previous stage's checkpoint and writes its own (parquet/
 Iceberg via sources.storage) with per-partition lineage counters; `--from-stage`
@@ -18,11 +28,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import hashlib
 import math
 import sys
 import time
+from collections import OrderedDict
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 # absolute imports + bootstrap so the module works BOTH as a package member
@@ -32,15 +45,24 @@ from pyspark.sql import DataFrame, SparkSession
 if __package__ in (None, ""):
     sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
+from reden_spark import checkpointing  # noqa: E402
 from reden_spark.operators.candidates import conversation_cases, generate_candidates  # noqa: E402
 from reden_spark.operators.canonicalize import materialize_triples  # noqa: E402
 from reden_spark.operators.disambiguate import NELConfig  # noqa: E402
 from reden_spark.operators.evaluate import eval_records, hachey_metrics  # noqa: E402
 from reden_spark.operators.grouped import disambiguate_grouped  # noqa: E402
+from reden_spark.operators.kb import KB_TABLES, KBArtifacts, build_kb  # noqa: E402
 from reden_spark.operators.mentions import detect_mentions  # noqa: E402
 from reden_spark.sources import storage  # noqa: E402
 
 STAGES = ["mentions", "candidates", "links", "triples", "metrics"]
+
+# KB artifacts (operators/kb.py) of the most recently used knowledge bases,
+# oldest first, keyed by (applicationId, kb_digest, sameAs predicate,
+# checkpoint mode). Eviction only drops the reference: nothing is unpersisted,
+# so a run still holding evicted artifacts keeps their blocks.
+_KB_REGISTRY: OrderedDict[tuple, KBArtifacts] = OrderedDict()
+KB_REGISTRY_SIZE = 2
 
 # Input transcript bytes per turn-grain bucket. A bucketed scan runs one task
 # per bucket and AQE cannot coalesce it, so the count is sized from the input
@@ -52,6 +74,36 @@ MAX_BUCKETS = 32
 def bucket_count(input_bytes: int) -> int:
     """Turn-grain bucket count for an unbucketed input of this many bytes."""
     return min(MAX_BUCKETS, max(1, math.ceil(input_bytes / BUCKET_BYTES)))
+
+
+def _data_files(table: Path) -> list[Path]:
+    """A parquet table's data files: the path itself, or the files under it
+    that Spark reads (none of whose path parts starts with '_' or '.')."""
+    if table.is_file():
+        return [table]
+    files = sorted(
+        f
+        for f in table.rglob("*")
+        if f.is_file() and not any(p.startswith(("_", ".")) for p in f.relative_to(table).parts)
+    )
+    if not files:
+        raise FileNotFoundError(f"no parquet data file at {table}")
+    return files
+
+
+def kb_digest(data_dir: Path) -> str:
+    """sha1 over the KB tables' data files: each file's path relative to
+    ``data_dir`` and size, then its bytes. Every delta has its own data
+    directory, so a key built from paths or mtimes would never repeat across
+    deltas; byte-identical KB tables do."""
+    h = hashlib.sha1()
+    for name in KB_TABLES:
+        for f in _data_files(data_dir / f"{name}.parquet"):
+            h.update(f"{f.relative_to(data_dir).as_posix()}\0{f.stat().st_size}\0".encode())
+            with open(f, "rb") as fh:
+                for chunk in iter(lambda: fh.read(1 << 20), b""):
+                    h.update(chunk)
+    return h.hexdigest()
 
 
 def run_pipeline(
@@ -71,21 +123,21 @@ def run_pipeline(
     otherwise :func:`bucket_count` sizes it from the transcripts' bytes.
 
     ``checkpoint_mode``: local|reliable (checkpointing.py). 'reliable'
-    routes intra-stage materializations (the distributed connected-components
-    rounds of the triples stage) through fault-tolerant `df.checkpoint` — the
-    multi-executor-cluster setting, where a lost executor must not truncate
-    lineage mid-stage. When no checkpoint dir is configured yet, one is
-    created under <out_dir>/.spark_checkpoints (point
-    spark.sparkContext.setCheckpointDir at DFS storage on a real cluster
-    before calling for a different location)."""
+    routes intra-stage materializations (the KB artifacts and the distributed
+    connected-components rounds of their build) through fault-tolerant
+    `df.checkpoint` — the multi-executor-cluster setting, where a lost
+    executor must not truncate lineage mid-stage. The mode is part of the
+    KB-artifact key, so a reliable run never reuses executor-local blocks.
+    When no checkpoint dir is configured yet, one is created under
+    <out_dir>/.spark_checkpoints (point spark.sparkContext.setCheckpointDir
+    at DFS storage on a real cluster before calling for a different
+    location)."""
     data = Path(data_dir)
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
 
     if checkpoint_mode is not None:
-        from reden_spark.checkpointing import set_checkpoint_mode
-
-        set_checkpoint_mode(checkpoint_mode)
+        checkpointing.set_checkpoint_mode(checkpoint_mode)
         if checkpoint_mode == "reliable" and spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
             spark.sparkContext.setCheckpointDir(str(out / ".spark_checkpoints"))
 
@@ -93,15 +145,12 @@ def run_pipeline(
         # An input table shipped with a storage manifest (e.g. transcripts
         # rewritten as a conv_id-bucketed table — the parquet stand-in for an
         # Iceberg bucket(conv_id) partition transform at ingest) is read
-        # through the catalog so its partitioning reaches the planner.
+        # through the catalog so its partitioning reaches the planner; any
+        # other with its footer's schema (no schema-inference job).
         if storage.stage_exists(data, f"{name}.parquet"):
             return storage.read_stage(spark, data, f"{name}.parquet")
-        return spark.read.parquet(str(data / f"{name}.parquet"))
-
-    def src_bucketing(name: str) -> dict | None:
-        if storage.stage_exists(data, f"{name}.parquet"):
-            return storage.read_manifest(data, f"{name}.parquet").get("spark_bucketed")
-        return None
+        path = data / f"{name}.parquet"
+        return spark.read.schema(storage.footer_schema(_data_files(path)[0])).parquet(str(path))
 
     if from_stage is not None:
         idx = STAGES.index(from_stage)
@@ -142,16 +191,10 @@ def run_pipeline(
     # row-group granularity, so the shuffle fallback remains for the degenerate
     # producer that wrote one giant row group.
     min_parallelism = spark.sparkContext.defaultParallelism
-    tfiles = sorted(Path(data).glob("transcripts.parquet/*.parquet")) or [
-        data / "transcripts.parquet"
-    ]
-    total_bytes = sum(f.stat().st_size for f in tfiles if f.is_file())
-    import pyarrow.parquet as pq
-
+    tfiles = _data_files(data / "transcripts.parquet")
+    total_bytes = sum(f.stat().st_size for f in tfiles)
     # an unreadable footer fails here, as Spark's scan of the same file would
-    n_row_groups = sum(
-        pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles if f.is_file()
-    )
+    n_row_groups = sum(pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles)
     # 3 waves, not 1: detection cost varies per turn (text length), so a
     # one-wave layout rides its slowest task — 3x finer splits cut the
     # XL-corpus mentions wall 32.8 -> 22.3 s at local[8] (straggler tail
@@ -165,16 +208,37 @@ def run_pipeline(
     # (arbitrarily larger or smaller tables) plan splits from their own default.
     try:
         transcripts = src("transcripts")
-        in_bucketing = src_bucketing("transcripts")
+        in_bucketing = (
+            storage.read_manifest(data, "transcripts.parquet").get("spark_bucketed")
+            if storage.stage_exists(data, "transcripts.parquet")
+            else None
+        )
         if in_bucketing is None and (
             n_row_groups < min_parallelism
             and transcripts.rdd.getNumPartitions() < min_parallelism
         ):
             transcripts = transcripts.repartition(min_parallelism)
-        terms = src("mention_terms")
-        dico = src("dico")
-        kb_edges = src("kb_edges")
-        rel_weights = src("rel_weights")
+        # KB artifacts from the registry (no KB table is read) or built here;
+        # only a run that computes a KB-consuming stage needs them.
+        if not all(storage.stage_exists(out, st) for st in STAGES[:4]):
+            t0 = time.time()
+            key = (
+                spark.sparkContext.applicationId,
+                kb_digest(data),
+                cfg.sameas_pred,
+                checkpointing.checkpoint_mode(),
+            )
+            kb = _KB_REGISTRY.pop(key, None)
+            if kb is None:
+                spark.sparkContext.setJobGroup("reden-kb", "KB artifacts")
+                try:
+                    kb = build_kb(*(src(name) for name in KB_TABLES), cfg.sameas_pred)
+                finally:
+                    spark.sparkContext.setJobGroup("", "")
+            _KB_REGISTRY[key] = kb
+            while len(_KB_REGISTRY) > KB_REGISTRY_SIZE:
+                _KB_REGISTRY.popitem(last=False)
+            timings["kb"] = time.time() - t0
 
         # Turn-grain checkpoints (mentions, candidates, links) are Spark-native
         # BUCKETED TABLES on conv_id (storage.write_stage spark_bucket_col):
@@ -213,20 +277,20 @@ def run_pipeline(
             n_buckets = bucket_count(total_bytes)
         mentions = stage(
             "mentions",
-            lambda: detect_mentions(transcripts, terms),
+            lambda: detect_mentions(transcripts, kb.terms),
             spark_bucket_col="conv_id",
             pre_shuffle=not input_bucketed,
         )
         candidates = stage(
             "candidates",
-            lambda: generate_candidates(mentions, dico),
+            lambda: generate_candidates(mentions, kb.groups),
             spark_bucket_col="conv_id",
             pre_shuffle=False,
         )
 
         def compute_links() -> DataFrame:
             cases = conversation_cases(mentions, candidates)
-            return disambiguate_grouped(mentions, candidates, kb_edges, rel_weights, cases, cfg)
+            return disambiguate_grouped(mentions, candidates, kb.edges, kb.rels, cases, cfg)
 
         links = stage("links", compute_links, spark_bucket_col="conv_id", pre_shuffle=False)
         # The product table keeps the hive bucket=N layout (north rule:
@@ -236,13 +300,7 @@ def run_pipeline(
         # passthrough triples hash on subj (small repartition).
         triples = stage(
             "triples",
-            lambda: materialize_triples(
-                links,
-                kb_edges,
-                dico,
-                cfg.sameas_pred,
-                bucket_into=n_buckets,
-            ),
+            lambda: materialize_triples(links, kb.canon, kb.triples, bucket_into=n_buckets),
             prebucketed=True,
         )
 
@@ -256,7 +314,7 @@ def run_pipeline(
         gold_path = data / "gold_links.parquet"
         if gold_path.exists():
             def compute_metrics() -> DataFrame:
-                records = eval_records(spark.read.parquet(str(gold_path)), links, candidates)
+                records = eval_records(src("gold_links"), links, candidates)
                 return hachey_metrics(records)
 
             result["metrics"] = stage("metrics", compute_metrics)

@@ -23,6 +23,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_reden_manifest.json"
 
@@ -150,21 +151,37 @@ def stage_exists(out_dir: str | Path, name: str) -> bool:
     return (Path(out_dir) / name / MANIFEST).exists()
 
 
+def footer_schema(data_file: str | Path) -> StructType:
+    """The Spark schema of a parquet file, from its footer alone: the schema
+    Spark recorded when it wrote the file, else the Arrow schema converted the
+    way Spark infers it (a timestamp without a time zone is TIMESTAMP_NTZ).
+    Reading with it spares Spark its schema-inference job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(str(data_file))
+    written = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if written:
+        return StructType.fromJson(json.loads(written))
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
 def read_stage(spark: SparkSession, out_dir: str | Path, name: str) -> DataFrame:
+    """A stage table, read with the schema its manifest recorded (Spark runs no
+    schema-inference job); without a readable manifest, Spark infers it."""
     try:
-        sb = read_manifest(out_dir, name).get("spark_bucketed")
+        manifest = read_manifest(out_dir, name)
     except (OSError, json.JSONDecodeError):
-        sb = None
+        manifest = {}
+    schema = StructType.fromJson(manifest["schema"]) if "schema" in manifest else None
+    sb = manifest.get("spark_bucketed")
     if sb:
         # Re-register the bucketed table from the manifest (the in-memory
         # session catalog does not survive restarts — resume runs recreate the
         # metadata over the existing files) and scan THROUGH the catalog so the
         # plan carries HashPartitioning(col, n): downstream ops keyed on the
         # bucket column skip their Exchange.
-        from pyspark.sql.types import StructType
-
         tname = _ckpt_table_name(out_dir, name)
-        schema = StructType.fromJson(read_manifest(out_dir, name)["schema"])
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
         spark.sql(
@@ -173,20 +190,14 @@ def read_stage(spark: SparkSession, out_dir: str | Path, name: str) -> DataFrame
             f"LOCATION '{Path(out_dir).resolve() / name}'"
         )
         return spark.table(tname)
-    df = spark.read.parquet(str(Path(out_dir) / name))
-    # drop the synthetic partition column only when THIS module added it —
-    # a stage whose data legitimately contains a 'bucket' column keeps it
-    if "bucket" in df.columns:
-        try:
-            # default True when the key is MISSING: pre-flag manifests never
-            # recorded 'bucketed', and under them only bucketed stages carried
-            # the synthetic column. False only when a manifest explicitly
-            # recorded an unbucketed write (user data owns the column).
-            bucketed = bool(read_manifest(out_dir, name).get("bucketed", True))
-        except (OSError, json.JSONDecodeError):
-            bucketed = True
-        if bucketed:
-            df = df.drop("bucket")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(str(Path(out_dir) / name))
+    # drop the synthetic partition column only when THIS module added it: a
+    # manifest that recorded an unbucketed write means user data owns the
+    # column. Without the key (pre-flag manifests) only bucketed stages
+    # carried it, so a missing key or manifest counts as bucketed.
+    if "bucket" in df.columns and manifest.get("bucketed", True):
+        df = df.drop("bucket")
     return df
 
 

@@ -74,6 +74,14 @@ def tables(spark, fixture_dir):
 
 
 @pytest.fixture(scope="session")
+def kb(tables):
+    """The fixture's KB artifacts, built as the pipeline builds them."""
+    from reden_spark.operators.kb import build_kb
+
+    return build_kb(tables["mention_terms"], tables["dico"], tables["kb_edges"], tables["rel_weights"])
+
+
+@pytest.fixture(scope="session")
 def py_tables(fixture_dir):
     import pyarrow.parquet as pq
 

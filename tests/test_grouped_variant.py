@@ -13,11 +13,11 @@ from reden_spark.operators.mentions import detect_mentions
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
 
 
-def _stage_args(tables, cfg):
-    mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
-    candidates = generate_candidates(mentions, tables["dico"])
+def _stage_args(tables, kb, cfg):
+    mentions = detect_mentions(tables["transcripts"], kb.terms)
+    candidates = generate_candidates(mentions, kb.groups)
     cases = conversation_cases(mentions, candidates)
-    return (mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, cfg)
+    return (mentions, candidates, kb.edges, kb.rels, cases, cfg)
 
 
 def _key(df):
@@ -54,23 +54,23 @@ def _run_oracle(py_tables, **kw):
 
 
 @pytest.mark.parametrize("measure", list(oracle.CENTRALITY_MEASURES))
-def test_grouped_centrality_measures_match_oracle(spark, tables, py_tables, measure):
+def test_grouped_centrality_measures_match_oracle(spark, tables, kb, py_tables, measure):
     """All four reference centralityMeasure values (CentralityHandler.java:137-152)
     produce oracle-identical links via the grouped kernel."""
     cfg = NELConfig(
         base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX, centrality=measure
     )
-    grp = _key(disambiguate_grouped(*_stage_args(tables, cfg)))
+    grp = _key(disambiguate_grouped(*_stage_args(tables, kb, cfg)))
     want = _run_oracle(py_tables, measure=measure)
     assert grp == want
     assert len(grp) > 50
 
 
-def test_preferred_uri_all_matches_oracle(spark, tables, py_tables):
+def test_preferred_uri_all_matches_oracle(spark, tables, kb, py_tables):
     """preferedURIOrder=ALL (CentralityHandler.java:196-213): winning groups'
     URIs space-joined — the grouped kernel vs the oracle."""
     cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri="ALL")
-    grp = _key(disambiguate_grouped(*_stage_args(tables, cfg)))
+    grp = _key(disambiguate_grouped(*_stage_args(tables, kb, cfg)))
     want = _run_oracle(py_tables, preferred_uri="ALL")
     assert grp == want
     assert len(grp) > 50
@@ -78,7 +78,7 @@ def test_preferred_uri_all_matches_oracle(spark, tables, py_tables):
     assert any(" " in uris for (uris, _, _) in grp.values())
 
 
-def test_crawl_sameas_prefix_knob(spark, tables, py_tables):
+def test_crawl_sameas_prefix_knob(spark, tables, kb, py_tables):
     """crawlSameAs prefix (GraphHandlerNEL.java:143-167): restricting the
     case-1 sameAs expansion changes the fused graph; the grouped kernel and
     the oracle agree under the restriction."""
@@ -87,7 +87,7 @@ def test_crawl_sameas_prefix_knob(spark, tables, py_tables):
         preferred_uri=datagen.BASE_PREFIX,
         crawl_sameas="http://no-such-prefix/",
     )
-    grp = _key(disambiguate_grouped(*_stage_args(tables, cfg)))
+    grp = _key(disambiguate_grouped(*_stage_args(tables, kb, cfg)))
     want = _run_oracle(py_tables, crawl_sameas="http://no-such-prefix/")
     assert grp == want
     # the knob must bite: excluding every sameAs target changes the links

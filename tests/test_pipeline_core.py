@@ -5,22 +5,21 @@ from reden_spark.operators.candidates import conversation_cases, generate_candid
 from reden_spark.operators.canonicalize import materialize_triples
 from reden_spark.operators.disambiguate import NELConfig
 from reden_spark.operators.grouped import disambiguate_grouped
+from reden_spark.operators.kb import build_kb
 from reden_spark.operators.mentions import detect_mentions
 
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
 
 
-def run_stages(spark, tables):
-    mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
-    candidates = generate_candidates(mentions, tables["dico"])
+def run_stages(spark, tables, kb):
+    mentions = detect_mentions(tables["transcripts"], kb.terms)
+    candidates = generate_candidates(mentions, kb.groups)
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate_grouped(
-        mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, CFG
-    )
+    links = disambiguate_grouped(mentions, candidates, kb.edges, kb.rels, cases, CFG)
     return mentions, candidates, cases, links
 
 
-def test_mentions_match_oracle(spark, tables, py_tables):
+def test_mentions_match_oracle(spark, tables, kb, py_tables):
     from reden_spark.functions.gazetteer import GazetteerMatcher
 
     matcher = GazetteerMatcher([r["term"] for r in py_tables["mention_terms"]])
@@ -30,14 +29,14 @@ def test_mentions_match_oracle(spark, tables, py_tables):
             expected.add((row["conv_id"], row["turn_idx"], occ, term, start))
     got = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)
-        for r in detect_mentions(tables["transcripts"], tables["mention_terms"]).collect()
+        for r in detect_mentions(tables["transcripts"], kb.terms).collect()
     }
     assert got == expected
     assert len(got) > 50
 
 
-def test_links_match_oracle_exactly(spark, tables, oracle_links):
-    _, _, _, links = run_stages(spark, tables)
+def test_links_match_oracle_exactly(spark, tables, kb, oracle_links):
+    _, _, _, links = run_stages(spark, tables, kb)
     got = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention): (r.chosen_uris, r.score, r.path)
         for r in links.collect()
@@ -57,11 +56,11 @@ def test_links_match_oracle_exactly(spark, tables, oracle_links):
     assert not mismatches, f"{len(mismatches)} mismatches, e.g. {list(mismatches.items())[:5]}"
 
 
-def test_parity_gate_pr(spark, tables, oracle_links):
+def test_parity_gate_pr(spark, tables, kb, oracle_links):
     """BASELINE.md metric 1: P/R >= 0.95 vs the reference-semantics links."""
     from reden_spark.operators.evaluate import link_precision_recall
 
-    _, _, _, links = run_stages(spark, tables)
+    _, _, _, links = run_stages(spark, tables, kb)
     expected = spark.createDataFrame(
         [
             (l["conv_id"], l["turn_idx"], l["occ_idx"], l["chosen_uris"])
@@ -73,9 +72,9 @@ def test_parity_gate_pr(spark, tables, oracle_links):
     assert row.precision >= 0.95 and row.recall >= 0.95, row
 
 
-def test_triples_match_oracle(spark, tables, py_tables, oracle_links):
-    _, _, _, links = run_stages(spark, tables)
-    triples = materialize_triples(links, tables["kb_edges"], tables["dico"])
+def test_triples_match_oracle(spark, tables, kb, py_tables, oracle_links):
+    _, _, _, links = run_stages(spark, tables, kb)
+    triples = materialize_triples(links, kb.canon, kb.triples)
     got = {(r.subj, r.pred, r.obj) for r in triples.collect()}
     want = set(
         oracle.links_to_triples(
@@ -89,12 +88,14 @@ def test_triples_match_oracle(spark, tables, py_tables, oracle_links):
     )
 
 
-def test_gazetteer_scales_to_100k_terms(spark, tables):
+def test_gazetteer_scales_to_100k_terms(spark, tables, kb):
     """Gazetteer scale path: the term list ships as an Arrow IPC broadcast (no
     driver-side row materialization) and the trie-regex compiles ~100k terms in
     under a second per worker; detection output is unchanged by 100k extra
     never-matching terms."""
     from pyspark.sql import functions as F
+
+    from reden_spark.operators.mentions import broadcast_terms
 
     big = tables["mention_terms"].select("term").unionByName(
         spark.range(100_000).select(
@@ -103,11 +104,11 @@ def test_gazetteer_scales_to_100k_terms(spark, tables):
     )
     base = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)
-        for r in detect_mentions(tables["transcripts"], tables["mention_terms"]).collect()
+        for r in detect_mentions(tables["transcripts"], kb.terms).collect()
     }
     got = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)
-        for r in detect_mentions(tables["transcripts"], big).collect()
+        for r in detect_mentions(tables["transcripts"], broadcast_terms(big)).collect()
     }
     assert got == base and len(got) > 50
 
@@ -147,12 +148,13 @@ def test_normalization_collision_parity(spark):
     )
     kb = spark.createDataFrame(kb_rows, "subj string, pred string, obj string")
     rels = spark.createDataFrame([], "pred string, weight double")
+    art = build_kb(terms_df, d, kb, rels)
 
-    mentions = detect_mentions(t, terms_df)
-    candidates = generate_candidates(mentions, d)
+    mentions = detect_mentions(t, art.terms)
+    candidates = generate_candidates(mentions, art.groups)
     assert candidates.filter("mention = 'Jean-Paul X'").count() == 2  # both groups
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate_grouped(mentions, candidates, kb, rels, cases, CFG)
+    links = disambiguate_grouped(mentions, candidates, art.edges, art.rels, cases, CFG)
     got = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention): (r.chosen_uris, r.path)
         for r in links.collect()
@@ -272,7 +274,7 @@ def test_detector_twins_agree_on_accented_boundaries(spark):
     """'Balzacé' must NOT match term 'Balzac' in EITHER detector: the UDF path
     uses Python's Unicode \\w and the relational path now runs Java rlike with
     (?U), so accented letters count as word chars in both."""
-    from reden_spark.operators.mentions import detect_mentions, detect_mentions_relational
+    from reden_spark.operators.mentions import broadcast_terms, detect_mentions_relational
 
     t = spark.createDataFrame(
         [
@@ -284,7 +286,7 @@ def test_detector_twins_agree_on_accented_boundaries(spark):
     terms = spark.createDataFrame([("Balzac",), ("Émile",)], "term string")
     udf_rows = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)
-        for r in detect_mentions(t, terms).collect()
+        for r in detect_mentions(t, broadcast_terms(terms)).collect()
     }
     rel_rows = {
         (r.conv_id, r.turn_idx, r.occ_idx, r.mention, r.start_pos)
@@ -322,13 +324,14 @@ def test_disambiguate_survives_groups_without_base_or_preferred_member(spark):
     )
     rels = spark.createDataFrame([], "pred string, weight double")
     cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri="http://no-such-prefix/")
-    mentions = detect_mentions(t, terms)
-    candidates = generate_candidates(mentions, d)
+    art = build_kb(terms, d, kb, rels)
+    mentions = detect_mentions(t, art.terms)
+    candidates = generate_candidates(mentions, art.groups)
     # 'Foo Bar' resolves to two groups; one has NO base member
     assert candidates.filter("mention = 'Foo Bar'").count() == 2
     cases = conversation_cases(mentions, candidates)
     fuse_edges(candidates, kb, rels, cfg).collect()  # no ANSI crash
-    links = disambiguate_grouped(mentions, candidates, kb, rels, cases, cfg).collect()
+    links = disambiguate_grouped(mentions, candidates, art.edges, art.rels, cases, cfg).collect()
     assert links
     # preferred prefix matched nothing -> every chosen_uris is the raw winner fallback
     assert all(r.chosen_uris for r in links)

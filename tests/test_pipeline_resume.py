@@ -40,9 +40,10 @@ def test_reliable_checkpoint_mode_same_output(spark, fixture_dir, tmp_path, monk
     the multi-executor-cluster setting where localCheckpoint blocks would die
     with a lost executor) must produce byte-identical triples. Also pins that
     the mode actually engaged: the checkpoint dir holds RDD blocks. The
-    pipeline's one intra-stage materialization is the distributed
-    connected-components loop of the triples stage, which a KB-sized
-    equivalence graph skips, so the reliable run forces that path."""
+    pipeline's intra-stage materializations are the KB artifacts and the
+    distributed connected-components loop of their build, which a KB-sized
+    equivalence graph skips, so the reliable run forces that path (the
+    artifacts are keyed by the mode, so the reliable run builds its own)."""
     import functools
 
     from reden_spark import checkpointing

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reden_spark import datagen
-from reden_spark.operators.candidates import generate_candidates
+from reden_spark.operators.candidates import dico_groups, generate_candidates
 from reden_spark.operators.mentions import detect_mentions
 
 
@@ -26,15 +26,15 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "l_returnflag" in read_schema and "l_extendedprice" not in read_schema
 
 
-def test_candidate_join_is_broadcast(spark, tables):
-    mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
-    cands = generate_candidates(mentions, tables["dico"])
+def test_candidate_join_is_broadcast(spark, tables, kb):
+    mentions = detect_mentions(tables["transcripts"], kb.terms)
+    cands = generate_candidates(mentions, kb.groups)
     p = plan(cands)
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
 
 
-def test_triples_no_occurrence_grain_shuffle(spark, tables):
+def test_triples_no_occurrence_grain_shuffle(spark, kb):
     """materialize_triples resolves chosen_uris -> canonical entity on DISTINCT
     chosen_uris values and broadcasts the mapping back: the occurrence-grain
     link table must never be exchanged on its (conv_id, turn_idx, occ_idx)
@@ -47,29 +47,32 @@ def test_triples_no_occurrence_grain_shuffle(spark, tables):
         [("c1", 0, 0, "m", "http://kb.test/base/e1 http://ext.kb/x", 1.0, "graph")],
         "conv_id string, turn_idx int, occ_idx int, mention string, chosen_uris string, score double, path string",
     )
-    t = materialize_triples(links, tables["kb_edges"], tables["dico"])
+    t = materialize_triples(links, kb.canon, kb.triples)
     p = plan(t)
     assert "BroadcastHashJoin" in p
     # no hash partitioning on the occurrence key anywhere in the plan
     assert not re.search(r"hashpartitioning\(conv_id[^)]*turn_idx", p), p
 
 
-def test_mentions_stage_is_map_only(spark, tables):
-    p = plan(detect_mentions(tables["transcripts"], tables["mention_terms"]))
+def test_mentions_stage_is_map_only(spark, tables, kb):
+    p = plan(detect_mentions(tables["transcripts"], kb.terms))
     # no exchange: detection + occ_idx assignment never shuffles
     assert "Exchange" not in p
     assert "codegen id" in p  # surrounding projections stay in whole-stage codegen
 
 
-def test_candidates_single_exchange(spark, tables):
+def test_candidates_single_exchange(spark, tables, kb):
     """The occurrence-grain side must shuffle exactly once (the distinct);
     group dedup + deterministic group_idx are precomputed dico-side (tiny
     window inside the BroadcastExchange), so nothing aggregates or shuffles
-    after the join."""
+    after the join. With the groups prebuilt as a KB artifact, as the
+    pipeline runs it, the distinct is the plan's only Exchange."""
     import re
 
-    mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
-    cands = generate_candidates(mentions, tables["dico"])
+    mentions = detect_mentions(tables["transcripts"], kb.terms)
+    p_kb = plan(generate_candidates(mentions, kb.groups))
+    assert len({m.group(1) for m in re.finditer(r"\((\d+)\) Exchange", p_kb)}) == 1, p_kb[:1500]
+    cands = generate_candidates(mentions, dico_groups(tables["dico"]))
     p = plan(cands)
     # three Exchanges total: the probe distinct on the big side, plus the
     # dico-side distinct + window partitioning — both inside the (tiny)
@@ -178,7 +181,7 @@ def test_n_buckets_knob_plan_shape(spark, fixture_dir, tmp_path, n):
     assert 0 < len(files) <= n
 
 
-def test_enrich_and_compare_ops(spark, tables, fixture_dir):
+def test_enrich_and_compare_ops(spark, tables, kb, fixture_dir):
     import json
 
     from reden_spark.operators.candidates import conversation_cases
@@ -188,12 +191,10 @@ def test_enrich_and_compare_ops(spark, tables, fixture_dir):
     from reden_spark.operators.grouped import disambiguate_grouped
 
     cfg = NELConfig(datagen.BASE_PREFIX, datagen.BASE_PREFIX)
-    mentions = detect_mentions(tables["transcripts"], tables["mention_terms"])
-    candidates = generate_candidates(mentions, tables["dico"])
+    mentions = detect_mentions(tables["transcripts"], kb.terms)
+    candidates = generate_candidates(mentions, kb.groups)
     cases = conversation_cases(mentions, candidates)
-    links = disambiguate_grouped(
-        mentions, candidates, tables["kb_edges"], tables["rel_weights"], cases, cfg
-    )
+    links = disambiguate_grouped(mentions, candidates, kb.edges, kb.rels, cases, cfg)
 
     occ = occurrence_counts(links)
     assert occ.count() > 5 and occ.agg(F.sum("occurrences")).first()[0] > 0

@@ -17,6 +17,7 @@ from reden_spark import datagen, oracle
 from reden_spark.operators.candidates import conversation_cases, generate_candidates
 from reden_spark.operators.disambiguate import NELConfig, fuse_edges
 from reden_spark.operators.grouped import disambiguate_grouped
+from reden_spark.operators.kb import build_kb
 from reden_spark.operators.mentions import detect_mentions
 
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
@@ -38,7 +39,12 @@ def skew_tables(spark, skew_dir):
     }
 
 
-def test_mega_conversation_turns_spread_across_tasks(spark, skew_dir, skew_tables):
+@pytest.fixture(scope="module")
+def skew_kb(skew_tables):
+    return build_kb(*(skew_tables[n] for n in ["mention_terms", "dico", "kb_edges", "rel_weights"]))
+
+
+def test_mega_conversation_turns_spread_across_tasks(spark, skew_dir, skew_kb):
     """Detection is map-over-splits: the 500x conversation's turns must land in
     MULTIPLE scan partitions (no single task holds the whole conversation in
     the detection stage) — the shuffle-free salt of SURVEY §4."""
@@ -49,7 +55,7 @@ def test_mega_conversation_turns_spread_across_tasks(spark, skew_dir, skew_table
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(64 << 10))
     try:
         t = spark.read.parquet(str(skew_dir / "transcripts.parquet"))
-        m = detect_mentions(t, skew_tables["mention_terms"])
+        m = detect_mentions(t, skew_kb.terms)
         parts = (
             m.filter(F.col("conv_id") == "conv000000")
             .select(F.spark_partition_id().alias("p"))
@@ -64,13 +70,13 @@ def test_mega_conversation_turns_spread_across_tasks(spark, skew_dir, skew_table
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
-def test_conv_grain_work_is_bounded_by_entities_not_turns(spark, skew_tables):
+def test_conv_grain_work_is_bounded_by_entities_not_turns(spark, skew_tables, skew_kb):
     """The expensive per-conversation work (fused graph edges) must NOT scale
     with turn count: the 500x conversation's edge set is the same order as a
     normal conversation's (bounded by its entity set). A grouped-map design
     that materialized per-turn state would blow this bound."""
-    mentions = detect_mentions(skew_tables["transcripts"], skew_tables["mention_terms"])
-    candidates = generate_candidates(mentions, skew_tables["dico"])
+    mentions = detect_mentions(skew_tables["transcripts"], skew_kb.terms)
+    candidates = generate_candidates(mentions, skew_kb.groups)
     edges = fuse_edges(candidates, skew_tables["kb_edges"], skew_tables["rel_weights"], CFG)
     per_conv = edges.groupBy("conv_id").count().collect()
     counts = {r.conv_id: r["count"] for r in per_conv}
@@ -81,7 +87,7 @@ def test_conv_grain_work_is_bounded_by_entities_not_turns(spark, skew_tables):
     assert mega <= 10 * max(others), (mega, max(others))
 
 
-def test_grouped_equals_oracle_under_skew(spark, skew_dir, skew_tables):
+def test_grouped_equals_oracle_under_skew(spark, skew_dir, skew_tables, skew_kb):
     """Output parity between the grouped-map links path and the single-node
     oracle on the 500x corpus — skew must change nothing about the emitted
     links."""
@@ -90,12 +96,10 @@ def test_grouped_equals_oracle_under_skew(spark, skew_dir, skew_tables):
     def rows(name):
         return pq.read_table(str(skew_dir / f"{name}.parquet")).to_pylist()
 
-    mentions = detect_mentions(skew_tables["transcripts"], skew_tables["mention_terms"])
-    candidates = generate_candidates(mentions, skew_tables["dico"])
+    mentions = detect_mentions(skew_tables["transcripts"], skew_kb.terms)
+    candidates = generate_candidates(mentions, skew_kb.groups)
     cases = conversation_cases(mentions, candidates)
-    grp = disambiguate_grouped(
-        mentions, candidates, skew_tables["kb_edges"], skew_tables["rel_weights"], cases, CFG
-    )
+    grp = disambiguate_grouped(mentions, candidates, skew_kb.edges, skew_kb.rels, cases, CFG)
     want = oracle.run_oracle(
         rows("transcripts"),
         rows("dico"),
