@@ -100,46 +100,41 @@ def eval_verdicts(records: DataFrame) -> DataFrame:
 def hachey_metrics(records: DataFrame) -> DataFrame:
     """Single-row metrics frame — computeFinalResults (:393-557) definitions.
 
-    Ratios are null when the reference would divide by zero.
+    Ratios are null when the reference would divide by zero. The aggregates
+    are SQL text in one ``selectExpr``: built as ``Column`` chains they cost
+    about a thousand py4j round trips per call.
     """
-    c = F.count("*")
-    manual = F.sum(F.when(F.col("gold_uri").isNotNull(), 1).otherwise(0))
-    nil = F.sum(F.when(F.col("gold_uri").isNull(), 1).otherwise(0))
-    non_empty = F.sum(F.when(F.col("n_groups") > 0, 1).otherwise(0))
-    empty = F.sum(F.when(F.col("n_groups") == 0, 1).otherwise(0))
-    cand_sizes = F.sum(F.when(F.col("n_groups") > 0, F.col("n_groups")).otherwise(0))
-    ne_correct_there = F.sum(F.when((F.col("n_groups") > 0) & F.col("correct_in_cand"), 1).otherwise(0))
-    man_correct_there = F.sum(
-        F.when(F.col("gold_uri").isNotNull() & F.col("correct_in_cand"), 1).otherwise(0)
-    )
-    empty_nil = F.sum(
-        F.when((F.col("n_groups") == 0) & F.col("gold_uri").isNull(), 1).otherwise(0)
-    )
-    disamb_base = F.sum(F.when((F.col("n_groups") > 1) & F.col("correct_in_cand"), 1).otherwise(0))
-    disamb_correct = F.sum(
-        F.when((F.col("n_groups") > 1) & F.col("correct_in_cand") & F.col("choice_correct"), 1).otherwise(0)
-    )
-    linked_ok = F.sum(F.when(F.col("gold_uri").isNotNull() & F.col("choice_correct"), 1).otherwise(0))
-    nil_ok = F.sum(
-        F.when(
-            (F.col("n_groups") == 0) & F.col("gold_uri").isNull() & F.col("chosen_uris").isNull(), 1
-        ).otherwise(0)
-    )
 
-    def ratio(num, den):
-        return F.when(den > 0, num.cast("double") / den).otherwise(F.lit(None).cast("double"))
+    def count_if(cond: str) -> str:
+        return f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
 
-    return records.agg(
-        c.alias("nb_mentions"),
-        manual.alias("nb_manual"),
-        nil.alias("nb_nil"),
-        ratio(cand_sizes, c).alias("candidate_cardinality_mean"),
-        ratio(ne_correct_there, non_empty).alias("candidate_precision"),
-        ratio(man_correct_there, manual).alias("candidate_recall"),
-        ratio(empty_nil, empty).alias("nil_precision"),
-        ratio(empty_nil, nil).alias("nil_recall"),
-        ratio(disamb_correct, disamb_base).alias("disambiguation_accuracy"),
-        ratio(linked_ok + nil_ok, c).alias("overall_linking_accuracy"),
+    def ratio(num: str, den: str) -> str:
+        return f"CASE WHEN {den} > 0 THEN CAST({num} AS DOUBLE) / {den} END"
+
+    c = "count(*)"
+    manual = count_if("gold_uri IS NOT NULL")
+    nil = count_if("gold_uri IS NULL")
+    non_empty = count_if("n_groups > 0")
+    empty = count_if("n_groups = 0")
+    cand_sizes = "sum(CASE WHEN n_groups > 0 THEN n_groups ELSE 0 END)"
+    ne_correct_there = count_if("n_groups > 0 AND correct_in_cand")
+    man_correct_there = count_if("gold_uri IS NOT NULL AND correct_in_cand")
+    empty_nil = count_if("n_groups = 0 AND gold_uri IS NULL")
+    disamb_base = count_if("n_groups > 1 AND correct_in_cand")
+    disamb_correct = count_if("n_groups > 1 AND correct_in_cand AND choice_correct")
+    linked_ok = count_if("gold_uri IS NOT NULL AND choice_correct")
+    nil_ok = count_if("n_groups = 0 AND gold_uri IS NULL AND chosen_uris IS NULL")
+    return records.selectExpr(
+        f"{c} AS nb_mentions",
+        f"{manual} AS nb_manual",
+        f"{nil} AS nb_nil",
+        f"{ratio(cand_sizes, c)} AS candidate_cardinality_mean",
+        f"{ratio(ne_correct_there, non_empty)} AS candidate_precision",
+        f"{ratio(man_correct_there, manual)} AS candidate_recall",
+        f"{ratio(empty_nil, empty)} AS nil_precision",
+        f"{ratio(empty_nil, nil)} AS nil_recall",
+        f"{ratio(disamb_correct, disamb_base)} AS disambiguation_accuracy",
+        f"{ratio(f'({linked_ok} + {nil_ok})', c)} AS overall_linking_accuracy",
     )
 
 
