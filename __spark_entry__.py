@@ -4,7 +4,7 @@ entry(spark)  — flagship: the full KG-construction pipeline (mention detection
 candidate join -> per-conversation graph disambiguation -> links) over a
 transcripts table derived deterministically from sf0.001 events+nation.
 
-queries()/oracle_sql() — 38 rows in one registry, each with an exact DuckDB
+queries()/oracle_sql() — 36 rows in one registry, each with an exact DuckDB
 oracle (reden_spark/driver_contract.py), within the contract's 50-row oracle
 budget: the KG pipeline's stages and its annotate, enrichment,
 evaluation and dictionary-build modes; REDEN's run comparison (significance

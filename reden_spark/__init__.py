@@ -11,9 +11,10 @@ Design notes (scale-first):
   * All stages are declarative DataFrame ops; Catalyst handles pushdown/pruning/AQE.
   * The dictionary probe is a broadcast hash join (replaces the reference's Lucene
     index, DicoProcessingNEL.java:192-339).
-  * Graph fusion / pruning / degree centrality are *relational* (joins + aggs), not
-    a per-group python kernel, so no single conversation ever has to fit in one task;
-    a reference-faithful `applyInPandas` variant exists for parity testing.
+  * Graph fusion / pruning / centrality run per conversation in one
+    `applyInPandas` task (operators/grouped.py), as REDEN disambiguates one
+    paragraph's graph in memory; a conversation's graph is bounded by its entity
+    set, not its turn count.
   * Canonicalization = iterative min-label connected components over the sameAs
     edge DataFrame.
 """

@@ -1,8 +1,7 @@
 """The one materialization point for frames consumed more than once.
 
-A frame that feeds several branches of one downstream query (the pruning
-step's colored/survivors frames, the dedup signature and shingle frames) is
-cut from its lineage by an eager checkpoint. Without the cut, Spark
+A frame that feeds several branches of one downstream query (the dedup
+signature frame) is cut from its lineage by an eager checkpoint. Without the cut, Spark
 re-executes the upstream subtree once per consumer: there is no
 cross-join CSE, and ReusedExchange misses differently-pruned subplans. A lazy
 ``localCheckpoint`` is not an option either, because AQE submits the

@@ -29,9 +29,9 @@ from .checkpointing import checkpoint
 from .functions.text import SAME_AS
 from .operators.candidates import conversation_cases, generate_candidates
 from .operators.canonicalize import materialize_triples
-from .operators.disambiguate import NELConfig, fuse_edges, prune_and_degree
+from .operators.disambiguate import NELConfig
 from .operators.evaluate import eval_records, hachey_metrics
-from .operators.grouped import disambiguate_grouped
+from .operators.grouped import conversation_graphs, disambiguate_grouped
 from .operators.kb import build_kb
 from .operators.mentions import detect_mentions
 
@@ -287,9 +287,8 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     terms = derive_mention_terms(spark, sf_dir)
     dico = derive_dico(spark, sf_dir)
     kb = derive_kb_edges(spark, sf_dir)
-    rels = empty_rel_weights(spark)
     # the KB artifacts come from the pipeline's own build_kb
-    artifacts = build_kb(terms, dico, kb, rels, CFG.sameas_pred)
+    artifacts = build_kb(terms, dico, kb, empty_rel_weights(spark), CFG.sameas_pred)
     mentions = checkpoint(detect_mentions(transcripts, artifacts.terms))
     candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
     cases = checkpoint(conversation_cases(mentions, candidates))
@@ -297,7 +296,6 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "transcripts": transcripts,
         "dico": dico,
         "kb_edges": kb,
-        "rel_weights": rels,
         "kb": artifacts,
         "mentions": mentions,
         "candidates": candidates,
@@ -588,22 +586,31 @@ def q_kg_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
 O_KG_CASES = SQL_PREFIX + "SELECT conv_id, route FROM cases"
 
 
-def q_kg_fused_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The links kernel's fused edges (conv_id, src, dst, pred, weight, kept)
+    for the graph-path conversations (grouped.conversation_graphs)."""
     s = _kg_stack(spark, sf_dir)
     ok = s["cases"].filter(F.col("case") == "Ok").select("conv_id")
     cand_ok = s["candidates"].join(ok, "conv_id", "left_semi")
-    return fuse_edges(cand_ok, s["kb_edges"], s["rel_weights"], CFG)
+    return conversation_graphs(cand_ok, s["kb"].edges, s["kb"].rels, CFG)
+
+
+def q_kg_fused_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _graph_edges(spark, sf_dir).select("conv_id", "src", "dst", "pred", "weight")
 
 
 O_KG_FUSED_EDGES = SQL_PREFIX + "SELECT conv_id, src, dst, pred, weight FROM edges"
 
 
 def q_kg_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _kg_stack(spark, sf_dir)
-    ok = s["cases"].filter(F.col("case") == "Ok").select("conv_id")
-    cand_ok = s["candidates"].join(ok, "conv_id", "left_semi")
-    edges = fuse_edges(cand_ok, s["kb_edges"], s["rel_weights"], CFG)
-    return prune_and_degree(edges, cand_ok, CFG)
+    """Degree per vertex of the pruned graphs: the endpoints of kept edges."""
+    return (
+        _graph_edges(spark, sf_dir)
+        .filter("kept")
+        .select("conv_id", F.explode(F.array("src", "dst")).alias("v"))
+        .groupBy("conv_id", "v")
+        .agg(F.count("*").cast("double").alias("degree"))
+    )
 
 
 O_KG_DEGREES = SQL_PREFIX + "SELECT conv_id, v, degree FROM degrees"
@@ -640,11 +647,6 @@ O_KG_LINKS = (
     SQL_PREFIX
     + "SELECT conv_id, turn_idx, occ_idx, mention, chosen_uris, score, path FROM links"
 )
-
-
-# The grouped kernel is the only links path, so this row is the same query as
-# kg_links; both names stay in the contract.
-q_kg_links_grouped = q_kg_links
 
 
 def q_kg_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1375,11 +1377,7 @@ def q_kg_relation_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (printRelationFrequency)."""
     from .operators.annotate import relation_frequency
 
-    s = _kg_stack(spark, sf_dir)
-    ok = s["cases"].filter(F.col("case") == "Ok").select("conv_id")
-    cand_ok = s["candidates"].join(ok, "conv_id", "left_semi")
-    edges = fuse_edges(cand_ok, s["kb_edges"], s["rel_weights"], CFG)
-    return relation_frequency(edges)
+    return relation_frequency(_graph_edges(spark, sf_dir))
 
 
 O_KG_RELATION_FREQUENCY = SQL_PREFIX + "SELECT pred, count(*) AS n_edges FROM edges GROUP BY 1"
@@ -1547,19 +1545,6 @@ FROM names WHERE alias != ''
 # ---------------------------------------------------------------------------
 # Comparison / analysis extras (reference extra/ package)
 # ---------------------------------------------------------------------------
-
-
-def q_kg_mentions_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-DataFrame gazetteer twin (broadcast join + boundary predicates +
-    maximality anti-join) — must match the pandas-UDF path's oracle exactly on
-    the derived corpus (no term repeats within a turn)."""
-    from .operators.mentions import detect_mentions_relational
-
-    transcripts = derive_transcripts(spark, sf_dir)
-    terms = derive_mention_terms(spark, sf_dir)
-    return detect_mentions_relational(transcripts, terms).select(
-        "conv_id", "turn_idx", "occ_idx", "mention", "start_pos"
-    )
 
 
 def q_kg_population_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2018,13 +2003,11 @@ WHERE alias != ''
 """
 
 
-# The contract: 38 rows, each with an exact DuckDB oracle, within the
+# The contract: 36 rows, each with an exact DuckDB oracle, within the
 # 50-row oracle budget. tests/test_driver_contract.py checks every row
 # against its oracle.
 QUERIES = {
     "kg_entity_pmi": q_kg_entity_pmi,
-    "kg_links_grouped": q_kg_links_grouped,
-    "kg_mentions_relational": q_kg_mentions_relational,
     "kg_annotated_turns": q_kg_annotated_turns,
     "kg_correct_mentions": q_kg_correct_mentions,
     "kg_score_extract": q_kg_score_extract,
@@ -2064,8 +2047,6 @@ QUERIES = {
 
 ORACLES = {
     "kg_entity_pmi": O_KG_ENTITY_PMI,
-    "kg_links_grouped": O_KG_LINKS,
-    "kg_mentions_relational": O_KG_MENTIONS,  # both detectors must match the same oracle
     "kg_annotated_turns": O_KG_ANNOTATED_TURNS,
     "kg_correct_mentions": O_KG_CORRECT_MENTIONS,
     "kg_score_extract": O_KG_SCORE_EXTRACT,
@@ -2103,7 +2084,7 @@ ORACLES = {
     "rel_lifespan": O_REL_LIFESPAN,
 }
 
-assert len(QUERIES) == 38 and set(QUERIES) == set(ORACLES), (
+assert len(QUERIES) == 36 and set(QUERIES) == set(ORACLES), (
     len(QUERIES),
     set(QUERIES) ^ set(ORACLES),
 )

@@ -111,14 +111,3 @@ def extract_score(col: Column | str) -> Column:
     # try_cast: regexp_extract yields '' on no match, and ''::double THROWS
     # under Spark 4's default ANSI mode (simple-path links carry no score)
     return F.regexp_extract(c, r"\((\d[\d.]*)\)", 1).try_cast("double")
-
-
-def last_member_with_prefix(uris: Column, prefix: str) -> Column:
-    """Last group member containing `prefix` (the reference's per-group `baseURI`
-    assignment loops and overwrites, GraphHandlerNEL.java:128-132 — last match
-    wins; the same last-wins rule drives the preferedURIOrder projection,
-    CentralityHandler.java:196-213). NULL when no member matches: try_element_at,
-    because plain element_at(-1) on the empty filtered array THROWS under
-    Spark 4's default ANSI mode instead of yielding null."""
-    matches = F.filter(uris, lambda u: u.contains(F.lit(prefix)))
-    return F.try_element_at(matches, F.lit(-1))

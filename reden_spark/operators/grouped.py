@@ -4,7 +4,9 @@ The pipeline's links path. REDEN disambiguates one paragraph's graph in memory
 (CentralityHandler.java:100-215); here one task materializes one conversation's
 candidates + the KB slice relevant to them, and runs the exact single-node
 kernel from oracle.py (fuse -> prune -> centrality -> argmax) in pandas. The
-kernel serves all four centralityMeasure values.
+kernel serves all four centralityMeasure values. `conversation_graphs` runs the
+same input and graph steps (fuse -> prune) and returns the fused edges, which
+the contract's graph rows check against their DuckDB oracles.
 
 A conversation's work is conversation x distinct-mention grain, bounded by its
 entity set rather than its turn count (tests/test_skew.py), so a
@@ -16,6 +18,7 @@ is pre-filtered with an equi-join on the conversation's probe keys (SURVEY.md
 from __future__ import annotations
 
 from collections import defaultdict
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -26,6 +29,7 @@ from ..functions.text import decompose, encode_last_segment
 from .disambiguate import NELConfig, simple_links
 
 _OUT_SCHEMA = "conv_id string, mention string, chosen_uris string, score double"
+_GRAPH_SCHEMA = "conv_id string, src string, dst string, pred string, weight double, kept boolean"
 
 
 def _kb_slice(candidates: DataFrame, kb_edges: DataFrame, cfg: NELConfig) -> DataFrame:
@@ -62,32 +66,28 @@ def rel_weight_map(rel_weights: DataFrame) -> dict[str, float]:
     return {r["pred"].lower(): float(r["weight"]) for r in rel_weights.collect()}
 
 
-def disambiguate_grouped(
-    mentions: DataFrame,
+def _per_conversation(
     candidates: DataFrame,
     kb_edges: DataFrame,
     rels: dict[str, float],
-    cases: DataFrame,
     cfg: NELConfig,
+    emit: Callable[..., pd.DataFrame],
+    schema: str,
 ) -> DataFrame:
-    """Full stage 3: occurrences + candidates -> LINKS (one row per occurrence
-    of a mention that received a URI), graph path via applyInPandas.
-    ``rels`` is the :func:`rel_weight_map` of the relation weights."""
-    base_prefix, preferred = cfg.base_prefix, cfg.preferred_uri
-    measure, crawl_sameas = cfg.centrality, cfg.crawl_sameas
-
-    ok_convs = cases.filter(F.col("case") == "Ok").select("conv_id")
-    simple_convs = cases.filter(F.col("case") == "NoAmbiguity").select("conv_id")
-    cand_ok = candidates.join(ok_convs, "conv_id", "left_semi")
-
-    cand_rows = cand_ok.select(
+    """One grouped-map task per conversation over its candidate groups and KB
+    slice. Each task runs the kernel's shared graph steps (colored -> fuse ->
+    inverted index -> prune) and returns
+    ``emit(conv_id, cand_map, colored, fused, pruned)``, where ``fused`` and
+    ``pruned`` are ``(vertices, edges)`` graphs."""
+    base_prefix, crawl_sameas = cfg.base_prefix, cfg.crawl_sameas
+    cand_rows = candidates.select(
         "conv_id",
         F.lit("cand").alias("kind"),
         F.col("mention").alias("a"),
         F.col("group_idx").cast("string").alias("b"),
         F.to_json(F.struct("uris")).alias("c"),
     )
-    kb_rows = _kb_slice(cand_ok, kb_edges, cfg).select(
+    kb_rows = _kb_slice(candidates, kb_edges, cfg).select(
         "conv_id",
         F.lit("kb").alias("kind"),
         F.col("subj").alias("a"),
@@ -111,12 +111,53 @@ def disambiguate_grouped(
         kb = oracle.KB.from_rows(kb_triples)
 
         colored = oracle._colored_nodes(cand_map, base_prefix)
-        vertices, edges = oracle.fuse_graph(cand_map, kb, base_prefix, rels, crawl_sameas)
+        fused = oracle.fuse_graph(cand_map, kb, base_prefix, rels, crawl_sameas)
         inverted = oracle.build_inverted_index(cand_map)
-        vertices, edges = oracle.prune_graph(vertices, edges, colored, inverted)
+        pruned = oracle.prune_graph(*fused, colored, inverted)
+        return emit(conv_id, cand_map, colored, fused, pruned)
+
+    return combined.groupBy("conv_id").applyInPandas(kernel, schema)
+
+
+def conversation_graphs(
+    candidates: DataFrame, kb_edges: DataFrame, rels: dict[str, float], cfg: NELConfig
+) -> DataFrame:
+    """The links kernel's fused graph per conversation: one row per fused edge
+    (conv_id, src, dst, pred, weight, kept), where ``kept`` marks the edges
+    that survive <2-mention-bridge pruning. ``candidates`` are the groups of
+    the graph-path conversations; ``rels`` is the :func:`rel_weight_map`."""
+
+    def emit(conv_id, cand_map, colored, fused, pruned) -> pd.DataFrame:
+        kept = pruned[1]
+        return pd.DataFrame(
+            [(conv_id, s, d, p, w, (s, d) in kept) for (s, d), (p, w) in fused[1].items()],
+            columns=["conv_id", "src", "dst", "pred", "weight", "kept"],
+        )
+
+    return _per_conversation(candidates, kb_edges, rels, cfg, emit, _GRAPH_SCHEMA)
+
+
+def disambiguate_grouped(
+    mentions: DataFrame,
+    candidates: DataFrame,
+    kb_edges: DataFrame,
+    rels: dict[str, float],
+    cases: DataFrame,
+    cfg: NELConfig,
+) -> DataFrame:
+    """Full stage 3: occurrences + candidates -> LINKS (one row per occurrence
+    of a mention that received a URI), graph path via applyInPandas.
+    ``rels`` is the :func:`rel_weight_map` of the relation weights."""
+    preferred, measure = cfg.preferred_uri, cfg.centrality
+
+    ok_convs = cases.filter(F.col("case") == "Ok").select("conv_id")
+    simple_convs = cases.filter(F.col("case") == "NoAmbiguity").select("conv_id")
+    cand_ok = candidates.join(ok_convs, "conv_id", "left_semi")
+
+    def emit(conv_id, cand_map, colored, fused, pruned) -> pd.DataFrame:
         # full centralityMeasure dispatch (CentralityHandler.java:137-152):
         # Degree / BrandesBetweenness / FreemanCloseness / Eigenvector
-        scores = oracle.centrality_scores(vertices, edges, measure)
+        scores = oracle.centrality_scores(*pruned, measure)
         chosen = oracle.choose_uris(cand_map, colored, scores, preferred)
         return pd.DataFrame(
             [
@@ -126,8 +167,8 @@ def disambiguate_grouped(
             columns=["conv_id", "mention", "chosen_uris", "score"],
         )
 
-    graph_chosen = (
-        combined.groupBy("conv_id").applyInPandas(kernel, _OUT_SCHEMA).withColumn("path", F.lit("graph"))
+    graph_chosen = _per_conversation(cand_ok, kb_edges, rels, cfg, emit, _OUT_SCHEMA).withColumn(
+        "path", F.lit("graph")
     )
     simple_chosen = simple_links(candidates.join(simple_convs, "conv_id", "left_semi")).withColumn(
         "path", F.lit("simple")

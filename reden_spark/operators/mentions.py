@@ -4,19 +4,12 @@ Replaces the reference's XPath tag scan (MainNELApp.java:233-241, where mentions
 arrive pre-annotated in TEI): here we detect every known surface form (dictionary
 aliases + annotatable NIL terms) in raw turn text.
 
-Two implementations with identical output on non-repeating text:
-
-* :func:`detect_mentions` — the production path: an Arrow-batched pandas UDF
-  running a compiled leftmost-longest gazetteer regex per text batch. The term
-  list is shipped once per executor via a Spark broadcast built once per
-  knowledge base (:func:`broadcast_terms`, called by ``operators/kb.py``); the
-  compiled matcher is cached per worker process. Scales: embarrassingly
-  parallel per turn, no shuffle.
-
-* :func:`detect_mentions_relational` — pure DataFrame ops (broadcast join +
-  boundary predicates + maximality anti-join). Used for DuckDB oracle parity;
-  restriction: detects at most one occurrence of a given term per turn (first
-  position), so it matches the UDF path only when no term repeats within a turn.
+The detector, :func:`detect_mentions`, is an Arrow-batched pandas UDF running a
+compiled leftmost-longest gazetteer regex per text batch. The term list is
+shipped once per executor via a Spark broadcast built once per knowledge base
+(:func:`broadcast_terms`, called by ``operators/kb.py``); the compiled matcher
+is cached per worker process. Scales: embarrassingly parallel per turn, no
+shuffle.
 
 occ_idx = dense per (conv_id, turn_idx), ordered by start position — this is the
 stable ordering key for the positional gold join
@@ -27,8 +20,7 @@ ordering invariant.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.gazetteer import GazetteerMatcher
 
@@ -108,55 +100,3 @@ def detect_mentions(turns: DataFrame, terms) -> DataFrame:
             )
 
     return turns.select("conv_id", "turn_idx", "text").mapInPandas(gen, _MENTIONS_SCHEMA)
-
-
-def detect_mentions_relational(turns: DataFrame, terms: DataFrame) -> DataFrame:
-    """DataFrame-only detector (broadcast join; first occurrence per term/turn).
-
-    Maximality: a match strictly contained in a longer match's span is dropped
-    (mirrors leftmost-longest). Word boundary: the chars adjacent to the match
-    must not be word chars ((?U): Unicode word chars, like the UDF twin's
-    Python \\w — accented letters count).
-
-    Contract vs the UDF twin: identical output when each term occurs at most
-    once per turn (instr finds only the FIRST substring position, so a term
-    whose first occurrence fails the boundary check contributes nothing for
-    that turn even if a later occurrence would match — e.g. 'Balzacé ... Balzac'
-    yields the standalone Balzac in the UDF path only). The UDF path is the
-    production detector; this twin exists as an all-relational cross-check.
-    """
-    t = terms.select(F.col("term")).distinct()
-    cand = (
-        turns.select("conv_id", "turn_idx", "text")
-        .join(F.broadcast(t), F.instr("text", F.col("term")) > 0)
-        .withColumn("start_pos", (F.instr("text", F.col("term")) - 1).cast("int"))
-        .withColumn("end_pos", F.col("start_pos") + F.length("term"))
-        # boundary chars (substring is 1-based; out-of-range yields ''; pos=0 would
-        # be coerced to 1, so guard the string-start case explicitly)
-        .withColumn(
-            "pre",
-            F.when(F.col("start_pos") == 0, F.lit("")).otherwise(
-                F.substring(F.col("text"), F.col("start_pos"), F.lit(1))
-            ),
-        )
-        .withColumn("post", F.substring(F.col("text"), F.col("end_pos") + 1, F.lit(1)))
-        # (?U): Java \w is ASCII-only, but the UDF twin's Python \w is Unicode —
-        # without the flag 'Balzacé' would boundary-match 'Balzac' here and not
-        # there (accented French letters must count as word chars in BOTH paths)
-        .filter(~F.col("pre").rlike(r"(?U)\w") & ~F.col("post").rlike(r"(?U)\w"))
-        .select("conv_id", "turn_idx", F.col("term").alias("mention"), "start_pos", "end_pos")
-    )
-    inner = cand.alias("a").join(
-        cand.alias("b"),
-        (F.col("a.conv_id") == F.col("b.conv_id"))
-        & (F.col("a.turn_idx") == F.col("b.turn_idx"))
-        & (F.col("a.mention") != F.col("b.mention"))
-        & (F.col("a.start_pos") >= F.col("b.start_pos"))
-        & (F.col("a.end_pos") <= F.col("b.end_pos")),
-        "left_anti",
-    )
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy("start_pos")
-    return (
-        inner.withColumn("occ_idx", (F.row_number().over(w) - F.lit(1)).cast("int"))
-        .select("conv_id", "turn_idx", "occ_idx", "mention", "start_pos")
-    )

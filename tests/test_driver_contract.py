@@ -72,6 +72,16 @@ def test_query_matches_oracle(spark, duck, name):
     )
 
 
+def test_graph_rows_run_the_links_kernel(spark):
+    """The graph rows check the links kernel's own graph steps, not a
+    relational restatement of them: each row's plan holds the grouped-map
+    kernel. Reads the analyzed plans only; the contract stack they build on is
+    memoized by the oracle params above."""
+    for name in ("kg_fused_edges", "kg_pruned_degrees", "kg_relation_frequency"):
+        plan = QUERIES[name](spark, SF)._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+        assert "FlatMapGroupsInPandas" in plan, f"{name}: no grouped kernel in its plan"
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

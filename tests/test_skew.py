@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from reden_spark import datagen, oracle
 from reden_spark.operators.candidates import conversation_cases, generate_candidates
-from reden_spark.operators.disambiguate import NELConfig, fuse_edges
-from reden_spark.operators.grouped import disambiguate_grouped
+from reden_spark.operators.disambiguate import NELConfig
+from reden_spark.operators.grouped import conversation_graphs, disambiguate_grouped
 from reden_spark.operators.kb import build_kb
 from reden_spark.operators.mentions import detect_mentions
 
@@ -71,13 +71,13 @@ def test_mega_conversation_turns_spread_across_tasks(spark, skew_dir, skew_kb):
 
 
 def test_conv_grain_work_is_bounded_by_entities_not_turns(spark, skew_tables, skew_kb):
-    """The expensive per-conversation work (fused graph edges) must NOT scale
-    with turn count: the 500x conversation's edge set is the same order as a
+    """The expensive per-conversation work (the kernel's fused graph edges) must
+    NOT scale with turn count: the 500x conversation's edge set is the same order as a
     normal conversation's (bounded by its entity set). A grouped-map design
     that materialized per-turn state would blow this bound."""
     mentions = detect_mentions(skew_tables["transcripts"], skew_kb.terms)
     candidates = generate_candidates(mentions, skew_kb.groups)
-    edges = fuse_edges(candidates, skew_tables["kb_edges"], skew_tables["rel_weights"], CFG)
+    edges = conversation_graphs(candidates, skew_kb.edges, skew_kb.rels, CFG)
     per_conv = edges.groupBy("conv_id").count().collect()
     counts = {r.conv_id: r["count"] for r in per_conv}
     mega = counts.get("conv000000", 0)
