@@ -21,11 +21,17 @@ cannot recover. One knob selects where the blocks go:
 
 Mode resolution: explicit `set_checkpoint_mode()` > `REDEN_CHECKPOINT_MODE`
 env var > "local".
+
+Checkpointed frames that a session reuses across runs (the pipeline's KB
+artifacts, the driver contract's per-directory stack) are memoized one way:
+:func:`recent`, a small LRU whose eviction only drops the reference.
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
@@ -81,3 +87,18 @@ def checkpoint(df: DataFrame) -> DataFrame:
             "(point it at fault-tolerant storage: HDFS/S3 on a cluster)"
         )
     return df.checkpoint()
+
+
+def recent(cache: OrderedDict, key: Hashable, build: Callable[[], object], size: int):
+    """``cache[key]``, built by ``build()`` on a miss; the cache keeps the
+    ``size`` most recently used keys. Eviction only drops the reference and
+    unpersists nothing: a ``localCheckpoint``'s blocks stay registered after
+    ``unpersist()`` anyway, and a caller still holding an evicted frame can
+    keep using it."""
+    if key in cache:
+        cache.move_to_end(key)
+        return cache[key]
+    value = cache[key] = build()
+    while len(cache) > size:
+        cache.popitem(last=False)
+    return value

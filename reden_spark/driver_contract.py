@@ -22,10 +22,12 @@ doubles / ranks instead).
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .checkpointing import checkpoint
+from .checkpointing import checkpoint, recent
 from .functions.text import SAME_AS
 from .operators.candidates import conversation_cases, generate_candidates
 from .operators.canonicalize import materialize_triples
@@ -45,38 +47,48 @@ PRED_ASSOC = "http://kb.test/pred/assoc"
 # ---------------------------------------------------------------------------
 
 
-# every contract cache registers here so sf_dir-recency eviction (see
-# _evict_stale) can sweep all of them at once
-_ALL_CACHES: list[dict] = []
-# the 2 most-recently-touched sf_dirs; older dirs' entries are evicted from
-# every cache (a multi-dir sweep would otherwise pin each dir's
-# localCheckpoint blocks for the life of the session — round-4 ADVICE)
-_SFDIR_LRU: list[str] = []
+# Frames the contract queries share, memoized per data directory: one dict of
+# that directory's artifacts (("read", table), "stack", "links", "pairs") per
+# (applicationId, sf_dir, _sf_fingerprint(sf_dir)) key, for the 2 most
+# recently used keys (checkpointing.recent). An entry of another application
+# or of since-regenerated files is never served; it ages out of the LRU.
+_MEMO: OrderedDict[tuple, dict] = OrderedDict()
 
-_READ_CACHE: dict[tuple, DataFrame] = {}
-_ALL_CACHES.append(_READ_CACHE)
+
+def _sf_fingerprint(sf_dir: str) -> tuple:
+    """Cheap content fingerprint of the parquet files under sf_dir (name, size,
+    mtime). Regenerating the data in-place within one application changes the
+    fingerprint, so memoized frames derived from the old files are not served
+    stale."""
+    import os
+
+    out = []
+    try:
+        for name in sorted(os.listdir(sf_dir)):
+            if name.endswith(".parquet"):
+                st = os.stat(os.path.join(sf_dir, name))
+                out.append((name, st.st_size, int(st.st_mtime_ns)))
+    except OSError:
+        pass
+    return tuple(out)
+
+
+def _memo(spark: SparkSession, sf_dir: str, name, build):
+    """``build()``, once per application, data directory and file contents."""
+    key = (spark.sparkContext.applicationId, str(sf_dir), _sf_fingerprint(str(sf_dir)))
+    entry = recent(_MEMO, key, dict, 2)
+    if name not in entry:
+        entry[name] = build()
+    return entry[name]
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Plan-level memo of the table scans: every `spark.read.parquet` call
     pays a driver-side listing + footer schema read (~0.2-0.4 s each on this
     host), and one contract query's derivation chain re-reads events/nation
-    several times. The cached object is just the unexecuted scan plan —
-    results are identical; the fingerprint key invalidates on regenerated
-    files (same discipline as _kg_stack)."""
-    key = (
-        spark.sparkContext.applicationId,
-        str(sf_dir),
-        name,
-        _sf_fingerprint(str(sf_dir)),
-    )
-    hit = _READ_CACHE.get(key)
-    if hit is None:
-        _evict_stale(_READ_CACHE, key[0], key)
-        hit = _READ_CACHE[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    else:
-        _touch_sfdir(key[1])
-    return hit
+    several times. The memoized object is just the unexecuted scan plan —
+    results are identical."""
+    return _memo(spark, sf_dir, ("read", name), lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 def derive_turns_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,71 +214,6 @@ def empty_rel_weights(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], "pred string, weight double")
 
 
-_STACK_CACHE: dict[tuple, dict[str, DataFrame]] = {}
-_ALL_CACHES.append(_STACK_CACHE)
-
-
-def _sf_fingerprint(sf_dir: str) -> tuple:
-    """Cheap content fingerprint of the parquet files under sf_dir (name, size,
-    mtime). Regenerating the data in-place within one application changes the
-    fingerprint, so memoized stacks derived from the old files are not served
-    stale."""
-    import os
-
-    out = []
-    try:
-        for name in sorted(os.listdir(sf_dir)):
-            if name.endswith(".parquet"):
-                st = os.stat(os.path.join(sf_dir, name))
-                out.append((name, st.st_size, int(st.st_mtime_ns)))
-    except OSError:
-        pass
-    return tuple(out)
-
-
-def _unpersist_frames(obj) -> None:
-    """Best-effort release of an evicted entry's eagerly-checkpointed blocks so
-    they don't pin executor memory until GC."""
-    frames = obj.values() if isinstance(obj, dict) else [obj]
-    for df in frames:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _evict_stale(cache: dict, app_id: str, key=None) -> None:
-    """Drop cache entries keyed by other applicationIds (stopped sessions whose
-    checkpointed frames are unusable) or by an outdated sf_dir fingerprint,
-    unpersisting their frames on the way out. Also bounds ALL caches to the 2
-    most-recently-touched sf_dirs (key[1] is always the sf_dir) so a
-    multi-dir sweep cannot accumulate localCheckpoint blocks without limit."""
-    # fingerprint is always the LAST key element: an entry matching on
-    # everything but the fingerprint was derived from since-regenerated data
-    for stale in [
-        k for k in cache if k[0] != app_id or (key is not None and k[:-1] == key[:-1] and k != key)
-    ]:
-        _unpersist_frames(cache.pop(stale))
-    if key is not None:
-        _touch_sfdir(key[1])
-
-
-def _touch_sfdir(sf_dir: str) -> None:
-    """Mark sf_dir most-recently-used and sweep beyond-bound dirs from ALL
-    caches. Called on cache HITS as well as misses — otherwise a dir served
-    purely from hits never refreshes its LRU slot and one query on a new dir
-    would evict the hot dir's localCheckpoint blocks out from under callers
-    still holding its frames."""
-    if sf_dir in _SFDIR_LRU:
-        _SFDIR_LRU.remove(sf_dir)
-    _SFDIR_LRU.insert(0, sf_dir)
-    for dropped in _SFDIR_LRU[2:]:
-        for c in _ALL_CACHES:
-            for k in [k for k in c if k[1] == dropped]:
-                _unpersist_frames(c.pop(k))
-    del _SFDIR_LRU[2:]
-
-
 def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Derive the KG input stack once per (application, sf_dir).
 
@@ -275,34 +222,29 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     mention-detection UDF and candidate join run once per session, not once
     per query (eager also prevents AQE's concurrent stage submission from
     re-executing a lazily-checkpointed frame per consumer). Results are
-    unchanged — the cache stores the exact DataFrames a fresh derivation
+    unchanged — the memo holds the exact DataFrames a fresh derivation
     would return."""
-    key = (spark.sparkContext.applicationId, str(sf_dir), _sf_fingerprint(str(sf_dir)))
-    hit = _STACK_CACHE.get(key)
-    if hit is not None:
-        _touch_sfdir(key[1])
-        return hit
-    _evict_stale(_STACK_CACHE, key[0], key)
-    transcripts = derive_transcripts(spark, sf_dir)
-    terms = derive_mention_terms(spark, sf_dir)
-    dico = derive_dico(spark, sf_dir)
-    kb = derive_kb_edges(spark, sf_dir)
-    # the KB artifacts come from the pipeline's own build_kb
-    artifacts = build_kb(terms, dico, kb, empty_rel_weights(spark), CFG.sameas_pred)
-    mentions = checkpoint(detect_mentions(transcripts, artifacts.terms))
-    candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
-    cases = checkpoint(conversation_cases(mentions, candidates))
-    stack = {
-        "transcripts": transcripts,
-        "dico": dico,
-        "kb_edges": kb,
-        "kb": artifacts,
-        "mentions": mentions,
-        "candidates": candidates,
-        "cases": cases,
-    }
-    _STACK_CACHE[key] = stack
-    return stack
+
+    def build() -> dict:
+        transcripts = derive_transcripts(spark, sf_dir)
+        terms = derive_mention_terms(spark, sf_dir)
+        dico = derive_dico(spark, sf_dir)
+        kb = derive_kb_edges(spark, sf_dir)
+        # the KB artifacts come from the pipeline's own build_kb
+        artifacts = build_kb(terms, dico, kb, empty_rel_weights(spark), CFG.sameas_pred)
+        mentions = checkpoint(detect_mentions(transcripts, artifacts.terms))
+        candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
+        return {
+            "transcripts": transcripts,
+            "dico": dico,
+            "kb_edges": kb,
+            "kb": artifacts,
+            "mentions": mentions,
+            "candidates": candidates,
+            "cases": checkpoint(conversation_cases(mentions, candidates)),
+        }
+
+    return _memo(spark, sf_dir, "stack", build)
 
 
 # ---------------------------------------------------------------------------
@@ -616,25 +558,17 @@ def q_kg_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 O_KG_DEGREES = SQL_PREFIX + "SELECT conv_id, v, degree FROM degrees"
 
 
-_LINKS_CACHE: dict[tuple, DataFrame] = {}
-_ALL_CACHES.append(_LINKS_CACHE)
-
-
 def _links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LINKS, memoized like :func:`_kg_stack` — consumed by the links/triples/
     annotate/eval/occurrence query families."""
-    key = (spark.sparkContext.applicationId, str(sf_dir), _sf_fingerprint(str(sf_dir)))
-    hit = _LINKS_CACHE.get(key)
-    if hit is not None:
-        _touch_sfdir(key[1])
-        return hit
-    _evict_stale(_LINKS_CACHE, key[0], key)
-    s = _kg_stack(spark, sf_dir)
-    kb = s["kb"]
-    links = disambiguate_grouped(s["mentions"], s["candidates"], kb.edges, kb.rels, s["cases"], CFG)
-    links = checkpoint(links)
-    _LINKS_CACHE[key] = links
-    return links
+
+    def build() -> DataFrame:
+        s = _kg_stack(spark, sf_dir)
+        kb = s["kb"]
+        links = disambiguate_grouped(s["mentions"], s["candidates"], kb.edges, kb.rels, s["cases"], CFG)
+        return checkpoint(links)
+
+    return _memo(spark, sf_dir, "links", build)
 
 
 def q_kg_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,10 +747,6 @@ WITH toks AS (
 """
 
 
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_ALL_CACHES.append(_PAIRS_CACHE)
-
-
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs (12 hashes, 3-shingles, 4 bands, J>=0.5),
     memoized like :func:`_kg_stack`: the pair generation — the dominant cost of
@@ -827,15 +757,10 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     it)."""
     from .operators.dedup import minhash_lsh_pairs
 
-    key = (spark.sparkContext.applicationId, str(sf_dir), _sf_fingerprint(str(sf_dir)))
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        _touch_sfdir(key[1])
-        return hit
-    _evict_stale(_PAIRS_CACHE, key[0], key)
-    pairs = checkpoint(minhash_lsh_pairs(_read(spark, sf_dir, "documents"), 12, 3, 4, 0.5))
-    _PAIRS_CACHE[key] = pairs
-    return pairs
+    def build() -> DataFrame:
+        return checkpoint(minhash_lsh_pairs(_read(spark, sf_dir, "documents"), 12, 3, 4, 0.5))
+
+    return _memo(spark, sf_dir, "pairs", build)
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:

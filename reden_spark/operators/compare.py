@@ -1,9 +1,7 @@
-"""Result-comparison / analysis extras (reference `extra/` package):
+"""Result-analysis extras (reference `extra/` package):
 
-* intersect/diff of correctly-linked mention sets across two runs/KBs
-  (CompareResults.java:16-102);
-* paired score extraction for significance testing between centrality measures
-  (SignificanceTesting.prepareData, SignificanceTesting.java:74-92);
+* score recovery and paired significance statistics between two runs'
+  scores (SignificanceTesting.java:23-113);
 * KB population completeness: gold URIs covered by the crawled KB/dico
   (CalculatePopulationCompletenessLD.java:37-452, ...UsingDico.java:30-199).
 """
@@ -14,28 +12,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import extract_score
-
-
-def result_intersection(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Mentions correctly linked in both runs (CompareResults.intersection)."""
-    key = ["conv_id", "turn_idx", "occ_idx", "mention"]
-    return a.select(*key).intersect(b.select(*key))
-
-
-def result_diff(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Mentions correct in run A but not in run B (CompareResults.diff)."""
-    key = ["conv_id", "turn_idx", "occ_idx", "mention"]
-    return a.select(*key).exceptAll(b.select(*key)).distinct()
-
-
-def paired_scores(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Positional pairing of two runs' annotated scores — the '(0.123)' suffix the
-    reference embeds when addScores=true (ResultsAndEvaluationNEL.java:86-91) —
-    ready for a paired significance test."""
-    key = ["conv_id", "turn_idx", "occ_idx"]
-    sa = a.select(*key, F.col("score").alias("score_a"))
-    sb = b.select(*key, F.col("score").alias("score_b"))
-    return sa.join(sb, key, "inner")
 
 
 def scores_from_annotations(annotated: DataFrame, col: str = "ref_auto") -> DataFrame:

@@ -1,7 +1,7 @@
-"""Visualization/enrichment mode (reference §3.3): occurrence counting, property
-assignment from the KB, GeoJSON FeatureCollection sink.
+"""Visualization/enrichment mode (reference §3.3): occurrence counting and
+property assignment from the KB (the reference's GeoJSON sink is not rebuilt).
 
-Maps EnrichmentHandler.readTEI/toJson (EnrichmentHandler.java:51-153),
+Maps EnrichmentHandler.readTEI (EnrichmentHandler.java:51-94),
 GeodataGeneration.assignGeoCoordinates (GeodataGeneration.java:32-72 — first
 non-null of the configured lat/long property lists) and
 AuthorsEnrichment.assignAuthorsPropValue (AuthorsEnrichment.java:29-75).
@@ -73,31 +73,6 @@ def author_enrichment(
     `domaineProperties` with no base filter."""
     out = assign_property(entities, kb_edges, pic_props, "depiction", prefer_prefix=COMMONS_PREFIX)
     return assign_property(out, kb_edges, dom_props, "field_of_activity")
-
-
-def to_geojson(points: DataFrame, lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
-    """One GeoJSON Feature per row (properties = all other columns); collecting
-    `feature` strings and wrapping in a FeatureCollection reproduces
-    EnrichmentHandler.toJson (:122-153)."""
-    prop_cols = [c for c in points.columns if c not in (lat_col, lon_col)]
-    feature = F.to_json(
-        F.struct(
-            F.lit("Feature").alias("type"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(F.col(lon_col).cast("double"), F.col(lat_col).cast("double")).alias("coordinates"),
-            ).alias("geometry"),
-            F.struct(*[F.col(c) for c in prop_cols]).alias("properties"),
-        )
-    )
-    return points.select(feature.alias("feature"))
-
-
-def geojson_feature_collection(points: DataFrame, lat_col: str = "lat", lon_col: str = "lon") -> str:
-    """Small-result driver-side FeatureCollection string (viz output is by
-    definition human-scale; the distributed sink is `to_geojson(...).write`)."""
-    feats = [r.feature for r in to_geojson(points, lat_col, lon_col).collect()]
-    return '{"type": "FeatureCollection", "features": [' + ", ".join(feats) + "]}"
 
 
 def entity_pmi(links: DataFrame, min_pairs: int = 2) -> DataFrame:

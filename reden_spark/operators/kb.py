@@ -5,7 +5,8 @@ from one delta to the next, so what the stages derive from them alone is built
 here once per knowledge base and handed to every stage. Frames are eager
 checkpoints (``checkpointing.checkpoint``), never a ``persist``: dropping the
 artifacts leaves no cached frame behind, and a run still holding them keeps
-their blocks. ``plans/pipeline.py`` keys them by the KB tables' content, so
+their blocks. ``plans/pipeline.py`` keys them by the KB tables' content and
+keeps the most recent ones (eviction rule: ``checkpointing.recent``), so
 consecutive deltas over one KB build them once — REDEN caches its KB-grain
 work across runs the same way (the per-URI N3 cache,
 GraphHandlerNEL.java:351-384; the skip-if-exists dictionary shards,

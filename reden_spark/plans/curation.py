@@ -110,7 +110,7 @@ def run_curation(
         timings[name] = time.time() - t0
         return storage.read_stage(spark, out, name)
 
-    docs = spark.read.parquet(str(data / "documents.parquet"))
+    docs = storage.read_input(spark, data, "documents")
 
     pairs = stage(
         "pairs",

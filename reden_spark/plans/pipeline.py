@@ -7,9 +7,10 @@ Stages 1-4 read the KB artifacts (operators/kb.py) in place of the KB tables:
 the term broadcast, the dictionary groups, the KB edges and relation weights,
 the sameAs canonical map and the rewritten KB. A session keeps the artifacts
 of its last `KB_REGISTRY_SIZE` knowledge bases keyed by the tables' bytes
-(`kb_digest`), so a later delta over the same KB reads none of them. A build
-runs under job group `reden-kb`; `_timings.json` records its seconds as `kb`
-(about 0 on a hit). Inputs are read with their parquet footer's schema and
+(`kb_digest`; eviction as in `checkpointing.recent`), so a later delta over
+the same KB reads none of them. A build runs under job group `reden-kb`;
+`_timings.json` records its seconds as `kb` (about 0 on a hit). Inputs are
+read with their parquet footer's schema (`storage.read_input`) and
 checkpoints with their manifest's, so no read runs a schema-inference job.
 
 Each stage reads the previous stage's checkpoint and writes its own (parquet/
@@ -58,9 +59,8 @@ from reden_spark.sources import storage  # noqa: E402
 STAGES = ["mentions", "candidates", "links", "triples", "metrics"]
 
 # KB artifacts (operators/kb.py) of the most recently used knowledge bases,
-# oldest first, keyed by (applicationId, kb_digest, sameAs predicate,
-# checkpoint mode). Eviction only drops the reference: nothing is unpersisted,
-# so a run still holding evicted artifacts keeps their blocks.
+# keyed by (applicationId, kb_digest, sameAs predicate, checkpoint mode) and
+# bounded by checkpointing.recent.
 _KB_REGISTRY: OrderedDict[tuple, KBArtifacts] = OrderedDict()
 KB_REGISTRY_SIZE = 2
 
@@ -76,21 +76,6 @@ def bucket_count(input_bytes: int) -> int:
     return min(MAX_BUCKETS, max(1, math.ceil(input_bytes / BUCKET_BYTES)))
 
 
-def _data_files(table: Path) -> list[Path]:
-    """A parquet table's data files: the path itself, or the files under it
-    that Spark reads (none of whose path parts starts with '_' or '.')."""
-    if table.is_file():
-        return [table]
-    files = sorted(
-        f
-        for f in table.rglob("*")
-        if f.is_file() and not any(p.startswith(("_", ".")) for p in f.relative_to(table).parts)
-    )
-    if not files:
-        raise FileNotFoundError(f"no parquet data file at {table}")
-    return files
-
-
 def kb_digest(data_dir: Path) -> str:
     """sha1 over the KB tables' data files: each file's path relative to
     ``data_dir`` and size, then its bytes. Every delta has its own data
@@ -98,7 +83,7 @@ def kb_digest(data_dir: Path) -> str:
     deltas; byte-identical KB tables do."""
     h = hashlib.sha1()
     for name in KB_TABLES:
-        for f in _data_files(data_dir / f"{name}.parquet"):
+        for f in storage.data_files(data_dir / f"{name}.parquet"):
             h.update(f"{f.relative_to(data_dir).as_posix()}\0{f.stat().st_size}\0".encode())
             with open(f, "rb") as fh:
                 for chunk in iter(lambda: fh.read(1 << 20), b""):
@@ -141,17 +126,6 @@ def run_pipeline(
         if checkpoint_mode == "reliable" and spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
             spark.sparkContext.setCheckpointDir(str(out / ".spark_checkpoints"))
 
-    def src(name: str) -> DataFrame:
-        # An input table shipped with a storage manifest (e.g. transcripts
-        # rewritten as a conv_id-bucketed table — the parquet stand-in for an
-        # Iceberg bucket(conv_id) partition transform at ingest) is read
-        # through the catalog so its partitioning reaches the planner; any
-        # other with its footer's schema (no schema-inference job).
-        if storage.stage_exists(data, f"{name}.parquet"):
-            return storage.read_stage(spark, data, f"{name}.parquet")
-        path = data / f"{name}.parquet"
-        return spark.read.schema(storage.footer_schema(_data_files(path)[0])).parquet(str(path))
-
     if from_stage is not None:
         idx = STAGES.index(from_stage)
         storage.invalidate_from(out, STAGES[idx:])
@@ -191,7 +165,7 @@ def run_pipeline(
     # row-group granularity, so the shuffle fallback remains for the degenerate
     # producer that wrote one giant row group.
     min_parallelism = spark.sparkContext.defaultParallelism
-    tfiles = _data_files(data / "transcripts.parquet")
+    tfiles = storage.data_files(data / "transcripts.parquet")
     total_bytes = sum(f.stat().st_size for f in tfiles)
     # an unreadable footer fails here, as Spark's scan of the same file would
     n_row_groups = sum(pq.ParquetFile(str(f)).metadata.num_row_groups for f in tfiles)
@@ -207,7 +181,7 @@ def run_pipeline(
     # and is restored on exit so reads on the shared session afterward
     # (arbitrarily larger or smaller tables) plan splits from their own default.
     try:
-        transcripts = src("transcripts")
+        transcripts = storage.read_input(spark, data, "transcripts")
         in_bucketing = (
             storage.read_manifest(data, "transcripts.parquet").get("spark_bucketed")
             if storage.stage_exists(data, "transcripts.parquet")
@@ -228,16 +202,16 @@ def run_pipeline(
                 cfg.sameas_pred,
                 checkpointing.checkpoint_mode(),
             )
-            kb = _KB_REGISTRY.pop(key, None)
-            if kb is None:
+
+            def build() -> KBArtifacts:
                 spark.sparkContext.setJobGroup("reden-kb", "KB artifacts")
                 try:
-                    kb = build_kb(*(src(name) for name in KB_TABLES), cfg.sameas_pred)
+                    tables = [storage.read_input(spark, data, name) for name in KB_TABLES]
+                    return build_kb(*tables, cfg.sameas_pred)
                 finally:
                     spark.sparkContext.setJobGroup("", "")
-            _KB_REGISTRY[key] = kb
-            while len(_KB_REGISTRY) > KB_REGISTRY_SIZE:
-                _KB_REGISTRY.popitem(last=False)
+
+            kb = checkpointing.recent(_KB_REGISTRY, key, build, KB_REGISTRY_SIZE)
             timings["kb"] = time.time() - t0
 
         # Turn-grain checkpoints (mentions, candidates, links) are Spark-native
@@ -314,7 +288,7 @@ def run_pipeline(
         gold_path = data / "gold_links.parquet"
         if gold_path.exists():
             def compute_metrics() -> DataFrame:
-                records = eval_records(src("gold_links"), links, candidates)
+                records = eval_records(storage.read_input(spark, data, "gold_links"), links, candidates)
                 return hachey_metrics(records)
 
             result["metrics"] = stage("metrics", compute_metrics)
@@ -332,9 +306,6 @@ def run_pipeline(
 
 
 def main() -> None:
-    import sys
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
     from reden_spark.datagen import BASE_PREFIX
     from reden_spark.session import get_spark
 

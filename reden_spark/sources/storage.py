@@ -166,6 +166,35 @@ def footer_schema(data_file: str | Path) -> StructType:
     return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
 
 
+def data_files(table: Path) -> list[Path]:
+    """A parquet table's data files: the path itself, or the files under it
+    that Spark reads (none of whose path parts starts with '_' or '.')."""
+    if table.is_file():
+        return [table]
+    files = sorted(
+        f
+        for f in table.rglob("*")
+        if f.is_file() and not any(p.startswith(("_", ".")) for p in f.relative_to(table).parts)
+    )
+    if not files:
+        raise FileNotFoundError(f"no parquet data file at {table}")
+    return files
+
+
+def read_input(spark: SparkSession, data_dir: str | Path, name: str) -> DataFrame:
+    """The input table ``<data_dir>/<name>.parquet``, read without a
+    schema-inference job. A table shipped with a storage manifest (e.g.
+    transcripts rewritten as a conv_id-bucketed table, the parquet stand-in
+    for an Iceberg bucket(conv_id) partition transform at ingest) is read
+    through :func:`read_stage`, so its partitioning reaches the planner; any
+    other with its footer's schema."""
+    data = Path(data_dir)
+    if stage_exists(data, f"{name}.parquet"):
+        return read_stage(spark, data, f"{name}.parquet")
+    path = data / f"{name}.parquet"
+    return spark.read.schema(footer_schema(data_files(path)[0])).parquet(str(path))
+
+
 def read_stage(spark: SparkSession, out_dir: str | Path, name: str) -> DataFrame:
     """A stage table, read with the schema its manifest recorded (Spark runs no
     schema-inference job); without a readable manifest, Spark infers it."""

@@ -1,7 +1,6 @@
-"""Dictionary-build job (plans/dico_build.py) + TSV source/sink round-trip."""
+"""Dictionary-build job (plans/dico_build.py)."""
 
 from reden_spark.plans.dico_build import build_bne_dico, build_dico
-from reden_spark.sources.dico_tsv import read_dico_tsv, write_dico_tsv
 
 
 def test_build_dico_rules(spark, tables):
@@ -143,16 +142,6 @@ def test_build_dbpediafr_person_dico_rules(spark):
     assert list(p2.uris) == ["http://fr.dbpedia.org/resource/p2"]
 
 
-def test_dico_tsv_roundtrip(spark, tables, tmp_path):
-    dico = build_dico(tables["kb_persons"]).drop("letter")
-    p = str(tmp_path / "dico_tsv")
-    write_dico_tsv(dico, p)
-    back = read_dico_tsv(spark, p, ne_type="PER")
-    a = {(r.alias, r.name, tuple(r.uris)) for r in dico.collect()}
-    b = {(r.alias, r.name, tuple(r.uris)) for r in back.collect()}
-    assert a == b
-
-
 def test_build_place_dico_merges_multi_row_dumps(spark):
     """A place arriving as several SPARQL result rows (one per OPTIONAL
     alt-label / sameAs binding) folds into per-URI sets: every alias row of the
@@ -183,27 +172,6 @@ def test_build_place_dico_merges_multi_row_dumps(spark):
 
     lyon = [r for r in out if "u2" in r.uris]
     assert len(lyon) == 1 and lyon[0].alias == "Lyon" and list(lyon[0].uris) == ["u2"]
-
-
-def test_dico_tsv_null_and_empty_robustness(spark, tmp_path):
-    """TSV sink/source edge cases: a null display name must not shift the URI
-    columns left (concat_ws skips nulls), and an empty uris array must not
-    round-trip as a phantom [''] group."""
-    d = spark.createDataFrame(
-        [
-            ("Hugo", None, ["http://a", "http://b"]),
-            ("Solo", "Name (x)", ["http://c"]),
-            ("Ghost", "G", []),
-        ],
-        "alias string, name string, uris array<string>",
-    )
-    path = str(tmp_path / "tsv")
-    write_dico_tsv(d, path)
-    back = {r.alias: r for r in read_dico_tsv(spark, path, ne_type="PER").collect()}
-    assert set(back) == {"Hugo", "Solo"}  # empty-uris row dropped, not phantom
-    assert back["Hugo"].name is None
-    assert list(back["Hugo"].uris) == ["http://a", "http://b"]  # no left shift
-    assert list(back["Solo"].uris) == ["http://c"]
 
 
 def test_build_place_dico_prefers_coordinate_bearing_binding(spark):

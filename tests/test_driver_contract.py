@@ -3,6 +3,9 @@ oracle_sql() DuckDB twin (row-count + column names + order-insensitive values),
 the same comparison the driver's CORRECTNESS gate performs (at sf0.01 there;
 sf0.001 here for speed, with one smoke run at sf0.01 for the KG family)."""
 
+from collections import OrderedDict
+from types import SimpleNamespace
+
 import duckdb
 import pytest
 
@@ -116,34 +119,55 @@ def test_pipeline_links_match_duckdb_twin(spark, duck, tmp_path):
     assert got == want
 
 
-def test_sfdir_lru_refreshes_on_cache_hits():
-    """A dir served purely from cache hits must stay most-recently-used: one
-    query on a new dir would otherwise sweep the HOT dir's checkpointed frames
-    out from under callers still holding them (runs last in this module — it
-    drains the contract caches, so earlier params keep their warm stack)."""
+@pytest.fixture
+def memo(monkeypatch):
+    """An empty contract memo and a settable per-directory fingerprint; no
+    Spark (the contract params above keep their own memo)."""
     from reden_spark import driver_contract as dc
 
-    for c in dc._ALL_CACHES:
-        for k in list(c):
-            dc._unpersist_frames(c.pop(k))
-    dc._SFDIR_LRU.clear()
+    fingerprints = {}
+    monkeypatch.setattr(dc, "_MEMO", OrderedDict())
+    monkeypatch.setattr(dc, "_sf_fingerprint", lambda sf_dir: fingerprints.get(sf_dir, ("fp",)))
+    return dc, fingerprints
 
-    class FakeDF:  # no unpersist(); _unpersist_frames swallows the error
-        pass
 
-    app = "app-lru-test"
-    dc._READ_CACHE[(app, "A", "docs", ("fp",))] = FakeDF()
-    dc._touch_sfdir("A")
-    dc._READ_CACHE[(app, "B", "docs", ("fp",))] = FakeDF()
-    dc._touch_sfdir("B")
-    dc._touch_sfdir("A")  # HIT on A — must refresh A's LRU slot
-    dc._READ_CACHE[(app, "C", "docs", ("fp",))] = FakeDF()
-    dc._touch_sfdir("C")  # bound=2 sweep: must drop B (LRU), never hot A
-    try:
-        assert any(k[1] == "A" for k in dc._READ_CACHE)
-        assert not any(k[1] == "B" for k in dc._READ_CACHE)
-        assert dc._SFDIR_LRU == ["C", "A"]
-    finally:
-        for c in dc._ALL_CACHES:
-            c.clear()
-        dc._SFDIR_LRU.clear()
+def _session(app):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+
+
+def test_sfdir_lru_refreshes_on_cache_hits(memo):
+    """A dir served purely from memo hits must stay most-recently-used: one
+    query on a new dir would otherwise evict the HOT dir's frames."""
+    dc, _ = memo
+    spark = _session("app-lru-test")
+    built = []
+
+    def read(sf_dir):
+        return dc._memo(spark, sf_dir, ("read", "docs"), lambda: built.append(sf_dir) or object())
+
+    a = read("A")
+    read("B")
+    assert read("A") is a  # HIT on A — must refresh A's LRU slot
+    read("C")  # bound 2: must evict B (LRU), never hot A
+    dirs = [key[1] for key in dc._MEMO]
+    assert "A" in dirs
+    assert "B" not in dirs
+    assert dirs == ["A", "C"]  # the bound is 2, oldest first
+    assert read("A") is a and built == ["A", "B", "C"]
+
+
+def test_memo_never_serves_a_stale_entry(memo):
+    """Regenerated files (a new fingerprint) and another application each
+    rebuild; neither is served the old entry, which ages out of the LRU."""
+    dc, fingerprints = memo
+
+    def stack(app):
+        return dc._memo(_session(app), "A", "stack", object)
+
+    old = stack("app-1")
+    fingerprints["A"] = ("regenerated",)
+    new = stack("app-1")
+    assert new is not old and stack("app-1") is new
+    other = stack("app-2")
+    assert other is not new and stack("app-2") is other
+    assert list(dc._MEMO) == [("app-1", "A", ("regenerated",)), ("app-2", "A", ("regenerated",))]

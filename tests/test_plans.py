@@ -182,12 +182,10 @@ def test_n_buckets_knob_plan_shape(spark, fixture_dir, tmp_path, n):
 
 
 def test_enrich_and_compare_ops(spark, tables, kb, fixture_dir):
-    import json
-
     from reden_spark.operators.candidates import conversation_cases
-    from reden_spark.operators.compare import paired_scores, population_completeness, result_diff, result_intersection
+    from reden_spark.operators.compare import population_completeness
     from reden_spark.operators.disambiguate import NELConfig
-    from reden_spark.operators.enrich import assign_property, geojson_feature_collection, occurrence_counts
+    from reden_spark.operators.enrich import assign_property, occurrence_counts
     from reden_spark.operators.grouped import disambiguate_grouped
 
     cfg = NELConfig(datagen.BASE_PREFIX, datagen.BASE_PREFIX)
@@ -205,17 +203,6 @@ def test_enrich_and_compare_ops(spark, tables, kb, fixture_dir):
     with_note = enriched.filter(F.col("note").isNotNull())
     assert with_note.count() > 0
     assert with_note.first().note.startswith("http://kb.test/res/note/")
-    pts = spark.createDataFrame([("e1", 48.85, 2.35)], "uri string, lat double, lon double")
-    fc = json.loads(geojson_feature_collection(pts))
-    assert fc["type"] == "FeatureCollection"
-    assert fc["features"][0]["geometry"]["coordinates"] == [2.35, 48.85]
-    assert fc["features"][0]["properties"]["uri"] == "e1"
-
-    inter = result_intersection(links, links)
-    assert inter.count() == links.select("conv_id", "turn_idx", "occ_idx", "mention").distinct().count()
-    assert result_diff(links, links).count() == 0
-    ps = paired_scores(links, links)
-    assert ps.filter(F.col("score_a") != F.col("score_b")).count() == 0
 
     gold = tables["gold_links"]
     kb_uris = tables["dico"].select(F.explode("uris").alias("uri"))
