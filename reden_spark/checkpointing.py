@@ -7,20 +7,19 @@ cross-join CSE, and ReusedExchange misses differently-pruned subplans. A lazy
 ``localCheckpoint`` is not an option either, because AQE submits the
 consuming stages concurrently and each re-executes the whole upstream.
 
-`localCheckpoint` blocks live in executor storage only, so on a
-multi-executor cluster an executor loss truncates lineage mid-job and the run
-cannot recover. One knob selects where the blocks go:
+Where the blocks go is read from the SparkContext, as Spark's own iterative
+algorithms decide it (MLlib ignores ``checkpointInterval`` when no checkpoint
+directory is set):
 
-* ``local``    (default) — `df.localCheckpoint`: fastest, executor-local
-  blocks, right for single-host runs and for clusters where a lost executor
-  may simply rerun the whole job.
-* ``reliable`` — `df.checkpoint`: blocks written to the fault-tolerant
-  checkpoint dir (`spark.sparkContext.setCheckpointDir`, HDFS/object store on
-  a real cluster). Survives executor loss; costs a write+read round trip.
-  The recommended mode for multi-executor deployments.
-
-Mode resolution: explicit `set_checkpoint_mode()` > `REDEN_CHECKPOINT_MODE`
-env var > "local".
+* no checkpoint directory (the default) — `df.localCheckpoint`: fastest,
+  executor-local blocks, right for single-host runs and for clusters where a
+  lost executor may simply rerun the whole job.
+* a checkpoint directory, set through ``spark.checkpoint.dir`` or
+  `spark.sparkContext.setCheckpointDir` (HDFS/object store on a real
+  cluster) — `df.checkpoint`: blocks written to fault-tolerant storage.
+  Survives executor loss; costs a write+read round trip. The setting for
+  multi-executor deployments, where a lost executor must not truncate
+  lineage mid-job.
 
 Checkpointed frames that a session reuses across runs (the pipeline's KB
 artifacts, the driver contract's per-directory stack) are memoized one way:
@@ -29,38 +28,15 @@ artifacts, the driver contract's per-directory stack) are memoized one way:
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-MODES = ("local", "reliable")
-
-_mode: str | None = None
-
-
-def set_checkpoint_mode(mode: str | None) -> None:
-    """Set the process-global checkpoint mode (None → re-read the env var)."""
-    global _mode
-    if mode is not None and mode not in MODES:
-        raise ValueError(f"checkpoint mode {mode!r} not in {MODES}")
-    _mode = mode
-
-
-def checkpoint_mode() -> str:
-    if _mode is not None:
-        return _mode
-    env = os.environ.get("REDEN_CHECKPOINT_MODE", "local")
-    if env not in MODES:
-        raise ValueError(f"REDEN_CHECKPOINT_MODE={env!r} not in {MODES}")
-    return env
-
 
 def shared(df: DataFrame) -> DataFrame:
     """Materialize a subtree consumed by several branches of ONE downstream
-    query: an eager :func:`checkpoint` under the configured mode, run on the
-    calling thread.
+    query: an eager :func:`checkpoint`, run on the calling thread.
 
     Why eager and serial, measured on a 4-core host over a 2,000-turn
     ``kg_delta`` delta (BENCH.md round 4 found the same at 32 cores on a
@@ -77,15 +53,10 @@ def shared(df: DataFrame) -> DataFrame:
 
 
 def checkpoint(df: DataFrame) -> DataFrame:
-    """Materialize a multi-consumed frame, eagerly, under the configured mode."""
-    if checkpoint_mode() == "local":
+    """Materialize a multi-consumed frame, eagerly: into the context's
+    checkpoint directory when one is set, else into executor-local blocks."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().checkpointDir().isEmpty():
-        raise RuntimeError(
-            "checkpoint mode 'reliable' needs spark.sparkContext.setCheckpointDir "
-            "(point it at fault-tolerant storage: HDFS/S3 on a cluster)"
-        )
     return df.checkpoint()
 
 

@@ -12,8 +12,9 @@ Plain neighbor-min propagation alone converges in O(diameter) rounds; the
 pointer-jumping step (label-of-label, Shiloach–Vishkin style) halves the
 distance to the component minimum each round, giving O(log(diameter)) rounds.
 Each round is two shuffles (neighbor groupBy + self-join); lineage is cut per
-round with localCheckpoint so the plan doesn't grow unboundedly. Exhausting
-max_iter without a fixpoint raises instead of silently returning wrong labels.
+round with checkpointing.checkpoint so the plan doesn't grow unboundedly.
+Exhausting max_iter without a fixpoint raises instead of silently returning
+wrong labels.
 """
 
 from __future__ import annotations
@@ -64,10 +65,18 @@ def _driver_union_find(rows, spark) -> DataFrame:
     return F.broadcast(spark.createDataFrame(out, "uri string, canonical string"))
 
 
+# Rounds between convergence probes of the distributed loop. A probe is a
+# driver-side count action (a whole job submission); labels only ever
+# decrease, so comparing against the labels of N rounds ago detects the
+# fixpoint just as soundly. Probing every 2nd round halves job-submission
+# overhead on deep graphs at the cost of at most one redundant (cheap,
+# already-converged) round.
+CHECK_EVERY = 2
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    check_every: int = 2,
     driver_max_edges: int | None = 500_000,
 ) -> DataFrame:
     """edges(a, b) undirected -> (uri, canonical) where canonical = min URI of the
@@ -82,13 +91,8 @@ def connected_components(
     collect. Larger graphs (10^8-entity KBs) spill past the limit and run the
     distributed pointer-jumping loop instead — the bounded head is discarded
     (at most n+1 driver rows either way). Pass None to force the distributed
-    path (tests exercise both).
-
-    ``check_every``: the convergence probe is a driver-side count action (a
-    whole job submission); labels only ever decrease, so comparing against the
-    labels of N rounds ago detects the fixpoint just as soundly. Probing every
-    2nd round halves job-submission overhead on deep graphs at the cost of at
-    most one redundant (cheap, already-converged) round."""
+    path (tests exercise both). The loop probes for its fixpoint every
+    ``CHECK_EVERY`` rounds."""
     if driver_max_edges is not None:
         # bounded probe = the collect itself: never pulls past the threshold
         head = edges.select("a", "b").limit(driver_max_edges + 1).collect()
@@ -129,7 +133,7 @@ def connected_components(
         )
         jumped = checkpoint(jumped)
         labels = jumped
-        if (it + 1) % max(1, check_every) == 0 or it == max_iter - 1:
+        if (it + 1) % CHECK_EVERY == 0 or it == max_iter - 1:
             changed = (
                 jumped.withColumnRenamed("label", "nl")
                 .join(check_base, "v")

@@ -118,16 +118,20 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) 
 _LAST_AUTO_SALT: int | None = None
 
 
-def auto_salt_for(max_band: int, cap: int, max_salt: int = 64) -> int:
+# Upper bound of the auto salt: the right side of the pair join is replicated
+# once per salt value, so its cost grows linearly with the salt.
+MAX_SALT = 64
+
+
+def auto_salt_for(max_band: int, cap: int) -> int:
     """Salt factor for the observed hottest band: 1 while every band fits the
     per-task comparison budget (cap^2 pairs), else enough salt to shrink the
-    hottest band's task back under it, bounded by max_salt (right-side
-    replication cost grows linearly with salt)."""
+    hottest band's task back under it, bounded by MAX_SALT."""
     if cap <= 0:
         raise ValueError(f"hot_band_cap must be positive, got {cap}")
     if max_band <= cap:
         return 1
-    return min(max_salt, -(-max_band // cap))
+    return min(MAX_SALT, -(-max_band // cap))
 
 
 def minhash_lsh_pairs(
@@ -136,29 +140,26 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.5,
-    salt: int | str = "auto",
     hot_band_cap: int = 10_000,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact Jaccard.
 
     rows-per-band r = n_hashes/bands; candidates = docs sharing any band key;
     output (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard >= threshold.
+    The defaults are the curation recipe (`plans/curation.run_curation`).
 
-    ``salt > 1`` is the hot-band guard for skewed corpora (e.g. one boilerplate
-    band shared by millions of docs): the left side of the pair join gets a
+    A hot-band guard for skewed corpora (e.g. one boilerplate band shared by
+    millions of docs) arms from data, not caller foresight: one cheap probe
+    over the banded ids (a map-side-combined groupBy().count() max on the
+    already-checkpointed signature frame) reads the hottest band size, and
+    auto_salt_for(max_band, hot_band_cap) picks the salt, recorded in
+    ``_LAST_AUTO_SALT``. With salt > 1 the left side of the pair join gets a
     deterministic salt ``xxhash64(doc_id) % salt`` and the right side is
     replicated to every salt value, so the candidate PAIR SET is unchanged
-    (each pair meets exactly once, at the left doc's salt) but a band of size B
-    fans out over `salt` tasks of ~B/salt x B instead of one B x B task. Pure
-    skew mitigation — identical results (pytest-pinned), `salt`x replication
-    cost on the right side.
-
-    ``salt="auto"`` (the default) arms the guard from data, not caller
-    foresight: one cheap probe over the banded ids (a map-side-combined
-    groupBy().count() max on the already-checkpointed signature frame) reads
-    the hottest band size and picks auto_salt_for(max_band, hot_band_cap) —
-    a 100 TB corpus discovers its boilerplate skew at runtime. Pass an int to
-    skip the probe (salt=1 pins the unsalted plan).
+    (each pair meets exactly once, at the left doc's salt) but a band of size
+    B fans out over `salt` tasks of ~B/salt x B instead of one B x B task.
+    Pure skew mitigation — identical results (pytest-pinned), `salt`x
+    replication cost on the right side.
     """
     r = n_hashes // bands
     # signatures are consumed 3x (banding + both sides of the verification
@@ -179,12 +180,9 @@ def minhash_lsh_pairs(
     # expensive anti-pattern this avoids
     left = banded.select(F.col("doc_id").alias("doc_a"), "band_key")
     right = banded.select(F.col("doc_id").alias("doc_b"), "band_key")
-    if salt == "auto":
-        global _LAST_AUTO_SALT
-        max_band = (
-            banded.groupBy("band_key").count().agg(F.max("count").alias("m")).first()["m"]
-        )
-        salt = _LAST_AUTO_SALT = auto_salt_for(int(max_band or 0), hot_band_cap)
+    global _LAST_AUTO_SALT
+    max_band = banded.groupBy("band_key").count().agg(F.max("count").alias("m")).first()["m"]
+    salt = _LAST_AUTO_SALT = auto_salt_for(int(max_band or 0), hot_band_cap)
     if salt > 1:
         left = left.withColumn("s", F.pmod(F.xxhash64("doc_a"), F.lit(salt)))
         right = right.withColumn("s", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<bigint>")))

@@ -16,7 +16,7 @@ DuckDB oracle, driver_contract.O_CURATION_PIPELINE):
 
 * pairs    — MinHash-LSH near-dup candidate pairs, exact-Jaccard verified
              (operators/dedup.minhash_lsh_pairs). The only corpus-quadratic
-             hazard of the whole recipe, banded + saltable.
+             hazard of the whole recipe, banded, with an auto hot-band salt.
 * clusters — transitive closure of the pair graph + keep-best-doc policy
              (operators/curation.dedup_clusters; reuses the KG
              connected-components operator).
@@ -66,16 +66,6 @@ def run_curation(
     data_dir: str | Path,
     out_dir: str | Path,
     from_stage: str | None = None,
-    n_hashes: int = 12,
-    shingle_n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.5,
-    holdout_fraction: float = 0.2,
-    stratum_col: str = "lang",
-    decontam_shingle_n: int = 8,
-    budget: int = 512,
-    n_shards: int = 8,
-    salt: int | str = "auto",
     hot_band_cap: int = 10_000,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the curation pipeline; returns the stage DataFrames.
@@ -86,6 +76,12 @@ def run_curation(
     table is what a real run does too — every downstream policy change
     (keep-policy, threshold sweeps) re-reads it instead of re-running the
     corpus-dominant shingle/signature pass.
+
+    The recipe is the operators' defaults, stated once in their signatures:
+    12 MinHash permutations over word 3-gram shingles in 4 bands, Jaccard
+    >= 0.5; a 20% holdout stratified on `lang`; decontamination on word
+    8-grams; packing into 512-token sequences over 8 shards. ``hot_band_cap``
+    is the pairs stage's per-band budget before its auto salt engages.
     """
     data = Path(data_dir)
     out = Path(out_dir)
@@ -114,21 +110,19 @@ def run_curation(
 
     pairs = stage(
         "pairs",
-        lambda: minhash_lsh_pairs(
-            docs, n_hashes, shingle_n, bands, threshold, salt=salt, hot_band_cap=hot_band_cap
-        ),
+        lambda: minhash_lsh_pairs(docs, hot_band_cap=hot_band_cap),
     )
     clusters = stage("clusters", lambda: dedup_clusters(docs, pairs))
     holdout_ids = stage(
         "holdout",
-        lambda: stratified_sample(docs, holdout_fraction, stratum_col).select("doc_id", "stratum"),
+        lambda: stratified_sample(docs).select("doc_id", "stratum"),
     )
 
     def compute_decontam() -> DataFrame:
         kept = clusters.filter("keep").select("doc_id")
         train = docs.join(kept, "doc_id", "left_semi").join(holdout_ids, "doc_id", "left_anti")
         holdout = docs.join(holdout_ids, "doc_id", "left_semi")
-        return decontaminate(train, holdout, decontam_shingle_n)
+        return decontaminate(train, holdout)
 
     decontam = stage("decontam", compute_decontam)
 
@@ -140,7 +134,7 @@ def run_curation(
             .join(holdout_ids, "doc_id", "left_anti")
             .join(clean_ids, "doc_id", "left_semi")
         )
-        return pack_sequences(clean, budget, n_shards).join(
+        return pack_sequences(clean).join(
             clusters.select("doc_id", "cluster_id", "cluster_size"), "doc_id"
         ).select(
             "doc_id", "cluster_id", "cluster_size", "shard", "n_tokens", "start_offset", "seq_idx"
@@ -169,15 +163,6 @@ def main() -> None:
     ap.add_argument(
         "--master", default=None, help="Spark master (default: spark-submit's --master, else local[*])"
     )
-    ap.add_argument("--holdout-fraction", type=float, default=0.2)
-    ap.add_argument("--budget", type=int, default=512)
-    ap.add_argument("--n-shards", type=int, default=8)
-    ap.add_argument(
-        "--salt",
-        type=lambda v: v if v == "auto" else int(v),
-        default="auto",
-        help="hot-band salt for skewed corpora; 'auto' (default) probes band sizes at runtime",
-    )
     ap.add_argument(
         "--hot-band-cap",
         type=int,
@@ -188,17 +173,7 @@ def main() -> None:
 
     spark = get_spark("reden-curation", master=a.master)
     t0 = time.time()
-    dfs = run_curation(
-        spark,
-        a.data_dir,
-        a.out_dir,
-        a.from_stage,
-        holdout_fraction=a.holdout_fraction,
-        budget=a.budget,
-        n_shards=a.n_shards,
-        salt=a.salt,
-        hot_band_cap=a.hot_band_cap,
-    )
+    dfs = run_curation(spark, a.data_dir, a.out_dir, a.from_stage, a.hot_band_cap)
     print(
         json.dumps(
             {

@@ -22,7 +22,9 @@ resumability contract. Launchable via spark-submit --py-files as
         --data-dir /root/testdata/... --out-dir /tmp/kg_out
 
 (or `python -m reden_spark.plans.pipeline ...` locally — the module runs both
-as a package member and as a bare script path).
+as a package member and as a bare script path). On a multi-executor cluster,
+add `--conf spark.checkpoint.dir=<DFS path>`: intra-stage checkpoints then
+survive a lost executor (checkpointing.py).
 """
 
 from __future__ import annotations
@@ -59,8 +61,8 @@ from reden_spark.sources import storage  # noqa: E402
 STAGES = ["mentions", "candidates", "links", "triples", "metrics"]
 
 # KB artifacts (operators/kb.py) of the most recently used knowledge bases,
-# keyed by (applicationId, kb_digest, sameAs predicate, checkpoint mode) and
-# bounded by checkpointing.recent.
+# keyed by (applicationId, kb_digest, sameAs predicate, checkpoint directory)
+# and bounded by checkpointing.recent.
 _KB_REGISTRY: OrderedDict[tuple, KBArtifacts] = OrderedDict()
 KB_REGISTRY_SIZE = 2
 
@@ -97,7 +99,6 @@ def run_pipeline(
     out_dir: str | Path,
     cfg: NELConfig,
     from_stage: str | None = None,
-    checkpoint_mode: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline; returns the stage DataFrames.
 
@@ -107,24 +108,16 @@ def run_pipeline(
     resumed run reuses the count its mentions checkpoint recorded, and
     otherwise :func:`bucket_count` sizes it from the transcripts' bytes.
 
-    ``checkpoint_mode``: local|reliable (checkpointing.py). 'reliable'
-    routes intra-stage materializations (the KB artifacts and the distributed
-    connected-components rounds of their build) through fault-tolerant
-    `df.checkpoint` — the multi-executor-cluster setting, where a lost
-    executor must not truncate lineage mid-stage. The mode is part of the
-    KB-artifact key, so a reliable run never reuses executor-local blocks.
-    When no checkpoint dir is configured yet, one is created under
-    <out_dir>/.spark_checkpoints (point spark.sparkContext.setCheckpointDir
-    at DFS storage on a real cluster before calling for a different
-    location)."""
+    Intra-stage materializations (the KB artifacts and the distributed
+    connected-components rounds of their build) go through
+    `checkpointing.checkpoint`: fault-tolerant `df.checkpoint` when the
+    SparkContext has a checkpoint directory (``spark.checkpoint.dir``, on
+    DFS storage for a multi-executor cluster), else `localCheckpoint`. The
+    directory is part of the KB-artifact key, so a reliable run never reuses
+    executor-local blocks."""
     data = Path(data_dir)
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-
-    if checkpoint_mode is not None:
-        checkpointing.set_checkpoint_mode(checkpoint_mode)
-        if checkpoint_mode == "reliable" and spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
-            spark.sparkContext.setCheckpointDir(str(out / ".spark_checkpoints"))
 
     if from_stage is not None:
         idx = STAGES.index(from_stage)
@@ -200,7 +193,7 @@ def run_pipeline(
                 spark.sparkContext.applicationId,
                 kb_digest(data),
                 cfg.sameas_pred,
-                checkpointing.checkpoint_mode(),
+                spark.sparkContext.getCheckpointDir(),
             )
 
             def build() -> KBArtifacts:
@@ -340,13 +333,6 @@ def main() -> None:
         help="reference-shaped config.properties file (MainNELApp.java:105-123); "
         "maps the 16 keys onto NELConfig, logs dropped knobs; explicit CLI flags win",
     )
-    ap.add_argument(
-        "--checkpoint-mode",
-        choices=["local", "reliable"],
-        default=None,
-        help="intra-stage materialization mode (checkpointing.py): local blocks (default) "
-        "or fault-tolerant df.checkpoint (multi-executor clusters)",
-    )
     a = ap.parse_args()
 
     spark = get_spark("reden-pipeline", master=a.master)
@@ -376,7 +362,7 @@ def main() -> None:
             crawl_sameas=a.crawl_sameas,
         )
     t0 = time.time()
-    dfs = run_pipeline(spark, a.data_dir, a.out_dir, cfg, a.from_stage, checkpoint_mode=a.checkpoint_mode)
+    dfs = run_pipeline(spark, a.data_dir, a.out_dir, cfg, a.from_stage)
     n_links = dfs["links"].count()
     n_triples = dfs["triples"].count()
     print(json.dumps({"elapsed_sec": time.time() - t0, "links": n_links, "triples": n_triples}))

@@ -41,7 +41,6 @@ CODEGEN_CACHE_ENTRIES = 1000
 def get_spark(
     app_name: str = "reden-spark",
     master: str | None = None,
-    shuffle_partitions: int = SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
@@ -52,7 +51,7 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

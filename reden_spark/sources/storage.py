@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from pathlib import Path
 
@@ -27,8 +28,8 @@ from pyspark.sql.types import StructType
 
 MANIFEST = "_reden_manifest.json"
 
-
-_BUCKET_FILE_RE = None
+# the `_NNNNN` bucket-id suffix of a Spark bucketed-table data file
+_BUCKET_FILE_RE = re.compile(r"_(\d{5})(?:\.c\d+)?$")
 
 
 def _lineage_from_footers(out: Path) -> list[dict]:
@@ -36,13 +37,7 @@ def _lineage_from_footers(out: Path) -> list[dict]:
     Buckets appear as hive-style `bucket=N` directories or as the `_NNNNN`
     suffix of Spark bucketed-table files; unbucketed tables get one counter
     per file."""
-    import re
-
     import pyarrow.parquet as pq
-
-    global _BUCKET_FILE_RE
-    if _BUCKET_FILE_RE is None:
-        _BUCKET_FILE_RE = re.compile(r"_(\d{5})(?:\.c\d+)?$")
 
     counts: dict[str, int] = {}
     for f in sorted(out.rglob("*.parquet")):
@@ -66,7 +61,6 @@ def _ckpt_table_name(out_dir: str | Path, name: str) -> str:
     unique per (out_dir, stage) so concurrent pipelines in one session never
     collide."""
     import hashlib
-    import re
 
     h = hashlib.md5(str(Path(out_dir).resolve()).encode()).hexdigest()[:8]
     return f"reden_ckpt_{re.sub(r'[^A-Za-z0-9_]', '_', name)}_{h}"
@@ -197,12 +191,11 @@ def read_input(spark: SparkSession, data_dir: str | Path, name: str) -> DataFram
 
 def read_stage(spark: SparkSession, out_dir: str | Path, name: str) -> DataFrame:
     """A stage table, read with the schema its manifest recorded (Spark runs no
-    schema-inference job); without a readable manifest, Spark infers it."""
-    try:
-        manifest = read_manifest(out_dir, name)
-    except (OSError, json.JSONDecodeError):
-        manifest = {}
-    schema = StructType.fromJson(manifest["schema"]) if "schema" in manifest else None
+    schema-inference job). A missing or unreadable manifest raises: every
+    caller reads a stage whose manifest exists, and the manifest write is
+    atomic."""
+    manifest = read_manifest(out_dir, name)
+    schema = StructType.fromJson(manifest["schema"])
     sb = manifest.get("spark_bucketed")
     if sb:
         # Re-register the bucketed table from the manifest (the in-memory
@@ -219,13 +212,11 @@ def read_stage(spark: SparkSession, out_dir: str | Path, name: str) -> DataFrame
             f"LOCATION '{Path(out_dir).resolve() / name}'"
         )
         return spark.table(tname)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(str(Path(out_dir) / name))
+    df = spark.read.schema(schema).parquet(str(Path(out_dir) / name))
     # drop the synthetic partition column only when THIS module added it: a
     # manifest that recorded an unbucketed write means user data owns the
-    # column. Without the key (pre-flag manifests) only bucketed stages
-    # carried it, so a missing key or manifest counts as bucketed.
-    if "bucket" in df.columns and manifest.get("bucketed", True):
+    # column.
+    if manifest["bucketed"]:
         df = df.drop("bucket")
     return df
 

@@ -11,7 +11,7 @@ from reden_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("reden-tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("reden-tests", master="local[4]", extra_conf={"spark.sql.shuffle.partitions": "4"})
     yield s
     s.stop()
 

@@ -76,14 +76,17 @@ def test_minhash_lsh_pairs_vs_duckdb(docs, duck):
 
 def test_minhash_salt_preserves_pairs(docs):
     """salt>1 redistributes hot bands across tasks but must not change the
-    candidate pair set."""
+    candidate pair set. A one-doc band budget forces the salt."""
+    from reden_spark.operators import dedup
     from reden_spark.operators.dedup import minhash_lsh_pairs
 
     base = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()}
+    assert dedup._LAST_AUTO_SALT == 1
     salted = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5, salt=4).collect()
+        for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5, hot_band_cap=1).collect()
     }
+    assert dedup._LAST_AUTO_SALT > 1
     assert base == salted and len(base) > 0
 
 
@@ -234,16 +237,16 @@ def test_null_text_behaves_as_empty(spark):
 
 
 def test_minhash_auto_salt_engages_on_boilerplate(spark):
-    """A boilerplate-heavy corpus must arm the hot-band salt WITHOUT any caller
-    flag (salt='auto' is the default) and the pair set must equal the unsalted
-    plan's exactly (VERDICT r4 task #5)."""
+    """A boilerplate-heavy corpus must arm the hot-band salt from its band
+    sizes alone, and the pair set must equal the unsalted plan's exactly
+    (VERDICT r4 task #5)."""
     from reden_spark.operators import dedup
     from reden_spark.operators.dedup import auto_salt_for, minhash_lsh_pairs
 
     # pure-function decision rule
     assert auto_salt_for(100, cap=10_000) == 1
     assert auto_salt_for(10_001, cap=10_000) == 2
-    assert auto_salt_for(1_000_000, cap=10_000) == 64  # bounded
+    assert auto_salt_for(1_000_000, cap=10_000) == dedup.MAX_SALT == 64  # bounded
     with pytest.raises(ValueError, match="hot_band_cap"):
         auto_salt_for(5, cap=0)  # CLI-reachable misconfiguration
 
@@ -255,9 +258,9 @@ def test_minhash_auto_salt_engages_on_boilerplate(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    base = sorted(
-        map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5, salt=1).collect())
-    )
+    # the default budget holds the 120-doc band: unsalted plan
+    base = sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()))
+    assert dedup._LAST_AUTO_SALT == 1
     auto = sorted(
         map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5, hot_band_cap=50).collect())
     )

@@ -1,12 +1,20 @@
 """Checkpoint/resume: identical final output when restarting from any stage."""
 
 import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+from pyspark.find_spark_home import _find_spark_home
 
 from reden_spark import datagen
 from reden_spark.operators.disambiguate import NELConfig
 from reden_spark.plans.pipeline import run_pipeline
 from reden_spark.sources import storage
 
+ROOT = Path(__file__).resolve().parents[1]
 CFG = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)
 
 
@@ -35,37 +43,61 @@ def test_resume_from_each_stage(spark, fixture_dir, tmp_path):
     assert storage.read_manifest(out, "mentions")["written_at"] == manifests["mentions"]
 
 
-def test_reliable_checkpoint_mode_same_output(spark, fixture_dir, tmp_path, monkeypatch):
-    """The fault-tolerant checkpoint mode (df.checkpoint to a checkpoint dir —
-    the multi-executor-cluster setting where localCheckpoint blocks would die
-    with a lost executor) must produce byte-identical triples. Also pins that
-    the mode actually engaged: the checkpoint dir holds RDD blocks. The
-    pipeline's intra-stage materializations are the KB artifacts and the
-    distributed connected-components loop of their build, which a KB-sized
-    equivalence graph skips, so the reliable run forces that path (the
-    artifacts are keyed by the mode, so the reliable run builds its own)."""
-    import functools
-
-    from reden_spark import checkpointing
-    from reden_spark.operators import canonicalize
-
-    base = run_pipeline(spark, fixture_dir, tmp_path / "kg_local", CFG)
-    baseline = _triples(base)
-    monkeypatch.setattr(
-        canonicalize,
-        "connected_components",
-        functools.partial(canonicalize.connected_components, driver_max_edges=None),
+def test_checkpoint_dir_same_output(spark, fixture_dir, tmp_path):
+    """A context with a checkpoint directory (``spark.checkpoint.dir`` — the
+    multi-executor-cluster setting, where localCheckpoint blocks would die with
+    a lost executor) checkpoints reliably and must produce byte-identical
+    triples. Also pins that reliable checkpointing engaged: the directory holds
+    RDD blocks. The pipeline's intra-stage materializations are the KB
+    artifacts and the distributed connected-components loop of their build,
+    which a KB-sized equivalence graph skips, so the script forces that path.
+    The run gets its own spark-submit context, so no directory leaks into the
+    session every other test shares."""
+    ckdir = tmp_path / "ck"
+    got = tmp_path / "triples.json"
+    script = tmp_path / "reliable_run.py"
+    script.write_text(
+        "import functools, json, sys\n"
+        "from reden_spark import datagen\n"
+        "from reden_spark.operators import canonicalize\n"
+        "from reden_spark.operators.disambiguate import NELConfig\n"
+        "from reden_spark.plans.pipeline import run_pipeline\n"
+        "from reden_spark.session import get_spark\n"
+        "canonicalize.connected_components = functools.partial(\n"
+        "    canonicalize.connected_components, driver_max_edges=None)\n"
+        "cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)\n"
+        "spark = get_spark()\n"
+        "dfs = run_pipeline(spark, sys.argv[1], sys.argv[2], cfg)\n"
+        "rows = sorted([r.subj, r.pred, r.obj] for r in dfs['triples'].collect())\n"
+        "open(sys.argv[3], 'w').write(json.dumps(rows))\n"
+        "spark.stop()\n"
     )
-    try:
-        rel = run_pipeline(
-            spark, fixture_dir, tmp_path / "kg_rel", CFG, checkpoint_mode="reliable"
-        )
-        assert _triples(rel) == baseline
-        ckdir = tmp_path / "kg_rel" / ".spark_checkpoints"
-        assert any(ckdir.rglob("rdd-*")), "reliable mode never wrote a checkpoint block"
-    finally:
-        checkpointing.set_checkpoint_mode(None)
-        # leave the session's checkpoint dir harmlessly set (session-scoped)
+    paths = [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(paths), PYSPARK_PYTHON=sys.executable)
+    submit = Path(_find_spark_home()) / "bin" / "spark-submit"
+    out = subprocess.run(
+        [
+            str(submit),
+            "--master",
+            "local[2]",
+            "--conf",
+            f"spark.checkpoint.dir={ckdir}",
+            str(script),
+            str(fixture_dir),
+            str(tmp_path / "kg_rel"),
+            str(got),
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+
+    baseline = _triples(run_pipeline(spark, fixture_dir, tmp_path / "kg_local", CFG))
+    assert [tuple(r) for r in json.loads(got.read_text())] == baseline
+    assert any(ckdir.rglob("rdd-*")), "a checkpoint directory was set but no reliable block was written"
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_bucketed_input_same_output(spark, fixture_dir, bucketed_fixture_dir, tmp_path):
@@ -122,6 +154,21 @@ def test_bucket_count_follows_input_bytes(spark, fixture_dir, tmp_path, monkeypa
     assert _triples(redo) == baseline
     assert n_of(big, "links") == want_n
     assert {int(b.split("=")[1]) for b in triple_buckets(big)} <= set(range(want_n))
+
+
+def test_read_stage_fails_without_its_manifest(spark, fixture_dir, tmp_path):
+    """A stage's manifest carries its schema and layout, so read_stage raises
+    on a corrupt or missing one instead of inferring a schema and reading a
+    bucketed stage as plain parquet."""
+    df = spark.read.parquet(str(fixture_dir / "transcripts.parquet"))
+    storage.write_stage(df, tmp_path, "stage", spark_bucket_col="conv_id", n_buckets=2)
+    manifest = tmp_path / "stage" / storage.MANIFEST
+    manifest.write_text(manifest.read_text()[:40])
+    with pytest.raises(json.JSONDecodeError):
+        storage.read_stage(spark, tmp_path, "stage")
+    manifest.unlink()
+    with pytest.raises(FileNotFoundError):
+        storage.read_stage(spark, tmp_path, "stage")
 
 
 def test_lineage_counters(spark, fixture_dir, tmp_path):
