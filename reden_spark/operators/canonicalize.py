@@ -19,6 +19,7 @@ wrong labels.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,10 +37,10 @@ def _driver_union_find(rows, spark) -> DataFrame:
     they are almost always under the threshold. Semantics identical: canonical
     = min URI of the component.
 
-    The map is returned under a broadcast hint: a driver-built frame reaches
-    the planner as a statistics-less RDD scan, so without the hint every join
-    against it plans a sort-merge join with two exchanges. Its size is bounded
-    by the ``driver_max_edges`` collect that produced it."""
+    The map goes to Spark as an Arrow table, so it plans as a local relation:
+    its consumers run no Python worker, and the planner sees its true size
+    (bounded by the ``driver_max_edges`` collect that produced it) when it
+    picks a join strategy."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -58,11 +59,12 @@ def _driver_union_find(rows, spark) -> DataFrame:
     verts = {v for r in rows for v in (r[0], r[1])}
     for v in verts:
         members.setdefault(find(v), []).append(v)
-    out = []
+    uris, canonicals = [], []
     for group in members.values():
-        canonical = min(group)
-        out.extend((v, canonical) for v in group)
-    return F.broadcast(spark.createDataFrame(out, "uri string, canonical string"))
+        uris.extend(group)
+        canonicals.extend([min(group)] * len(group))
+    table = pa.table({"uri": pa.array(uris, pa.string()), "canonical": pa.array(canonicals, pa.string())})
+    return spark.createDataFrame(table)
 
 
 # Rounds between convergence probes of the distributed loop. A probe is a
@@ -222,9 +224,10 @@ def materialize_triples(
 
     Both lookups are broadcast: the entity-combination mapping, whose
     distinct winning URI-combinations fit in an executor for every corpus
-    this repo runs, and the canonical map, whose checkpoint carries no usable
-    size estimate (a KB past ``connected_components``' driver threshold would
-    want a shuffle join here instead).
+    this repo runs, and the canonical map, whose checkpoint carries a real
+    size estimate only when it came from the driver union-find (a KB past
+    ``connected_components``' driver threshold would want a shuffle join here
+    instead).
 
     ``bucket_into=n`` attaches the output table's `bucket` partition column
     WITHOUT a full-output shuffle on a hashed key (round-2 profile: 310 MB, the largest remaining turn-grain movement):

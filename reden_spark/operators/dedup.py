@@ -5,12 +5,17 @@ shares.
 
 Engine-portability note: hash primitives are md5 hex strings (identical in Spark
 and DuckDB), so every operator has an exact DuckDB oracle. All operators are
-pure DataFrame expressions (whole-stage codegen; no Python in the hot path).
+pure DataFrame expressions, with no Python in the hot path. The per-shingle
+digest and the MinHash permutations run in whole-stage generated code (an
+explode and one hash aggregate); the shingle builder :func:`word_shingles`
+stays a SQL lambda chain, which Spark interprets (``transform`` has no
+generated code).
 
-Scale notes: MinHash signatures are embarrassingly parallel; the only shuffle
-is the band-bucket join (self-join on band_key, quadratic ONLY within a bucket
-— that is the point of banding), and the auto salt spreads a hot band over
-several tasks (see :func:`minhash_lsh_pairs`).
+Scale notes: MinHash signatures are a per-document aggregate; the band-bucket
+join is a self-join on band_key, quadratic ONLY within a bucket (that is the
+point of banding). The auto salt spreads a hot band over several tasks, and
+the exact-Jaccard check runs on as many tasks as the candidate-pair bound
+asks for (see :func:`minhash_lsh_pairs`).
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpointing import shared
+from ..checkpointing import checkpoint, shared
 
 
 def norm_text(col):
@@ -76,8 +81,8 @@ MINHASH_P = 2_147_483_647  # 2^31 - 1
 
 
 def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) -> DataFrame:
-    """(doc_id, sig array<bigint>): one base hash per shingle, n_hashes
-    arithmetic permutations of it.
+    """(doc_id, shingles, sig array<bigint>): one base hash per shingle,
+    n_hashes arithmetic permutations of it.
 
         b(s)   = bigint(md5(s)[0:15 hex]) mod P          (P = 2^31-1)
         sig[h] = min over shingles of ((1 + h*1000003)*b(s) + 12345 + h*7919) mod P
@@ -85,31 +90,36 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) 
     The permutation family replaces the earlier md5-per-(hash, shingle)
     formula: the digest pass over the corpus — the dominant cost of dedup at
     scale — runs once instead of n_hashes times (measured ~3x on the sf0.1
-    contract corpus), and the permutations are whole-stage-codegen integer
-    arithmetic. Multiplier (<2^24) x base (<2^31) stays well inside bigint.
-    The DuckDB oracles state the identical formula
+    contract corpus). Multiplier (<2^24) x base (<2^31) stays well inside
+    bigint. The DuckDB oracles state the identical formula
     (('0x' || substr(md5(s),1,15))::BIGINT on that side — verified equal to
     Spark's conv(substring(md5(s),1,15),16,10)).
 
+    The shingles are exploded to one row per (doc, shingle), and the n_hashes
+    minima are one hash aggregate by doc_id, joined back onto the shingle
+    frame. Explode, digest and aggregate all run in whole-stage generated
+    code; as nested ``transform`` lambdas over the shingle array they were
+    interpreted, n_hashes x n_shingles lambda calls per document. The shingle
+    frame feeds both sides of that join, so it is checkpointed once. doc_id
+    is the documents' key.
+
     Empty-shingle docs get no row and are excluded.
     """
-    sh = _fan_out(docs).select(
-        "doc_id", "text", word_shingles(F.col("text"), shingle_n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    # hv as its own projection step: inlining the digest inside the per-h
-    # lambda would re-run the md5 pass n_hashes times (Catalyst does not hoist
-    # the common subexpression out of a nested transform)
-    sh = sh.withColumn(
-        "hv",
-        F.expr(
-            f"transform(shingles, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MINHASH_P}L)"
-        ),
+    sh = checkpoint(
+        _fan_out(docs)
+        .select("doc_id", word_shingles(F.col("text"), shingle_n).alias("shingles"))
+        .filter(F.size("shingles") > 0)
     )
-    sig = F.expr(
-        f"transform(sequence(0, {n_hashes - 1}), "
-        f"h -> array_min(transform(hv, b -> ((1 + h*1000003) * b + 12345 + h*7919) % {MINHASH_P}L)))"
+    base = sh.select("doc_id", F.explode("shingles").alias("s")).select(
+        "doc_id", F.expr(f"cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint) % {MINHASH_P}L").alias("b")
     )
-    return sh.select("doc_id", "shingles", sig.alias("sig"))
+    mins = [
+        F.expr(f"min(({1 + h * 1000003} * b + {12345 + h * 7919}) % {MINHASH_P}L)").alias(f"m{h}")
+        for h in range(n_hashes)
+    ]
+    sig = base.groupBy("doc_id").agg(*mins)
+    sig = sig.select("doc_id", F.array(*(f"m{h}" for h in range(n_hashes))).alias("sig"))
+    return sh.join(sig, "doc_id").select("doc_id", "shingles", "sig")
 
 
 # last auto-salt decision (observability hook for tests and operators: a
@@ -132,6 +142,14 @@ def auto_salt_for(max_band: int, cap: int) -> int:
     if max_band <= cap:
         return 1
     return min(MAX_SALT, -(-max_band // cap))
+
+
+# Candidate pairs per task of the exact-Jaccard check, and the most tasks it
+# gets. The pair shuffle is a few MB at most, so AQE would coalesce it into one
+# partition; the check is CPU-bound (one array_intersect per pair), so its
+# width comes from the pair bound the band probe reads, not from the host.
+PAIRS_PER_TASK = 10_000
+MAX_CHECK_TASKS = 64
 
 
 def minhash_lsh_pairs(
@@ -160,6 +178,12 @@ def minhash_lsh_pairs(
     B fans out over `salt` tasks of ~B/salt x B instead of one B x B task.
     Pure skew mitigation — identical results (pytest-pinned), `salt`x
     replication cost on the right side.
+
+    The same probe sums C(B, 2) over the bands, an upper bound on the
+    candidate pairs, and the distinct pairs are repartitioned into
+    ceil(bound / PAIRS_PER_TASK) tasks, at most MAX_CHECK_TASKS, before the
+    exact-Jaccard check. Shingle arrays are distinct, so
+    |a ∪ b| = |a| + |b| - |a ∩ b| and one array_intersect per pair gives both.
     """
     r = n_hashes // bands
     # signatures are consumed 3x (banding + both sides of the verification
@@ -181,8 +205,14 @@ def minhash_lsh_pairs(
     left = banded.select(F.col("doc_id").alias("doc_a"), "band_key")
     right = banded.select(F.col("doc_id").alias("doc_b"), "band_key")
     global _LAST_AUTO_SALT
-    max_band = banded.groupBy("band_key").count().agg(F.max("count").alias("m")).first()["m"]
-    salt = _LAST_AUTO_SALT = auto_salt_for(int(max_band or 0), hot_band_cap)
+    probe = (
+        banded.groupBy("band_key")
+        .count()
+        .agg(F.max("count").alias("m"), F.expr("sum(count * (count - 1) div 2)").alias("bound"))
+        .first()
+    )
+    salt = _LAST_AUTO_SALT = auto_salt_for(int(probe["m"] or 0), hot_band_cap)
+    check_tasks = max(1, min(MAX_CHECK_TASKS, -(-int(probe["bound"] or 0) // PAIRS_PER_TASK)))
     if salt > 1:
         left = left.withColumn("s", F.pmod(F.xxhash64("doc_a"), F.lit(salt)))
         right = right.withColumn("s", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<bigint>")))
@@ -190,17 +220,26 @@ def minhash_lsh_pairs(
     else:
         join_keys = ["band_key"]
     pairs = (
-        left.join(right, join_keys).filter(F.col("doc_a") < F.col("doc_b")).select("doc_a", "doc_b").distinct()
+        left.join(right, join_keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+        .repartition(check_tasks)
     )
     sh = sigs.select("doc_id", "shingles")
     pairs = (
         pairs.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")), "doc_a")
         .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")), "doc_b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    # one array_intersect per pair: as the output of a Generate, the
+    # intersection size is a column the Jaccard filter cannot be pushed
+    # below. Inlined into the join condition it ran twice per pair, because
+    # generated join conditions share no subexpressions.
+    inter = F.explode(F.array(F.size(F.array_intersect("sh_a", "sh_b")))).alias("inter")
+    union = F.size("sh_a") + F.size("sh_b") - F.col("inter")
     return (
-        pairs.withColumn("jaccard", F.round(inter.cast("double") / union, 6))
+        pairs.select("doc_a", "doc_b", "sh_a", "sh_b", inter)
+        .withColumn("jaccard", F.round(F.col("inter").cast("double") / union, 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )

@@ -5,7 +5,8 @@ caller passes one: spark-submit's ``--master``, or else ``local[*]``. Shuffle
 and spill scratch is Spark's own choice too: ``SPARK_LOCAL_DIRS`` when set,
 else ``java.io.tmpdir``. The driver heap is ``SPARK_DRIVER_MEM`` when set, else
 a fixed 4g. Spark's generated-class cache holds ``CODEGEN_CACHE_ENTRIES``
-classes, so a warm job reuses the code its first run compiled.
+classes, so a warm job reuses the code its first run compiled. Reliable
+checkpoint files are cleaned up with the frames that wrote them.
 """
 
 from __future__ import annotations
@@ -68,6 +69,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # with a checkpoint directory set, reliable checkpoint files are
+        # deleted once their frame is garbage-collected (Spark keeps them by
+        # default): dropped KB artifacts and finished connected-components
+        # rounds would otherwise pile up rdd-* directories there
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

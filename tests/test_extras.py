@@ -74,6 +74,23 @@ def test_minhash_lsh_pairs_vs_duckdb(docs, duck):
     assert got == want
 
 
+def test_minhash_signatures_match_python(docs):
+    """Every signature equals the formula recomputed in plain Python: the
+    first 15 hex digits of each shingle's md5 mod P, then the 12 permutation
+    minima. The pair-set oracles would miss a wrong signature that still
+    yields the fixture's pairs."""
+    import hashlib
+
+    from reden_spark.operators.dedup import MINHASH_P, minhash_signatures
+
+    rows = minhash_signatures(docs).collect()
+    assert len(rows) > 100
+    for r in rows:
+        bs = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % MINHASH_P for s in r["shingles"]]
+        want = [min(((1 + h * 1000003) * b + 12345 + h * 7919) % MINHASH_P for b in bs) for h in range(12)]
+        assert r["sig"] == want, r["doc_id"]
+
+
 def test_minhash_salt_preserves_pairs(docs):
     """salt>1 redistributes hot bands across tasks but must not change the
     candidate pair set. A one-doc band budget forces the salt."""
@@ -236,6 +253,16 @@ def test_null_text_behaves_as_empty(spark):
     assert set(by_id(minhash_signatures(docs))) == {3}
 
 
+def _boilerplate_docs(spark):
+    """120 boilerplate clones (one giant band) + 60 distinct docs (ids >= 1000)."""
+    rows = [(i, "shared boilerplate header repeated across the corpus body") for i in range(120)]
+    rows += [
+        (1000 + i, f"unique document number {i} with its own words alpha{i} beta{i} gamma{i}")
+        for i in range(60)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_minhash_auto_salt_engages_on_boilerplate(spark):
     """A boilerplate-heavy corpus must arm the hot-band salt from its band
     sizes alone, and the pair set must equal the unsalted plan's exactly
@@ -250,13 +277,7 @@ def test_minhash_auto_salt_engages_on_boilerplate(spark):
     with pytest.raises(ValueError, match="hot_band_cap"):
         auto_salt_for(5, cap=0)  # CLI-reachable misconfiguration
 
-    # 120 boilerplate clones (one giant band) + 60 distinct docs
-    rows = [(i, "shared boilerplate header repeated across the corpus body") for i in range(120)]
-    rows += [
-        (1000 + i, f"unique document number {i} with its own words alpha{i} beta{i} gamma{i}")
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = _boilerplate_docs(spark)
 
     # the default budget holds the 120-doc band: unsalted plan
     base = sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()))
@@ -270,3 +291,26 @@ def test_minhash_auto_salt_engages_on_boilerplate(spark):
     # quiet corpus: the probe must leave the plan unsalted
     minhash_lsh_pairs(docs.filter("doc_id >= 1000"), 12, 3, 4, 0.5, hot_band_cap=50).collect()
     assert dedup._LAST_AUTO_SALT == 1
+
+
+def test_jaccard_check_width_follows_pair_bound(spark):
+    """The exact-Jaccard check runs on as many tasks as the band probe's
+    candidate-pair bound asks for: several for the 120-clone band, exactly
+    one for the quiet slice, and neither changes a pair."""
+    import re
+
+    from reden_spark.operators.dedup import minhash_lsh_pairs
+
+    def width(df):
+        return re.findall(r"Repartition (\d+), true", df._jdf.queryExecution().analyzed().toString())
+
+    docs = _boilerplate_docs(spark)
+    pairs = minhash_lsh_pairs(docs, 12, 3, 4, 0.5)
+    got = sorted(map(tuple, pairs.collect()))
+    assert pairs.rdd.getNumPartitions() > 1 and width(pairs) == [str(pairs.rdd.getNumPartitions())]
+    assert [p[:2] for p in got if p[0] < 120] == [(a, b) for a in range(120) for b in range(a + 1, 120)]
+
+    quiet = minhash_lsh_pairs(docs.filter("doc_id >= 1000"), 12, 3, 4, 0.5)
+    # its candidate set is empty, so AQE drops the check's one task at run time
+    assert width(quiet) == ["1"] and quiet.rdd.getNumPartitions() <= 1
+    assert sorted(map(tuple, quiet.collect())) == [p for p in got if p[0] >= 1000]

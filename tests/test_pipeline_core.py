@@ -190,6 +190,21 @@ def test_connected_components_long_chain(spark):
     assert sorted((r.uri, r.canonical) for r in fast) == sorted((r.uri, r.canonical) for r in rows)
 
 
+def test_driver_union_find_map_is_a_local_relation(spark):
+    """The fast path's map reaches the planner as a local relation with a real
+    size estimate: no pickled Python RDD that every consumer re-reads in
+    Python workers, no Long.MaxValue estimate inherited by checkpoints."""
+    from reden_spark.operators.canonicalize import connected_components
+
+    edges = spark.createDataFrame([("b", "a"), ("c", "b"), ("x", "y")], "a string, b string")
+    canon = connected_components(edges)
+    plan = canon._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert "LogicalRDD" not in plan.toString()
+    assert int(plan.stats().sizeInBytes()) < 2**63 - 1
+    assert sorted(map(tuple, canon.collect())) == [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     import pytest
 

@@ -27,6 +27,8 @@ def test_spark_submit_master_wins(tmp_path):
         "from reden_spark.session import get_spark\n"
         "print('MASTER=' + get_spark().sparkContext.master)\n"
         "print('CODEGEN_CACHE=' + get_spark().conf.get('spark.sql.codegen.cache.maxEntries'))\n"
+        "print('CLEAN_CHECKPOINTS=' + get_spark().sparkContext.getConf()"
+        ".get('spark.cleaner.referenceTracking.cleanCheckpoints'))\n"
         "get_spark().stop()\n"
     )
     paths = [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
@@ -42,6 +44,7 @@ def test_spark_submit_master_wins(tmp_path):
     assert out.returncode == 0, out.stderr[-2000:]
     assert "MASTER=local[2]" in out.stdout.splitlines(), out.stdout[-2000:]
     assert f"CODEGEN_CACHE={session.CODEGEN_CACHE_ENTRIES}" in out.stdout.splitlines(), out.stdout[-2000:]
+    assert "CLEAN_CHECKPOINTS=true" in out.stdout.splitlines(), out.stdout[-2000:]
 
 
 def _compiled(spark):
