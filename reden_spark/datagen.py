@@ -167,7 +167,7 @@ def _extra_entities(n: int) -> list[dict]:
     return ents
 
 
-def _entities(n_extra: int = 0) -> list[dict]:
+def _entities(n_extra: int) -> list[dict]:
     ents = []
     for slug, first, last, gender, birth, death, cluster in AUTHORS:
         ents.append(

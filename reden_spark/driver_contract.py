@@ -36,6 +36,7 @@ from .operators.evaluate import eval_records, hachey_metrics
 from .operators.grouped import conversation_graphs, disambiguate_grouped
 from .operators.kb import build_kb
 from .operators.mentions import detect_mentions
+from .sources.storage import read_input
 
 BASE = "http://kb.test/base"
 CFG = NELConfig(base_prefix=BASE, preferred_uri=BASE)
@@ -83,12 +84,13 @@ def _memo(spark: SparkSession, sf_dir: str, name, build):
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Plan-level memo of the table scans: every `spark.read.parquet` call
-    pays a driver-side listing + footer schema read (~0.2-0.4 s each on this
-    host), and one contract query's derivation chain re-reads events/nation
-    several times. The memoized object is just the unexecuted scan plan —
-    results are identical."""
-    return _memo(spark, sf_dir, ("read", name), lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    """Plan-level memo of the table scans, read the way both pipelines read
+    their inputs (`storage.read_input`: the footer's schema, so no
+    schema-inference job). Every scan still pays a driver-side file listing,
+    and one contract query's derivation chain re-reads events/nation several
+    times. The memoized object is just the unexecuted scan plan — results
+    are identical."""
+    return _memo(spark, sf_dir, ("read", name), lambda: read_input(spark, sf_dir, name))
 
 
 def derive_turns_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,8 +238,6 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
         return {
             "transcripts": transcripts,
-            "dico": dico,
-            "kb_edges": kb,
             "kb": artifacts,
             "mentions": mentions,
             "candidates": candidates,
@@ -606,9 +606,7 @@ def q_kg_preannotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sameAs closure + dico co-membership replaces the sameas.org API)."""
     from .operators.preannotate import preannotate
 
-    s = _kg_stack(spark, sf_dir)
-    gold = derive_gold(spark, sf_dir)
-    return preannotate(gold, s["kb_edges"], s["dico"], BASE)
+    return preannotate(derive_gold(spark, sf_dir), _kg_stack(spark, sf_dir)["kb"].canon, BASE)
 
 
 O_KG_PREANNOTATE = (
@@ -977,7 +975,7 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM samp)
 def q_kg_entity_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.enrich import entity_pmi
 
-    return entity_pmi(_links(spark, sf_dir), min_pairs=2)
+    return entity_pmi(_links(spark, sf_dir))
 
 
 O_KG_ENTITY_PMI = (

@@ -75,10 +75,14 @@ def author_enrichment(
     return assign_property(out, kb_edges, dom_props, "field_of_activity")
 
 
-def entity_pmi(links: DataFrame, min_pairs: int = 2) -> DataFrame:
+# entity_pmi keeps a pair co-occurring in at least this many conversations
+MIN_PAIRS = 2
+
+
+def entity_pmi(links: DataFrame) -> DataFrame:
     """Entity co-occurrence PMI over conversations — the KG analytics twin of
     occurrence_counts: for every pair of linked URIs that co-occur in at
-    least `min_pairs` conversations, pointwise mutual information
+    least `MIN_PAIRS` conversations, pointwise mutual information
     pmi = ln(n_ab * N / (n_a * n_b)) where n_x = conversations containing x
     and N = conversations containing any link. This is the edge-weighting a
     co-occurrence network / embedding pretraining step consumes downstream
@@ -88,7 +92,7 @@ def entity_pmi(links: DataFrame, min_pairs: int = 2) -> DataFrame:
     Scale shape: the per-conversation distinct entity set is conversation-
     bounded (tens, not millions), so the within-conv self-join is one shuffle
     keyed on conv_id with small groups; pair counting is one more keyed
-    shuffle at pair grain, pre-thinned by min_pairs. Marginals are
+    shuffle at pair grain, pre-thinned by MIN_PAIRS. Marginals are
     entity-vocabulary-grain (broadcastable); N enters the plan as a broadcast
     1-row frame, never a driver constant. No UDF; all codegen.
     """
@@ -105,7 +109,7 @@ def entity_pmi(links: DataFrame, min_pairs: int = 2) -> DataFrame:
         )
         .groupBy(F.col("a.uri").alias("uri_a"), F.col("b.uri").alias("uri_b"))
         .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= min_pairs)
+        .filter(F.col("n_ab") >= MIN_PAIRS)
     )
     marg = ents.groupBy("uri").agg(F.count("*").alias("n"))
     n_convs = ents.agg(F.countDistinct("conv_id").alias("n_convs"))

@@ -7,8 +7,9 @@ base KB, storing them in a `ref_new` attribute
 (/root/reference/src/fr/lip6/reden/extra/SemiAutomaticTEIAnnotation.java:44-110).
 Network-bound dev tooling; the rebuild derives the same equivalences OFFLINE
 from data it already has: the owl:sameAs closure over kb_edges plus dictionary
-group co-membership (the exact edge set canonicalization uses), restated per
-gold row as a relational join — no per-row calls, no network.
+group co-membership, i.e. the KB's canonical map (`KBArtifacts.canon`, the
+one canonicalization uses), restated per gold row as a relational join — no
+per-row calls, no network.
 
 Semantics: ref_new = space-joined, lexicographically sorted set of URIs in the
 gold URI's equivalence class (including the gold URI itself) that contain the
@@ -21,22 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import SAME_AS
-from .canonicalize import connected_components, sameas_edge_frame
-
 GOLD_KEY = ["conv_id", "turn_idx", "occ_idx", "mention", "gold_uri"]
 
 
-def preannotate(
-    gold: DataFrame,
-    kb_edges: DataFrame,
-    dico: DataFrame,
-    base: str,
-    sameas_pred: str = SAME_AS,
-) -> DataFrame:
-    """gold(conv_id, turn_idx, occ_idx, mention, gold_uri) ->
-    + ref_new (nullable string)."""
-    canon = connected_components(sameas_edge_frame(kb_edges, dico, sameas_pred))
+def preannotate(gold: DataFrame, canon: DataFrame, base: str) -> DataFrame:
+    """gold(conv_id, turn_idx, occ_idx, mention, gold_uri) + the owl:sameAs
+    canonical map (uri, canonical) -> + ref_new (nullable string)."""
     with_c = (
         gold.join(canon.withColumnRenamed("uri", "gold_uri"), "gold_uri", "left")
         .withColumn("comp", F.coalesce("canonical", "gold_uri"))

@@ -3,9 +3,10 @@
 
     documents -> pairs -> clusters -> holdout -> decontam -> packed
 
-Each stage reads the previous stage's checkpoint and writes its own through
-sources.storage (manifest + per-partition lineage counters, identical
-machinery to the KG pipeline in plans/pipeline.py); `--from-stage` (or a
+Each stage reads the previous stage's checkpoint and writes its own
+(manifest + per-partition lineage counters) through `storage.Stages`, the
+stage runner the KG pipeline in plans/pipeline.py uses too: job group
+`reden-cur-<stage>`, `_timings.json`, and `--from-stage` (or a
 missing/invalidated manifest) recomputes from that point. Launchable via
 
     spark-submit --py-files dist/reden_spark.zip reden_spark/plans/curation.py \
@@ -83,40 +84,12 @@ def run_curation(
     8-grams; packing into 512-token sequences over 8 shards. ``hot_band_cap``
     is the pairs stage's per-band budget before its auto salt engages.
     """
-    data = Path(data_dir)
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
+    stages = storage.Stages(spark, out_dir, STAGES, "reden-cur-", from_stage)
+    docs = storage.read_input(spark, data_dir, "documents")
 
-    if from_stage is not None:
-        idx = STAGES.index(from_stage)
-        storage.invalidate_from(out, STAGES[idx:])
-
-    timings: dict[str, float] = {}
-
-    def stage(name: str, compute) -> DataFrame:
-        if storage.stage_exists(out, name):
-            return storage.read_stage(spark, out, name)
-        spark.sparkContext.setJobGroup(f"reden-cur-{name}", f"curation stage {name}")
-        t0 = time.time()
-        try:
-            df = compute()
-            storage.write_stage(df, out, name)
-        finally:
-            spark.sparkContext.setJobGroup("", "")
-        timings[name] = time.time() - t0
-        return storage.read_stage(spark, out, name)
-
-    docs = storage.read_input(spark, data, "documents")
-
-    pairs = stage(
-        "pairs",
-        lambda: minhash_lsh_pairs(docs, hot_band_cap=hot_band_cap),
-    )
-    clusters = stage("clusters", lambda: dedup_clusters(docs, pairs))
-    holdout_ids = stage(
-        "holdout",
-        lambda: stratified_sample(docs).select("doc_id", "stratum"),
-    )
+    pairs = stages.run("pairs", lambda: minhash_lsh_pairs(docs, hot_band_cap=hot_band_cap))
+    clusters = stages.run("clusters", lambda: dedup_clusters(docs, pairs))
+    holdout_ids = stages.run("holdout", lambda: stratified_sample(docs).select("doc_id", "stratum"))
 
     def compute_decontam() -> DataFrame:
         kept = clusters.filter("keep").select("doc_id")
@@ -124,7 +97,7 @@ def run_curation(
         holdout = docs.join(holdout_ids, "doc_id", "left_semi")
         return decontaminate(train, holdout)
 
-    decontam = stage("decontam", compute_decontam)
+    decontam = stages.run("decontam", compute_decontam)
 
     def compute_packed() -> DataFrame:
         clean_ids = decontam.filter(~F.col("contaminated")).select("doc_id")
@@ -140,10 +113,9 @@ def run_curation(
             "doc_id", "cluster_id", "cluster_size", "shard", "n_tokens", "start_offset", "seq_idx"
         )
 
-    packed = stage("packed", compute_packed)
+    packed = stages.run("packed", compute_packed)
 
-    if timings:
-        (out / "_timings.json").write_text(json.dumps(timings))
+    stages.close()
     return {
         "pairs": pairs,
         "clusters": clusters,

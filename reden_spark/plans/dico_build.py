@@ -22,13 +22,20 @@ from pyspark.sql import functions as F
 from ..functions.aliases import aliases_udf
 from ..functions.text import clean_label, normalize_mention, year_from_date
 
+# The values the reference's SPARQL queries hard-code: the label language
+# (``langMatches(lang(?x),'FR')``), the DBpedia sameAs inclusion prefix
+# (``FILTER regex(str(?otherLinks),'^http://dbpedia.org/')``) and the Getty
+# vocabulary that exactMatch refs must leave
+# (``!regex(STR(?ref),'^http://vocab.getty.edu')``).
+LANG = "fr"
+DBPEDIA = "http://dbpedia.org/"
+GETTY = "http://vocab.getty.edu"
+
 
 def build_dico(
     persons: DataFrame,
     greater_than: int | None = None,
     lesser_than: int | None = None,
-    letters: list[str] | None = None,
-    ne_type: str = "PER",
 ) -> DataFrame:
     """kb_persons -> DICO frame (+ `letter` shard column for partitioned writes)."""
     p = persons.withColumn("birth_year", year_from_date("birth_date"))
@@ -39,8 +46,6 @@ def build_dico(
 
     letter = F.lower(F.substring(F.col("last_name"), 1, 1))
     p = p.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
-    if letters is not None:
-        p = p.filter(F.col("letter").isin(letters))
 
     merged = p.groupBy("uri").agg(
         F.first("first_name", ignorenulls=True).alias("first_name"),
@@ -80,7 +85,7 @@ def build_dico(
         with_aliases.select(
             F.explode("all_aliases").alias("alias"),
             name.alias("name"),
-            F.lit(ne_type).alias("ne_type"),
+            F.lit("PER").alias("ne_type"),
             "uris",
             "letter",
         )
@@ -90,7 +95,7 @@ def build_dico(
     )
 
 
-def build_bne_dico(authors: DataFrame, letters: list[str] | None = None) -> DataFrame:
+def build_bne_dico(authors: DataFrame) -> DataFrame:
     """BNE author-catalog dictionary builder — the semantics that differ from
     the BNF/Getty family (QueryAuthorBNE.java:60-243, AuthorBNE.java:35-71):
 
@@ -115,8 +120,6 @@ def build_bne_dico(authors: DataFrame, letters: list[str] | None = None) -> Data
     a = authors.filter(F.col("n_works") > 0)
     letter = F.lower(F.substring(F.col("accepted_form"), 1, 1))
     a = a.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
-    if letters is not None:
-        a = a.filter(F.col("letter").isin(letters))
 
     merged = a.groupBy("uri").agg(
         F.first("accepted_form", ignorenulls=True).alias("accepted_form"),
@@ -141,12 +144,7 @@ def build_bne_dico(authors: DataFrame, letters: list[str] | None = None) -> Data
     )
 
 
-def build_dbpediafr_person_dico(
-    persons: DataFrame,
-    letters: list[str] | None = None,
-    lang: str = "fr",
-    sameas_prefix: str = "http://dbpedia.org/",
-) -> DataFrame:
+def build_dbpediafr_person_dico(persons: DataFrame) -> DataFrame:
     """DBpedia-fr person dictionary builder (QueryPersonDBpediafr.java:56-215,
     AuthorDBpediaFr.java:6-71). Expects an offline dump
     (uri, label, label_lang, redirect_label, redirect_lang, sameas) with one
@@ -159,23 +157,19 @@ def build_dbpediafr_person_dico(
         alias (processResults adds ?labelfr to rejectedForms untruncated,
         :171-173) while each REDIRECT label is truncated at '(' + trimmed
         (:146-149,178-181) — the two label kinds get different cleanup;
-      * owl:sameAs refs kept only under `sameas_prefix` — a prefix INCLUSION
+      * owl:sameAs refs kept only under `DBPEDIA` — a prefix INCLUSION
         filter (``FILTER regex(str(?otherLinks),'^http://dbpedia.org/')``,
         :85), the opposite polarity of Getty's own-vocab exclusion;
       * display name = label with '-' -> ' ' + trim (setLastname :39-40),
         then "'" -> "' " + double-space collapse (getNormalisedName :66-69);
         no (birth-death) suffix (the date filter is a TODO, :88).
     """
-    p = persons.filter(F.lower(F.col("label_lang")) == lang.lower())
+    p = persons.filter(F.lower(F.col("label_lang")) == LANG)
     letter = F.lower(F.substring(F.col("label"), 1, 1))
     p = p.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
-    if letters is not None:
-        p = p.filter(F.col("letter").isin(letters))
 
-    kept_ref = F.when(F.col("sameas").startswith(sameas_prefix), F.col("sameas"))
-    redirect = F.when(
-        F.lower(F.col("redirect_lang")) == lang.lower(), clean_label("redirect_label")
-    )
+    kept_ref = F.when(F.col("sameas").startswith(DBPEDIA), F.col("sameas"))
+    redirect = F.when(F.lower(F.col("redirect_lang")) == LANG, clean_label("redirect_label"))
     merged = p.groupBy("uri").agg(
         F.first("label", ignorenulls=True).alias("label"),
         F.first("letter", ignorenulls=True).alias("letter"),
@@ -204,11 +198,7 @@ def build_dbpediafr_person_dico(
 GETTY_FEMALE_CODE = "http://vocab.getty.edu/aat/300189557"
 
 
-def build_getty_dico(
-    concepts: DataFrame,
-    own_prefix: str = "http://vocab.getty.edu",
-    letters: list[str] | None = None,
-) -> DataFrame:
+def build_getty_dico(concepts: DataFrame) -> DataFrame:
     """Getty ULAN person-concept dictionary builder
     (QueryArtPersonalityGetty.java:60-252; Personality class :254-420).
     Expects an offline dump (uri, pref_label, alt_label, ref, gender) with one
@@ -220,7 +210,7 @@ def build_getty_dico(
         forms are generated;
       * sameAs refs are skos:exactMatch targets with the Getty vocabulary
         itself EXCLUDED (the SPARQL ``!regex(STR(?ref),'^http://vocab.getty.edu')``
-        filter, :107) -> drop refs starting with `own_prefix`;
+        filter, :107) -> drop refs starting with `GETTY`;
       * gender is an AAT concept code: the female code picks the 'Mme' title
         in alias generation, anything else (incl. missing) picks 'M'
         (Personality.getTitle :287-293);
@@ -235,15 +225,13 @@ def build_getty_dico(
     g = concepts.withColumn(
         "letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other"))
     )
-    if letters is not None:
-        g = g.filter(F.col("letter").isin(letters))
 
     parts = F.split(F.col("pref_label"), ",")
     # Personality.setLastname/setFirstname: '-' -> ' ' then trim (:276,281);
     # F.get returns NULL past the end (no-comma labels) -> first_name ''.
     last = F.trim(F.translate(F.get(parts, 0), "-", " "))
     first = F.trim(F.translate(F.coalesce(F.get(parts, 1), F.lit("")), "-", " "))
-    kept_ref = F.when(~F.col("ref").startswith(own_prefix), F.col("ref"))
+    kept_ref = F.when(~F.col("ref").startswith(GETTY), F.col("ref"))
     g = g.withColumn("last_name", last).withColumn("first_name", first)
 
     merged = g.groupBy("uri").agg(
@@ -288,12 +276,7 @@ def build_getty_dico(
     )
 
 
-def build_place_dico(
-    places: DataFrame,
-    letters: list[str] | None = None,
-    lang: str = "fr",
-    sameas_prefix: str | None = "http://dbpedia.org/",
-) -> DataFrame:
+def build_place_dico(places: DataFrame) -> DataFrame:
     """Place-source dictionary builder — the LOC twin of :func:`build_dico`
     (QueryPlaceDBpedia.java:60-205; QueryPlaceWikiData.java:62-143; the same
     PlaceEntry pref/alt-with-fallback/uri shape covers QueryPlaceBNF.java:64-140
@@ -302,7 +285,7 @@ def build_place_dico(
     (uri, label, label_lang, alt_label, alt_lang, is_place, lat, lon, sameas).
 
       * language filter ``langMatches(lang(?label),'FR')``
-        (QueryPlaceDBpedia.java:103,107) -> lower(label_lang) == lang, applied
+        (QueryPlaceDBpedia.java:103,107) -> lower(label_lang) == `LANG`, applied
         to the primary label AND to alt/redirect labels (the reference repeats
         the filter inside each OPTIONAL block);
       * a-z + 'other' letter shard on the primary label (the filterRegex,
@@ -328,21 +311,9 @@ def build_place_dico(
         build time instead of the per-URI enrichment re-crawl
         (GeodataGeneration.java:32-72).
     """
-    p = places.filter(F.col("is_place")).filter(F.lower(F.col("label_lang")) == lang.lower())
-    if letters is not None:
-        # shard prune MAP-SIDE, before the merge shuffle (rows of one uri share
-        # a label, hence a letter): the reference's 27-shard a-z+'other' build
-        # must not shuffle the whole dump once per shard
-        row_letter = F.lower(F.substring(F.col("label"), 1, 1))
-        row_letter = F.when(row_letter.rlike("^[a-z]$"), row_letter).otherwise(F.lit("other"))
-        p = p.filter(row_letter.isin(letters))
-
-    clean_sameas = (
-        F.when(F.col("sameas").startswith(sameas_prefix), F.col("sameas"))
-        if sameas_prefix is not None
-        else F.col("sameas")
-    )
-    alt_ok = F.when(F.lower(F.col("alt_lang")) == lang.lower(), F.col("alt_label"))
+    p = places.filter(F.col("is_place")).filter(F.lower(F.col("label_lang")) == LANG)
+    clean_sameas = F.when(F.col("sameas").startswith(DBPEDIA), F.col("sameas"))
+    alt_ok = F.when(F.lower(F.col("alt_lang")) == LANG, F.col("alt_label"))
     # representative (label, lat, lon) is one struct-min — a COHERENT binding
     # row, never min(label) of one row paired with min(lat) of another (a
     # place with two coordinate bindings must not emit a point from neither).

@@ -8,15 +8,18 @@ the term broadcast, the dictionary groups, the KB edges and relation weights,
 the sameAs canonical map and the rewritten KB. A session keeps the artifacts
 of its last `KB_REGISTRY_SIZE` knowledge bases keyed by the tables' bytes
 (`kb_digest`; eviction as in `checkpointing.recent`), so a later delta over
-the same KB reads none of them. A build runs under job group `reden-kb`;
-`_timings.json` records its seconds as `kb` (about 0 on a hit). Inputs are
+the same KB reads none of them. The lookup runs under the runner's job
+group `reden-kb`; `_timings.json` records its seconds as `kb` (the content
+digest alone on a hit). Inputs are
 read with their parquet footer's schema (`storage.read_input`) and
 checkpoints with their manifest's, so no read runs a schema-inference job.
 
 Each stage reads the previous stage's checkpoint and writes its own (parquet/
-Iceberg via sources.storage) with per-partition lineage counters; `--from-stage`
-(or a missing/invalidated manifest) recomputes from that point — the north rule's
-resumability contract. Launchable via spark-submit --py-files as
+Iceberg) with per-partition lineage counters, through the stage runner
+`storage.Stages` that the curation pipeline shares (job group
+`reden-<stage>`); `--from-stage` (or a missing/invalidated manifest)
+recomputes from that point — the north rule's resumability contract.
+Launchable via spark-submit --py-files as
 
     spark-submit --py-files dist/reden_spark.zip reden_spark/plans/pipeline.py \
         --data-dir /root/testdata/... --out-dir /tmp/kg_out
@@ -117,29 +120,7 @@ def run_pipeline(
     executor-local blocks."""
     data = Path(data_dir)
     out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-
-    if from_stage is not None:
-        idx = STAGES.index(from_stage)
-        storage.invalidate_from(out, STAGES[idx:])
-
-    timings: dict[str, float] = {}
-
-    def stage(name: str, compute, **write_opts):
-        if storage.stage_exists(out, name):
-            return storage.read_stage(spark, out, name)
-        # job-group tag: Spark stages/tasks of this pipeline stage are
-        # attributable in the event log / UI (per-stage shuffle-byte and CPU
-        # accounting — see `perfbench/run.py --trace 1`)
-        spark.sparkContext.setJobGroup(f"reden-{name}", f"pipeline stage {name}")
-        t0 = time.time()
-        try:
-            df = compute()
-            storage.write_stage(df, out, name, n_buckets=n_buckets, **write_opts)
-        finally:
-            spark.sparkContext.setJobGroup("", "")
-        timings[name] = time.time() - t0
-        return storage.read_stage(spark, out, name)
+    stages = storage.Stages(spark, out, STAGES, "reden-", from_stage)
 
     # Detection is per-turn, so input splits (parquet row groups) spread a
     # mega-conversation's turns across every task with NO up-front shuffle —
@@ -188,24 +169,19 @@ def run_pipeline(
         # KB artifacts from the registry (no KB table is read) or built here;
         # only a run that computes a KB-consuming stage needs them.
         if not all(storage.stage_exists(out, st) for st in STAGES[:4]):
-            t0 = time.time()
-            key = (
-                spark.sparkContext.applicationId,
-                kb_digest(data),
-                cfg.sameas_pred,
-                spark.sparkContext.getCheckpointDir(),
-            )
 
             def build() -> KBArtifacts:
-                spark.sparkContext.setJobGroup("reden-kb", "KB artifacts")
-                try:
-                    tables = [storage.read_input(spark, data, name) for name in KB_TABLES]
-                    return build_kb(*tables, cfg.sameas_pred)
-                finally:
-                    spark.sparkContext.setJobGroup("", "")
+                tables = [storage.read_input(spark, data, name) for name in KB_TABLES]
+                return build_kb(*tables, cfg.sameas_pred)
 
-            kb = checkpointing.recent(_KB_REGISTRY, key, build, KB_REGISTRY_SIZE)
-            timings["kb"] = time.time() - t0
+            with stages.group("kb"):
+                key = (
+                    spark.sparkContext.applicationId,
+                    kb_digest(data),
+                    cfg.sameas_pred,
+                    spark.sparkContext.getCheckpointDir(),
+                )
+                kb = checkpointing.recent(_KB_REGISTRY, key, build, KB_REGISTRY_SIZE)
 
         # Turn-grain checkpoints (mentions, candidates, links) are Spark-native
         # BUCKETED TABLES on conv_id (storage.write_stage spark_bucket_col):
@@ -242,30 +218,28 @@ def run_pipeline(
             n_buckets = int(in_bucketing["n"])
         else:
             n_buckets = bucket_count(total_bytes)
-        mentions = stage(
+        bucketed = {"n_buckets": n_buckets, "spark_bucket_col": "conv_id"}
+        mentions = stages.run(
             "mentions",
             lambda: detect_mentions(transcripts, kb.terms),
-            spark_bucket_col="conv_id",
             pre_shuffle=not input_bucketed,
+            **bucketed,
         )
-        candidates = stage(
-            "candidates",
-            lambda: generate_candidates(mentions, kb.groups),
-            spark_bucket_col="conv_id",
-            pre_shuffle=False,
+        candidates = stages.run(
+            "candidates", lambda: generate_candidates(mentions, kb.groups), pre_shuffle=False, **bucketed
         )
 
         def compute_links() -> DataFrame:
             cases = conversation_cases(mentions, candidates)
             return disambiguate_grouped(mentions, candidates, kb.edges, kb.rels, cases, cfg)
 
-        links = stage("links", compute_links, spark_bucket_col="conv_id", pre_shuffle=False)
+        links = stages.run("links", compute_links, pre_shuffle=False, **bucketed)
         # The product table keeps the hive bucket=N layout (north rule:
         # partitioned output readers can prune), but the bucket ids come from
         # materialize_triples(bucket_into=...): mention triples land in their
         # conversation's links-checkpoint bucket (zero shuffle), entity
         # passthrough triples hash on subj (small repartition).
-        triples = stage(
+        triples = stages.run(
             "triples",
             lambda: materialize_triples(links, kb.canon, kb.triples, bucket_into=n_buckets),
             prebucketed=True,
@@ -284,7 +258,7 @@ def run_pipeline(
                 records = eval_records(storage.read_input(spark, data, "gold_links"), links, candidates)
                 return hachey_metrics(records)
 
-            result["metrics"] = stage("metrics", compute_metrics)
+            result["metrics"] = stages.run("metrics", compute_metrics)
     finally:
         # restore even when the session had no explicit prior value (conf.get
         # with a fallback bypasses the registered SQL default) — unset then
@@ -293,8 +267,7 @@ def run_pipeline(
         else:
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
-    if timings:
-        (out / "_timings.json").write_text(json.dumps(timings))
+    stages.close()
     return result
 
 

@@ -5,7 +5,9 @@ carries per-partition lineage counters, and the pipeline is resumable from any
 stage. The reference's analogue is its skip-if-file-exists shard memoization
 (QueryAuthorBNF.java:60-66) and the per-URI N3 disk cache
 (GraphHandlerNEL.java:351-384) — done properly here: an atomic manifest written
-AFTER the data makes a half-written stage invisible to resume.
+AFTER the data makes a half-written stage invisible to resume. Both pipelines
+run their stages through one runner, :class:`Stages`: skip a checkpointed
+stage, else compute and write it under its job group and read it back.
 
 Storage backend: plain parquet checkpoints whose layout (hive `bucket=N`
 partitions, JSON manifest with schema + per-partition lineage) is the
@@ -20,6 +22,8 @@ import json
 import os
 import re
 import time
+from collections.abc import Callable
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -231,3 +235,45 @@ def invalidate_from(out_dir: str | Path, names: list[str]) -> None:
         m = Path(out_dir) / n / MANIFEST
         if m.exists():
             m.unlink()
+
+
+class Stages:
+    """Runs a pipeline's checkpointed stages, the one place both pipelines do.
+
+    ``run`` reads a stage whose manifest exists; otherwise it computes and
+    writes the stage under job group ``<prefix><name>`` (``reden-mentions``,
+    ``reden-cur-pairs``) and reads it back once the group is cleared.
+    ``group`` tags and times any other step (the KG pipeline's KB lookup,
+    ``reden-kb``). Stages from ``from_stage`` on lose their manifests first,
+    so they recompute; ``close`` writes ``_timings.json``, the seconds of
+    each timed step of this run."""
+
+    def __init__(
+        self, spark: SparkSession, out_dir: str | Path, names: list[str], prefix: str, from_stage: str | None
+    ) -> None:
+        self.spark, self.out, self.prefix = spark, Path(out_dir), prefix
+        self.timings: dict[str, float] = {}
+        self.out.mkdir(parents=True, exist_ok=True)
+        if from_stage is not None:
+            invalidate_from(self.out, names[names.index(from_stage):])
+
+    @contextmanager
+    def group(self, name: str):
+        sc = self.spark.sparkContext
+        sc.setJobGroup(f"{self.prefix}{name}", f"{self.prefix}{name}")
+        t0 = time.time()
+        try:
+            yield
+        finally:
+            sc.setJobGroup("", "")
+        self.timings[name] = time.time() - t0
+
+    def run(self, name: str, compute: Callable[[], DataFrame], **write_opts) -> DataFrame:
+        if not stage_exists(self.out, name):
+            with self.group(name):
+                write_stage(compute(), self.out, name, **write_opts)
+        return read_stage(self.spark, self.out, name)
+
+    def close(self) -> None:
+        if self.timings:
+            (self.out / "_timings.json").write_text(json.dumps(self.timings))

@@ -107,6 +107,7 @@ def test_preannotate_offline_equivalences(spark):
     """SemiAutomaticTEIAnnotation restated offline: ref_new lists the gold
     URI's equivalence-class members in the target base; isolated base URIs
     keep themselves; URIs with no base-KB equivalent get NULL."""
+    from reden_spark.operators.canonicalize import connected_components, sameas_edge_frame
     from reden_spark.operators.preannotate import preannotate
 
     base = "http://kb.test/base/"
@@ -129,7 +130,8 @@ def test_preannotate_offline_equivalences(spark):
         [("hugo", "Hugo", ["http://kb.test/base/e1", "http://kb.test/base/e2"])],
         "alias_norm string, alias string, uris array<string>",
     )
-    out = {r.mention: r.ref_new for r in preannotate(gold, kb_edges, dico, base).collect()}
+    canon = connected_components(sameas_edge_frame(kb_edges, dico))
+    out = {r.mention: r.ref_new for r in preannotate(gold, canon, base).collect()}
     assert out["Hugo"] == "http://kb.test/base/e1 http://kb.test/base/e2"
     assert out["Roche"] == "http://kb.test/base/e9"
     assert out["Nil"] is None

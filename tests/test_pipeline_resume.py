@@ -43,6 +43,34 @@ def test_resume_from_each_stage(spark, fixture_dir, tmp_path):
     assert storage.read_manifest(out, "mentions")["written_at"] == manifests["mentions"]
 
 
+def test_crash_mid_stage_recomputes_that_stage(spark, fixture_dir, tmp_path, monkeypatch):
+    """A run that dies after the triples data files land but before their
+    manifest leaves the stage invisible to resume: the job group is cleared,
+    and the rerun recomputes triples and metrics only, with the triples of a
+    clean run."""
+    out = tmp_path / "kg_crash"
+    lineage = storage._lineage_from_footers
+
+    def crash_on_triples(path):
+        if path.name == "triples":
+            raise OSError("crash between the triples data files and their manifest")
+        return lineage(path)
+
+    monkeypatch.setattr(storage, "_lineage_from_footers", crash_on_triples)
+    with pytest.raises(OSError, match="crash between"):
+        run_pipeline(spark, fixture_dir, out, CFG)
+    assert any((out / "triples").rglob("*.parquet")), "the data files landed"
+    assert not storage.stage_exists(out, "triples")
+    assert not spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+    monkeypatch.undo()
+    before = {s: storage.read_manifest(out, s)["written_at"] for s in ["mentions", "candidates", "links"]}
+    again = run_pipeline(spark, fixture_dir, out, CFG)
+    assert {s: storage.read_manifest(out, s)["written_at"] for s in before} == before
+    assert set(json.loads((out / "_timings.json").read_text())) == {"kb", "triples", "metrics"}
+    assert _triples(again) == _triples(run_pipeline(spark, fixture_dir, tmp_path / "kg_clean", CFG))
+
+
 def test_checkpoint_dir_same_output(spark, fixture_dir, tmp_path):
     """A context with a checkpoint directory (``spark.checkpoint.dir`` — the
     multi-executor-cluster setting, where localCheckpoint blocks would die with

@@ -258,7 +258,7 @@ def test_getty_and_dbpediafr_dico_single_exchange(spark):
 def test_place_and_geonames_dico_single_exchange(spark):
     """The place builder keeps the author-builder shape — one hash Exchange on
     uri (merge-by-URI with map-side partial collect_sets); language filter,
-    letter shard, sameAs prefix and alias explode all stay map-local. The
+    sameAs prefix and alias explode all stay map-local. The
     Geonames builder (primary + exploded alternatenames union) shuffles once
     for its final distinct."""
     import re
@@ -279,18 +279,6 @@ def test_place_and_geonames_dico_single_exchange(spark):
     assert len(exchange_ids) == 1, f"expected 1 Exchange, got {len(exchange_ids)}\n{pp[:1500]}"
     assert "hashpartitioning(uri" in pp
     assert "partial_" in pp  # map-side partial collect_sets before the shuffle
-
-    # letter-sharded build: the shard predicate prunes MAP-SIDE (the reference's
-    # 27-shard a-z+'other' workflow must not shuffle the whole dump per shard).
-    # Formatted-explain ids are assigned leaf-first, so every Filter (type gate,
-    # language, letter shard) must sit below the single merge Exchange.
-    sp = plan(build_place_dico(places, letters=["p"]))
-    ex = min(int(m.group(1)) for m in re.finditer(r"\((\d+)\) Exchange", sp))
-    shard_filters = [
-        int(m.group(1))
-        for m in re.finditer(r"\((\d+)\) Filter\nInput[^\n]*\nCondition : [^\n]*RLIKE", sp)
-    ]
-    assert shard_filters and all(f < ex for f in shard_filters), sp[:1500]
 
     gp = plan(geonames_to_dico(geonames))
     exchange_ids = {m.group(1) for m in re.finditer(r"\((\d+)\) Exchange", gp)}
@@ -338,7 +326,7 @@ def test_entity_pmi_plan_shape(spark, tables):
          ("c2", 0, 0, "m", "http://a http://b", 1.0, "graph")],
         "conv_id string, turn_idx int, occ_idx int, mention string, chosen_uris string, score double, path string",
     )
-    p = plan(entity_pmi(links, min_pairs=2))
+    p = plan(entity_pmi(links))
     assert "CartesianProduct" not in p, p[:1500]
     assert "BroadcastNestedLoopJoin" in p, p[:1500]
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:1500]
