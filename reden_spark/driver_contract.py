@@ -233,7 +233,7 @@ def _kg_stack(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         dico = derive_dico(spark, sf_dir)
         kb = derive_kb_edges(spark, sf_dir)
         # the KB artifacts come from the pipeline's own build_kb
-        artifacts = build_kb(terms, dico, kb, empty_rel_weights(spark), CFG.sameas_pred)
+        artifacts = build_kb(terms, dico, kb, empty_rel_weights(spark))
         mentions = checkpoint(detect_mentions(transcripts, artifacts.terms))
         candidates = checkpoint(generate_candidates(mentions, artifacts.groups))
         return {
@@ -746,7 +746,7 @@ WITH toks AS (
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs (12 hashes, 3-shingles, 4 bands, J>=0.5),
+    """MinHash-LSH near-dup pairs (the recipe constants of operators/dedup.py),
     memoized like :func:`_kg_stack`: the pair generation — the dominant cost of
     every dedup-composition query — runs once per (application, sf_dir) and the
     eagerly-checkpointed pair frame is shared by dedup_minhash_lsh,
@@ -756,7 +756,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_lsh_pairs
 
     def build() -> DataFrame:
-        return checkpoint(minhash_lsh_pairs(_read(spark, sf_dir, "documents"), 12, 3, 4, 0.5))
+        return checkpoint(minhash_lsh_pairs(_read(spark, sf_dir, "documents")))
 
     return _memo(spark, sf_dir, "pairs", build)
 
@@ -879,7 +879,7 @@ O_DEDUP_CLUSTERS = (
 def q_doc_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import stratified_sample
 
-    return stratified_sample(_read(spark, sf_dir, "documents"), fraction=0.2, stratum_col="lang")
+    return stratified_sample(_read(spark, sf_dir, "documents"))
 
 
 O_DOC_SAMPLE_STRATIFIED = """
@@ -903,7 +903,7 @@ WHERE r.sample_rank <= c.n_take
 def q_doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import pack_sequences
 
-    return pack_sequences(_read(spark, sf_dir, "documents"), budget=512, n_shards=8)
+    return pack_sequences(_read(spark, sf_dir, "documents"))
 
 
 O_DOC_PACK_SEQUENCES = """
@@ -933,10 +933,10 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curation import decontaminate, stratified_sample
 
     docs = _read(spark, sf_dir, "documents")
-    samp = stratified_sample(docs, fraction=0.2, stratum_col="lang").select("doc_id")
+    samp = stratified_sample(docs).select("doc_id")
     train = docs.join(samp, "doc_id", "left_anti")
     holdout = docs.join(samp, "doc_id", "inner")
-    return decontaminate(train, holdout, shingle_n=8)
+    return decontaminate(train, holdout)
 
 
 O_TEXT_DECONTAMINATE = (
@@ -1016,16 +1016,16 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     clusters = checkpoint(dedup_clusters(docs, _minhash_pairs(spark, sf_dir)))
     kept = clusters.filter("keep").select("doc_id")
-    samp = stratified_sample(docs, 0.2, "lang").select("doc_id")
+    samp = stratified_sample(docs).select("doc_id")
     # holdout = eval carve-out over the FULL corpus (eval membership is decided
     # before dedup policy); train = kept representatives minus holdout
     train = docs.join(kept, "doc_id", "left_semi").join(samp, "doc_id", "left_anti")
     holdout = docs.join(samp, "doc_id", "left_semi")
-    decon = decontaminate(train, holdout, shingle_n=8)
+    decon = decontaminate(train, holdout)
     clean = train.join(
         decon.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi"
     )
-    return pack_sequences(clean, budget=512, n_shards=8).join(
+    return pack_sequences(clean).join(
         clusters.select("doc_id", "cluster_id", "cluster_size"), "doc_id"
     ).select("doc_id", "cluster_id", "cluster_size", "shard", "n_tokens", "start_offset", "seq_idx")
 
@@ -1257,7 +1257,7 @@ def q_kg_annotated_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (produceResults, ResultsAndEvaluationNEL.java:86-91)."""
     from .operators.annotate import annotate_links
 
-    return annotate_links(_links(spark, sf_dir), add_scores=True)
+    return annotate_links(_links(spark, sf_dir))
 
 
 O_KG_ANNOTATED_REFS = (

@@ -44,7 +44,7 @@ def normalised_name(firstname: str | None, lastname: str, birth: str | None, dea
     return name.replace("  ", " ")
 
 
-def make_aliases(firstname: str | None, lastname: str, gender: str | None = None) -> list[str]:
+def make_aliases(firstname: str | None, lastname: str, gender: str | None) -> list[str]:
     """~15 surface forms per author; deterministic sorted order (the reference
     returns a HashSet — unordered; we sort for reproducibility)."""
     first = (firstname or "").strip()

@@ -15,16 +15,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def annotate_links(links: DataFrame, add_scores: bool = False) -> DataFrame:
-    """Per-occurrence `ref_auto` values: the chosen URIs, with the reference's
-    `uri(score)` suffix when add_scores (produceResults :86-91; the simple path
-    has no score, so its suffix is never added)."""
-    ref = F.col("chosen_uris")
-    if add_scores:
-        ref = F.when(
-            F.col("score").isNotNull(),
-            F.concat(ref, F.lit("("), F.col("score").cast("string"), F.lit(")")),
-        ).otherwise(ref)
+def annotate_links(links: DataFrame) -> DataFrame:
+    """Per-occurrence `ref_auto` values: the chosen URIs with the reference's
+    `uri(score)` suffix (produceResults :86-91, the `addScores=true` form; the
+    simple path has no score, so its suffix is never added)."""
+    ref = F.when(
+        F.col("score").isNotNull(),
+        F.concat(F.col("chosen_uris"), F.lit("("), F.col("score").cast("string"), F.lit(")")),
+    ).otherwise(F.col("chosen_uris"))
     return links.select(
         "conv_id", "turn_idx", "occ_idx", "mention", ref.alias("ref_auto")
     )

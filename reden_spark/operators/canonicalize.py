@@ -13,7 +13,7 @@ pointer-jumping step (label-of-label, Shiloach–Vishkin style) halves the
 distance to the component minimum each round, giving O(log(diameter)) rounds.
 Each round is two shuffles (neighbor groupBy + self-join); lineage is cut per
 round with checkpointing.checkpoint so the plan doesn't grow unboundedly.
-Exhausting max_iter without a fixpoint raises instead of silently returning
+Exhausting MAX_ITER without a fixpoint raises instead of silently returning
 wrong labels.
 """
 
@@ -27,9 +27,9 @@ from ..checkpointing import checkpoint
 from ..functions.text import LINKS_TO, SAME_AS
 
 
-def _driver_union_find(rows, spark) -> DataFrame:
+def _driver_union_find(head: pa.Table, spark) -> DataFrame:
     """Small-graph fast path: union-find with path compression on the driver
-    over an already-collected (bounded) edge list — one job instead of
+    over an already-collected (bounded) edge table — one job instead of
     O(log d) rounds x 2-3 jobs each. The iterative loop's serial job-submission
     latency (~10 s per pipeline run regardless of data size) was the largest
     fixed cost left in the triples stage after the layout work; equivalence
@@ -39,7 +39,7 @@ def _driver_union_find(rows, spark) -> DataFrame:
 
     The map goes to Spark as an Arrow table, so it plans as a local relation:
     its consumers run no Python worker, and the planner sees its true size
-    (bounded by the ``driver_max_edges`` collect that produced it) when it
+    (bounded by the ``DRIVER_MAX_EDGES`` head that produced it) when it
     picks a join strategy."""
     parent: dict[str, str] = {}
 
@@ -51,12 +51,13 @@ def _driver_union_find(rows, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(r[0]), find(r[1])
-        if ra != rb:
-            parent[ra] = rb
+    a, b = head.column("a").to_pylist(), head.column("b").to_pylist()
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[rx] = ry
     members: dict[str, list[str]] = {}
-    verts = {v for r in rows for v in (r[0], r[1])}
+    verts = set(a) | set(b)
     for v in verts:
         members.setdefault(find(v), []).append(v)
     uris, canonicals = [], []
@@ -74,32 +75,33 @@ def _driver_union_find(rows, spark) -> DataFrame:
 # overhead on deep graphs at the cost of at most one redundant (cheap,
 # already-converged) round.
 CHECK_EVERY = 2
+# Rounds the distributed loop may run before it raises.
+MAX_ITER = 50
+# Largest equivalence graph, in edges, that takes the driver union-find.
+DRIVER_MAX_EDGES = 500_000
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    driver_max_edges: int | None = 500_000,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) undirected -> (uri, canonical) where canonical = min URI of the
     component. Isolated URIs (not in edges) are their own canonical and are not
     returned — callers coalesce(canonical, uri).
 
-    ``driver_max_edges``: equivalence graphs up to this size take the
+    Equivalence graphs of up to ``DRIVER_MAX_EDGES`` edges take the
     union-find fast path (:func:`_driver_union_find`) via ONE bounded
-    `limit(n+1).collect()` — the collected head doubles as both the size probe
+    `limit(n+1).toArrow()` — the fetched head doubles as both the size probe
     and the edge list, so the (possibly expensive, e.g. a near-dup pair join)
     upstream plan is evaluated once, not once for a count and again for a
-    collect. Larger graphs (10^8-entity KBs) spill past the limit and run the
-    distributed pointer-jumping loop instead — the bounded head is discarded
-    (at most n+1 driver rows either way). Pass None to force the distributed
-    path (tests exercise both). The loop probes for its fixpoint every
-    ``CHECK_EVERY`` rounds."""
-    if driver_max_edges is not None:
-        # bounded probe = the collect itself: never pulls past the threshold
-        head = edges.select("a", "b").limit(driver_max_edges + 1).collect()
-        if len(head) <= driver_max_edges:
-            return _driver_union_find(head, edges.sparkSession)
+    collect. ``toArrow`` runs the limit as one Spark job over every input
+    partition; ``collect`` would run Spark's incremental take, one job per
+    scale-up round. Larger graphs (10^8-entity KBs) spill past the limit and
+    run the distributed pointer-jumping loop instead — the bounded head is
+    discarded (at most n+1 driver rows either way); tests set the constant to
+    0 to force that path. The loop probes for its fixpoint every
+    ``CHECK_EVERY`` rounds and raises after ``MAX_ITER`` rounds."""
+    # bounded probe = the fetch itself: never pulls past the threshold
+    head = edges.select("a", "b").limit(DRIVER_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= DRIVER_MAX_EDGES:
+        return _driver_union_find(head, edges.sparkSession)
     sym = edges.select(F.col("a"), F.col("b")).unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -110,7 +112,7 @@ def connected_components(
 
     converged = False
     check_base = labels  # labels as of the last convergence probe
-    for it in range(max_iter):
+    for it in range(MAX_ITER):
         # propagate: new label of v = min(label of v, min over neighbors' labels)
         nbr_labels = (
             adj.join(labels.withColumnRenamed("v", "b"), "b")
@@ -135,7 +137,7 @@ def connected_components(
         )
         jumped = checkpoint(jumped)
         labels = jumped
-        if (it + 1) % CHECK_EVERY == 0 or it == max_iter - 1:
+        if (it + 1) % CHECK_EVERY == 0 or it == MAX_ITER - 1:
             changed = (
                 jumped.withColumnRenamed("label", "nl")
                 .join(check_base, "v")
@@ -150,7 +152,7 @@ def connected_components(
     if not converged:
         # Distinguish "iterations exhausted exactly at the fixpoint" (labels
         # correct — the last round's change check ran before its own update
-        # landed, or max_iter was 0 on an already-labeled graph) from "labels
+        # landed, or MAX_ITER was 0 on an already-labeled graph) from "labels
         # still moving" before failing loudly.
         nbr = (
             adj.join(labels.withColumnRenamed("v", "b"), "b")
@@ -166,16 +168,16 @@ def connected_components(
         )
         if still_moving:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds; "
-                "labels would be silently wrong — raise max_iter"
+                f"connected_components did not converge in {MAX_ITER} rounds; "
+                "labels would be silently wrong — raise MAX_ITER"
             )
     return labels.select(F.col("v").alias("uri"), F.col("label").alias("canonical"))
 
 
-def sameas_edge_frame(kb_edges: DataFrame, dico: DataFrame, sameas_pred: str = SAME_AS) -> DataFrame:
+def sameas_edge_frame(kb_edges: DataFrame, dico: DataFrame) -> DataFrame:
     """Equivalence edges: KB owl:sameAs rows + dico group co-membership
     (a candidate group row already lists equivalent URIs, SURVEY.md §2.3)."""
-    kb = kb_edges.filter(F.col("pred") == sameas_pred).select(
+    kb = kb_edges.filter(F.col("pred") == SAME_AS).select(
         F.col("subj").alias("a"), F.col("obj").alias("b")
     )
     grp = (
@@ -186,13 +188,13 @@ def sameas_edge_frame(kb_edges: DataFrame, dico: DataFrame, sameas_pred: str = S
     return kb.unionByName(grp).distinct()
 
 
-def canonical_kb(kb_edges: DataFrame, canon: DataFrame, sameas_pred: str = SAME_AS) -> DataFrame:
+def canonical_kb(kb_edges: DataFrame, canon: DataFrame) -> DataFrame:
     """The KB as the output graph carries it: non-sameAs rows, subject and object
     rewritten to their canonical URI (``canon`` from :func:`connected_components`),
     de-duplicated (the rewrite can merge rows). KB-grain, so built once per
     knowledge base (``operators/kb.py``)."""
     return (
-        kb_edges.filter(F.col("pred") != sameas_pred)
+        kb_edges.filter(F.col("pred") != SAME_AS)
         .join(canon.withColumnRenamed("uri", "subj"), "subj", "left")
         .withColumn("csubj", F.coalesce("canonical", "subj"))
         .drop("canonical")

@@ -14,10 +14,10 @@ from pyspark.sql import functions as F
 from ..functions.text import extract_score
 
 
-def scores_from_annotations(annotated: DataFrame, col: str = "ref_auto") -> DataFrame:
-    """Recover numeric scores from 'uri(0.123)'-style annotations
+def scores_from_annotations(annotated: DataFrame) -> DataFrame:
+    """Recover numeric scores from 'uri(0.123)'-style `ref_auto` annotations
     (SignificanceTesting.prepareData, SignificanceTesting.java:74-92)."""
-    return annotated.withColumn("score", extract_score(col))
+    return annotated.withColumn("score", extract_score("ref_auto"))
 
 
 def paired_t_test(paired: DataFrame) -> DataFrame:

@@ -15,6 +15,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The curation recipe's holdout, decontamination and packing settings: a
+# SAMPLE_FRACTION holdout stratified on the STRATUM_COL column, training docs
+# flagged on word DECONTAM_SHINGLE_N-grams shared with it, and the survivors
+# packed into PACK_BUDGET-token sequences over PACK_SHARDS shards.
+SAMPLE_FRACTION = 0.2
+STRATUM_COL = "lang"
+DECONTAM_SHINGLE_N = 8
+PACK_BUDGET = 512
+PACK_SHARDS = 8
+
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, keep) for EVERY document.
@@ -60,24 +70,23 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     return dup_out.unionByName(singleton_out)
 
 
-def stratified_sample(docs: DataFrame, fraction: float = 0.2, stratum_col: str = "lang") -> DataFrame:
-    """Deterministic EXACT stratified sample: per stratum, take the
-    ceil(n * fraction) docs with the smallest md5-derived hash
+def stratified_sample(docs: DataFrame) -> DataFrame:
+    """Deterministic EXACT stratified sample: per STRATUM_COL value, take the
+    ceil(n * SAMPLE_FRACTION) docs with the smallest md5-derived hash
     (doc_id tie-break). Returns (doc_id, stratum, sample_rank, n_stratum,
     n_take) — exactly n_take rows per stratum, reproducible across engines
     and runs (no RNG: the hash IS the sampling order).
 
-    Scale shape: one window shuffle keyed on the stratum. A dominant stratum
-    makes one partition hot; when exact per-stratum counts are not required,
-    the map-only Bernoulli variant — keep iff hash % M < fraction*M, zero
-    shuffle — is the 100 TB default and this exact variant is the auditable
-    small-stratum path (rare-language quotas, eval holdouts).
+    Scale shape: one window shuffle keyed on the stratum, so a dominant
+    stratum makes one partition hot. There is no shuffle-free variant: a
+    map-only hash threshold could not hold the exact per-stratum quota the
+    holdout needs.
     """
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
-    hashed = docs.select("doc_id", F.col(stratum_col).alias("stratum")).withColumn("h", h)
+    hashed = docs.select("doc_id", F.col(STRATUM_COL).alias("stratum")).withColumn("h", h)
     counts = hashed.groupBy("stratum").agg(
         F.count("*").alias("n_stratum"),
-        F.ceil(F.count("*") * F.lit(fraction)).cast("long").alias("n_take"),
+        F.ceil(F.count("*") * F.lit(SAMPLE_FRACTION)).cast("long").alias("n_take"),
     )
     w = Window.partitionBy("stratum").orderBy(F.col("h").asc(), F.col("doc_id").asc())
     return (
@@ -88,18 +97,18 @@ def stratified_sample(docs: DataFrame, fraction: float = 0.2, stratum_col: str =
     )
 
 
-def pack_sequences(docs: DataFrame, budget: int = 512, n_shards: int = 8) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Concat-and-chunk sequence packing for pretraining: assign every doc to
-    a (shard, seq_idx) training sequence of ~`budget` tokens. Docs are
+    a (shard, seq_idx) training sequence of ~PACK_BUDGET tokens. Docs are
     concatenated in doc_id order within a shard and split at token-budget
-    boundaries (seq_idx = floor(start_offset / budget) — the standard
+    boundaries (seq_idx = floor(start_offset / PACK_BUDGET) — the standard
     "concatenate then chunk" packing; a doc may straddle a boundary, exactly
     as pretraining token streams do). Returns (doc_id, shard, n_tokens,
     start_offset, seq_idx).
 
     Scale shape: a GLOBAL packing order would serialize the corpus through
-    one cumulative-sum partition; instead docs are hashed into `n_shards`
-    independent streams (set n_shards ~ writer parallelism at 100 TB) and
+    one cumulative-sum partition; instead docs are hashed into PACK_SHARDS
+    independent streams (PACK_SHARDS ~ writer parallelism at 100 TB) and
     each shard packs via one ordered-window running sum. The md5-derived
     shard hash makes the assignment engine-portable and RNG-free.
     """
@@ -108,7 +117,7 @@ def pack_sequences(docs: DataFrame, budget: int = 512, n_shards: int = 8) -> Dat
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
     toks = docs.select(
         "doc_id",
-        F.pmod(h, F.lit(n_shards)).alias("shard"),
+        F.pmod(h, F.lit(PACK_SHARDS)).alias("shard"),
         F.size(F.filter(tokens(F.col("text")), lambda t: t != "")).alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
@@ -117,12 +126,12 @@ def pack_sequences(docs: DataFrame, budget: int = 512, n_shards: int = 8) -> Dat
         "shard",
         "n_tokens",
         F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long").alias("start_offset"),
-    ).withColumn("seq_idx", (F.col("start_offset") / budget).cast("long"))
+    ).withColumn("seq_idx", (F.col("start_offset") / PACK_BUDGET).cast("long"))
 
 
-def decontaminate(docs: DataFrame, holdout: DataFrame, shingle_n: int = 8) -> DataFrame:
+def decontaminate(docs: DataFrame, holdout: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag every training doc that shares at least
-    one word `shingle_n`-gram with any holdout/eval doc. Returns
+    one word DECONTAM_SHINGLE_N-gram with any holdout/eval doc. Returns
     (doc_id, n_hit_shingles, contaminated) for EVERY training doc.
 
     The standard pre-training hygiene pass (eval-set n-gram collision, à la
@@ -136,7 +145,7 @@ def decontaminate(docs: DataFrame, holdout: DataFrame, shingle_n: int = 8) -> Da
 
     def sh(df):
         return df.select(
-            "doc_id", F.explode(word_shingles(F.col("text"), shingle_n)).alias("shingle")
+            "doc_id", F.explode(word_shingles(F.col("text"), DECONTAM_SHINGLE_N)).alias("shingle")
         )
 
     hold = sh(holdout).select("shingle").distinct()

@@ -79,27 +79,35 @@ def _fan_out(docs: DataFrame) -> DataFrame:
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1
 
+# The curation recipe's near-duplicate test: N_HASHES MinHash permutations over
+# word SHINGLE_N-gram shingles, banded into BANDS bands of N_HASHES / BANDS
+# rows, and a candidate pair kept at exact Jaccard >= THRESHOLD.
+N_HASHES = 12
+SHINGLE_N = 3
+BANDS = 4
+THRESHOLD = 0.5
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) -> DataFrame:
-    """(doc_id, shingles, sig array<bigint>): one base hash per shingle,
-    n_hashes arithmetic permutations of it.
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, sig array<bigint>): one base hash per word
+    SHINGLE_N-gram shingle, N_HASHES arithmetic permutations of it.
 
         b(s)   = bigint(md5(s)[0:15 hex]) mod P          (P = 2^31-1)
         sig[h] = min over shingles of ((1 + h*1000003)*b(s) + 12345 + h*7919) mod P
 
     The permutation family replaces the earlier md5-per-(hash, shingle)
     formula: the digest pass over the corpus — the dominant cost of dedup at
-    scale — runs once instead of n_hashes times (measured ~3x on the sf0.1
+    scale — runs once instead of N_HASHES times (measured ~3x on the sf0.1
     contract corpus). Multiplier (<2^24) x base (<2^31) stays well inside
     bigint. The DuckDB oracles state the identical formula
     (('0x' || substr(md5(s),1,15))::BIGINT on that side — verified equal to
     Spark's conv(substring(md5(s),1,15),16,10)).
 
-    The shingles are exploded to one row per (doc, shingle), and the n_hashes
+    The shingles are exploded to one row per (doc, shingle), and the N_HASHES
     minima are one hash aggregate by doc_id, joined back onto the shingle
     frame. Explode, digest and aggregate all run in whole-stage generated
     code; as nested ``transform`` lambdas over the shingle array they were
-    interpreted, n_hashes x n_shingles lambda calls per document. The shingle
+    interpreted, N_HASHES x n_shingles lambda calls per document. The shingle
     frame feeds both sides of that join, so it is checkpointed once. doc_id
     is the documents' key.
 
@@ -107,7 +115,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) 
     """
     sh = checkpoint(
         _fan_out(docs)
-        .select("doc_id", word_shingles(F.col("text"), shingle_n).alias("shingles"))
+        .select("doc_id", word_shingles(F.col("text"), SHINGLE_N).alias("shingles"))
         .filter(F.size("shingles") > 0)
     )
     base = sh.select("doc_id", F.explode("shingles").alias("s")).select(
@@ -115,10 +123,10 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 12, shingle_n: int = 3) 
     )
     mins = [
         F.expr(f"min(({1 + h * 1000003} * b + {12345 + h * 7919}) % {MINHASH_P}L)").alias(f"m{h}")
-        for h in range(n_hashes)
+        for h in range(N_HASHES)
     ]
     sig = base.groupBy("doc_id").agg(*mins)
-    sig = sig.select("doc_id", F.array(*(f"m{h}" for h in range(n_hashes))).alias("sig"))
+    sig = sig.select("doc_id", F.array(*(f"m{h}" for h in range(N_HASHES))).alias("sig"))
     return sh.join(sig, "doc_id").select("doc_id", "shingles", "sig")
 
 
@@ -152,19 +160,11 @@ PAIRS_PER_TASK = 10_000
 MAX_CHECK_TASKS = 64
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n_hashes: int = 12,
-    shingle_n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.5,
-    hot_band_cap: int = 10_000,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, hot_band_cap: int = 10_000) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact Jaccard.
 
-    rows-per-band r = n_hashes/bands; candidates = docs sharing any band key;
-    output (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard >= threshold.
-    The defaults are the curation recipe (`plans/curation.run_curation`).
+    rows-per-band r = N_HASHES/BANDS; candidates = docs sharing any band key;
+    output (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard >= THRESHOLD.
 
     A hot-band guard for skewed corpora (e.g. one boilerplate band shared by
     millions of docs) arms from data, not caller foresight: one cheap probe
@@ -185,16 +185,16 @@ def minhash_lsh_pairs(
     exact-Jaccard check. Shingle arrays are distinct, so
     |a ∪ b| = |a| + |b| - |a ∩ b| and one array_intersect per pair gives both.
     """
-    r = n_hashes // bands
+    r = N_HASHES // BANDS
     # signatures are consumed 3x (banding + both sides of the verification
     # join); shared() materializes the digest pass once
-    sigs = shared(minhash_signatures(docs, n_hashes, shingle_n))
+    sigs = shared(minhash_signatures(docs))
     banded = sigs.select(
         "doc_id",
         "shingles",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> md5(concat(cast(b as string), '#', "
+                f"transform(sequence(0, {BANDS - 1}), b -> md5(concat(cast(b as string), '#', "
                 f"array_join(transform(slice(sig, b*{r}+1, {r}), x -> cast(x as string)), ','))))"
             )
         ).alias("band_key"),
@@ -240,6 +240,6 @@ def minhash_lsh_pairs(
     return (
         pairs.select("doc_a", "doc_b", "sh_a", "sh_b", inter)
         .withColumn("jaccard", F.round(F.col("inter").cast("double") / union, 6))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )

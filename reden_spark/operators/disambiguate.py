@@ -18,17 +18,18 @@ from pyspark.sql import functions as F
 
 # unused here: perfbench/spans.py wraps this name for its links.shared_* metrics
 from ..checkpointing import shared  # noqa: F401
-from ..functions.text import SAME_AS
 
 
 @dataclass(frozen=True)
 class NELConfig:
     """The subset of the reference's 16 config.properties knobs that survive the
-    rebuild (config/config-authors-bnf.properties)."""
+    rebuild (config/config-authors-bnf.properties). `sameAsproperty` is not
+    one of them: the links kernel, its KB slice and canonicalization all read
+    owl:sameAs (``functions.text.SAME_AS``), the value every reference config
+    ships."""
 
     base_prefix: str  # `baseURIs`
     preferred_uri: str  # `preferedURIOrder` ('ALL' or a prefix)
-    sameas_pred: str = SAME_AS  # `sameAsproperty`
     # `centralityMeasure` (CentralityHandler.java:137-152); every shipped
     # reference config uses DegreeCentrality. The grouped kernel (grouped.py)
     # serves all four measures via oracle.centrality_scores.

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import oracle
-from ..functions.text import decompose, encode_last_segment
+from ..functions.text import SAME_AS, decompose, encode_last_segment
 from .disambiguate import NELConfig, simple_links
 
 _OUT_SCHEMA = "conv_id string, mention string, chosen_uris string, score double"
@@ -45,7 +45,7 @@ def _kb_slice(candidates: DataFrame, kb_edges: DataFrame, cfg: NELConfig) -> Dat
     sameas_objs = (
         members.filter(F.col("member").contains(F.lit(cfg.base_prefix)))
         .join(
-            kb_edges.filter(F.col("pred") == cfg.sameas_pred).select("subj", "obj"),
+            kb_edges.filter(F.col("pred") == SAME_AS).select("subj", "obj"),
             members.member == F.col("subj"),
         )
         .select("conv_id", decompose("obj").alias("k"))

@@ -21,7 +21,6 @@ from pyspark import Broadcast
 from pyspark.sql import DataFrame
 
 from ..checkpointing import checkpoint
-from ..functions.text import SAME_AS
 from . import canonicalize
 from .candidates import dico_groups
 from .grouped import rel_weight_map
@@ -46,7 +45,6 @@ def build_kb(
     dico: DataFrame,
     kb_edges: DataFrame,
     rel_weights: DataFrame,
-    sameas_pred: str = SAME_AS,
 ) -> KBArtifacts:
     """Build every KB artifact from the four KB tables, eagerly."""
     edges = checkpoint(kb_edges.select("subj", "pred", "obj"))
@@ -54,7 +52,7 @@ def build_kb(
     # the equivalence edges read only the groups' uris arrays: the distinct
     # (alias_norm, uris) rows hold every array dico does
     canon = checkpoint(
-        canonicalize.connected_components(canonicalize.sameas_edge_frame(edges, groups, sameas_pred))
+        canonicalize.connected_components(canonicalize.sameas_edge_frame(edges, groups))
     )
     return KBArtifacts(
         terms=broadcast_terms(terms),
@@ -62,5 +60,5 @@ def build_kb(
         edges=edges,
         rels=rel_weight_map(rel_weights),
         canon=canon,
-        triples=checkpoint(canonicalize.canonical_kb(edges, canon, sameas_pred)),
+        triples=checkpoint(canonicalize.canonical_kb(edges, canon)),
     )

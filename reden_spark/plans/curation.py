@@ -78,11 +78,12 @@ def run_curation(
     (keep-policy, threshold sweeps) re-reads it instead of re-running the
     corpus-dominant shingle/signature pass.
 
-    The recipe is the operators' defaults, stated once in their signatures:
+    The recipe is the operators' module constants, stated once there:
     12 MinHash permutations over word 3-gram shingles in 4 bands, Jaccard
-    >= 0.5; a 20% holdout stratified on `lang`; decontamination on word
-    8-grams; packing into 512-token sequences over 8 shards. ``hot_band_cap``
-    is the pairs stage's per-band budget before its auto salt engages.
+    >= 0.5 (``operators/dedup.py``); a 20% holdout stratified on `lang`,
+    decontamination on word 8-grams and packing into 512-token sequences
+    over 8 shards (``operators/curation.py``). ``hot_band_cap`` is the pairs
+    stage's per-band budget before its auto salt engages.
     """
     stages = storage.Stages(spark, out_dir, STAGES, "reden-cur-", from_stage)
     docs = storage.read_input(spark, data_dir, "documents")

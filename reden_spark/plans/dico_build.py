@@ -32,6 +32,32 @@ DBPEDIA = "http://dbpedia.org/"
 GETTY = "http://vocab.getty.edu"
 
 
+def _letter(col: str):
+    """The a-z + 'other' letter shard of a column's first character
+    (AppAdhoc.java:70-74); each source shards on its own name column."""
+    first = F.lower(F.substring(F.col(col), 1, 1))
+    return F.when(first.rlike("^[a-z]$"), first).otherwise(F.lit("other"))
+
+
+def _person_rows(merged: DataFrame, aliases, name) -> DataFrame:
+    """Person dictionary rows from per-URI rows (uri, refs, letter, ...): one
+    per non-empty alias of the array `aliases`, with `name` as the display
+    name and uris = the URI followed by its sameAs refs."""
+    return (
+        merged.withColumn("uris", F.concat(F.array("uri"), "refs"))
+        .select(
+            F.explode(aliases).alias("alias"),
+            name.alias("name"),
+            F.lit("PER").alias("ne_type"),
+            "uris",
+            "letter",
+        )
+        .filter(F.col("alias") != "")
+        .withColumn("alias_norm", normalize_mention("alias"))
+        .select("alias", "alias_norm", "name", "ne_type", "uris", "letter")
+    )
+
+
 def build_dico(
     persons: DataFrame,
     greater_than: int | None = None,
@@ -44,8 +70,7 @@ def build_dico(
     if lesser_than is not None:
         p = p.filter(F.col("birth_year") < lesser_than)
 
-    letter = F.lower(F.substring(F.col("last_name"), 1, 1))
-    p = p.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
+    p = p.withColumn("letter", _letter("last_name"))
 
     merged = p.groupBy("uri").agg(
         F.first("first_name", ignorenulls=True).alias("first_name"),
@@ -79,20 +104,8 @@ def build_dico(
             aliases_udf("first_name", "last_name", "gender"),
             F.col("rejected_forms"),
         ),
-    ).withColumn("uris", F.concat(F.array("uri"), "refs"))
-
-    return (
-        with_aliases.select(
-            F.explode("all_aliases").alias("alias"),
-            name.alias("name"),
-            F.lit("PER").alias("ne_type"),
-            "uris",
-            "letter",
-        )
-        .filter(F.col("alias") != "")
-        .withColumn("alias_norm", normalize_mention("alias"))
-        .select("alias", "alias_norm", "name", "ne_type", "uris", "letter")
     )
+    return _person_rows(with_aliases, F.col("all_aliases"), name)
 
 
 def build_bne_dico(authors: DataFrame) -> DataFrame:
@@ -118,8 +131,7 @@ def build_bne_dico(authors: DataFrame) -> DataFrame:
     with one row per (rejected_form, ref) combination, as a SPARQL result set
     yields them."""
     a = authors.filter(F.col("n_works") > 0)
-    letter = F.lower(F.substring(F.col("accepted_form"), 1, 1))
-    a = a.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
+    a = a.withColumn("letter", _letter("accepted_form"))
 
     merged = a.groupBy("uri").agg(
         F.first("accepted_form", ignorenulls=True).alias("accepted_form"),
@@ -129,19 +141,7 @@ def build_bne_dico(authors: DataFrame) -> DataFrame:
     )
     name = F.trim(F.translate("accepted_form", "-", " "))
     name = F.regexp_replace(F.regexp_replace(name, "'", "' "), "  ", " ")
-    return (
-        merged.withColumn("uris", F.concat(F.array("uri"), "refs"))
-        .select(
-            F.explode("rejected_forms").alias("alias"),
-            name.alias("name"),
-            F.lit("PER").alias("ne_type"),
-            "uris",
-            "letter",
-        )
-        .filter(F.col("alias") != "")
-        .withColumn("alias_norm", normalize_mention("alias"))
-        .select("alias", "alias_norm", "name", "ne_type", "uris", "letter")
-    )
+    return _person_rows(merged, F.col("rejected_forms"), name)
 
 
 def build_dbpediafr_person_dico(persons: DataFrame) -> DataFrame:
@@ -165,8 +165,7 @@ def build_dbpediafr_person_dico(persons: DataFrame) -> DataFrame:
         no (birth-death) suffix (the date filter is a TODO, :88).
     """
     p = persons.filter(F.lower(F.col("label_lang")) == LANG)
-    letter = F.lower(F.substring(F.col("label"), 1, 1))
-    p = p.withColumn("letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other")))
+    p = p.withColumn("letter", _letter("label"))
 
     kept_ref = F.when(F.col("sameas").startswith(DBPEDIA), F.col("sameas"))
     redirect = F.when(F.lower(F.col("redirect_lang")) == LANG, clean_label("redirect_label"))
@@ -179,20 +178,7 @@ def build_dbpediafr_person_dico(persons: DataFrame) -> DataFrame:
 
     name = F.trim(F.translate("label", "-", " "))
     name = F.regexp_replace(F.regexp_replace(name, "'", "' "), "  ", " ")
-    return (
-        merged.withColumn("all_aliases", F.array_union(F.array("label"), "redirects"))
-        .withColumn("uris", F.concat(F.array("uri"), "refs"))
-        .select(
-            F.explode("all_aliases").alias("alias"),
-            name.alias("name"),
-            F.lit("PER").alias("ne_type"),
-            "uris",
-            "letter",
-        )
-        .filter(F.col("alias") != "")
-        .withColumn("alias_norm", normalize_mention("alias"))
-        .select("alias", "alias_norm", "name", "ne_type", "uris", "letter")
-    )
+    return _person_rows(merged, F.array_union(F.array("label"), "redirects"), name)
 
 
 GETTY_FEMALE_CODE = "http://vocab.getty.edu/aat/300189557"
@@ -221,10 +207,7 @@ def build_getty_dico(concepts: DataFrame) -> DataFrame:
       * letter shard on the full prefLabel (the ?nom filterRegex :90-95), not
         on the split last name.
     """
-    letter = F.lower(F.substring(F.col("pref_label"), 1, 1))
-    g = concepts.withColumn(
-        "letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other"))
-    )
+    g = concepts.withColumn("letter", _letter("pref_label"))
 
     parts = F.split(F.col("pref_label"), ",")
     # Personality.setLastname/setFirstname: '-' -> ' ' then trim (:276,281);
@@ -260,20 +243,8 @@ def build_getty_dico(concepts: DataFrame) -> DataFrame:
             aliases_udf("first_name", "last_name", gender_word),
             F.col("alt_forms"),
         ),
-    ).withColumn("uris", F.concat(F.array("uri"), "refs"))
-
-    return (
-        with_aliases.select(
-            F.explode("all_aliases").alias("alias"),
-            name.alias("name"),
-            F.lit("PER").alias("ne_type"),
-            "uris",
-            "letter",
-        )
-        .filter(F.col("alias") != "")
-        .withColumn("alias_norm", normalize_mention("alias"))
-        .select("alias", "alias_norm", "name", "ne_type", "uris", "letter")
     )
+    return _person_rows(with_aliases, F.col("all_aliases"), name)
 
 
 def build_place_dico(places: DataFrame) -> DataFrame:
@@ -340,10 +311,7 @@ def build_place_dico(places: DataFrame) -> DataFrame:
         "sameas_refs",
         "alt_labels",
     )
-    letter = F.lower(F.substring(F.col("label"), 1, 1))
-    merged = merged.withColumn(
-        "letter", F.when(letter.rlike("^[a-z]$"), letter).otherwise(F.lit("other"))
-    )
+    merged = merged.withColumn("letter", _letter("label"))
 
     return (
         merged.withColumn("uris", F.concat(F.array("uri"), "sameas_refs"))

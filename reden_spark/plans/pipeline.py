@@ -64,7 +64,7 @@ from reden_spark.sources import storage  # noqa: E402
 STAGES = ["mentions", "candidates", "links", "triples", "metrics"]
 
 # KB artifacts (operators/kb.py) of the most recently used knowledge bases,
-# keyed by (applicationId, kb_digest, sameAs predicate, checkpoint directory)
+# keyed by (applicationId, kb_digest, checkpoint directory)
 # and bounded by checkpointing.recent.
 _KB_REGISTRY: OrderedDict[tuple, KBArtifacts] = OrderedDict()
 KB_REGISTRY_SIZE = 2
@@ -172,19 +172,18 @@ def run_pipeline(
 
             def build() -> KBArtifacts:
                 tables = [storage.read_input(spark, data, name) for name in KB_TABLES]
-                return build_kb(*tables, cfg.sameas_pred)
+                return build_kb(*tables)
 
             with stages.group("kb"):
                 key = (
                     spark.sparkContext.applicationId,
                     kb_digest(data),
-                    cfg.sameas_pred,
                     spark.sparkContext.getCheckpointDir(),
                 )
                 kb = checkpointing.recent(_KB_REGISTRY, key, build, KB_REGISTRY_SIZE)
 
         # Turn-grain checkpoints (mentions, candidates, links) are Spark-native
-        # BUCKETED TABLES on conv_id (storage.write_stage spark_bucket_col):
+        # BUCKETED TABLES on conv_id (storage.write_stage spark_bucketed):
         # their scans report HashPartitioning(conv_id, n_buckets), so every
         # downstream distinct/groupBy/join whose keys contain conv_id reuses
         # the stage boundary's partitioning instead of re-shuffling — the
@@ -218,7 +217,7 @@ def run_pipeline(
             n_buckets = int(in_bucketing["n"])
         else:
             n_buckets = bucket_count(total_bytes)
-        bucketed = {"n_buckets": n_buckets, "spark_bucket_col": "conv_id"}
+        bucketed = {"spark_bucketed": ("conv_id", n_buckets)}
         mentions = stages.run(
             "mentions",
             lambda: detect_mentions(transcripts, kb.terms),
@@ -314,7 +313,7 @@ def main() -> None:
 
         from reden_spark.plans.properties import nel_config_from_properties
 
-        cfg, extras, dropped = nel_config_from_properties(a.properties)
+        cfg, dropped = nel_config_from_properties(a.properties)
         for key, reason in sorted(dropped.items()):
             print(f"properties: dropping '{key}' — {reason}")
         # explicit (non-default) CLI flags win over file values

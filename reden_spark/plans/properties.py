@@ -3,32 +3,23 @@
 The reference is driven entirely by a Java properties file
 (MainNELApp.java:105-123 reads keys 1-16; semantics documented inline in
 config/config-authors-bnf.properties). This module ingests that exact file
-shape and maps the surviving knobs onto :class:`NELConfig` + pipeline/dico
-options, reporting every key that has no equivalent in the rebuild (dropped
-knobs are *decisions*, not silent losses).
+shape and maps the surviving knobs onto :class:`NELConfig`, reporting every
+key that has no equivalent in the rebuild (dropped knobs are *decisions*, not
+silent losses).
 
 Key mapping (reference key -> rebuild):
   baseURIs            -> NELConfig.base_prefix           (first value)
   preferedURIOrder    -> NELConfig.preferred_uri
   centralityMeasure   -> NELConfig.centrality
   crawlSameAs         -> NELConfig.crawl_sameas
-  sameAsproperty      -> NELConfig.sameas_pred
-  namedEntityTag      -> extras['named_entity_tag']      (the gazetteer scan
-                         replaces XPath tag selection; recorded for lineage)
-  NERclassName        -> extras['ner_class']
-  greaterThan/lesserThan -> extras['birth_after'/'death_before'] year ints
-                         (dico-build domain filter, AppAdhoc.loadDomainParams
-                         AppAdhoc.java:301-324; masks dd/MM/yyyy or -1)
-  outDictionnaireDir  -> extras['dico_out_dir']
-  addScores           -> extras['add_scores'] bool (annotate.py score suffix)
-  propertyTagRef      -> extras['ref_attr'] (annotated-sink attribute name)
-  xpathExpresion      -> extras['context_xpath'] (context unit = conversation
-                         in the rebuild; recorded for lineage)
+  sameAsproperty      -> must be owl:sameAs (functions.text.SAME_AS), the
+                         predicate the whole pipeline reads; any other value
+                         raises ValueError
 
-Dropped (no disk cache / Lucene / live network in the rebuild):
-  useDicoIndex, indexDir, nameMainFolderDico, rdfData, KBsLocalNoNetwork,
-  useGlobalCentrality (deprecated in the reference itself), spatialExtent
-  (reference SpatialExtent.java is an empty stub).
+Every other key is dropped with the reason in DROPPED_KEYS: no disk cache,
+Lucene index or live network in the rebuild; no XPath document model (the
+context unit is a conversation); no annotated-file sink; and no dictionary
+build in the pipeline CLI.
 """
 
 from __future__ import annotations
@@ -44,6 +35,14 @@ DROPPED_KEYS = {
     "KBsLocalNoNetwork": "the rebuild never touches the network",
     "useGlobalCentrality": "deprecated in the reference (config comment, key 8)",
     "spatialExtent": "SpatialExtent.java is an empty stub in the reference",
+    "namedEntityTag": "mentions come from the gazetteer scan of each turn, not an XPath tag selection",
+    "NERclassName": "no NER model: the gazetteer scan finds the mentions",
+    "xpathExpresion": "the context unit is the conversation, not an XPath-selected element",
+    "propertyTagRef": "the pipeline writes no annotated file: links are a table",
+    "addScores": "the pipeline writes no annotated file: the links table has a score column",
+    "outDictionnaireDir": "the pipeline CLI builds no dictionary: dico is an input table",
+    "greaterThan": "the pipeline CLI builds no dictionary (plans/dico_build.build_dico takes the birth-year bounds)",
+    "lesserThan": "the pipeline CLI builds no dictionary (plans/dico_build.build_dico takes the birth-year bounds)",
 }
 
 
@@ -67,42 +66,26 @@ def load_properties(path: str | Path) -> dict[str, str]:
     return props
 
 
-def _year_of(mask: str | None) -> int | None:
-    """dd/MM/yyyy | yyyy | -1/empty -> year int or None
-    (AppAdhoc.loadDomainParams date handling)."""
-    if not mask or mask.strip() in ("-1", ""):
-        return None
-    m = re.search(r"(\d{4})\s*$", mask.strip())
-    return int(m.group(1)) if m else None
-
-
 def nel_config_from_properties(path: str | Path):
-    """-> (NELConfig, extras: dict, dropped: dict[key, reason]).
+    """-> (NELConfig, dropped: dict[key, reason]).
 
     `dropped` lists every key present in the file with no rebuild equivalent,
     each with the documented reason — callers (pipeline CLI) log them."""
+    from ..functions.text import SAME_AS
     from ..operators.disambiguate import NELConfig
 
     props = load_properties(path)
     base = (props.get("baseURIs") or "").split(",")[0].strip()
     if not base:
         raise ValueError(f"{path}: baseURIs is required (key 3 of the reference config)")
+    sameas = (props.get("sameAsproperty") or SAME_AS).strip()
+    if sameas != SAME_AS:
+        raise ValueError(f"{path}: sameAsproperty must be {SAME_AS}, got {sameas!r}")
     cfg = NELConfig(
         base_prefix=base,
         preferred_uri=(props.get("preferedURIOrder") or "ALL").strip(),
         centrality=(props.get("centralityMeasure") or "DegreeCentrality").strip(),
         crawl_sameas=(props.get("crawlSameAs") or "ALL").strip(),
-        sameas_pred=(props.get("sameAsproperty") or "http://www.w3.org/2002/07/owl#sameAs").strip(),
     )
-    extras = {
-        "named_entity_tag": props.get("namedEntityTag"),
-        "ner_class": props.get("NERclassName"),
-        "ref_attr": props.get("propertyTagRef", "ref_auto"),
-        "add_scores": (props.get("addScores", "false").lower() == "true"),
-        "context_xpath": props.get("xpathExpresion"),
-        "dico_out_dir": props.get("outDictionnaireDir"),
-        "birth_after": _year_of(props.get("greaterThan")),
-        "death_before": _year_of(props.get("lesserThan")),
-    }
     dropped = {k: DROPPED_KEYS[k] for k in props if k in DROPPED_KEYS}
-    return cfg, extras, dropped
+    return cfg, dropped

@@ -74,8 +74,7 @@ def write_stage(
     df: DataFrame,
     out_dir: str | Path,
     name: str,
-    n_buckets: int = 32,
-    spark_bucket_col: str | None = None,
+    spark_bucketed: tuple[str, int] | None = None,
     pre_shuffle: bool = True,
     prebucketed: bool = False,
 ) -> dict:
@@ -88,31 +87,33 @@ def write_stage(
       inherits a bucketed scan's partitioning), so the write needs no
       shuffle — each task holds few distinct bucket values and the
       partitioned write stays at ~1 file/task.
-    * ``spark_bucket_col`` — a Spark-native bucketed TABLE (`bucketBy` +
-      `saveAsTable`, metadata re-registered from the manifest on read). The
-      checkpoint layout for turn-grain stages: a later `read_stage` scan
-      reports HashPartitioning(col, n_buckets), so downstream groupBys and
-      joins whose keys contain `col` elide their Exchange entirely — stage
-      boundaries REUSE the partitioning instead of re-shuffling (the round-2
-      scaling bottleneck: 237+310 MB of turn-grain shuffle). ``pre_shuffle``
-      repartitions to one-file-per-bucket first; pass False when the frame is
-      already hash(col, n_buckets)-partitioned (the write is then
-      shuffle-free — Spark's bucket id is pmod(Murmur3, n), exactly the
-      partitioning an upstream bucketed join/scan produced).
+    * ``spark_bucketed=(col, n)`` — a Spark-native bucketed TABLE (`bucketBy` +
+      `saveAsTable`; the manifest records the pair under the same key, and
+      `read_stage` re-registers the table from it). The checkpoint layout
+      for turn-grain stages: a later `read_stage` scan reports
+      HashPartitioning(col, n), so downstream groupBys and joins whose keys
+      contain `col` elide their Exchange entirely — stage boundaries REUSE
+      the partitioning instead of re-shuffling (the round-2 scaling
+      bottleneck: 237+310 MB of turn-grain shuffle). ``pre_shuffle``
+      repartitions to one-file-per-bucket first; pass False when the frame
+      is already hash(col, n)-partitioned (the write is then shuffle-free —
+      Spark's bucket id is pmod(Murmur3, n), exactly the partitioning an
+      upstream bucketed join/scan produced).
     """
     out = Path(out_dir) / name
-    if spark_bucket_col is not None:
+    if spark_bucketed is not None:
+        col, n = spark_bucketed
         spark = df.sparkSession
         tname = _ckpt_table_name(out_dir, name)
         writer_df = df
         if pre_shuffle:
-            writer_df = df.repartition(n_buckets, F.col(spark_bucket_col))
+            writer_df = df.repartition(n, F.col(col))
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
         (
             writer_df.write.mode("overwrite")
             .option("compression", "zstd")
             .option("path", str(out))
-            .bucketBy(n_buckets, spark_bucket_col)
+            .bucketBy(n, col)
             .saveAsTable(tname)
         )
     else:
@@ -135,8 +136,8 @@ def write_stage(
         "format": "parquet",
         "bucketed": prebucketed,
     }
-    if spark_bucket_col is not None:
-        manifest["spark_bucketed"] = {"col": spark_bucket_col, "n": n_buckets}
+    if spark_bucketed is not None:
+        manifest["spark_bucketed"] = {"col": col, "n": n}
     # atomic: a crash mid-write must not leave a parseable-looking manifest
     # that stage_exists() would treat as a complete checkpoint forever
     tmp = out / (MANIFEST + ".tmp")

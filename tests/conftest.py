@@ -47,7 +47,7 @@ def bucketed_fixture_dir(spark, fixture_dir, tmp_path_factory):
     out = tmp_path_factory.mktemp("fixtures") / "bucketed"
     shutil.copytree(fixture_dir, out)
     df = spark.read.parquet(str(out / "transcripts.parquet"))
-    storage.write_stage(df, out, "transcripts.tmp", spark_bucket_col="conv_id", n_buckets=8)
+    storage.write_stage(df, out, "transcripts.tmp", spark_bucketed=("conv_id", 8))
     src = out / "transcripts.parquet"
     shutil.rmtree(src) if src.is_dir() else src.unlink()
     (out / "transcripts.tmp").rename(src)

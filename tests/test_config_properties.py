@@ -73,27 +73,41 @@ def test_load_properties_continuation_and_colon(tmp_path):
 def test_nel_config_from_properties(tmp_path):
     f = tmp_path / "config.properties"
     f.write_text(REFERENCE_SHAPED)
-    cfg, extras, dropped = nel_config_from_properties(f)
+    cfg, dropped = nel_config_from_properties(f)
     assert cfg.base_prefix == "http://kb.test/base/"  # first baseURIs value
     assert cfg.preferred_uri == "ALL"
     assert cfg.centrality == "DegreeCentrality"
     assert cfg.crawl_sameas == "ALL"
-    assert cfg.sameas_pred.endswith("#sameAs")
-    assert extras["ref_attr"] == "ref_auto"
-    assert extras["add_scores"] is False
-    assert extras["birth_after"] is None  # greaterThan=-1
-    assert extras["death_before"] == 1900  # lesserThan=01/01/1900
-    # every dropped key carries a documented reason
+    # every key the rebuild does not read is dropped, with a documented reason
     assert set(dropped) == {
+        "namedEntityTag",
+        "NERclassName",
         "useDicoIndex",
         "indexDir",
+        "useGlobalCentrality",
         "nameMainFolderDico",
         "rdfData",
+        "propertyTagRef",
+        "xpathExpresion",
+        "addScores",
         "KBsLocalNoNetwork",
-        "useGlobalCentrality",
+        "outDictionnaireDir",
+        "greaterThan",
+        "lesserThan",
         "spatialExtent",
     }
     assert all(dropped.values())
+    # 20 keys: the 4 NELConfig keys, sameAsproperty (checked, not stored) and 15 dropped
+    assert len(dropped) + 5 == len(load_properties(f))
+
+
+def test_nel_config_rejects_other_sameas_predicate(tmp_path):
+    """The links kernel, its KB slice and canonicalization all read owl:sameAs,
+    so another sameAs predicate is refused, not half honoured."""
+    f = tmp_path / "skos.properties"
+    f.write_text(REFERENCE_SHAPED.replace("owl#sameAs", "skos#exactMatch"))
+    with pytest.raises(ValueError, match="sameAsproperty"):
+        nel_config_from_properties(f)
 
 
 def test_nel_config_requires_base(tmp_path):

@@ -40,7 +40,7 @@ def _duck_shingle_cte(n):
 def test_minhash_lsh_pairs_vs_duckdb(docs, duck):
     from reden_spark.operators.dedup import minhash_lsh_pairs
 
-    got = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()}
+    got = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs).collect()}
     want = {
         tuple(r)
         for r in duck.sql(
@@ -97,11 +97,11 @@ def test_minhash_salt_preserves_pairs(docs):
     from reden_spark.operators import dedup
     from reden_spark.operators.dedup import minhash_lsh_pairs
 
-    base = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()}
+    base = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_lsh_pairs(docs).collect()}
     assert dedup._LAST_AUTO_SALT == 1
     salted = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, 12, 3, 4, 0.5, hot_band_cap=1).collect()
+        for r in minhash_lsh_pairs(docs, hot_band_cap=1).collect()
     }
     assert dedup._LAST_AUTO_SALT > 1
     assert base == salted and len(base) > 0
@@ -116,7 +116,7 @@ def test_dedup_clusters_transitive_and_keep_policy(docs, spark):
     from reden_spark.operators.curation import dedup_clusters
     from reden_spark.operators.dedup import minhash_lsh_pairs
 
-    pairs = minhash_lsh_pairs(docs, 12, 3, 4, 0.5)
+    pairs = minhash_lsh_pairs(docs)
     out = dedup_clusters(docs, pairs)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert len(rows) == docs.count()  # total assignment, each doc once
@@ -145,7 +145,7 @@ def test_stratified_sample_exact_counts(docs):
     hash-prefix (rank k implies ranks 1..k-1 present)."""
     from reden_spark.operators.curation import stratified_sample
 
-    out = stratified_sample(docs, fraction=0.2, stratum_col="lang").collect()
+    out = stratified_sample(docs).collect()
     strata = {}
     for r in out:
         strata.setdefault(r["stratum"], []).append(r)
@@ -158,7 +158,7 @@ def test_stratified_sample_exact_counts(docs):
         assert len(members) == want
         assert sorted(m["sample_rank"] for m in members) == list(range(1, want + 1))
         assert all(m["n_take"] == want and m["n_stratum"] == totals[s] for m in members)
-    again = stratified_sample(docs, fraction=0.2, stratum_col="lang").collect()
+    again = stratified_sample(docs).collect()
     assert sorted(r["doc_id"] for r in again) == sorted(r["doc_id"] for r in out)
 
 
@@ -167,7 +167,7 @@ def test_pack_sequences_contiguous_offsets(docs):
     (contiguous stream, no gaps/overlaps) and seq_idx = start_offset // budget."""
     from reden_spark.operators.curation import pack_sequences
 
-    out = pack_sequences(docs, budget=512, n_shards=8).collect()
+    out = pack_sequences(docs).collect()
     assert len(out) == docs.count()
     shards = {}
     for r in out:
@@ -190,7 +190,7 @@ def test_decontaminate_flags_exact_overlaps(docs):
 
     import re
 
-    samp_ids = {r["doc_id"] for r in stratified_sample(docs, 0.2, "lang").collect()}
+    samp_ids = {r["doc_id"] for r in stratified_sample(docs).collect()}
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
 
     def grams(t):
@@ -199,7 +199,7 @@ def test_decontaminate_flags_exact_overlaps(docs):
 
     hold = set().union(*(grams(texts[i]) for i in samp_ids)) if samp_ids else set()
     train = docs.join(docs.sparkSession.createDataFrame([(i,) for i in samp_ids], "doc_id long"), "doc_id", "left_anti")
-    out = {r["doc_id"]: r for r in decontaminate(train, docs.filter(F.col("doc_id").isin(samp_ids)), 8).collect()}
+    out = {r["doc_id"]: r for r in decontaminate(train, docs.filter(F.col("doc_id").isin(samp_ids))).collect()}
     assert set(out) == set(texts) - samp_ids  # full training assignment
     flagged = {i for i, r in out.items() if r["contaminated"]}
     expect = {i for i in out if grams(texts[i]) & hold}
@@ -209,9 +209,10 @@ def test_decontaminate_flags_exact_overlaps(docs):
         assert r["n_hit_shingles"] == len(grams(texts[i]) & hold)
 
 
-def test_curation_edge_cases(docs, spark):
-    """Empty pair set -> every doc a kept singleton; fraction=1.0 -> the
+def test_curation_edge_cases(docs, spark, monkeypatch):
+    """Empty pair set -> every doc a kept singleton; SAMPLE_FRACTION=1.0 -> the
     sample IS the corpus (exact quotas hold at the boundary)."""
+    from reden_spark.operators import curation
     from reden_spark.operators.curation import dedup_clusters, stratified_sample
 
     empty_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
@@ -220,16 +221,18 @@ def test_curation_edge_cases(docs, spark):
     assert len(out) == n
     assert all(r["keep"] and r["cluster_size"] == 1 and r["cluster_id"] == r["doc_id"] for r in out)
 
-    full = stratified_sample(docs, fraction=1.0, stratum_col="lang").collect()
+    monkeypatch.setattr(curation, "SAMPLE_FRACTION", 1.0)
+    full = stratified_sample(docs).collect()
     assert len(full) == n
     assert all(r["n_take"] == r["n_stratum"] for r in full)
 
 
-def test_null_text_behaves_as_empty(spark):
+def test_null_text_behaves_as_empty(spark, monkeypatch):
     """NULL text must flow through every text reader as '' on BOTH engines
     (round-4 ADVICE: un-coalesced size() yields NULL on the Spark side vs a
     NULL row in DuckDB — the fixtures have no NULL text, so this pins the
     hazard with an explicit one)."""
+    from reden_spark.operators import curation
     from reden_spark.operators.curation import decontaminate, pack_sequences
     from reden_spark.operators.dedup import minhash_signatures
 
@@ -242,8 +245,9 @@ def test_null_text_behaves_as_empty(spark):
         return {r["doc_id"]: tuple(r)[1:] for r in df.collect()}
 
     # one shard, so doc 2's start_offset follows doc 1's token count
-    packed = by_id(pack_sequences(docs, budget=512, n_shards=1))
-    decon = by_id(decontaminate(docs, docs, 8))
+    monkeypatch.setattr(curation, "PACK_SHARDS", 1)
+    packed = by_id(pack_sequences(docs))
+    decon = by_id(decontaminate(docs, docs))
     for got in (packed, decon):
         assert all(v is not None for row in got.values() for v in row), got
         assert got[1] == got[2], (got[1], got[2])
@@ -280,16 +284,16 @@ def test_minhash_auto_salt_engages_on_boilerplate(spark):
     docs = _boilerplate_docs(spark)
 
     # the default budget holds the 120-doc band: unsalted plan
-    base = sorted(map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5).collect()))
+    base = sorted(map(tuple, minhash_lsh_pairs(docs).collect()))
     assert dedup._LAST_AUTO_SALT == 1
     auto = sorted(
-        map(tuple, minhash_lsh_pairs(docs, 12, 3, 4, 0.5, hot_band_cap=50).collect())
+        map(tuple, minhash_lsh_pairs(docs, hot_band_cap=50).collect())
     )
     assert dedup._LAST_AUTO_SALT is not None and dedup._LAST_AUTO_SALT > 1
     assert auto == base and len(base) >= 120 * 119 // 2  # every clone pair found
 
     # quiet corpus: the probe must leave the plan unsalted
-    minhash_lsh_pairs(docs.filter("doc_id >= 1000"), 12, 3, 4, 0.5, hot_band_cap=50).collect()
+    minhash_lsh_pairs(docs.filter("doc_id >= 1000"), hot_band_cap=50).collect()
     assert dedup._LAST_AUTO_SALT == 1
 
 
@@ -305,12 +309,12 @@ def test_jaccard_check_width_follows_pair_bound(spark):
         return re.findall(r"Repartition (\d+), true", df._jdf.queryExecution().analyzed().toString())
 
     docs = _boilerplate_docs(spark)
-    pairs = minhash_lsh_pairs(docs, 12, 3, 4, 0.5)
+    pairs = minhash_lsh_pairs(docs)
     got = sorted(map(tuple, pairs.collect()))
     assert pairs.rdd.getNumPartitions() > 1 and width(pairs) == [str(pairs.rdd.getNumPartitions())]
     assert [p[:2] for p in got if p[0] < 120] == [(a, b) for a in range(120) for b in range(a + 1, 120)]
 
-    quiet = minhash_lsh_pairs(docs.filter("doc_id >= 1000"), 12, 3, 4, 0.5)
+    quiet = minhash_lsh_pairs(docs.filter("doc_id >= 1000"))
     # its candidate set is empty, so AQE drops the check's one task at run time
     assert width(quiet) == ["1"] and quiet.rdd.getNumPartitions() <= 1
     assert sorted(map(tuple, quiet.collect())) == [p for p in got if p[0] >= 1000]

@@ -117,6 +117,6 @@ def test_extract_score_no_match_is_null(spark):
 def test_make_aliases_blank_lastname_yields_nothing():
     """No surname -> no aliases: title-only forms ('M ', 'Mme ') would
     normalize to 'm'/'mme' and capture every abbreviated mention corpus-wide."""
-    assert make_aliases("Jean", "") == []
-    assert make_aliases("Jean", "   ") == []
-    assert make_aliases(None, "") == []
+    assert make_aliases("Jean", "", None) == []
+    assert make_aliases("Jean", "   ", None) == []
+    assert make_aliases(None, "", None) == []

@@ -172,17 +172,21 @@ def test_normalization_collision_parity(spark):
     assert got[("c0", 0, 0, "Jean-Paul X")] == (f"{B}/p/1", "graph")
 
 
-def test_connected_components_long_chain(spark):
-    """A 120-hop sameAs chain must converge well inside max_iter thanks to
+def test_connected_components_long_chain(spark, monkeypatch):
+    """A 120-hop sameAs chain must converge well inside MAX_ITER thanks to
     pointer jumping (plain neighbor-min propagation needs O(diameter)=120
     rounds; label-of-label gives O(log n) ~ 8)."""
+    from reden_spark.operators import canonicalize
     from reden_spark.operators.canonicalize import connected_components
 
     n = 120
     edges = spark.createDataFrame(
         [(f"u{i:03d}", f"u{i + 1:03d}") for i in range(n)], "a string, b string"
     )
-    rows = connected_components(edges, max_iter=12, driver_max_edges=None).collect()
+    with monkeypatch.context() as m:
+        m.setattr(canonicalize, "MAX_ITER", 12)
+        m.setattr(canonicalize, "DRIVER_MAX_EDGES", 0)
+        rows = connected_components(edges).collect()
     assert len(rows) == n + 1
     assert {r.canonical for r in rows} == {"u000"}
     # the small-graph union-find fast path must agree exactly
@@ -205,24 +209,47 @@ def test_driver_union_find_map_is_a_local_relation(spark):
     assert sorted(map(tuple, canon.collect())) == [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
+def test_driver_path_probe_is_one_job(spark):
+    """The fast path's bounded head is one Spark job however many partitions
+    the edge frame has: an incremental take would run one job per scale-up
+    round (1, then 4, then 3 of these 8 partitions)."""
+    from reden_spark.operators.canonicalize import connected_components
+
+    sc = spark.sparkContext
+    rows = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(40)]
+    edges = sc.parallelize(rows, 8).toDF("a string, b string")
+    assert edges.rdd.getNumPartitions() == 8
+    sc.setJobGroup("cc-probe", "cc-probe")
+    try:
+        canon = connected_components(edges)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-probe")) == 1
+    assert {r.canonical for r in canon.collect()} == {"p00"}
+
+
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     import pytest
 
+    from reden_spark.operators import canonicalize
     from reden_spark.operators.canonicalize import connected_components
 
     edges = spark.createDataFrame(
         [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(40)], "a string, b string"
     )
+    monkeypatch.setattr(canonicalize, "MAX_ITER", 1)
+    monkeypatch.setattr(canonicalize, "DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1, driver_max_edges=None)
+        connected_components(edges)
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
+def test_connected_components_random_graphs_match_union_find(spark, monkeypatch):
     """Property check: on seeded random graphs (sparse chains, dense clumps,
     self-loops, duplicate and reversed edges) the distributed min-label +
     pointer-jumping labeling equals a plain union-find's component minimum."""
     import random
 
+    from reden_spark.operators import canonicalize
     from reden_spark.operators.canonicalize import connected_components
 
     rng = random.Random(42)
@@ -249,23 +276,24 @@ def test_connected_components_random_graphs_match_union_find(spark):
             want[v] = comp_min[find(v)]
 
         frame = spark.createDataFrame(edges, "a string, b string")
-        for dme in (None, 1_000_000):  # distributed loop AND union-find fast path
-            got = {r.uri: r.canonical for r in connected_components(frame, driver_max_edges=dme).collect()}
+        for dme in (0, 1_000_000):  # distributed loop AND union-find fast path
+            monkeypatch.setattr(canonicalize, "DRIVER_MAX_EDGES", dme)
+            got = {r.uri: r.canonical for r in connected_components(frame).collect()}
             assert got == want, f"trial {trial} dme={dme}: {sorted(set(got.items()) ^ set(want.items()))[:6]}"
 
 
-def test_connected_components_fixpoint_at_iteration_budget(spark):
-    """Iteration budget exhausted exactly at the fixpoint (max_iter=0 on a graph
+def test_connected_components_fixpoint_at_iteration_budget(spark, monkeypatch):
+    """Iteration budget exhausted exactly at the fixpoint (MAX_ITER=0 on a graph
     whose initial min-neighbor labels are already final) returns correct labels
     instead of raising — the guard distinguishes 'budget exhausted' from
     'labels still moving'."""
+    from reden_spark.operators import canonicalize
     from reden_spark.operators.canonicalize import connected_components
 
     edges = spark.createDataFrame([("u1", "u2")], "a string, b string")
-    got = {
-        r.uri: r.canonical
-        for r in connected_components(edges, max_iter=0, driver_max_edges=None).collect()
-    }
+    monkeypatch.setattr(canonicalize, "MAX_ITER", 0)
+    monkeypatch.setattr(canonicalize, "DRIVER_MAX_EDGES", 0)
+    got = {r.uri: r.canonical for r in connected_components(edges).collect()}
     assert got == {"u1": "u1", "u2": "u1"}
 
 

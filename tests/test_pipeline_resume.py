@@ -85,14 +85,13 @@ def test_checkpoint_dir_same_output(spark, fixture_dir, tmp_path):
     got = tmp_path / "triples.json"
     script = tmp_path / "reliable_run.py"
     script.write_text(
-        "import functools, json, sys\n"
+        "import json, sys\n"
         "from reden_spark import datagen\n"
         "from reden_spark.operators import canonicalize\n"
         "from reden_spark.operators.disambiguate import NELConfig\n"
         "from reden_spark.plans.pipeline import run_pipeline\n"
         "from reden_spark.session import get_spark\n"
-        "canonicalize.connected_components = functools.partial(\n"
-        "    canonicalize.connected_components, driver_max_edges=None)\n"
+        "canonicalize.DRIVER_MAX_EDGES = 0\n"
         "cfg = NELConfig(base_prefix=datagen.BASE_PREFIX, preferred_uri=datagen.BASE_PREFIX)\n"
         "spark = get_spark()\n"
         "dfs = run_pipeline(spark, sys.argv[1], sys.argv[2], cfg)\n"
@@ -189,7 +188,7 @@ def test_read_stage_fails_without_its_manifest(spark, fixture_dir, tmp_path):
     on a corrupt or missing one instead of inferring a schema and reading a
     bucketed stage as plain parquet."""
     df = spark.read.parquet(str(fixture_dir / "transcripts.parquet"))
-    storage.write_stage(df, tmp_path, "stage", spark_bucket_col="conv_id", n_buckets=2)
+    storage.write_stage(df, tmp_path, "stage", spark_bucketed=("conv_id", 2))
     manifest = tmp_path / "stage" / storage.MANIFEST
     manifest.write_text(manifest.read_text()[:40])
     with pytest.raises(json.JSONDecodeError):

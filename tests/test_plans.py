@@ -169,7 +169,7 @@ def test_n_buckets_knob_plan_shape(spark, fixture_dir, tmp_path, n):
 
     df = spark.read.parquet(str(fixture_dir / "transcripts.parquet"))
     out = tmp_path / f"b{n}"
-    storage.write_stage(df, out, "stage", spark_bucket_col="conv_id", n_buckets=n)
+    storage.write_stage(df, out, "stage", spark_bucketed=("conv_id", n))
     back = storage.read_stage(spark, out, "stage")
     agg = back.groupBy("conv_id").count()
     p = plan(agg)
@@ -312,7 +312,7 @@ def test_curation_plan_shapes(spark):
     assert n == 2 and "BroadcastHashJoin" in p, p[:1500]
     n, p = shuffles(pack_sequences(docs))
     assert n == 1, p[:1500]
-    n, p = shuffles(decontaminate(docs.limit(400), docs.limit(100), 8))
+    n, p = shuffles(decontaminate(docs.limit(400), docs.limit(100)))
     assert n == 3 and "BroadcastHashJoin" in p, p[:1500]
 
 
